@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flouds_vectordb_spark.sources.tables import read_parquet
+
 VALID_METRICS = ("COSINE", "L2", "IP")
 VALID_INDEX_TYPES = ("IVF_FLAT", "IVF_SQ8", "IVF_PQ", "HNSW")
 # Reference pk dtype map (base_milvus.py:904-917): INT is an alias for
@@ -338,13 +340,13 @@ class Catalog:
             return self.spark.createDataFrame(
                 [], collection_schema(meta["dimension"],
                                       meta.get("primary_key_data_type", "VARCHAR")))
-        reader = self.spark.read
-        if meta.get("enable_dynamic_field", True):
-            # segments may disagree on the optional _extras column; without
-            # mergeSchema one arbitrary footer wins and can drop it. Footer
-            # merge is metadata-only (no data scan) — fine at scale.
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(path)
+        # segments may disagree on the optional _extras column; without
+        # mergeSchema one arbitrary footer wins and can drop it. Footer
+        # merge is metadata-only (no data scan) — fine at scale, and it
+        # runs once per data layout: read_parquet reuses the scan until a
+        # write changes the files under path.
+        df = read_parquet(self.spark, path,
+                          merge_schema=bool(meta.get("enable_dynamic_field", True)))
         # SNAPSHOT ISOLATION (r8): only batches whose data write COMPLETED
         # are visible — insert_data advances last_complete_ts strictly
         # after its parquet commit, so a reader racing a multi-file append

@@ -558,10 +558,12 @@ def _score_table():
 def _ranked_packed_grams(t: str):
     """(keys, counts) of the doc's grams ranked (count desc, gram asc),
     truncated to DOC_TOP — the vectorized twin of
-    sorted(Counter(_char_ngrams(t)).items(), ...)[:DOC_TOP]."""
+    sorted(Counter(_char_ngrams(t)).items(), ...)[:DOC_TOP]. Lone
+    surrogates pass through as their code points (category Cs: a word
+    break, as in the reference)."""
     import numpy as np
 
-    cps = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
+    cps = np.frombuffer(t.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
     if not len(cps):
         return None
     uniq_cp = np.unique(cps)

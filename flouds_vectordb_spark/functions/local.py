@@ -19,9 +19,21 @@ and skip the scheduler entirely; the RDD route schedules real tasks.
 - None as typed NULLs.
 Falls back to createDataFrame for empty row sets (VALUES cannot be empty)
 and for schemas it does not know how to render.
+
+`json_df` is the same task-free literal for numeric blocks (the
+batched-search query blocks: qid, a 64-double vector, its norm, probed
+cells): the rows travel as ONE JSON string literal read by
+`inline(from_json(...))`, which the optimizer folds into a single constant
+array over a one-row relation. Spark's parser pays per token of SQL text — a 256 x 64 VALUES block
+took 2.2 s to parse, its JSON form under 0.1 s — while the JSON number
+parser reads Python's shortest repr back to the same bits, NaN, +-Infinity,
+-0.0 and subnormals included (tests/test_local_df.py). Empty blocks fall
+back to createDataFrame as above.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -91,3 +103,29 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     names = ", ".join(n for n, _ in cols)
     proj = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
     return spark.sql(f"SELECT {proj} FROM (VALUES {vals}) AS _lr({names})")
+
+
+def _jsonable(v, typ: str):
+    if v is None:
+        return None
+    if typ in _INT_TYPES:
+        return int(v)
+    if typ in ("double", "float"):
+        return float(v)
+    if typ.startswith("array<") and typ.endswith(">"):
+        return [_jsonable(x, typ[6:-1]) for x in v]
+    raise ValueError(f"json_df cannot render type {typ!r}")
+
+
+def json_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A numeric literal table (integer, double and array columns) sent as
+    one JSON string literal; same contract as local_df (see module
+    docstring for why not VALUES text)."""
+    rows = list(rows)
+    cols = _parse_schema(schema)
+    if not rows:
+        return spark.createDataFrame([], schema)
+    js = json.dumps([{n: _jsonable(v, t) for v, (n, t) in zip(r, cols)} for r in rows])
+    struct = ",".join(f"{n}:{t}" for n, t in cols)
+    return spark.sql(
+        f"SELECT inline(from_json({_render(js, 'string')}, 'array<struct<{struct}>>'))")

@@ -16,14 +16,25 @@ Scale notes: for a constant query vector the query norm is precomputed
 driver-side (one scalar literal, not a per-row 64-element fold), and
 zero-norm documents score NULL in BOTH engines (nullif guard) instead of
 diverging (Spark non-ANSI div-by-zero -> NULL vs DuckDB IEEE -> inf).
+
+Request-path scores (metric_score_q, batch_search._pair_score) are built
+from the ``*_expr`` Spark SQL texts below and sent as ONE ``F.expr``: the
+same folds as the Column builders, but a 64-dim query costs one py4j call
+instead of ~500 (64 ``F.lit``s plus three Python lambdas). Query doubles
+are rendered by ``local._render`` (shortest repr + ``D``), so the literals
+are bit-exact.
 """
 
 from __future__ import annotations
 
 import math
+import re
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from flouds_vectordb_spark.functions.local import _render
 
 
 def _fold_sum(products: Column) -> Column:
@@ -81,24 +92,85 @@ def query_norm(q: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def query_array(q: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in q])
+# --- Spark SQL texts of the same folds (one F.expr per score) ---------------
+
+def _fold_expr(products: str) -> str:
+    return f"aggregate({products}, 0.0D, (_acc, _x) -> _acc + _x)"
 
 
-def metric_score_q(metric: str, vec: Column, q: list[float]) -> Column:
-    """Score column against a constant query vector, larger-is-better for all
-    metrics. COSINE precomputes the query norm driver-side (one literal)."""
+def dot_expr(a: str, b: str) -> str:
+    """Spark SQL text of dot_score."""
+    return _fold_expr(
+        f"zip_with({a}, {b}, (_x, _y) -> CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE))")
+
+
+def l2_expr(a: str, b: str) -> str:
+    """Spark SQL text of l2_score."""
+    return "(-" + _fold_expr(
+        f"zip_with({a}, {b}, (_x, _y) -> (CAST(_x AS DOUBLE) - CAST(_y AS DOUBLE))"
+        " * (CAST(_x AS DOUBLE) - CAST(_y AS DOUBLE)))") + ")"
+
+
+def norm_expr(a: str) -> str:
+    """Spark SQL text of norm."""
+    return f"sqrt({_fold_expr(f'transform({a}, _x -> CAST(_x AS DOUBLE) * CAST(_x AS DOUBLE))')})"
+
+
+def score_expr(metric: str, vec: str, q: str, qn: str, dn: str | None = None) -> str:
+    """Spark SQL text of a larger-is-better score of `vec` against `q`.
+    qn is the query norm; dn a precomputed document norm (COSINE), else
+    the norm folds inline. try_divide: /0 -> NULL, as cosine_score."""
     m = metric.upper()
-    qa = query_array(q)
     if m == "IP":
-        return dot_score(vec, qa)
+        return dot_expr(vec, q)
     if m == "L2":
-        return l2_score(vec, qa)
+        return l2_expr(vec, q)
     if m == "COSINE":
-        # try_divide: /0 -> NULL, one norm evaluation (see cosine_score)
-        qn = query_norm(q)
-        return F.try_divide(dot_score(vec, qa), norm(vec) * F.lit(qn))
+        return f"try_divide({dot_expr(vec, q)}, {dn or norm_expr(vec)} * {qn})"
     raise ValueError(f"unsupported metric {metric!r} (expected COSINE, L2, IP)")
+
+
+_NAME_PATH = re.compile(r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*")
+
+
+def column_ref(vec: Column | str) -> str | None:
+    """SQL text naming the column `vec` refers to — a column name (read
+    the way F.col reads it) or an F.col Column — or None for a computed
+    Column (and on Spark Connect), whose SQL text cannot be recovered."""
+    if not isinstance(vec, str):
+        try:
+            if vec._jc.node().getClass().getSimpleName() != "UnresolvedAttribute":
+                return None
+            vec = vec._jc.toString()
+        except (AttributeError, Py4JError):  # no JVM column: Column path
+            return None
+    if _NAME_PATH.fullmatch(vec):
+        return ".".join(f"`{part}`" for part in vec.split("."))
+    if "." not in vec and "`" not in vec:
+        return f"`{vec}`"
+    return None
+
+
+def metric_score_q(metric: str, vec: Column | str, q: list[float]) -> Column:
+    """Score column against a constant query vector, larger-is-better for all
+    metrics. COSINE precomputes the query norm driver-side (one literal).
+    `vec` is a column name or Column; a plain column reference is scored
+    by one SQL-text expression, a computed vector by the Column builders
+    (same folds, same bits)."""
+    if metric.upper() not in ("COSINE", "L2", "IP"):
+        raise ValueError(f"unsupported metric {metric!r} (expected COSINE, L2, IP)")
+    qa = _render([float(x) for x in q], "array<double>")
+    qn = _render(query_norm(q), "double")
+    ref = column_ref(vec)
+    if ref is not None:
+        return F.expr(score_expr(metric, ref, qa, qn))
+    vec, qcol = (F.col(vec) if isinstance(vec, str) else vec), F.expr(qa)
+    m = metric.upper()
+    if m == "IP":
+        return dot_score(vec, qcol)
+    if m == "L2":
+        return l2_score(vec, qcol)
+    return F.try_divide(dot_score(vec, qcol), norm(vec) * F.expr(qn))
 
 
 # --- DuckDB oracle twins -----------------------------------------------------
@@ -163,14 +235,3 @@ def metric_score(metric: str, a: Column, b: Column) -> Column:
     if m == "L2":
         return l2_score(a, b)
     raise ValueError(f"unsupported metric {metric!r} (expected COSINE, L2, IP)")
-
-
-def metric_sql(metric: str, a: str, b: str) -> str:
-    m = metric.upper()
-    if m == "COSINE":
-        return cosine_sql(a, b)
-    if m == "IP":
-        return dot_sql(a, b)
-    if m == "L2":
-        return l2_sql(a, b)
-    raise ValueError(f"unsupported metric {metric!r}")

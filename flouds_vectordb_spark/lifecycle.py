@@ -114,10 +114,17 @@ def no_aqe(spark) -> Iterator[None]:
     each shuffle stage as its OWN job, a pure scheduling barrier worth
     ~0.1-0.2 s per action at gate scale (measured 2 jobs -> 1 on the
     minhash fetch). Always scoped: the callers sit behind the <= 16 MB
-    input guards, so every at-scale plan keeps AQE."""
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    input guards, so every at-scale plan keeps AQE. A key that was unset
+    before is unset again after, not pinned to its default. The conf is
+    session-wide: the regimes assume no other thread plans on the session
+    during the action."""
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key, None)
     try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set(key, "false")
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

@@ -46,7 +46,7 @@ RANK_DECIMALS = 6
 def ann_topk(df: DataFrame, query_vector: list[float], metric: str = "COSINE",
              limit: int = 10, id_col: str = "id", vector_col: str = "embedding") -> DataFrame:
     """(id, rank, score) exact top-k — the ANN correctness baseline."""
-    score = V.metric_score_q(metric, F.col(vector_col), query_vector)
+    score = V.metric_score_q(metric, vector_col, query_vector)
     slim = (
         df.select(F.col(id_col).alias("id"), score.alias("_score"))
         .filter(F.col("_score").isNotNull())

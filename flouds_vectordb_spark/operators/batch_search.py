@@ -29,7 +29,16 @@ This module is the set-of-queries shape:
 Scoring determinism matches functions/vector.py's oracle contract: per-pair
 sequential float64 folds, and the per-query norms (COSINE) are computed
 ONCE driver-side with the same fold and spliced into BOTH engines as the
-same literal, so Spark and DuckDB rank identical doubles.
+same literal, so Spark and DuckDB rank identical doubles. The document
+norm (COSINE) is likewise folded ONCE per document, projected below the
+block join as `_dn`: the per-pair work is the dot fold alone, and the
+score is the same try_divide(dot, _dn * _qn) as the single request's.
+
+Fixed per-request costs stay off the driver: the query block ships as ONE
+JSON string literal (functions/local.py json_df — parsing VALUES text of
+64 x 64 doubles cost ~0.5 s per block, 256 x 64 ~2.2 s), and each pair
+score is one SQL-text expression (functions/vector.py score_expr) instead
+of a Column tree built through hundreds of py4j calls.
 
 Scale notes (100 TB): the query block is a genuine broadcast (scalars);
 candidate volume is sum_q(nprobe * cell_rows) pairs of 3 scalars; the
@@ -47,6 +56,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flouds_vectordb_spark.functions import vector as V
+from flouds_vectordb_spark.functions.local import json_df
 from flouds_vectordb_spark.functions.text import text_filter_predicate, text_filter_sql
 from flouds_vectordb_spark.operators.dense_search import (
     RANK_DECIMALS,
@@ -76,26 +86,31 @@ def query_block(spark: SparkSession, queries: QueryBatch) -> DataFrame:
     the SAME literal both engines divide by for COSINE."""
     queries = list(queries)
     _check_batch(queries)
-    from flouds_vectordb_spark.functions.local import local_df
-
-    rows = [(int(q), [float(x) for x in v], V.query_norm(list(v)))
-            for q, v in queries]
-    return local_df(spark, rows, "qid bigint, _qv array<double>, _qn double")
+    return json_df(spark, [(q, v, V.query_norm(list(v))) for q, v in queries],
+                   "qid bigint, _qv array<double>, _qn double")
 
 
-def _pair_score(metric: str, vector_col: str) -> Column:
+def _vec_ref(vector_col: str) -> str:
+    ref = V.column_ref(vector_col)
+    if ref is None:
+        raise ValueError(f"vector_col must be a plain column name, got {vector_col!r}")
+    return ref
+
+
+def _doc_side(df: DataFrame, metric: str, vector_col: str, *cols) -> DataFrame:
+    """The scanned side of a block join: `cols`, the vector and, for
+    COSINE, its norm `_dn` folded once per document (not once per pair)."""
+    if metric.upper() == "COSINE":
+        cols += (F.expr(V.norm_expr(_vec_ref(vector_col))).alias("_dn"),)
+    return df.select(*cols, F.col(vector_col))
+
+
+def _pair_score(metric: str, vector_col: str, doc_norm: str | None = None) -> Column:
     """Per-(row, query) score against the block's _qv/_qn columns; the same
-    larger-is-better convention and fold order as metric_score_q."""
-    m = metric.upper()
-    vec = F.col(vector_col)
-    if m == "IP":
-        return V.dot_score(vec, F.col("_qv"))
-    if m == "L2":
-        return V.l2_score(vec, F.col("_qv"))
-    if m == "COSINE":
-        return F.try_divide(V.dot_score(vec, F.col("_qv")),
-                            V.norm(vec) * F.col("_qn"))
-    raise ValueError(f"unsupported metric {metric!r} (expected COSINE, L2, IP)")
+    larger-is-better convention and fold order as metric_score_q. doc_norm
+    names a precomputed document norm column (_doc_side), else COSINE
+    folds the norm per pair."""
+    return F.expr(V.score_expr(metric, _vec_ref(vector_col), "_qv", "_qn", doc_norm))
 
 
 def _ranked_pipeline(
@@ -201,9 +216,9 @@ def dense_search_many(
     _check_batch(queries)
     qb = query_block(df.sparkSession, queries)
     cand = (
-        df.select(F.col(id_col).alias("_id"), F.col(vector_col))
+        _doc_side(df, req.metric, vector_col, F.col(id_col).alias("_id"))
         .join(F.broadcast(qb))          # query block x corpus, block is tiny
-        .select("qid", "_id", _pair_score(req.metric, vector_col).alias("_score"))
+        .select("qid", "_id", _pair_score(req.metric, vector_col, "_dn").alias("_score"))
     )
     return _ranked_pipeline(cand, df, req, id_col, chunk_col, meta_col, extra_cols)
 
@@ -231,40 +246,26 @@ def ivf_search_many(
     `centroid_id`. payload_df supplies chunk/meta/extra columns when the
     request needs them (defaults to scan_df/the raw scan)."""
     queries = list(queries)
-    dim = _check_batch(queries)
+    _check_batch(queries)
     qmat = np.array([[float(x) for x in v] for _, v in queries], dtype=np.float64)
     cells = idx.probe_cells_many(qmat, req.nprobe if nprobe is None else nprobe)
     union_cells = sorted({int(c) for row in cells for c in row})
 
-    # The exploded (qid, _qv, _qn, _cell) probe block, built ENTIRELY
-    # driver-side as one LocalRelation (r13): the previous
-    # query_block ⋈ createDataFrame(cells) + explode subtree cost an
-    # ExistingRDD task stage (the local_df lesson), a broadcast join and
-    # a Generate — all to produce <= nq*nprobe rows the driver already
-    # holds. Very large blocks (where the VALUES literal would be MBs of
-    # SQL text) keep the join shape.
-    if len(queries) * len(cells[0]) * dim <= 200_000:
-        from flouds_vectordb_spark.functions.local import local_df
-
-        qx = local_df(
-            spark,
-            [(int(qid), [float(x) for x in v], V.query_norm(list(v)), int(c))
-             for (qid, v), crow in zip(queries, cells) for c in crow],
-            "qid bigint, _qv array<double>, _qn double, _cell int")
-    else:
-        qb = query_block(spark, queries)
-        qcells = spark.createDataFrame(
-            [(int(qid), [int(c) for c in crow])
-             for (qid, _), crow in zip(queries, cells)],
-            "qid bigint, _cells array<int>")
-        qx = (qb.join(qcells, "qid")
-              .select("qid", "_qv", "_qn", F.explode("_cells").alias("_cell")))
+    # The (qid, _qv, _qn, _cells) probe block, built driver-side as one
+    # JSON literal and exploded to one row per probed cell: no
+    # ExistingRDD stage for driver-held rows, no second join.
+    qx = json_df(
+        spark, [(q, v, V.query_norm(list(v)), crow)
+                for (q, v), crow in zip(queries, cells)],
+        "qid bigint, _qv array<double>, _qn double, _cells array<int>",
+    ).select("qid", "_qv", "_qn", F.explode("_cells").alias("_cell"))
 
     scan = scan_df if scan_df is not None else idx.scan(spark, union_cells)
     cand = (
-        scan.select(F.col(id_col).alias("_id"), F.col(vector_col), "centroid_id")
+        _doc_side(scan, req.metric, vector_col, F.col(id_col).alias("_id"),
+                  "centroid_id")
         .join(F.broadcast(qx), F.col("centroid_id") == F.col("_cell"))
-        .select("qid", "_id", _pair_score(req.metric, vector_col).alias("_score"))
+        .select("qid", "_id", _pair_score(req.metric, vector_col, "_dn").alias("_score"))
     )
     if payload_df is None:
         payload_df = scan  # same pruned plan — never a second footer trip

@@ -1032,9 +1032,12 @@ def _within_group_pairs(keys, n_items):
     """(a_el, b_el): every (earlier, later) index pair within each run of
     equal values in the SORTED array `keys` — the shared enumeration core
     of the driver ngram regime (collision pairs, then prefix-candidate
-    pairs)."""
+    pairs). Empty input -> two empty arrays."""
     import numpy as np
 
+    if n_items == 0:
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty
     grp_start = np.flatnonzero(
         np.concatenate(([True], keys[1:] != keys[:-1])))
     grp_sizes = np.diff(np.concatenate((grp_start, [n_items])))

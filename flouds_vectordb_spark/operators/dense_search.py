@@ -230,7 +230,7 @@ def dense_search(
         raise ValueError("meta_filter/meta_required require meta_col")
 
     # ---- phase 1: score + k-cut over (id, score) only ----
-    score = V.metric_score_q(req.metric, F.col(vector_col), req.query_vector)
+    score = V.metric_score_q(req.metric, vector_col, req.query_vector)
     slim = (
         df.select(F.col(id_col).alias("_id"), score.alias("_score"))
         .filter(F.col("_score").isNotNull())

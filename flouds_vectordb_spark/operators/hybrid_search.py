@@ -114,7 +114,7 @@ def _dense_branch(df: DataFrame, req: HybridSearchRequest, id_col: str,
     """(id, dense_rank_, dense_score) — bounded top-branch_limit; the first
     `offset` hits are skipped BEFORE rank assignment (rank 1 = hit
     offset+1), as Milvus does when offset rides the branch params."""
-    score = V.metric_score_q(req.metric, F.col(vector_col), req.query_vector)
+    score = V.metric_score_q(req.metric, vector_col, req.query_vector)
     slim = (
         df.select(F.col(id_col).alias("id"), score.alias("_ds"))
         .filter(F.col("_ds").isNotNull())
@@ -360,6 +360,7 @@ def hybrid_search_many(
     the inline note). Results are bit-identical to looping hybrid_search
     per query."""
     from flouds_vectordb_spark.operators.batch_search import (
+        _doc_side,
         _pair_score,
         query_block,
     )
@@ -377,9 +378,9 @@ def hybrid_search_many(
     # dense branch, per qid
     qb = query_block(spark, dense_q)
     slim = (
-        df.select(F.col(id_col).alias("id"), F.col(vector_col))
+        _doc_side(df, req.metric, vector_col, F.col(id_col).alias("id"))
         .join(F.broadcast(qb))
-        .select("qid", "id", _pair_score(req.metric, vector_col).alias("_ds"))
+        .select("qid", "id", _pair_score(req.metric, vector_col, "_dn").alias("_ds"))
         .filter(F.col("_ds").isNotNull())
         .withColumn("_ds_r", F.round(F.col("_ds"), RANK_DECIMALS))
     )

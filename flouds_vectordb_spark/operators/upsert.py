@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from flouds_vectordb_spark import catalog as catalog_mod
 from flouds_vectordb_spark.catalog import resolve_data_dir
 from flouds_vectordb_spark.lifecycle import tracked_persist
+from flouds_vectordb_spark.sources.tables import read_parquet
 
 AUTO_FLUSH_MIN_BATCH = 100  # appsettings.json auto_flush_min_batch
 
@@ -236,28 +237,29 @@ class CollectionWriter:
         if not skip_dim_validation:
             dim = int(self.meta["dimension"])
             bad_pred = F.col("vector").isNull() | (F.size("vector") != dim)
-        pinned = None
-        if auto_id:
-            # PIN the batch before id assignment: the count job and the
-            # parquet write both execute it, and the assigned id of a row
-            # is a function of its partition and position — persist
-            # materializes the layout once so both see the SAME ids, even
-            # for sources whose recomputation could reorder (df.sample,
-            # shuffle output, task retries). Persist is best-effort (a
-            # lost executor recomputes), which is why the index appends
-            # below re-read the WRITTEN files instead of this lineage —
-            # on-disk ids are authoritative.
-            from pyspark import StorageLevel
+        # PIN the batch once, released after both index appends or on any
+        # raise: the validation job, the write, the sparse append and the
+        # IVF assign all read it, and would each recompute a caller's
+        # Python-built batch. For auto_id it also fixes the layout the ids
+        # derive from (partition, position), so the count job and the
+        # write see the SAME ids even for sources whose recomputation
+        # could reorder (df.sample, shuffle output, task retries).
+        # Persist is best-effort (a lost executor recomputes), which is
+        # why auto_id index appends re-read the WRITTEN files instead.
+        from pyspark import StorageLevel
 
-            pinned = tracked_persist(stamped, StorageLevel.MEMORY_AND_DISK)
-            stamped, n, nbad = self._assign_auto_ids(pinned, bad_pred)
-        else:
-            agg_cols = [F.count("*").alias("n"), F.count_distinct("id").alias("nk")]
-            if bad_pred is not None:
-                agg_cols.append(F.count(F.when(bad_pred, F.lit(1))).alias("nbad"))
-            counts = stamped.agg(*agg_cols).first()
-            n, nbad = int(counts["n"]), int(counts["nbad"]) if bad_pred is not None else 0
+        pinned = tracked_persist(stamped, StorageLevel.MEMORY_AND_DISK)
         try:
+            if auto_id:
+                stamped, n, nbad = self._assign_auto_ids(pinned, bad_pred)
+            else:
+                stamped = pinned
+                agg_cols = [F.count("*").alias("n"), F.count_distinct("id").alias("nk")]
+                if bad_pred is not None:
+                    agg_cols.append(F.count(F.when(bad_pred, F.lit(1))).alias("nbad"))
+                counts = stamped.agg(*agg_cols).first()
+                n = int(counts["n"])
+                nbad = int(counts["nbad"]) if bad_pred is not None else 0
             if bad_pred is not None and nbad > 0:
                 key_expr = "id" if not auto_id else F.lit("<auto>").alias("id")
                 sample = [r["id"] for r in
@@ -336,11 +338,10 @@ class CollectionWriter:
                 stamped = (self.catalog.spark.read
                            .parquet(resolve_data_dir(self.meta["path"]))
                            .filter(F.col("batch_ts") == int(batch_ts)))
+            sparse_indexed = self._append_sparse(stamped, int(batch_ts))
+            dense_indexed = self._append_dense_indexes(stamped)
         finally:
-            if pinned is not None:
-                pinned.unpersist()
-        sparse_indexed = self._append_sparse(stamped, int(batch_ts))
-        dense_indexed = self._append_dense_indexes(stamped)
+            pinned.unpersist()
         flushed = should_flush(n, force_flush, auto_flush_min_batch)
         if flushed:
             self.flush()
@@ -825,7 +826,7 @@ class CollectionWriter:
             path = self.meta["path"] + "__pq"
             decoded = pq_decoded_column(F.col("codes"), open_pq(path))
         return (
-            spark.read.parquet(path)
+            read_parquet(spark, path)
             .filter(F.col("centroid_id").isin(list(cells)))
             .select(id_col, "batch_ts", *extra_cols, decoded.alias(vector_col))
         )
@@ -1028,13 +1029,14 @@ class CollectionWriter:
             json.dump({"n_docs": int(row["n"]), "sum_dl": int(row["s"])}, f)
         return paths["tf"]
 
-    def _append_sparse(self, stamped: DataFrame, batch_ts: int) -> bool:
+    def _append_sparse(self, batch: DataFrame, batch_ts: int) -> bool:
         """O(batch) incremental index maintenance, called from insert_data
         when the incremental artifacts exist. Handles UPDATES: a batch key
         that already exists gets its old tf rows superseded (latest-wins by
         doc ts at read) and its old df/dl contributions subtracted from the
         mergeable stats, so the derived weights equal a full rebuild's —
-        parity-tested in tests/test_sparse_search.py."""
+        parity-tested in tests/test_sparse_search.py. No persist here:
+        insert_data's pin on `batch` also serves the dense append."""
         import json
         import os
         import shutil
@@ -1049,21 +1051,20 @@ class CollectionWriter:
         if not os.path.isdir(paths["tf"]):
             return False
         spark = self.catalog.spark
-        batch = tracked_persist(stamped)
-        try:
-            new_tf = bm25_tf(batch).withColumn("batch_ts", F.lit(batch_ts))
-            new_docs = bm25_doc_rows(batch).withColumn("batch_ts", F.lit(batch_ts))
+        new_tf = bm25_tf(batch).withColumn("batch_ts", F.lit(batch_ts))
+        new_docs = bm25_doc_rows(batch).withColumn("batch_ts", F.lit(batch_ts))
 
-            # updated docs: latest stored version per batch key (join, not a
-            # driver-side id list — bulk batches stay distributed; the batch
-            # side is small and broadcast-able, AQE picks the strategy)
-            docs = spark.read.parquet(paths["docs"])
-            batch_ids = batch.select("id")
-            updated = (
-                docs.join(batch_ids, "id")
-                .groupBy("id")
-                .agg(F.max("batch_ts").alias("batch_ts"))
-            ).transform(tracked_persist)
+        # updated docs: latest stored version per batch key (join, not a
+        # driver-side id list — bulk batches stay distributed; the batch
+        # side is small and broadcast-able, AQE picks the strategy)
+        docs = read_parquet(spark, paths["docs"])
+        batch_ids = batch.select("id")
+        updated = (
+            docs.join(batch_ids, "id")
+            .groupBy("id")
+            .agg(F.max("batch_ts").alias("batch_ts"))
+        ).transform(tracked_persist)
+        try:
             upd_row = (
                 docs.join(updated, ["id", "batch_ts"])
                 .agg(F.count("*").alias("n"),
@@ -1076,11 +1077,11 @@ class CollectionWriter:
                 F.coalesce(F.sum("dl"), F.lit(0)).alias("s")).first()
 
             # stats' = stats + df(new) - df(old versions of updated docs)
-            old_tf_upd = spark.read.parquet(paths["tf"]).join(
+            old_tf_upd = read_parquet(spark, paths["tf"]).join(
                 updated, ["id", "batch_ts"])
             neg_df = bm25_term_stats(old_tf_upd).withColumn(
                 "df", -F.col("df"))
-            stats = spark.read.parquet(paths["stats"])
+            stats = read_parquet(spark, paths["stats"])
             merged = (
                 stats.unionByName(bm25_term_stats(new_tf)).unionByName(neg_df)
                 .groupBy("term").agg(F.sum("df").alias("df"))
@@ -1088,25 +1089,24 @@ class CollectionWriter:
             )
             tmp = paths["stats"] + "__merging"
             merged.write.mode("overwrite").parquet(tmp)
-            updated.unpersist()
-            shutil.rmtree(paths["stats"])
-            os.replace(tmp, paths["stats"])
-
-            # batch is persisted and materialized by the stats actions
-            # above, so its cache stats size the append's partitioning
-            self._term_sorted(new_tf, src=batch).write.mode("append") \
-                .parquet(paths["tf"])
-            new_docs.write.mode("append").parquet(paths["docs"])
-
-            with open(paths["meta"]) as f:
-                counters = json.load(f)
-            counters["n_docs"] += int(batch_row["n"]) - n_upd
-            counters["sum_dl"] += int(batch_row["s"]) - dl_upd
-            with open(paths["meta"], "w") as f:
-                json.dump(counters, f)
-            return True
         finally:
-            batch.unpersist()
+            updated.unpersist()
+        shutil.rmtree(paths["stats"])
+        os.replace(tmp, paths["stats"])
+
+        # a pinned batch is materialized by insert_data's validation job,
+        # so its cache stats size the append's partitioning
+        self._term_sorted(new_tf, src=batch).write.mode("append") \
+            .parquet(paths["tf"])
+        new_docs.write.mode("append").parquet(paths["docs"])
+
+        with open(paths["meta"]) as f:
+            counters = json.load(f)
+        counters["n_docs"] += int(batch_row["n"]) - n_upd
+        counters["sum_dl"] += int(batch_row["s"]) - dl_upd
+        with open(paths["meta"], "w") as f:
+            json.dump(counters, f)
+        return True
 
     def _stored_postings(self):
         """The queryable posting view (id, term, tf, dl, df, weight):
@@ -1123,16 +1123,16 @@ class CollectionWriter:
         paths = self._sparse_paths()
         spark = self.catalog.spark
         if os.path.isdir(paths["legacy"]):
-            return spark.read.parquet(paths["legacy"])
+            return read_parquet(spark, paths["legacy"])
         if not os.path.isdir(paths["tf"]):
             return None
         doc_latest = (
-            spark.read.parquet(paths["docs"])
+            read_parquet(spark, paths["docs"])
             .groupBy("id").agg(F.max("batch_ts").alias("batch_ts"))
         )
-        tf_latest = spark.read.parquet(paths["tf"]).join(
+        tf_latest = read_parquet(spark, paths["tf"]).join(
             doc_latest, ["id", "batch_ts"]).select("id", "term", "tf", "dl")
-        stats = spark.read.parquet(paths["stats"])
+        stats = read_parquet(spark, paths["stats"])
         with open(paths["meta"]) as f:
             counters = json.load(f)
         return bm25_weights(tf_latest, stats,

@@ -331,7 +331,7 @@ class _BlockScorer:
         if self.literal:
             expr = None
             for q, v in self.queries:
-                br = metric_score_q(self.metric, F.col(vector_col), v)
+                br = metric_score_q(self.metric, vector_col, v)
                 expr = (F.when(F.col("qid") == q, br) if expr is None
                         else expr.when(F.col("qid") == q, br))
             return df.withColumn("_s", expr)

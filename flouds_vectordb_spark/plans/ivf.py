@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flouds_vectordb_spark.operators.dense_search import DenseSearchRequest, dense_search
+from flouds_vectordb_spark.sources.tables import read_parquet
 
 NPROBE_MAX = 256  # reference vector_store.py:495
 SAMPLE_CAP = 262144  # driver-side training sample bound (FAISS-style)
@@ -116,25 +117,6 @@ def _assign_udf(centroids: np.ndarray, metric: str):
     return assign_cell
 
 
-# (applicationId, abs path, layout fingerprint) -> base scan DataFrame.
-# spark.read.parquet costs a ~0.25 s footer/schema/listing round trip PER
-# CALL (measured r13: HALF the q1_ivf_search_many plan-build wall came
-# from reading the same immutable layout twice per query). The layout
-# only changes via build/append, which the fingerprint (partition-dir
-# mtimes) observes — the tables._LOAD_CACHE pattern.
-_SCAN_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _layout_fingerprint(path: str) -> tuple:
-    try:
-        st = os.stat(path)
-        ent = tuple(sorted((e.name, e.stat().st_mtime_ns)
-                           for e in os.scandir(path)))
-        return (st.st_mtime_ns, ent)
-    except OSError:
-        return ("missing",)
-
-
 class IvfIndex:
     """A built IVF layout: centroid-partitioned parquet + driver centroids."""
 
@@ -184,18 +166,11 @@ class IvfIndex:
         return order.astype("int64")
 
     def base_scan(self, spark: SparkSession) -> DataFrame:
-        """The full-layout DataFrame, cached per (session, path, layout
-        fingerprint) — immutable plans over an immutable layout, so one
-        footer round trip per session instead of one per query."""
-        key = (spark.sparkContext.applicationId, os.path.abspath(self.path),
-               _layout_fingerprint(self.path))
-        df = _SCAN_CACHE.get(key)
-        if df is None:
-            if len(_SCAN_CACHE) > 256:  # dead sessions / swept layouts
-                _SCAN_CACHE.clear()
-            df = spark.read.parquet(self.path)
-            _SCAN_CACHE[key] = df
-        return df
+        """The full-layout DataFrame, reused while the layout is unchanged
+        (sources/tables.py read_parquet) — measured r13: half the
+        q1_ivf_search_many plan-build wall was reading the same layout
+        twice per query. Build and append change the fingerprint."""
+        return read_parquet(spark, self.path)
 
     def scan(self, spark: SparkSession, nprobe_cells: list[int]) -> DataFrame:
         """Partition-pruned scan of the probed cells only."""

@@ -9,6 +9,8 @@ the FLOAT_VECTOR column; their join is the vector-store "collection"
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,23 +20,24 @@ TABLE_NAMES = (
 )
 
 
-# (applicationId, sf_dir, name, fingerprint) -> DataFrame.
-# spark.read.parquet costs a ~0.1 s schema/footer round trip PER CALL;
-# the testdata tables are immutable fixtures and DataFrames are immutable
-# plans, so one per session is enough. Keyed by applicationId so a
-# restarted session never serves plans bound to a stopped SparkContext,
-# and by an mtime/size fingerprint (r11 ADVICE) so a fixture regenerated
-# mid-session gets a fresh file listing instead of a plan over
-# deleted/stale files. Bounded by |tables| x |sf dirs| per app (tiny).
-_LOAD_CACHE: dict[tuple, DataFrame] = {}
+# (applicationId, abs path, mergeSchema) -> (fingerprint, DataFrame).
+# spark.read.parquet costs a schema/footer/listing round trip PER CALL
+# (~0.1-0.25 s, one Spark job with mergeSchema); DataFrames are immutable
+# plans, so one per (session, path, layout) is enough. Keyed by
+# applicationId so a restarted session never serves plans bound to a
+# stopped SparkContext; an entry is used only while the path's mtime/size
+# fingerprint (r11 ADVICE) is unchanged, so any write that adds, replaces
+# or removes a file — an append, a compaction, an index rebuild, a
+# fixture regenerated mid-session — gets a fresh file listing instead of
+# a plan over deleted/stale files, and the stale plan is dropped.
+_READ_CACHE: dict[tuple, tuple[tuple, DataFrame]] = {}
 
 
 def _fingerprint(path: str) -> tuple:
-    """(mtime_ns, size) of the parquet file or directory listing — cheap
-    (one stat for a file; one scandir for a directory) relative to the
-    footer round trip the cache avoids."""
-    import os
-
+    """(mtime_ns, size) of the parquet file or, for a directory, of each
+    entry — cheap (one stat for a file; one scandir for a directory)
+    relative to the footer round trip the cache avoids. A write inside a
+    partition subdirectory moves that subdirectory's mtime."""
     try:
         st = os.stat(path)
         if not os.path.isdir(path):
@@ -45,6 +48,25 @@ def _fingerprint(path: str) -> tuple:
         return (st.st_mtime_ns, ent)
     except OSError:
         return ("missing",)
+
+
+def read_parquet(spark: SparkSession, path: str,
+                 merge_schema: bool = False) -> DataFrame:
+    """spark.read.parquet(path), reused while the files under path are
+    unchanged (see _READ_CACHE)."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(path), merge_schema)
+    fp = _fingerprint(path)
+    hit = _READ_CACHE.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    if len(_READ_CACHE) > 256:  # dead sessions / swept generations
+        _READ_CACHE.clear()
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    df = reader.parquet(path)
+    _READ_CACHE[key] = (fp, df)
+    return df
 
 
 # downstream caches built on load() plans (queries._PLAN_CACHE) register
@@ -64,14 +86,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for hook in _INVALIDATION_HOOKS:  # stale downstream plans
             hook()
     _LAST_FP[base] = fp
-    key = base + (fp,)
-    df = _LOAD_CACHE.get(key)
-    if df is None:
-        if len(_LOAD_CACHE) > 256:  # app restarts: drop dead-session plans
-            _LOAD_CACHE.clear()
-        df = spark.read.parquet(path)
-        _LOAD_CACHE[key] = df
-    return df
+    return read_parquet(spark, path)
 
 
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -436,3 +436,58 @@ def test_sparse_search_many_plan_is_inverted_term_join(spark, corpus):
     assert bnlj <= 1, plan
     if bnlj:
         assert "_bm25_n" in plan
+
+
+def test_catalog_many_with_zero_norm_doc_matches_single_loop(spark, tmp_path_factory):
+    """The COSINE document norm is folded once per document below the
+    block join; search_many (exact and IVF) and search_hybrid_many must
+    still equal one single request per query when a zero-norm document
+    (NULL cosine) sits in the collection and matches the text branch."""
+    from flouds_vectordb_spark.catalog import Catalog, CollectionSpec
+    from flouds_vectordb_spark.operators.hybrid_search import HybridSearchRequest
+    from flouds_vectordb_spark.operators.upsert import CollectionWriter
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh_zero_norm")))
+    cat.set_vector_store("tzn")
+    cat.generate_schema(CollectionSpec("tzn", "m", dimension=DIM,
+                                       metric_type="COSINE", nlist=4))
+    w = CollectionWriter(cat, "tzn", "m")
+    rng = np.random.RandomState(23)
+    rows = [(str(i), [float(x) for x in rng.standard_normal(DIM)],
+             f"spark vector {i % 5} scan") for i in range(120)]
+    rows += [("zero", [0.0] * DIM, "spark vector zero"),
+             ("negzero", [-0.0] * DIM, "spark scan zero")]
+    w.insert_data(spark.createDataFrame(
+        rows, "id string, vector array<double>, chunk string"),
+        batch_ts=1, force_flush=True)
+    w.build_index()
+    w.build_sparse_index()
+
+    qs = [(t, [float(x) for x in rng.standard_normal(DIM)]) for t in range(4)]
+    texts = ["spark zero", "vector 3", "scan zero", "zero"]
+    for use_index in (False, True):
+        req = DenseSearchRequest(query_vector=qs[0][1], metric="COSINE", limit=8,
+                                 nprobe=4, score_threshold=None, output_fields=())
+        batched = _rows(w.search_many(qs, req, use_index=use_index))
+        singles = []
+        for qid, v in qs:
+            r1 = DenseSearchRequest(query_vector=list(v), metric="COSINE", limit=8,
+                                    nprobe=4, score_threshold=None, output_fields=())
+            singles += [(qid, r["id"], int(r["rank"]), round(float(r["score"]), 6))
+                        for r in w.search(r1, use_index=use_index).collect()]
+        assert batched == sorted(singles), use_index
+        assert not {r[1] for r in batched} & {"zero", "negzero"}
+
+    hq = [(qid, v, t) for (qid, v), t in zip(qs, texts)]
+    hreq = HybridSearchRequest(query_vector=qs[0][1], text_filter="x", limit=8,
+                               output_fields=())
+    got = sorted((r["qid"], int(r["rank"]), r["id"], r["rrf_score"])
+                 for r in w.search_hybrid_many(hq, hreq).collect())
+    want = []
+    for qid, v, t in hq:
+        sreq = HybridSearchRequest(query_vector=v, text_filter=t, limit=8,
+                                   output_fields=())
+        want += [(qid, int(r["rank"]), r["id"], r["rrf_score"])
+                 for r in w.search_hybrid(sreq, use_index=True).collect()]
+    assert got == sorted(want)
+    assert {"zero", "negzero"} & {r[2] for r in got}  # via the BM25 branch

@@ -881,3 +881,39 @@ def test_remove_substrings_driver_regime_equals_distributed(spark, tmp_path,
                       remove_exact_substrings(df, spans_dist).collect()))
     assert drv == dist and drv
     assert any(r[2] and r[2] > 0 for r in drv)  # something was removed
+
+
+def test_no_aqe_restores_an_unset_key_as_unset(spark):
+    """ADVICE r14: no_aqe restored a previously-unset AQE key as an
+    explicit "true"; an unset key must come back unset, a set one with
+    its value."""
+    from flouds_vectordb_spark.lifecycle import no_aqe
+
+    key = "spark.sql.adaptive.enabled"
+    saved = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        with no_aqe(spark):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key, None) is None
+        spark.conf.set(key, "true")
+        with no_aqe(spark):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key, None) == "true"
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+def test_within_group_pairs_empty_input():
+    """ADVICE r14: the shared pair enumerator must accept empty input."""
+    import numpy as np
+
+    from flouds_vectordb_spark.operators.dedup import _within_group_pairs
+
+    a, b = _within_group_pairs(np.zeros(0, dtype=np.int64), 0)
+    assert a.size == 0 and b.size == 0
+    a, b = _within_group_pairs(np.array([3, 3, 5, 5, 5]), 5)
+    assert list(zip(a.tolist(), b.tolist())) == [(0, 1), (2, 3), (2, 4), (3, 4)]

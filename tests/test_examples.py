@@ -10,12 +10,19 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _env() -> dict:
+    """Subprocess env: 4 cores and a heap that fits beside the test
+    session's own JVM (see conftest.TEST_DRIVER_MEMORY)."""
+    return {**os.environ, "SPARK_GRAFT_CPUS": "4",
+            "SPARK_DRIVER_MEMORY": os.environ.get("SPARK_DRIVER_MEMORY", "4g")}
+
+
 def test_model_workflow_example_runs(tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("example_wh"))
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "examples", "model_workflow.py"), wh],
         capture_output=True, text=True, timeout=300,
-        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+        env=_env(),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     for marker in ("step 1", "step 2", "step 3", "step 4a dense",
@@ -28,7 +35,7 @@ def test_tenant_setup_example_runs(tmp_path_factory):
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "examples", "tenant_setup.py"), wh],
         capture_output=True, text=True, timeout=300,
-        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+        env=_env(),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "schema_exists=True" in out.stdout
@@ -40,7 +47,7 @@ def test_quantized_index_example_runs(tmp_path_factory):
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "examples", "quantized_index.py"), wh],
         capture_output=True, text=True, timeout=300,
-        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+        env=_env(),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "IVF_SQ8: top hit 'needle'" in out.stdout
@@ -52,7 +59,7 @@ def test_batched_retrieval_example_runs(tmp_path_factory):
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "examples", "batched_retrieval.py"), wh],
         capture_output=True, text=True, timeout=300,
-        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+        env=_env(),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "auto ids 0..5" in out.stdout
@@ -68,7 +75,7 @@ def test_pretraining_pipeline_example_runs():
         [sys.executable, os.path.join(REPO, "examples", "pretraining_pipeline.py"),
          "/root/testdata/sf0.001"],
         capture_output=True, text=True, timeout=600,
-        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+        env=_env(),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "input=500" in out.stdout and "mixed=" in out.stdout

@@ -251,3 +251,16 @@ def test_classify_vectorized_equals_reference_on_fixture(spark):
              .select("text").collect()]
     for t in texts:
         assert classify_text(t) == classify_text_ref(t)
+
+
+def test_classify_text_survives_lone_surrogates():
+    """ADVICE r14: the vectorized gram ranker raised UnicodeEncodeError on
+    lone surrogates; like the reference, they are word breaks."""
+    from flouds_vectordb_spark.functions.langid import (
+        classify_text,
+        classify_text_ref,
+    )
+
+    for t in ("the quick \ud800brown fox", "\udfff", "der\udc00 schnelle Hund",
+              "😀 smile \ud83d"):
+        assert classify_text(t) == classify_text_ref(t), t

@@ -47,3 +47,34 @@ def test_plan_is_a_local_relation(spark):
     df = local_df(spark, [(1, 2.0)], "a bigint, b double")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan
+
+
+def test_json_df_round_trips_special_doubles_exactly(spark):
+    """The JSON query-block literal keeps every double's bits: NaN,
+    +-Infinity, -0.0, subnormals, the extremes and repr-hard values."""
+    import struct
+
+    from flouds_vectordb_spark.functions.local import json_df
+
+    special = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, 5e-324,
+               -5e-324, 2.2250738585072009e-308, 2.2250738585072014e-308,
+               1.7976931348623157e308, 0.1 + 0.2, 1 / 3, -1e-310]
+    rows = [(i, special[i:] + special[:i], special[i], [i, i + 1])
+            for i in range(len(special))] + [(99, [], None, None)]
+    df = json_df(spark, rows, "qid bigint, _qv array<double>, _qn double, "
+                              "_cells array<int>")
+    assert df.schema.simpleString() == (
+        "struct<qid:bigint,_qv:array<double>,_qn:double,_cells:array<int>>")
+
+    def bits(x):
+        return None if x is None else struct.pack("<d", x)
+
+    got = {r["qid"]: r for r in df.collect()}
+    assert len(got) == len(rows)
+    for qid, qv, qn, cells in rows:
+        r = got[qid]
+        assert [bits(x) for x in r["_qv"]] == [bits(x) for x in qv]
+        assert bits(r["_qn"]) == bits(qn)
+        assert r["_cells"] == cells
+    empty = json_df(spark, [], "qid bigint, _qv array<double>")
+    assert empty.count() == 0

@@ -925,3 +925,125 @@ def test_snapshot_isolation_hides_incomplete_batches(spark, tmp_path_factory):
     w.flush()
     on_disk = {r["id"] for r in spark.read.parquet(path).collect()}
     assert on_disk == {"a", "c"}
+
+
+def test_read_cache_invalidated_by_every_write_path(spark, tmp_path_factory,
+                                                    monkeypatch):
+    """Searches reuse their parquet scans while the files are unchanged
+    (sources/tables.read_parquet). Every write path must still be seen:
+    after insert_data, flush (with the old generation swept),
+    build_index and build_sparse_index a search returns the new rows and
+    never trips over a deleted file."""
+    import os
+
+    import numpy as np
+
+    import flouds_vectordb_spark.operators.upsert as upsert_mod
+    from flouds_vectordb_spark.operators.dense_search import DenseSearchRequest
+    from flouds_vectordb_spark.operators.hybrid_search import HybridSearchRequest
+    from flouds_vectordb_spark.operators.sparse_search import SparseSearchRequest
+
+    monkeypatch.setattr(upsert_mod, "GENERATION_GRACE_SECONDS", 0.0)
+    dim = 4
+    rng = np.random.RandomState(31)
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh_rc")))
+    cat.set_vector_store("trc")
+    cat.generate_schema(CollectionSpec("trc", "m", dimension=dim, nlist=2))
+    w = CollectionWriter(cat, "trc", "m")
+    ddl = "id string, chunk string, vector array<double>"
+
+    def vec():
+        return [float(x) for x in rng.standard_normal(dim)]
+
+    w.insert_data(spark.createDataFrame(
+        [(f"r{i}", f"row {i} common", vec()) for i in range(30)], ddl),
+        batch_ts=1, force_flush=True)
+    w.build_index()
+    w.build_sparse_index()
+
+    def sees(key, v, token):
+        """key is the top dense/IVF/batched hit for its own vector and the
+        only BM25 hit for its own token; hybrid ranks it first."""
+        req = DenseSearchRequest(query_vector=v, limit=3, nprobe=4,
+                                 score_threshold=None, output_fields=())
+        for use_index in (False, True):
+            top = w.search(req, use_index=use_index).collect()
+            assert top and top[0]["id"] == key, (key, use_index)
+        many = w.search_many([(0, v)], req, use_index=True).collect()
+        assert min(many, key=lambda r: r["rank"])["id"] == key
+        sp = w.search_sparse(SparseSearchRequest(query_text=token, limit=3),
+                             use_index=True).collect()
+        assert [r["id"] for r in sp] == [key]
+        hy = w.search_hybrid(HybridSearchRequest(
+            query_vector=v, text_filter=token, limit=3, output_fields=()),
+            use_index=True).collect()
+        assert min(hy, key=lambda r: r["rank"])["id"] == key
+
+    v0 = vec()
+    w.insert_data(spark.createDataFrame([("r0", "tokzero common", v0)], ddl),
+                  batch_ts=2, auto_flush_min_batch=-1)
+    sees("r0", v0, "tokzero")  # warms every cached scan
+    ts = 3
+    # each step: an insert_data seen by the next search, then the write
+    # path under test, then the same search again
+    for step in ("flush", "flush", "build_index", "build_sparse_index"):
+        v = vec()
+        key, token = f"new{ts}", f"tok{ts}"
+        w.insert_data(spark.createDataFrame([(key, f"{token} common", v)], ddl),
+                      batch_ts=ts, auto_flush_min_batch=-1)
+        sees(key, v, token)
+        getattr(w, step)()
+        sees(key, v, token)
+        ts += 1
+    assert len([d for d in os.listdir(w.meta["path"])
+                if d.startswith("_gen-")]) == 2  # older generations swept
+
+
+def test_insert_data_leaves_no_persisted_rdd(spark, tmp_path_factory):
+    """insert_data pins its batch once for every path and releases the pin
+    after both index appends — and on every raise path."""
+    sc = spark.sparkContext
+
+    def pinned():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = pinned()
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("wh_pin")))
+    cat.set_vector_store("tpin")
+    cat.generate_schema(CollectionSpec("tpin", "m", dimension=2, nlist=2))
+    cat.generate_schema(CollectionSpec("tpin", "auto", dimension=2, nlist=2,
+                                       primary_key_data_type="INT64"))
+    ddl = "id string, chunk string, vector array<float>"
+    w = CollectionWriter(cat, "tpin", "m")
+    w.insert_data(spark.createDataFrame(
+        [("a", "x y", [1.0, 0.0]), ("b", "y z", [0.0, 1.0]),
+         ("c", "z x", [0.6, 0.8])], ddl), batch_ts=1, force_flush=True)
+    w.build_index()
+    w.build_sparse_index()
+    assert pinned() == before
+
+    res = w.insert_data(spark.createDataFrame(
+        [("a", "x x", [0.8, 0.6]), ("d", "w", [0.1, 0.9])], ddl), batch_ts=2)
+    assert res["sparse_indexed"] and res["dense_indexed"]
+    assert pinned() == before
+    with pytest.raises(ValueError, match="dimension"):
+        w.insert_data(spark.createDataFrame([("e", "w", [1.0])], ddl), batch_ts=3)
+    assert pinned() == before
+    with pytest.raises(ValueError, match="duplicate"):
+        w.insert_data(spark.createDataFrame(
+            [("f", "w", [1.0, 0.0]), ("f", "v", [0.0, 1.0])], ddl), batch_ts=4)
+    assert pinned() == before
+    with pytest.raises(ValueError, match="not greater"):
+        w.insert_data(spark.createDataFrame([("g", "w", [1.0, 0.0])], ddl),
+                      batch_ts=2)
+    assert pinned() == before
+
+    wa = CollectionWriter(cat, "tpin", "auto")
+    wa.insert_data(spark.createDataFrame([("p", [1.0, 0.0]), ("q", [0.0, 1.0])],
+                                         "chunk string, vector array<float>"),
+                   batch_ts=1)
+    with pytest.raises(ValueError, match="dimension"):
+        wa.insert_data(spark.createDataFrame([("r", [1.0])],
+                                             "chunk string, vector array<float>"),
+                       batch_ts=2)
+    assert pinned() == before

@@ -90,3 +90,56 @@ def test_sql_twin_agrees_with_spark(vec_df):
                 assert oracle[i] is None, (metric, i)
             else:
                 assert spark_scores[i] == oracle[i], (metric, i)  # bit-identical
+
+
+@pytest.mark.parametrize("metric", ["COSINE", "IP", "L2"])
+def test_sql_text_score_matches_column_builder(spark, metric):
+    """metric_score_q's one-expression SQL text == the Column-builder fold
+    it replaced, bit for bit: zero-norm rows (COSINE NULL), wrong-length
+    vectors (NULL), -0.0 in query and document, NULL vectors; and a
+    computed vector Column (scored by the Column builders) agrees too."""
+    import struct
+
+    q = [0.3, -0.0, 2.5, -1.75]
+    rows = [
+        (1, [1.0, 2.0, 3.0, 4.0]),
+        (2, [-0.0, 0.0, -0.0, 0.0]),       # zero norm
+        (3, [0.0, 0.0, 0.0, 0.0]),         # zero norm
+        (4, [1.0, 2.0, 3.0]),              # wrong length
+        (5, [1.0, 2.0, 3.0, 4.0, 5.0]),    # wrong length
+        (6, None),
+        (7, [1e-310, -2.5e-308, 7.0, -0.0]),
+    ]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    qa = F.array(*[F.lit(float(x)) for x in q])
+    vec = F.col("v")
+    old = {
+        "IP": V.dot_score(vec, qa),
+        "L2": V.l2_score(vec, qa),
+        "COSINE": F.try_divide(V.dot_score(vec, qa),
+                               V.norm(vec) * F.lit(V.query_norm(q))),
+    }[metric]
+    got = df.select("id", old.alias("old"),
+                    V.metric_score_q(metric, "v", q).alias("name"),
+                    V.metric_score_q(metric, F.col("v"), q).alias("col"),
+                    V.metric_score_q(metric, F.col("v").cast("array<double>"),
+                                     q).alias("computed")).collect()
+
+    def bits(x):
+        return None if x is None else struct.pack("<d", x)
+
+    for r in got:
+        assert bits(r["old"]) == bits(r["name"]) == bits(r["col"]) \
+            == bits(r["computed"]), (metric, r)
+    by_id = {r["id"]: r["name"] for r in got}
+    assert by_id[4] is None and by_id[5] is None and by_id[6] is None
+    if metric == "COSINE":
+        assert by_id[2] is None and by_id[3] is None
+
+
+def test_column_ref_reads_names_like_f_col():
+    assert V.column_ref("vector") == "`vector`"
+    assert V.column_ref("a.b") == "`a`.`b`"
+    assert V.column_ref("my vec") == "`my vec`"
+    assert V.column_ref(F.col("v")) == "`v`"
+    assert V.column_ref(F.col("v") * 2) is None
