@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.functions import vector as V
 
 RANK_DECIMALS = 6
@@ -669,20 +670,12 @@ def late_interaction_topk_pruned(
             n_expr.alias("_qn"),
             srp_signature_expr(quote_ident(vector_col),
                                planes).alias("_qsig")))
-    small = _li_small(doc_tokens)
+    small = regime.fits(doc_tokens, regime.SMALL_BYTES)
     cand = _li_srp_candidates(doc_tokens, qt, planes, radius, id_col,
                               vector_col, sig_table, small=small)
     return _li_rerank_candidates(doc_tokens, qt.drop("_qsig"), cand, k,
                                  id_col, vector_col, norm_col=norm_col,
                                  small=small)
-
-
-def _li_small(df: DataFrame) -> bool:
-    """Leaf-bytes regime switch for the LI signature path (the
-    sparse_search._small_corpus rule)."""
-    from flouds_vectordb_spark.operators.sparse_search import _small_corpus
-
-    return _small_corpus(df)
 
 
 def _li_srp_candidates(doc_tokens: DataFrame, qt, planes, radius: int,
@@ -696,7 +689,8 @@ def _li_srp_candidates(doc_tokens: DataFrame, qt, planes, radius: int,
     computation — same values by construction, 8 B/token scanned."""
     if sig_table is not None:
         dsig = sig_table
-    elif small if small is not None else _li_small(doc_tokens):
+    elif (small if small is not None
+          else regime.fits(doc_tokens, regime.SMALL_BYTES)):
         # small corpus: the parsed-SQL expression form — at a few
         # thousand tokens the Arrow round trip + worker spin-up of the
         # batch UDF costs more than the interpreted fold it replaces
@@ -741,9 +735,9 @@ def _li_rerank_candidates(doc_tokens: DataFrame, qt, cand: DataFrame,
     from pyspark.sql import Window
 
     from flouds_vectordb_spark.lifecycle import tracked_persist
-    from flouds_vectordb_spark.operators.sparse_search import _small_corpus
 
-    if small if small is not None else _small_corpus(doc_tokens):
+    if (small if small is not None
+            else regime.fits(doc_tokens, regime.SMALL_BYTES)):
         # the candidate list is bounded by the (small) corpus itself, so
         # broadcast is provably safe — skip the persist + count action
         # (r12: the count was the serving gates' largest fixed cost at
@@ -805,7 +799,7 @@ def late_interaction_recall_pair(
     executed once instead of once per side. Pinned by
     test_li_recall_pair_matches_operators.
 
-    Two regimes (the sparse_search._small_corpus switch):
+    Two regimes (regime.fits(doc_tokens, regime.SMALL_BYTES)):
     - small: ONE action collects the tagged union of M's scalars and the
       candidate pairs; the qpos-sorted fold, HALF_UP rounding, ranking
       and k-cut run driver-side with the same float discipline
@@ -819,7 +813,6 @@ def late_interaction_recall_pair(
       folds/windows run distributed, exactly the operators' shape.
     Regime equivalence pinned by test_li_recall_pair_regimes_identical."""
     from flouds_vectordb_spark.lifecycle import tracked_persist
-    from flouds_vectordb_spark.operators.sparse_search import _small_corpus
 
     # same driver-side query block as the pruned operator (tiny by the
     # serving contract; one collect replaces ~0.8 s of signature-tree
@@ -851,7 +844,7 @@ def late_interaction_recall_pair(
         dt.crossJoin(qt.drop("_qsig"))
         .select("qid", "doc_id", "_qpos", cs.alias("_cs"))
         .groupBy("qid", "doc_id", "_qpos").agg(F.max("_cs").alias("_ms")))
-    small = _li_small(doc_tokens)
+    small = regime.fits(doc_tokens, regime.SMALL_BYTES)
     # candidates= overrides the SRP stage: any stage-2 fetcher's (qid,
     # doc_id) pairs (IVF probe, HNSW beam) grade through the same shared
     # MaxSim — the r13 fusion that halves every recall gate

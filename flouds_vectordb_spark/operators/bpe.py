@@ -35,12 +35,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.functions.text import tokenize, tokenize_sql
 from flouds_vectordb_spark.lifecycle import tracked_persist
 
 EOW = "</w>"
 
-# DRIVER regime (r13 optimization): below this input estimate the merge
+# DRIVER regime (r13 optimization): within regime.DRIVER_BYTES the merge
 # loop runs on the COLLECTED distinct-word table (subword-nmt's own
 # incremental algorithm: full pair count once, then per-merge updates
 # touching only the words that contain the merged pair). The distributed
@@ -49,16 +50,7 @@ EOW = "</w>"
 # ~100% scheduling for ~200k driver-side integer ops. Above the bound the
 # distributed loop runs unchanged: its working set (distinct words) is
 # what scales, and the round cost is corpus-size independent.
-_BPE_DRIVER_INPUT_BYTES = 16 << 20
 _BPE_DRIVER_MAX_WORDS = 2_000_000
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
 
 
 def _fold_word(syms: list, lhs: str, rhs: str) -> list:
@@ -160,7 +152,7 @@ def bpe_train(df: DataFrame, n_merges: int = 32, text_col: str = "text",
         raise ValueError("n_merges must be >= 1")
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    if not df.isStreaming and _plan_size_bytes(df) <= _BPE_DRIVER_INPUT_BYTES:
+    if regime.fits(df, regime.DRIVER_BYTES):
         from flouds_vectordb_spark.lifecycle import no_aqe
 
         with no_aqe(df.sparkSession):  # one job, not agg-stage + result

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.functions.hashing import (
     RANGE_BUCKET_W as _BUCKET_W,
     RANGE_BUCKETS as _NB,
@@ -143,8 +144,8 @@ def pack_sequences(df: DataFrame, seq_len: int = 2048, id_col: str = "id",
     ceil(n/seq_len)+1 sequences at most). Bit-identical to the
     single-window definition the DuckDB twin uses.
 
-    Small-corpus regime (r13, VERDICT ask #5): below the leaf-bytes bar
-    (the sparse_search._small_corpus rule) the two-phase plan's
+    Small-corpus regime (r13, VERDICT ask #5): within the leaf-bytes bar
+    (regime.fits(df, regime.SMALL_BYTES)) the two-phase plan's
     bucket-sums collect is a whole extra action — a full tokenize scan +
     groupBy + driver round trip — paid before the real job even starts.
     There the operator runs the oracle's own single-window formulation
@@ -159,7 +160,6 @@ def pack_sequences(df: DataFrame, seq_len: int = 2048, id_col: str = "id",
     if seq_len < 1:
         raise ValueError("seq_len must be >= 1")
     from flouds_vectordb_spark.functions.local import local_df
-    from flouds_vectordb_spark.operators.sparse_search import _small_corpus
 
     spark = df.sparkSession
     h = hash64(F.col(id_col).cast("string"), seed=seed)
@@ -168,7 +168,7 @@ def pack_sequences(df: DataFrame, seq_len: int = 2048, id_col: str = "id",
                   F.size(tokenize(F.col(text_col))).alias("_nt"))
         .filter(F.col("_nt") > 0)
     )
-    if _small_corpus(df):
+    if regime.fits(df, regime.SMALL_BYTES):
         w = (Window.orderBy(F.col("_h").asc(), F.col("id").asc())
              .rowsBetween(Window.unboundedPreceding, -1))
         offs = (

@@ -37,6 +37,7 @@ import warnings
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.functions.hashing import (
     hash64,
     hash64_sql,
@@ -48,36 +49,25 @@ from flouds_vectordb_spark.lifecycle import tracked_persist as _persist
 from flouds_vectordb_spark.sources.tables import spread_small_input as _spread
 
 
-# below the Catalyst size estimate _MINHASH_SMALL_INPUT_BYTES, every
-# MinHash intermediate sits under the broadcast threshold and the
-# shuffle-regime machinery (pre-partitioned entry cache, materialized
-# candidate stats, semi-join prune) only adds persists and action
-# barriers; above it, that machinery cuts the operator's shuffle 4x
-# (measured at 500k docs — see dedup_minhash)
-_MINHASH_SMALL_INPUT_BYTES = 48 << 20
-
 # decontaminate_neardup broadcasts its (id_a, id_b) candidate list back
 # into the train probe; 2M scalar pairs ≈ 32 MB — comfortably under the
 # default 10 MB autoBroadcast threshold is NOT the bar here (we broadcast
 # explicitly), the bar is driver/executor memory. Past this, keyed joins.
 _NEARDUP_CAND_BROADCAST_ROWS = 2_000_000
 
-# DRIVER regime (r13 optimization): below this input estimate the whole
+# DRIVER regime (r13 optimization): within regime.DRIVER_BYTES the whole
 # candidate-generation + exact-verify tail runs on COLLECTED scalars. The
 # broadcast-join small regime still schedules 9-31 Spark jobs per call
 # (every broadcast exchange, dropDuplicates and persist materialization is
-# its own job under AQE) and at gate scale (5k docs ≈ 0.6 MB) that wall is
-# ~100% scheduling. One job collects (id, band hashes, verify-set hashes) —
-# all computed by the SAME Column expressions the distributed plan uses —
-# and bucketing/Jaccard/union-find are microseconds over bounded scalars.
-# The same collect bound as the frontier/sample collects elsewhere here;
-# above it (or when the bucket pre-flight predicts a candidate explosion)
-# the existing broadcast/shuffle regimes run unchanged.
-_MINHASH_DRIVER_INPUT_BYTES = 16 << 20
+# its own job under AQE). One job collects (id, band hashes, verify-set
+# hashes) — all computed by the SAME Column expressions the distributed
+# plan uses — and bucketing/Jaccard/union-find are microseconds over
+# bounded scalars. Above the bound (or when the bucket pre-flight predicts
+# a candidate explosion) the broadcast/shuffle regimes run unchanged.
 _MINHASH_DRIVER_MAX_CAND_PAIRS = 20_000_000
 
 # task width for the driver regimes' one hashing+fetch job (r14): the
-# pandas-UDF md5 pass is ~0.4 core-s at the 16 MB gate bound, so 8 tasks
+# pandas-UDF md5 pass is ~0.4 core-s at the 16 MB driver bound, so 8 tasks
 # keep every task >= 50 ms while full defaultParallelism width (32) pays
 # more per-task overhead than it parallelizes (guide §2.6; measured
 # 0.55 s vs 0.58 s at sf0.1, and the narrower shuffle is cheaper). The
@@ -95,16 +85,6 @@ def _round6(x: float) -> float:
 
     return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
                                            rounding=ROUND_HALF_UP))
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for df's optimized plan (file bytes for
-    parquet scans). Falls back to 'large' — the scale-safe regime."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
 
 
 # --- exact dedup -------------------------------------------------------------
@@ -361,22 +341,6 @@ def _driver_minhash_rows(df: DataFrame, id_col: str, text_col: str,
     return _minhash_rows_from_flat(ids, values, offsets, n_sigs, n_bands)
 
 
-def _minhash_rows_from_h64(raw: list[tuple], n_sigs: int,
-                           n_bands: int) -> list[tuple]:
-    """(id, bands, vset) from collected (id, [shingle hash64s]) rows —
-    the list-of-rows wrapper over the flat-array core below."""
-    import numpy as np
-
-    ids = [rid for rid, _ in raw]
-    sizes = np.array([0 if h is None else len(h) for _, h in raw],
-                     dtype=np.int64)
-    nonempty = [np.asarray(h, dtype=np.int64) for _, h in raw if h]
-    values = (np.concatenate(nonempty) if nonempty
-              else np.empty(0, dtype=np.int64))
-    offsets = np.concatenate(([0], np.cumsum(sizes)))
-    return _minhash_rows_from_flat(ids, values, offsets, n_sigs, n_bands)
-
-
 def _minhash_rows_from_flat(ids, values, offsets, n_sigs: int,
                             n_bands: int) -> list[tuple]:
     """(id, bands, vset) from the flat (values, offsets) hash layout —
@@ -474,11 +438,6 @@ def _driver_minhash_edges(rows: list[tuple],
             out.append((a, b, j))
     out.sort()
     return out
-
-
-def _driver_regime(df: DataFrame) -> bool:
-    return (not df.isStreaming
-            and _plan_size_bytes(df) <= _MINHASH_DRIVER_INPUT_BYTES)
 
 
 def _jaccard_filtered(pairs: DataFrame, threshold: float) -> DataFrame:
@@ -620,7 +579,7 @@ def dedup_minhash(
                                         shingle_n)
     if output != "pairs":
         raise ValueError(f"unknown output mode {output!r}")
-    if _driver_regime(df):
+    if regime.fits(df, regime.DRIVER_BYTES):
         from flouds_vectordb_spark.functions.local import local_df
 
         rows = _driver_minhash_rows(df, id_col, text_col, n_sigs, n_bands,
@@ -634,7 +593,7 @@ def dedup_minhash(
             return local_df(df.sparkSession, edges, schema)
     entries, sets = _band_entries(df, id_col, text_col, n_sigs, n_bands,
                                   shingle_n)
-    small = _plan_size_bytes(df) <= _MINHASH_SMALL_INPUT_BYTES
+    small = regime.fits(df, regime.MINHASH_BROADCAST_BYTES)
     if small:
         # BROADCAST REGIME (gate-scale corpora): every table here sits
         # under the broadcast threshold, so the plain two-sided join plan
@@ -795,7 +754,7 @@ def dedup_minhash_components(
     union-find all run on one collected scalar table instead (exact: the
     fusion's labels equal pair-mode labels by the case analysis above,
     and the driver path computes pair mode literally)."""
-    if _driver_regime(df):
+    if regime.fits(df, regime.DRIVER_BYTES):
         rows = _driver_minhash_rows(df, id_col, text_col, n_sigs, n_bands,
                                     shingle_n)
         edges = _driver_minhash_edges(rows, jaccard_threshold)
@@ -803,7 +762,7 @@ def dedup_minhash_components(
             idt = dict(df.dtypes)[id_col]
             return _driver_union_find([(a, b) for a, b, _ in edges], idt,
                                       df.sparkSession)
-    small = _plan_size_bytes(df) <= _MINHASH_SMALL_INPUT_BYTES
+    small = regime.fits(df, regime.MINHASH_BROADCAST_BYTES)
     entries, sets = _band_entries(df, id_col, text_col, n_sigs, n_bands,
                                   shingle_n)
     if not small:
@@ -1068,11 +1027,11 @@ def _driver_ngram_pairs(ids, values, offsets, t: float,
 
     enforce_guard mirrors the distributed pre-flight exactly (same
     prefix-frequency estimate, same error) — the caller passes
-    max_candidate_pairs > 0 AND not _small_corpus(df), so small corpora
-    never raise here either. Returns None (fall back to the distributed
-    plan) when total shared-hash pairs exceed the driver bound, or when
-    ids are not unique (the distributed plan keeps per-row sets and its
-    id_a < id_b filter drops same-id row pairs; see
+    max_candidate_pairs > 0 AND not regime.fits(df, regime.SMALL_BYTES),
+    so small corpora never raise here either. Returns None (fall back to
+    the distributed plan) when total shared-hash pairs exceed the driver
+    bound, or when ids are not unique (the distributed plan keeps per-row
+    sets and its id_a < id_b filter drops same-id row pairs; see
     _driver_minhash_edges)."""
     import numpy as np
 
@@ -1193,10 +1152,8 @@ def dedup_ngram_jaccard(
     The same pre-flight (Σ c_h·(c_h-1)/2 over prefix-hash frequencies,
     computed exactly from the collected prefixes) bounds the driver
     enumeration; past max_candidate_pairs it raises the same error."""
-    from flouds_vectordb_spark.operators.sparse_search import _small_corpus
-
     t = float(jaccard_threshold)
-    if _driver_regime(df):
+    if regime.fits(df, regime.DRIVER_BYTES):
         from flouds_vectordb_spark.functions.local import local_df
         from flouds_vectordb_spark.functions.pyhash import (
             fetch_id_lists,
@@ -1211,7 +1168,7 @@ def dedup_ngram_jaccard(
         out = _driver_ngram_pairs(
             ids, values, offsets, t, max_candidate_pairs,
             enforce_guard=(max_candidate_pairs > 0
-                           and not _small_corpus(df)))
+                           and not regime.fits(df, regime.SMALL_BYTES)))
         if out is not None:
             idt = dict(df.dtypes)[id_col]
             schema = f"id_a {idt}, id_b {idt}, jaccard_r double"
@@ -1231,7 +1188,7 @@ def dedup_ngram_jaccard(
         "id", F.size("hset").alias("n"),
         F.posexplode(F.slice("hset", 1, plen)).alias("p", "h"),
     )
-    if max_candidate_pairs > 0 and not _small_corpus(df):
+    if max_candidate_pairs > 0 and not regime.fits(df, regime.SMALL_BYTES):
         est_row = (entries.groupBy("h").count()
                    .agg(F.coalesce(
                        F.sum(F.col("count") * (F.col("count") - F.lit(1))
@@ -1422,19 +1379,11 @@ def dedup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # the persist/count/symmetrize machinery below would spend 2-3
     # scheduled jobs re-deriving what one trivial collect reads back.
     # Union-find needs no symmetrized edges (union(a,b) is symmetric).
-    if driver_threshold > 0:
-        try:
-            is_local = (pairs._jdf.queryExecution().optimizedPlan()
-                        .getClass().getSimpleName() == "LocalRelation")
-        except Exception:
-            is_local = False
-        if is_local:
-            rows = [(r[0], r[1])
-                    for r in pairs.select(id_a, id_b).collect()]
-            if len(rows) <= driver_threshold:
-                id_type = dict(pairs.dtypes)[id_a]
-                return _driver_union_find(rows, id_type,
-                                          pairs.sparkSession)
+    if driver_threshold > 0 and regime.is_local_relation(pairs):
+        rows = [(r[0], r[1]) for r in pairs.select(id_a, id_b).collect()]
+        if len(rows) <= driver_threshold:
+            id_type = dict(pairs.dtypes)[id_a]
+            return _driver_union_find(rows, id_type, pairs.sparkSession)
     # persist the INPUT pair list before symmetrizing: the union's two
     # branches evaluate their child independently, so an unpersisted
     # upstream (e.g. the whole MinHash-LSH lineage) would run TWICE —
@@ -1601,7 +1550,7 @@ def dedup_simhash(df: DataFrame, id_col: str = "id", text_col: str = "text",
     (id, simhash) and the 4-band bucketing + bit_count(xor) verify run
     on the driver — the banding self-join plan costs 7 scheduled jobs at
     gate scale for work that is integer ops over |corpus| scalars."""
-    if _driver_regime(df):
+    if regime.fits(df, regime.DRIVER_BYTES):
         from collections import defaultdict
 
         import numpy as np
@@ -1768,7 +1717,8 @@ def decontaminate(
     # shared spread (3 jobs, the family shape). Exact: matched_ngrams =
     # |doc's distinct grams ∩ test set| is set arithmetic over the same
     # hash64 values either way.
-    if _driver_regime(train) and _driver_regime(test):
+    if (regime.fits(train, regime.DRIVER_BYTES)
+            and regime.fits(test, regime.DRIVER_BYTES)):
         import numpy as np
 
         from flouds_vectordb_spark.functions.local import local_df
@@ -1994,7 +1944,8 @@ def decontaminate_neardup(
     # collects + driver bipartite bucketing/verify/aggregation replace
     # the 13 scheduled jobs of the broadcast plan at gate scale. Same
     # hashes, same verify arithmetic, same (max, count) aggregation.
-    if _driver_regime(train) and _driver_regime(test):
+    if (regime.fits(train, regime.DRIVER_BYTES)
+            and regime.fits(test, regime.DRIVER_BYTES)):
         res = _driver_decon_neardup(train, test, id_col, text_col, t_id,
                                     t_text, jaccard_threshold, n_sigs,
                                     n_bands, shingle_n)
@@ -2141,7 +2092,7 @@ def exact_substring_spans(
     # gap-stitch are integer arithmetic on the driver. Same hashes, same
     # >= min_occurrences rule (global count, within-doc repeats included),
     # same "new span when pos > prev + k" stitch.
-    if _driver_regime(df):
+    if regime.fits(df, regime.DRIVER_BYTES):
         import numpy as np
 
         from flouds_vectordb_spark.functions.local import local_df
@@ -2280,56 +2231,48 @@ def remove_exact_substrings(
 
     DRIVER regime (r14): when the corpus is under the collect bound AND
     the spans frame is already driver-built literals (the spans driver
-    regime's LocalRelation — reading it back runs no job), one Arrow
-    fetch of (id, text) replaces the groupBy-shuffle + join plan (6
-    scheduled jobs at gate scale): tokenization is the pinned py_tokens
+    regime's LocalRelation — reading it back runs no job; classic mode
+    only, see regime.is_local_relation), one Arrow fetch of (id, text)
+    replaces the groupBy-shuffle + join plan (6 scheduled jobs at gate
+    scale): tokenization is the pinned py_tokens
     twin, the span cut is integer arithmetic, and ' '.join == array_join.
     Exactness pinned by test_remove_substrings_driver_regime_equals_
     distributed."""
-    if _driver_regime(df):
-        try:
-            spans_local = (spans._jdf.queryExecution().optimizedPlan()
-                           .getClass().getSimpleName() == "LocalRelation")
-        except Exception:
-            spans_local = False
-        if spans_local:
-            from flouds_vectordb_spark.functions.pyhash import py_tokens
+    if (regime.fits(df, regime.DRIVER_BYTES)
+            and regime.is_local_relation(spans)):
+        from flouds_vectordb_spark.functions.pyhash import py_tokens
 
-            by_id: dict = {}
-            for r in spans.select("id", "span_start",
-                                  "span_end").collect():
-                by_id.setdefault(r[0], []).append((r[1], r[2]))
-            tbl = df.select(F.col(id_col).alias("id"),
-                            F.col(text_col).alias("text")).toArrow()
-            out = []
-            for rid, txt in zip(tbl.column(0).to_pylist(),
-                                tbl.column(1).to_pylist()):
-                toks_py = py_tokens(txt)
-                if toks_py is None:
-                    out.append((rid, None, None))
-                    continue
-                sp = by_id.get(rid)
-                if not sp:
-                    out.append((rid, " ".join(toks_py), 0))
-                    continue
-                kept = [t for i, t in enumerate(toks_py, start=1)
-                        if not any(s <= i <= e for s, e in sp)]
-                out.append((rid, " ".join(kept),
-                            len(toks_py) - len(kept)))
-            idt = dict(df.dtypes)[id_col]
-            schema = (f"id {idt}, text_clean string, "
-                      f"n_tokens_removed int")
-            spark = df.sparkSession
-            if not out:
-                return spark.createDataFrame([], schema)
-            import pandas as pd
+        by_id: dict = {}
+        for r in spans.select("id", "span_start", "span_end").collect():
+            by_id.setdefault(r[0], []).append((r[1], r[2]))
+        tbl = df.select(F.col(id_col).alias("id"),
+                        F.col(text_col).alias("text")).toArrow()
+        out = []
+        for rid, txt in zip(tbl.column(0).to_pylist(),
+                            tbl.column(1).to_pylist()):
+            toks_py = py_tokens(txt)
+            if toks_py is None:
+                out.append((rid, None, None))
+                continue
+            sp = by_id.get(rid)
+            if not sp:
+                out.append((rid, " ".join(toks_py), 0))
+                continue
+            kept = [t for i, t in enumerate(toks_py, start=1)
+                    if not any(s <= i <= e for s, e in sp)]
+            out.append((rid, " ".join(kept), len(toks_py) - len(kept)))
+        idt = dict(df.dtypes)[id_col]
+        schema = f"id {idt}, text_clean string, n_tokens_removed int"
+        spark = df.sparkSession
+        if not out:
+            return spark.createDataFrame([], schema)
+        import pandas as pd
 
-            pdf = pd.DataFrame(out,
-                               columns=["id", "text_clean",
-                                        "n_tokens_removed"])
-            # coalesce: the Arrow createDataFrame splits into cores
-            # slices; 32 near-empty tasks per downstream stage otherwise
-            return spark.createDataFrame(pdf, schema).coalesce(8)
+        pdf = pd.DataFrame(out, columns=["id", "text_clean",
+                                         "n_tokens_removed"])
+        # coalesce: the Arrow createDataFrame splits into cores slices;
+        # 32 near-empty tasks per downstream stage otherwise
+        return spark.createDataFrame(pdf, schema).coalesce(8)
     toks = tokenize(F.col(text_col))
     d = _spread(df).select(F.col(id_col).alias("id"), toks.alias("_toks"))
     sp = spans.groupBy("id").agg(

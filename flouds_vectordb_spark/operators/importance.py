@@ -35,6 +35,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.functions.hashing import hash64, hash64_sql
 from flouds_vectordb_spark.functions.local import local_df
 from flouds_vectordb_spark.functions.text import tokenize, tokenize_sql
@@ -42,25 +43,6 @@ from flouds_vectordb_spark.lifecycle import tracked_persist as _persist
 from flouds_vectordb_spark.sources.tables import spread_small_input
 
 _DENOM_U = float((1 << 60) + 1)  # maps hash64's [0, 2^60) onto (0, 1)
-
-# DRIVER regime (r13 optimization): below this input estimate (both
-# corpora) the whole resample runs off ONE tagged-union collect — per-doc
-# bucket arrays + the target bucket counts + the raw id list — with the
-# log-ratio table, sorted-bucket fold, hash-Gumbel key and top-n on the
-# driver. The distributed plan pays 12 scheduled jobs at gate scale for
-# arithmetic over |docs| + B scalars. Bit-identical: hash64 is md5 (same
-# hex in hashlib), log is the same C libm ln the oracle calls, and the
-# fold order (ascending bucket) matches both engines.
-_DSIR_DRIVER_INPUT_BYTES = 16 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
-
 
 from flouds_vectordb_spark.functions.hashing import py_hash64 as _py_hash64
 
@@ -167,12 +149,20 @@ def dsir_log_ratios(raw: DataFrame, target: DataFrame, n_buckets: int = 8192,
     return _ratios_from_counts(rc, tc, n_buckets, smoothing)
 
 
+# DRIVER regime (r13 optimization): with both corpora within
+# regime.DRIVER_BYTES the whole resample runs off ONE tagged-union collect
+# — per-doc bucket arrays + the target bucket counts + the raw id list —
+# with the log-ratio table, sorted-bucket fold, hash-Gumbel key and top-n
+# on the driver. The distributed plan pays 12 scheduled jobs at gate scale
+# for arithmetic over |docs| + B scalars. Bit-identical: hash64 is md5
+# (same hex in hashlib), log is the same C libm ln the oracle calls, and
+# the fold order (ascending bucket) matches both engines.
 def _dsir_resample_driver(raw: DataFrame, target: DataFrame, n_keep: int,
                           n_buckets: int, id_col: str, text_col: str,
                           a: int, seed: int) -> DataFrame:
-    """dsir_resample off ONE tagged-union collect (see _DSIR_DRIVER_
-    INPUT_BYTES): tag 0 = per-raw-doc (bucket, count) arrays, tag 1 =
-    target bucket counts packed into one array row, tag 2 = every raw id
+    """dsir_resample off ONE tagged-union collect (see above): tag 0 =
+    per-raw-doc (bucket, count) arrays, tag 1 = target bucket counts
+    packed into one array row, tag 2 = every raw id
     (column-pruned scan — zero-token docs must still compete on Gumbel
     noise). The heavy tokenize/bigram/md5 work stays distributed inside
     the collect; ratios, sorted fold, Gumbel and top-n replicate the
@@ -270,9 +260,8 @@ def dsir_resample(raw: DataFrame, target: DataFrame, n_keep: int,
         raise ValueError("smoothing must be >= 1")
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
-    if (not raw.isStreaming and not target.isStreaming
-            and _plan_size_bytes(raw) <= _DSIR_DRIVER_INPUT_BYTES
-            and _plan_size_bytes(target) <= _DSIR_DRIVER_INPUT_BYTES):
+    if (regime.fits(raw, regime.DRIVER_BYTES)
+            and regime.fits(target, regime.DRIVER_BYTES)):
         return _dsir_resample_driver(raw, target, n_keep, n_buckets,
                                      id_col, text_col, int(smoothing), seed)
     # spread BEFORE the feature projection: the md5-heavy

@@ -46,6 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.functions.text import tokenize
 from flouds_vectordb_spark.lifecycle import tracked_persist as _tracked_persist
 
@@ -54,29 +55,6 @@ RANK_DECIMALS = 6
 
 K1_DEFAULT = 1.5
 B_DEFAULT = 0.75
-
-# drop_ratio_build regime switch: below this input estimate the exact
-# rank runs as one single-partition window (lazy, no persists/actions);
-# above, the distributed range-partition rank. 64 MB of source text ~
-# a few M posting rows — comfortably one task's sort.
-_DROP_RATIO_SMALL_INPUT_BYTES = 64 << 20
-
-
-def _small_corpus(df: DataFrame) -> bool:
-    """Sum of the optimized plan's LEAF sizes (file bytes for scans) —
-    NOT the root estimate: a join root multiplies its children into
-    garbage (the collection docs ⋈ embeddings plan estimates 626 GB for
-    ~20 MB of files, the same failure r10 measured at '76 PB' on the
-    exploded plan). Falls back to LARGE — the scale-safe regime."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            total += int(leaves.apply(i).stats().sizeInBytes())
-        return total <= _DROP_RATIO_SMALL_INPUT_BYTES
-    except Exception:
-        return False
-
 
 @dataclass
 class SparseSearchRequest:
@@ -140,14 +118,14 @@ def bm25_postings(
     if drop_ratio_build > 0.0:
         # Milvus drop_ratio_build: drop the smallest fraction of weights
         # at build (base_milvus.py:1286-1310), exact global rank over
-        # (weight, term, id). TWO regimes on the input-size estimate (the
-        # _MINHASH_SMALL_INPUT_BYTES pattern):
+        # (weight, term, id). TWO regimes on the input size
+        # (regime.SMALL_BYTES):
         # SMALL: one single-partition window — fully LAZY (no persist, no
         # driver action), identical rank, bounded by the regime check.
         # floor(count*ratio) over a window matches the driver-side
         # int(total*ratio) and the SQL twin's floor(...) (positive
         # doubles).
-        if _small_corpus(df):
+        if regime.fits(df, regime.SMALL_BYTES):
             order = [F.col("weight").asc(), F.col("term").asc(),
                      F.col("id").asc()]
             w_all = Window.orderBy(*order)
@@ -224,7 +202,7 @@ def bm25_tf(df: DataFrame, id_col: str = "id", chunk_col: str = "chunk") -> Data
     CPU dominated.
     (No small-input rebalance here: tokenize is cheap enough that the
     extra shuffle LOSES — measured 0.9 s -> 1.5 s at sf0.1.)"""
-    if _small_corpus(df):
+    if regime.fits(df, regime.SMALL_BYTES):
         return _explode_tf_docs(_tf_docs(df, id_col, chunk_col))
     docs = (
         df.select(F.col(id_col).alias("id"),
@@ -827,7 +805,7 @@ def sparse_search_many(
                     for t, c in zip(terms, row) if c > 0],
             "qid bigint, term string, _qtf int")
         contrib = _contrib_rows(pruned, qt)
-        if _small_corpus(postings):
+        if regime.fits(postings, regime.SMALL_BYTES):
             # gate-scale: hash(qid) satisfies both the score agg's
             # (qid, id) clustering (subset rule) and the rank window's
             # partitionBy(qid) — one exchange serves both stages. Gated:

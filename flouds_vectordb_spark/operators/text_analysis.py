@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.functions.hashing import hash64, hash64_sql
 from flouds_vectordb_spark.functions.text import tokenize, tokenize_sql
 from flouds_vectordb_spark.lifecycle import tracked_persist as _tracked_persist
@@ -1018,8 +1019,8 @@ def unigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
     bit-stable across partitionings and engines.
     p(t) = (cnt + a) / (N + a·(V+1)); OOV = a / (N + a·(V+1)).
 
-    Small-corpus regime (r12, same leaf-bytes switch as
-    sparse_search._small_corpus): when every scan under the plan fits in
+    Small-corpus regime (r12, regime.fits on SMALL_BYTES, the leaf-bytes
+    switch): when every scan under the plan fits in
     64 MB the whole vocabulary fits in one broadcast row, so the operator
     collapses to a single lazy plan — the model is ONE (map, denom) row
     cross-joined in by broadcast, and each document folds its own SORTED
@@ -1035,9 +1036,8 @@ def unigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
     a = int(smoothing)
     if a < 1:
         raise ValueError("smoothing must be >= 1")
-    from flouds_vectordb_spark.operators.sparse_search import _small_corpus
-
-    if _small_corpus(df) and (model_df is None or _small_corpus(model_df)):
+    if regime.fits(df, regime.SMALL_BYTES) and (
+            model_df is None or regime.fits(model_df, regime.SMALL_BYTES)):
         return _unigram_logprob_small(df, model_df, id_col, text_col, a,
                                       keep_empty)
     toks = tokenize(F.col(text_col))
@@ -1579,8 +1579,6 @@ def perplexity_buckets(df: DataFrame, model_df: DataFrame | None = None,
 
     from flouds_vectordb_spark.functions.local import local_df
 
-    from flouds_vectordb_spark.operators.sparse_search import _small_corpus
-
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     spark = df.sparkSession
@@ -1590,7 +1588,8 @@ def perplexity_buckets(df: DataFrame, model_df: DataFrame | None = None,
     # is the oracle's single-window formulation verbatim, so the
     # two-phase quantized rank below is (and always was) an execution
     # strategy only.
-    if _small_corpus(df) and (model_df is None or _small_corpus(model_df)):
+    if regime.fits(df, regime.SMALL_BYTES) and (
+            model_df is None or regime.fits(model_df, regime.SMALL_BYTES)):
         scored = unigram_logprob(df, model_df, id_col=id_col,
                                  text_col=text_col, smoothing=smoothing,
                                  keep_empty=False)

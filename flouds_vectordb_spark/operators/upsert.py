@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from flouds_vectordb_spark import catalog as catalog_mod
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.catalog import resolve_data_dir
 from flouds_vectordb_spark.lifecycle import tracked_persist
 from flouds_vectordb_spark.sources.tables import read_parquet
@@ -934,7 +935,8 @@ class CollectionWriter:
                 "meta": p + "__sparse_meta.json"}
 
     # posting-write sizing (r9 VERDICT ask #2): one range partition per
-    # ~1.6 MB of the SOURCE COLLECTION's Catalyst scan estimate. The r9
+    # ~1.6 MB of the SOURCE COLLECTION's scan bytes (regime.input_bytes,
+    # the leaf sum: a scan's file bytes or a cache's size). The r9
     # x1000 measurement showed the session-default 32 range partitions
     # sorting 31M posting rows per partition with spill (227.4 s); 256
     # partitions restored the sublinear step (102.0 s). Calibration:
@@ -951,15 +953,11 @@ class CollectionWriter:
         """Range-partition count for a postings write, scaled with the
         source collection; None = keep the session default (small corpus
         or no usable estimate)."""
+        size = regime.input_bytes(src)
+        if not size:
+            return None
         default = int(src.sparkSession.conf.get(
             "spark.sql.shuffle.partitions", "200"))
-        try:
-            size = int(src._jdf.queryExecution().optimizedPlan()
-                       .stats().sizeInBytes())
-        except Exception:
-            return None
-        if size <= 0 or size > (1 << 50):  # unknown / join-inflated
-            return None
         n = min(cls._POSTINGS_MAX_PARTS, size // cls._POSTINGS_SRC_BYTES_PER_PART)
         return int(n) if n > default else None
 

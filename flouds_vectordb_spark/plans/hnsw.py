@@ -1339,20 +1339,8 @@ def build_hnsw(
     cross-cell merge -> symmetrize+cap -> entry medoids. Writes
     path/{nodes,edges} (range-partitioned, sorted for IN-pushdown skipping)
     and path/_hnsw_meta.json."""
-    import time as _time
-
     metric = metric.upper()
     spark = df.sparkSession
-    # per-phase wall timing, printed only under SPARK_GRAFT_HNSW_PROFILE=1
-    # (build-budget accounting, VERDICT r6 #8)
-    _prof_last = [_time.perf_counter()]
-
-    def _tick(label: str) -> None:
-        if os.environ.get("SPARK_GRAFT_HNSW_PROFILE") == "1":
-            now = _time.perf_counter()
-            print(f"hnsw-profile {label}: {now - _prof_last[0]:.1f}s", flush=True)
-            _prof_last[0] = now
-
     n = df.count()
     if n == 0:
         raise ValueError("cannot build a graph index on an empty collection")
@@ -1375,7 +1363,6 @@ def build_hnsw(
     centroids = _train_centroids(x, ncells, metric, seed=seed)
     centroids = _split_oversized_sample(x, centroids, n, cell_target, metric,
                                         seed=seed)
-    _tick("sample+train-centroids")
 
     def _assign(cents: np.ndarray) -> DataFrame:
         return (
@@ -1439,7 +1426,6 @@ def build_hnsw(
         assigned = _assign(centroids)
         refined += 1
     ncells = len(centroids)
-    _tick("assign+verify-splits")
     try:
         # nodes: full rows + primary cell, laid out for id IN-pushdown
         (
@@ -1448,7 +1434,6 @@ def build_hnsw(
             .sortWithinPartitions(id_col)
             .write.mode("overwrite").parquet(os.path.join(path, "nodes"))
         )
-        _tick("nodes-write")
 
         # intra-cell adjacency: pairwise INSIDE one Arrow batch per cell
         exploded = assigned.select(
@@ -1518,7 +1503,6 @@ def build_hnsw(
             .sortWithinPartitions("src", "dst")
             .write.mode("overwrite").parquet(os.path.join(path, "edges"))
         )
-        _tick("intra-topM+merge+edges-write")
 
         # entry points: per-cell medoid (nearest row to the cell centroid)
         medoids = (
@@ -1528,7 +1512,6 @@ def build_hnsw(
         )
         entry_ids = sorted([r[0] for r in medoids],
                            key=lambda v: (str(type(v)), v))
-        _tick("entry-medoids")
     finally:
         assigned.unpersist()
 

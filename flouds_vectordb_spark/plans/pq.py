@@ -513,11 +513,3 @@ def open_pq(path: str) -> PqCodebook:
     sub = tuple(tuple(tuple(float(x) for x in c) for c in s) for s in meta["sub"])
     return PqCodebook(sub=sub, metric=meta["metric"], dim=meta["dim"])
 
-
-def get_or_build_pq(df: DataFrame, path: str, m: int, k: int = 256,
-                    metric: str = "COSINE", id_col: str = "id",
-                    vector_col: str = "vector",
-                    extra_cols: tuple[str, ...] = ()) -> PqCodebook:
-    if os.path.exists(os.path.join(path, "_pq_meta.json")):
-        return open_pq(path)
-    return build_pq(df, path, m, k, metric, id_col, vector_col, extra_cols)

@@ -43,7 +43,3 @@ DEFAULT_STOPWORDS: frozenset[str] = frozenset(NLTK_ENGLISH) | frozenset(
     ADDITIONAL_STOPWORDS
 )
 
-
-def sql_string_list(words) -> str:
-    """Render a stop-word collection as a SQL string list: 'a','b','c'."""
-    return ",".join("'" + w.replace("'", "''") + "'" for w in sorted(words))

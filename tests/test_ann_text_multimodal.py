@@ -268,11 +268,11 @@ def test_srp_signature_batch_matches_expr(spark):
         assert a == r["b"], (r["id"], r["a"], r["b"])
 
 
-def test_li_recall_pair_matches_operators(spark):
+def test_li_recall_pair_matches_operators(spark, monkeypatch):
     """The recall grading harness must produce EXACTLY the union of the
     two operators' outputs (its restriction-of-M equivalence argument),
     in both regimes."""
-    import flouds_vectordb_spark.operators.ann as ann_mod
+    from flouds_vectordb_spark import regime
     from flouds_vectordb_spark.lifecycle import persist_scope
     from flouds_vectordb_spark.operators.ann import (
         late_interaction_recall_pair,
@@ -295,15 +295,13 @@ def test_li_recall_pair_matches_operators(spark):
            late_interaction_topk_pruned(docs, queries, k=5,
                                         dim=8).collect()])
     for forced_small in (False, True):
-        orig = ann_mod._li_small
-        ann_mod._li_small = lambda _df: forced_small
-        try:
-            with persist_scope():
-                got = sorted(
-                    tuple(r) for r in late_interaction_recall_pair(
-                        docs, queries, k=5, dim=8).collect())
-        finally:
-            ann_mod._li_small = orig
+        monkeypatch.setattr(regime, "fits",
+                            lambda _df, _bound: forced_small)
+        with persist_scope():
+            got = sorted(
+                tuple(r) for r in late_interaction_recall_pair(
+                    docs, queries, k=5, dim=8).collect())
+        monkeypatch.undo()
         assert got == want and got, forced_small
 
 
@@ -1069,7 +1067,7 @@ def test_ppl_small_vs_large_regime_identical(spark, monkeypatch, tmp_path):
     same ascending-term fold order, same band rule. The small side reads
     PARQUET (createDataFrame plans report unknown size and never engage
     the regime); the large side is forced via the regime switch."""
-    import flouds_vectordb_spark.operators.sparse_search as ss
+    from flouds_vectordb_spark import regime
     from flouds_vectordb_spark.operators.text_analysis import (
         perplexity_buckets,
         unigram_logprob,
@@ -1082,14 +1080,15 @@ def test_ppl_small_vs_large_regime_identical(spark, monkeypatch, tmp_path):
     spark.createDataFrame(docs, "id bigint, text string") \
         .write.parquet(str(tmp_path / "d.parquet"))
     df = spark.read.parquet(str(tmp_path / "d.parquet"))
-    assert ss._small_corpus(df)  # parquet-backed: the regime engages
+    # parquet-backed: the regime engages
+    assert regime.fits(df, regime.SMALL_BYTES)
     small_u = {r["id"]: r.asDict() for r in unigram_logprob(df).collect()}
     small_b = {r["id"]: r["ppl_bucket"]
                for r in perplexity_buckets(df, n_buckets=4).collect()}
     small_m = {r["id"]: r.asDict()
                for r in unigram_logprob(
                    df, model_df=df.filter(F.col("id") < 20)).collect()}
-    monkeypatch.setattr(ss, "_small_corpus", lambda _df: False)
+    monkeypatch.setattr(regime, "SMALL_BYTES", -1)
     large_u = {r["id"]: r.asDict() for r in unigram_logprob(df).collect()}
     large_b = {r["id"]: r["ppl_bucket"]
                for r in perplexity_buckets(df, n_buckets=4).collect()}

@@ -104,6 +104,7 @@ def test_bpe_driver_regime_equals_distributed(spark, tmp_path, monkeypatch):
     merge list (ranks, pairs, counts, tie-breaks) of the distributed
     per-round aggregation."""
     import flouds_vectordb_spark.operators.bpe as bp
+    from flouds_vectordb_spark import regime
 
     rows = [(i, f"low lower lowest newer new wider wide word {i % 5}")
             for i in range(30)]
@@ -112,6 +113,6 @@ def test_bpe_driver_regime_equals_distributed(spark, tmp_path, monkeypatch):
     spark.createDataFrame(rows, "id long, text string").write.parquet(pq)
     df = spark.read.parquet(pq)
     drv = bp.bpe_train(df, n_merges=12)
-    monkeypatch.setattr(bp, "_BPE_DRIVER_INPUT_BYTES", -1)
+    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
     dist = bp.bpe_train(df, n_merges=12)
     assert drv == dist and len(drv) == 12

@@ -151,22 +151,19 @@ def test_pack_validation_and_empty(spark):
         "seq_id", "id", "seq_offset", "doc_offset", "n_taken"]
 
 
-def test_pack_sequences_regimes_identical(spark):
+def test_pack_sequences_regimes_identical(spark, monkeypatch):
     """r13: the small-corpus single-window regime must be bit-identical
     to the two-phase bucket plan — drop_tail both ways, plus an
     exact-multiple corpus (the drop_tail no-op edge)."""
-    import flouds_vectordb_spark.operators.sparse_search as ss
+    from flouds_vectordb_spark import regime
 
     for sizes in ([5, 17, 1, 64, 3, 130, 0, 9], [16, 16]):
         df = _mk_corpus(spark, sizes)
         for drop_tail in (False, True):
             want = sorted(map(tuple, pack_sequences(
                 df, seq_len=32, seed=5, drop_tail=drop_tail).collect()))
-            orig = ss._small_corpus
-            ss._small_corpus = lambda _df: True
-            try:
-                got = sorted(map(tuple, pack_sequences(
-                    df, seq_len=32, seed=5, drop_tail=drop_tail).collect()))
-            finally:
-                ss._small_corpus = orig
+            monkeypatch.setattr(regime, "fits", lambda _df, _bound: True)
+            got = sorted(map(tuple, pack_sequences(
+                df, seq_len=32, seed=5, drop_tail=drop_tail).collect()))
+            monkeypatch.undo()
             assert got == want, (sizes, drop_tail)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.operators.ann import dedup_embedding_cosine
 from flouds_vectordb_spark.operators.dedup import (
     dedup_exact,
@@ -174,12 +175,10 @@ def test_ngram_jaccard_preflight_guard_aborts_on_quadratic_corpus(
     abort loudly BEFORE launching the pair stage (x1000 theta=0.8 died
     DISK-FULL with no warning), naming the estimate and the alternative.
     The estimate is exact: sum of c_h*(c_h-1)/2 over prefix-hash counts."""
-    import flouds_vectordb_spark.operators.sparse_search as ss
-
     # clone-heavy: 12 copies of one text -> every prefix hash collides
     rows = [(i, "alpha beta gamma delta epsilon zeta") for i in range(12)]
     df = spark.createDataFrame(rows, "id long, text string")
-    monkeypatch.setattr(ss, "_small_corpus", lambda _df: False)
+    monkeypatch.setattr(regime, "SMALL_BYTES", -1)
     with pytest.raises(RuntimeError, match="dedup_minhash_components"):
         dedup_ngram_jaccard(df, jaccard_threshold=0.8,
                             max_candidate_pairs=10).collect()
@@ -193,15 +192,20 @@ def test_ngram_jaccard_preflight_guard_aborts_on_quadratic_corpus(
     # plans report UNKNOWN size (LogicalRDD sizeInBytes = Long.MaxValue),
     # so the small regime needs a parquet-backed frame to engage.
     calls = []
-    real = ss._small_corpus
-    monkeypatch.setattr(ss, "_small_corpus",
-                        lambda d: calls.append(1) or real(d))
+    real = regime.fits
+
+    def spy(d, bound):
+        calls.append((bound, real(d, bound)))
+        return calls[-1][1]
+
+    monkeypatch.setattr(regime, "fits", spy)
     pq = str(tmp_path / "docs.parquet")
     df.write.parquet(pq)
     small_df = spark.read.parquet(pq)
     assert dedup_ngram_jaccard(small_df, jaccard_threshold=0.8,
                                max_candidate_pairs=10).count() == 66
-    assert calls  # the regime check ran and judged the corpus small
+    # the regime check ran and judged the corpus small
+    assert (regime.SMALL_BYTES, True) in calls
 
 
 def test_ngram_jaccard_plan_keeps_arrays_out_of_candidate_shuffle(docs):
@@ -639,14 +643,12 @@ def test_components_driver_and_distributed_paths_agree(spark):
 
 def test_minhash_shuffle_regime_identical_to_broadcast_regime(docs, monkeypatch):
     """dedup_minhash picks its plan by Catalyst's input-size estimate
-    (broadcast regime below _MINHASH_SMALL_INPUT_BYTES, the r9
+    (broadcast regime within regime.MINHASH_BROADCAST_BYTES, the r9
     shuffle-regime machinery above). Both regimes must produce identical
     pairs — pin it by forcing the shuffle regime on the tiny fixture."""
-    import flouds_vectordb_spark.operators.dedup as dd
-
     small = sorted(map(tuple,
                        dedup_minhash(docs, jaccard_threshold=0.3).collect()))
-    monkeypatch.setattr(dd, "_MINHASH_SMALL_INPUT_BYTES", 0)
+    monkeypatch.setattr(regime, "MINHASH_BROADCAST_BYTES", 0)
     big = sorted(map(tuple,
                      dedup_minhash(docs, jaccard_threshold=0.3).collect()))
     assert small == big and small  # same pairs, and the fixture has some
@@ -681,7 +683,6 @@ def test_minhash_components_equals_pair_mode_composition(spark, monkeypatch):
     """dedup_minhash(output='components') must produce EXACTLY the labels
     of dedup_components(dedup_minhash(df)) — the star+phase-2 fusion is an
     execution strategy, not a semantics change — in both size regimes."""
-    import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import (
         dedup_components,
         dedup_minhash,
@@ -697,11 +698,11 @@ def test_minhash_components_equals_pair_mode_composition(spark, monkeypatch):
                                      output="components").collect()))
         assert got == want and want, thr
     # forced shuffle regime must agree too
-    monkeypatch.setattr(dd, "_MINHASH_SMALL_INPUT_BYTES", 0)
+    monkeypatch.setattr(regime, "MINHASH_BROADCAST_BYTES", 0)
     got_big = sorted(
         map(tuple, dedup_minhash(corpus, jaccard_threshold=0.5,
                                  output="components").collect()))
-    monkeypatch.setattr(dd, "_MINHASH_SMALL_INPUT_BYTES", 48 << 20)
+    monkeypatch.undo()
     want = sorted(
         map(tuple, dedup_minhash(corpus, jaccard_threshold=0.5,
                                  output="components").collect()))
@@ -735,24 +736,53 @@ def test_minhash_driver_regime_equals_distributed(parquet_docs, monkeypatch):
     """The r13 driver regime (one collect + driver bucketing/verify) must
     be row-identical to the broadcast-join small regime AND the shuffle
     regime on pairs and on component labels, at multiple thresholds."""
-    import flouds_vectordb_spark.operators.dedup as dd
-
-    assert dd._driver_regime(parquet_docs)  # the fixture engages it
+    assert regime.fits(parquet_docs, regime.DRIVER_BYTES)  # engages it
     for thr in (0.3, 0.5, 0.8):
         drv_pairs = sorted(map(tuple, dedup_minhash(
             parquet_docs, jaccard_threshold=thr).collect()))
         drv_lbls = sorted(map(tuple, dedup_minhash(
             parquet_docs, jaccard_threshold=thr,
             output="components").collect()))
-        monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", -1)
+        monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
         dist_pairs = sorted(map(tuple, dedup_minhash(
             parquet_docs, jaccard_threshold=thr).collect()))
         dist_lbls = sorted(map(tuple, dedup_minhash(
             parquet_docs, jaccard_threshold=thr,
             output="components").collect()))
-        monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", 16 << 20)
+        monkeypatch.undo()
         assert drv_pairs == dist_pairs and drv_pairs, thr
         assert drv_lbls == dist_lbls and drv_lbls, thr
+
+
+def test_joined_input_takes_the_driver_regime(spark, parquet_docs, tmp_path,
+                                              monkeypatch):
+    """A join's root size estimate multiplies its sides' sizes, so a guard
+    on it sent any joined input to the distributed plans however small.
+    The leaf-sum probe sees the files: the joined corpus takes the driver
+    regime and returns the plain corpus's edges."""
+    import flouds_vectordb_spark.operators.dedup as dd
+
+    # one tag per doc plus 20k ids no doc has: the inner join keeps
+    # exactly the plain corpus's rows, and the side table's file is big
+    # enough that the product of the two sides passes every bound
+    ids = [r[0] for r in parquet_docs.select("id").collect()]
+    side = ([(i, f"tag{i % 3}") for i in ids]
+            + [(100_000 + i, f"pad{i:06d}") for i in range(20_000)])
+    pq = str(tmp_path / "side.parquet")
+    spark.createDataFrame(side, "id long, tag string").write.parquet(pq)
+    joined = parquet_docs.join(spark.read.parquet(pq), "id")
+    assert regime.fits(joined, regime.DRIVER_BYTES)
+
+    calls = []
+    real = dd._driver_minhash_rows
+    monkeypatch.setattr(dd, "_driver_minhash_rows",
+                        lambda *a: calls.append(1) or real(*a))
+    want = sorted(map(tuple, dedup_minhash(
+        parquet_docs, jaccard_threshold=0.5).collect()))
+    got = sorted(map(tuple, dedup_minhash(
+        joined, jaccard_threshold=0.5).collect()))
+    assert got == want and got
+    assert len(calls) == 2  # both inputs took the driver regime
 
 
 def test_minhash_driver_preflight_falls_back(parquet_docs, monkeypatch):
@@ -767,25 +797,22 @@ def test_minhash_driver_preflight_falls_back(parquet_docs, monkeypatch):
 
 
 def test_ngram_driver_regime_equals_distributed(parquet_docs, monkeypatch):
-    import flouds_vectordb_spark.operators.dedup as dd
-
     for thr in (0.3, 0.5, 0.8):
         drv = sorted(map(tuple, dedup_ngram_jaccard(
             parquet_docs, jaccard_threshold=thr).collect()))
-        monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", -1)
+        monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
         dist = sorted(map(tuple, dedup_ngram_jaccard(
             parquet_docs, jaccard_threshold=thr).collect()))
-        monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", 16 << 20)
+        monkeypatch.undo()
         assert drv == dist and drv, thr
 
 
 def test_simhash_driver_regime_equals_distributed(parquet_docs, monkeypatch):
-    import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import dedup_simhash
 
     drv = sorted(map(tuple, dedup_simhash(parquet_docs,
                                           max_hamming=6).collect()))
-    monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", -1)
+    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
     dist = sorted(map(tuple, dedup_simhash(parquet_docs,
                                            max_hamming=6).collect()))
     assert drv == dist and drv
@@ -793,7 +820,6 @@ def test_simhash_driver_regime_equals_distributed(parquet_docs, monkeypatch):
 
 def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
                                                         monkeypatch):
-    import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import decontaminate_neardup
 
     tr_rows = [(i, f"train doc {i} about shared topic {i % 6} words")
@@ -808,16 +834,15 @@ def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
     for thr in (0.3, 0.8):
         drv = sorted(map(tuple, decontaminate_neardup(
             tr, te, jaccard_threshold=thr).collect()))
-        monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", -1)
+        monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
         dist = sorted(map(tuple, decontaminate_neardup(
             tr, te, jaccard_threshold=thr).collect()))
-        monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", 16 << 20)
+        monkeypatch.undo()
         assert drv == dist and drv, thr
 
 
 def test_decontaminate_driver_regime_equals_distributed(spark, tmp_path,
                                                         monkeypatch):
-    import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import decontaminate
 
     tr_rows = [(i, f"alpha beta gamma delta {i} epsilon zeta eta theta")
@@ -829,14 +854,13 @@ def test_decontaminate_driver_regime_equals_distributed(spark, tmp_path,
     spark.createDataFrame(te_rows, "id long, text string").write.parquet(te_pq)
     tr, te = spark.read.parquet(tr_pq), spark.read.parquet(te_pq)
     drv = sorted(map(tuple, decontaminate(tr, te, n=5).collect()))
-    monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", -1)
+    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
     dist = sorted(map(tuple, decontaminate(tr, te, n=5).collect()))
     assert drv == dist and drv
 
 
 def test_substring_spans_driver_regime_equals_distributed(spark, tmp_path,
                                                           monkeypatch):
-    import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import exact_substring_spans
 
     boiler = " ".join(f"tok{j}" for j in range(25))
@@ -848,7 +872,7 @@ def test_substring_spans_driver_regime_equals_distributed(spark, tmp_path,
     spark.createDataFrame(rows, "id long, text string").write.parquet(pq)
     df = spark.read.parquet(pq)
     drv = sorted(map(tuple, exact_substring_spans(df, k=20).collect()))
-    monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", -1)
+    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
     dist = sorted(map(tuple, exact_substring_spans(df, k=20).collect()))
     assert drv == dist and drv
 
@@ -858,7 +882,6 @@ def test_remove_substrings_driver_regime_equals_distributed(spark, tmp_path,
     """r14: the remove-step driver regime (LocalRelation spans + one Arrow
     text fetch + py_tokens cut) must match the distributed join plan
     row-for-row, including docs with no spans and NULL-text docs."""
-    import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import (
         exact_substring_spans,
         remove_exact_substrings,
@@ -875,7 +898,7 @@ def test_remove_substrings_driver_regime_equals_distributed(spark, tmp_path,
     df = spark.read.parquet(pq)
     spans = exact_substring_spans(df, k=20)
     drv = sorted(map(tuple, remove_exact_substrings(df, spans).collect()))
-    monkeypatch.setattr(dd, "_MINHASH_DRIVER_INPUT_BYTES", -1)
+    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
     spans_dist = exact_substring_spans(df, k=20)
     dist = sorted(map(tuple,
                       remove_exact_substrings(df, spans_dist).collect()))

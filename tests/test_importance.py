@@ -126,7 +126,7 @@ def test_persist_scope_releases_bm25_drop_ratio_intermediates(spark):
 def test_dsir_driver_regime_equals_distributed(spark, tmp_path, monkeypatch):
     """r13: the one-collect driver resample must reproduce the distributed
     plan row-for-row (weights, Gumbel keys, selection order)."""
-    import flouds_vectordb_spark.operators.importance as imp
+    from flouds_vectordb_spark import regime
     from flouds_vectordb_spark.operators.importance import dsir_resample
 
     raw_rows = [(i, f"common words plus topic {i % 9} specific terms {i}")
@@ -140,7 +140,7 @@ def test_dsir_driver_regime_equals_distributed(spark, tmp_path, monkeypatch):
     raw, tgt = spark.read.parquet(rp), spark.read.parquet(tp)
     drv = sorted(map(tuple, dsir_resample(
         raw, tgt, n_keep=25, n_buckets=512, seed=7).collect()))
-    monkeypatch.setattr(imp, "_DSIR_DRIVER_INPUT_BYTES", -1)
+    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
     dist = sorted(map(tuple, dsir_resample(
         raw, tgt, n_keep=25, n_buckets=512, seed=7).collect()))
     assert drv == dist and len(drv) == 25

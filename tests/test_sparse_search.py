@@ -81,22 +81,18 @@ def test_drop_ratio_build_prunes_smallest(spark):
     assert all(w <= kept_min + 1e-12 for w in lowest)
 
 
-def test_drop_ratio_regimes_identical(spark):
+def test_drop_ratio_regimes_identical(spark, monkeypatch):
     """r11: the drop_ratio prune has two regimes — a lazy
     single-partition window below the input-size bound and the
     distributed range-partition rank above it. Same (weight, term, id)
     order, same floor cut: rows must match EXACTLY."""
-    from flouds_vectordb_spark.operators import sparse_search as ss
+    from flouds_vectordb_spark import regime
 
     df = spark.createDataFrame(DOCS, "id long, chunk string")
     small = {tuple(r) for r in bm25_postings(df, drop_ratio_build=0.25).collect()}
-    orig = ss._DROP_RATIO_SMALL_INPUT_BYTES
-    ss._DROP_RATIO_SMALL_INPUT_BYTES = 0  # force the distributed regime
-    try:
-        large = {tuple(r) for r in
-                 bm25_postings(df, drop_ratio_build=0.25).collect()}
-    finally:
-        ss._DROP_RATIO_SMALL_INPUT_BYTES = orig
+    monkeypatch.setattr(regime, "SMALL_BYTES", 0)  # force distributed
+    large = {tuple(r) for r in
+             bm25_postings(df, drop_ratio_build=0.25).collect()}
     assert small == large and small
 
 
