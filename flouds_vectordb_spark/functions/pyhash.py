@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from itertools import chain
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -90,6 +91,11 @@ def _cached(key, builder):
     return u
 
 
+def _distinct_shingle_hashes(text: str | None, n: int) -> list[int]:
+    toks = py_tokens(text)
+    return _hash_all(dict.fromkeys(py_shingles(toks, n))) if toks else []
+
+
 def shingle_hash64_udf(n: int):
     """text -> hash64 of each DISTINCT shingle in first-occurrence order —
     the twin of transform(array_distinct(shingles(tokenize(t), n)),
@@ -97,16 +103,30 @@ def shingle_hash64_udf(n: int):
     def build():
         @F.pandas_udf(ArrayType(LongType()))
         def _f(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                toks = py_tokens(t)
-                if not toks:
-                    out.append([])
-                    continue
-                out.append(_hash_all(dict.fromkeys(py_shingles(toks, n))))
-            return pd.Series(out)
+            return pd.Series([_distinct_shingle_hashes(t, n) for t in texts])
         return _f
     return _cached(("shingle", n), build)
+
+
+def shingle_hits_udf(n: int, keys):
+    """text -> the shingle_hash64_udf values that are in `keys` (a sorted
+    distinct int64 ndarray, e.g. a fetch_shingle_hashes set). Not cached:
+    it closes over keys, and PySpark ships a pickled command over 1 MB as
+    a broadcast, so a large key set costs one broadcast per query."""
+    import numpy as np
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def _f(texts: pd.Series) -> pd.Series:
+        hs = [_distinct_shingle_hashes(t, n) for t in texts]
+        lens = np.fromiter(map(len, hs), np.int64, len(hs))
+        flat = np.fromiter(chain.from_iterable(hs), np.int64, int(lens.sum()))
+        hit = np.isin(flat, keys)
+        out = [[] for _ in hs]
+        for d, h in zip(np.repeat(np.arange(len(hs)), lens)[hit].tolist(),
+                        flat[hit].tolist()):
+            out[d].append(h)
+        return pd.Series(out)
+    return _f
 
 
 def sorted_shingle_hash64_udf(n: int):
@@ -235,6 +255,23 @@ def fetch_id_lists(df: DataFrame):
     ids = tbl.column(0).to_pylist()
     values, offsets, valid = _flatten_list_col(tbl.column(1))
     return ids, values, offsets, valid
+
+
+def fetch_shingle_hashes(df: DataFrame, text_col: str, n: int,
+                         id_col: str | None = None):
+    """One Arrow fetch of df's shingle_hash64_udf(n) values. With id_col:
+    (ids, values, offsets) per row, as fetch_id_lists lays them out.
+    Without: the sorted distinct values over all rows, one int64 ndarray —
+    a held-out set's n-gram hashes."""
+    import numpy as np
+
+    h = shingle_hash64_udf(n)(F.col(text_col)).alias("_h64")
+    if id_col is not None:
+        ids, values, offsets, _ = fetch_id_lists(
+            df.select(F.col(id_col).alias("id"), h))
+        return ids, values, offsets
+    values, _, _ = _flatten_list_col(_to_arrow_no_aqe(df.select(h)).column(0))
+    return np.unique(values)
 
 
 def fetch_tagged_lists(df: DataFrame):

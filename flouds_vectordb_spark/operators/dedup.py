@@ -329,15 +329,11 @@ def _driver_minhash_rows(df: DataFrame, id_col: str, text_col: str,
     per fetch at sf0.1 plus the eliminated per-element int conversion.
     Exactness is pinned by tests/test_pyhash.py (bit-identical hashes on
     a mixed-script corpus) and the regime-equivalence tests."""
-    from flouds_vectordb_spark.functions.pyhash import (
-        fetch_id_lists,
-        shingle_hash64_udf,
-    )
+    from flouds_vectordb_spark.functions.pyhash import fetch_shingle_hashes
 
-    ids, values, offsets, _ = fetch_id_lists(
-        _spread(df, target=_DRIVER_COLLECT_SPREAD).select(
-            F.col(id_col).alias("id"),
-            shingle_hash64_udf(shingle_n)(F.col(text_col)).alias("_h64")))
+    ids, values, offsets = fetch_shingle_hashes(
+        _spread(df, target=_DRIVER_COLLECT_SPREAD), text_col, shingle_n,
+        id_col)
     return _minhash_rows_from_flat(ids, values, offsets, n_sigs, n_bands)
 
 
@@ -1693,102 +1689,65 @@ def decontaminate(
     distinct word n-grams with ANY document of the held-out TEST set — the
     standard n-gram decontamination rule LLM training pipelines apply
     before training (the GPT-3/PaLM appendix recipe: flag a train doc when
-    a test n-gram appears in it; published n is 8-13 words).
+    a test n-gram appears in it; published n is 8-13 words). Documents
+    shorter than n words contribute their whole text as one shingle
+    (functions/hashing.shingles), so exact short-document copies are
+    still caught.
 
-    Spark-first plan (100 TB train corpus, thousands-of-docs test set):
-    the TEST side collapses to a DISTINCT n-gram-hash column (scalars) and
-    broadcasts; the train side explodes to (id, gram-hash) scalars in the
-    same scan that tokenizes, so the join carries two longs per row and no
-    text. Output is one row per contaminated train id with its distinct
-    matched-gram count — map-side-combinable aggregation, no skew (gram
-    hashes are near-unique). Documents shorter than n words contribute
-    their whole text as one shingle (functions/hashing.shingles), so exact
-    short-document copies are still caught."""
-    t_text = test_text_col or text_col
-    grams = lambda c, nn: F.array_distinct(shingles(tokenize(c), n=nn))  # noqa: E731
-    # DRIVER regime (r13, reshaped r14): ONE map-only tagged-union Arrow
-    # fetch — per-train (id, distinct gram hashes) arrays AND per-test
-    # gram-hash arrays, hashed in the shared pandas UDF — with the test
-    # set's distinct union and the membership count on the driver. The
-    # r13 shape ran the test side's explode -> distinct -> collect_list
-    # as 3 extra scheduled shuffle stages per pass (5 jobs total, the
-    # family's slowest row at 2.1 s); dropping the test distinct into
-    # the driver set() makes the whole fetch one map-only job after the
-    # shared spread (3 jobs, the family shape). Exact: matched_ngrams =
-    # |doc's distinct grams ∩ test set| is set arithmetic over the same
-    # hash64 values either way.
-    if (regime.fits(train, regime.DRIVER_BYTES)
-            and regime.fits(test, regime.DRIVER_BYTES)):
-        import numpy as np
+    HELD-OUT CONTRACT: the test set is an eval suite — thousands of docs,
+    broadcast-sized. Its distinct n-gram hashes are fetched ONCE, first,
+    on every path (one Arrow job; pyhash.fetch_shingle_hashes) into a
+    sorted int64 array, so its size never enters the regime choice: a
+    test set built in memory (spark.createDataFrame, whose size Catalyst
+    cannot tell) costs nothing extra. The regime is chosen by the TRAIN
+    size alone:
+    - train within regime.DRIVER_BYTES: one train-only Arrow fetch of
+      (id, distinct gram hashes), then the membership count in numpy;
+    - larger: one map-side pass — a pandas UDF closing over the held-out
+      array keeps each doc's distinct gram hashes that are in it, docs
+      with no hit drop before any exchange, and only contaminated
+      (id, hash) scalars reach the groupBy.
+    Output is one row per contaminated train id with its distinct
+    matched-gram count, exactly decontaminate_sql's count(DISTINCT _gh):
+    duplicate train ids merge their gram sets in both regimes."""
+    import numpy as np
 
-        from flouds_vectordb_spark.functions.local import local_df
-        from flouds_vectordb_spark.functions.pyhash import (
-            fetch_tagged_lists,
-            shingle_hash64_udf,
+    from flouds_vectordb_spark.functions.local import local_df
+    from flouds_vectordb_spark.functions.pyhash import (
+        fetch_shingle_hashes,
+        shingle_hits_udf,
+    )
+
+    mm = max(int(min_matches), 1)  # a train doc with no shared gram never joins
+    held = fetch_shingle_hashes(_spread(test, target=_DRIVER_COLLECT_SPREAD),
+                                test_text_col or text_col, n)
+    if not regime.fits(train, regime.DRIVER_BYTES):
+        return (
+            _spread(train)
+            .select(F.col(id_col).alias("id"),
+                    F.explode(shingle_hits_udf(n, held)(F.col(text_col)))
+                    .alias("_gh"))
+            .groupBy("id")
+            .agg(F.count_distinct("_gh").alias("matched_ngrams"))
+            .filter(F.col("matched_ngrams") >= mm)
         )
-
-        u = shingle_hash64_udf(n)
-        idt = dict(train.dtypes)[id_col]
-        both = (
-            train.select(F.lit(0).alias("_t"), F.col(id_col).alias("id"),
-                         F.col(text_col).alias("_tx"))
-            .unionByName(test.select(
-                F.lit(1).alias("_t"), F.lit(None).cast(idt).alias("id"),
-                F.col(t_text).alias("_tx")))
-        )
-        tags, rids, values, offsets, _ = fetch_tagged_lists(
-            _spread(both, target=_DRIVER_COLLECT_SPREAD).select(
-                "_t", "id", u(F.col("_tx")).alias("_gs")))
-        sizes = np.diff(offsets)
-        elem_tr = np.repeat(tags == 0, sizes)
-        te_set = np.unique(values[~elem_tr])
-        tr_vals = values[elem_tr]
-        tr_ids = [r for r, tg in zip(rids, tags) if tg == 0]
-        tr_sizes = sizes[tags == 0]
-        mm = int(min_matches)
-        out = []
-        if len(set(tr_ids)) == len(tr_ids):
-            hits = np.isin(tr_vals, te_set).astype(np.int64)
-            counts = np.zeros(len(tr_ids), dtype=np.int64)
-            nz = tr_sizes > 0
-            tr_starts = np.concatenate(([0], np.cumsum(tr_sizes)[:-1]))
-            if len(tr_vals):
-                counts[nz] = np.add.reduceat(hits, tr_starts[nz])
-            out = [(rid, int(m)) for rid, m in zip(tr_ids, counts.tolist())
-                   if m >= mm]
-        else:
-            # duplicate train ids merge like the distributed groupBy
-            te_pyset = set(te_set.tolist())
-            by_id: dict = {}
-            pos = 0
-            for rid, s in zip(tr_ids, tr_sizes.tolist()):
-                gs = by_id.setdefault(rid, set())
-                gs.update(tr_vals[pos:pos + s].tolist())
-                pos += s
-            out = [(rid, m) for rid, gs in by_id.items()
-                   if (m := len(gs & te_pyset)) >= mm]
-        out.sort()
-        schema = f"id {idt}, matched_ngrams bigint"
-        if not out:
-            return train.sparkSession.createDataFrame([], schema)
-        return local_df(train.sparkSession, out, schema)
-    tr = (
-        _spread(train)
-        .select(F.col(id_col).alias("id"),
-                F.explode(grams(F.col(text_col), n)).alias("_g"))
-        .select("id", hash64(F.col("_g")).alias("_gh"))
-    )
-    te = (
-        test.select(F.explode(grams(F.col(t_text), n)).alias("_g"))
-        .select(hash64(F.col("_g")).alias("_gh"))
-        .distinct()
-    )
-    return (
-        tr.join(F.broadcast(te), "_gh")
-        .groupBy("id")
-        .agg(F.count_distinct("_gh").alias("matched_ngrams"))
-        .filter(F.col("matched_ngrams") >= int(min_matches))
-    )
+    ids, values, offsets = fetch_shingle_hashes(
+        _spread(train, target=_DRIVER_COLLECT_SPREAD), text_col, n, id_col)
+    # group code per distinct id (first-occurrence order): duplicate ids
+    # merge like the distributed groupBy; np.unique over (code, hash)
+    # pairs is the count(DISTINCT)
+    groups: dict = {}
+    codes = np.fromiter((groups.setdefault(r, len(groups)) for r in ids),
+                        np.int64, len(ids))
+    hit = np.isin(values, held)
+    pairs = np.unique(np.stack((np.repeat(codes, np.diff(offsets))[hit],
+                                values[hit])), axis=1)
+    counts = np.bincount(pairs[0], minlength=len(groups)).tolist()
+    out = [(rid, c) for rid, c in zip(groups, counts) if c >= mm]
+    schema = f"id {dict(train.dtypes)[id_col]}, matched_ngrams bigint"
+    if not out:
+        return train.sparkSession.createDataFrame([], schema)
+    return local_df(train.sparkSession, out, schema)
 
 
 def decontaminate_sql(
@@ -1829,48 +1788,14 @@ def _driver_decon_neardup(train, test, id_col, text_col, t_id, t_text,
     aggregation over two collected scalar tables. None -> fall back."""
     from collections import defaultdict
 
-    import numpy as np
-
     from flouds_vectordb_spark.functions.local import local_df
-    from flouds_vectordb_spark.functions.pyhash import (
-        fetch_tagged_lists,
-        shingle_hash64_udf,
-    )
 
-    # ONE md5-only Arrow fetch for both sides (a per-side fetch costs a
-    # job each; hashing in the shared pandas UDF — see
-    # _driver_minhash_rows), signatures/bands via the shared numpy half;
-    # mismatched id types cannot union — fetch per side then
-    if dict(train.dtypes)[id_col] == dict(test.dtypes)[t_id]:
-        u = shingle_hash64_udf(shingle_n)
-        both = (
-            train.select(F.lit(0).alias("_tag"),
-                         F.col(id_col).alias("id"),
-                         F.col(text_col).alias("_tx"))
-            .unionByName(test.select(F.lit(1).alias("_tag"),
-                                     F.col(t_id).alias("id"),
-                                     F.col(t_text).alias("_tx")))
-        )
-        tags, rids, values, offsets, _ = fetch_tagged_lists(
-            _spread(both, target=_DRIVER_COLLECT_SPREAD).select(
-                "_tag", "id", u(F.col("_tx")).alias("_h64")))
-        sizes = np.diff(offsets)
-
-        def _split(tag):
-            m = tags == tag
-            ids_k = [r for r, tg in zip(rids, tags) if tg == tag]
-            vals_k = values[np.repeat(m, sizes)]
-            offs_k = np.concatenate(([0], np.cumsum(sizes[m])))
-            return _minhash_rows_from_flat(ids_k, vals_k, offs_k,
-                                           n_sigs, n_bands)
-
-        tr_rows = _split(0)
-        te_rows = _split(1)
-    else:
-        tr_rows = _driver_minhash_rows(train, id_col, text_col, n_sigs,
-                                       n_bands, shingle_n)
-        te_rows = _driver_minhash_rows(test, t_id, t_text, n_sigs,
-                                       n_bands, shingle_n)
+    # one Arrow fetch per side: the held-out side is broadcast-sized by
+    # contract, so only the train side's size gated this regime
+    te_rows = _driver_minhash_rows(test, t_id, t_text, n_sigs, n_bands,
+                                   shingle_n)
+    tr_rows = _driver_minhash_rows(train, id_col, text_col, n_sigs, n_bands,
+                                   shingle_n)
     te_buckets: dict = defaultdict(list)
     te_sets: dict = {}
     te_sizes: dict = {}
@@ -1940,12 +1865,13 @@ def decontaminate_neardup(
     against the corpus to clean it."""
     t_id = test_id_col or id_col
     t_text = test_text_col or text_col
-    # DRIVER regime (r13): both sides under the collect bound -> two
-    # collects + driver bipartite bucketing/verify/aggregation replace
-    # the 13 scheduled jobs of the broadcast plan at gate scale. Same
-    # hashes, same verify arithmetic, same (max, count) aggregation.
-    if (regime.fits(train, regime.DRIVER_BYTES)
-            and regime.fits(test, regime.DRIVER_BYTES)):
+    # DRIVER regime (r13): the train side under the collect bound -> one
+    # Arrow fetch per side + driver bipartite bucketing/verify/aggregation
+    # replace the 13 scheduled jobs of the broadcast plan at gate scale.
+    # The test side is broadcast-sized by contract (the plan below
+    # broadcasts it), so its size does not gate the regime. Same hashes,
+    # same verify arithmetic, same (max, count) aggregation.
+    if regime.fits(train, regime.DRIVER_BYTES):
         res = _driver_decon_neardup(train, test, id_col, text_col, t_id,
                                     t_text, jaccard_threshold, n_sigs,
                                     n_bands, shingle_n)

@@ -314,9 +314,12 @@ def op_url_domain_cap(spark, d):
 
 
 def op_decontaminate(spark, d):
-    """Exact n-gram decontamination (GPT-3/PaLM rule): test side collapses
-    to a broadcast distinct-gram-hash column; train explodes to (id,
-    gram-hash) scalars in the tokenize scan."""
+    """Exact n-gram decontamination (GPT-3/PaLM rule): the test side is
+    hashed once into a sorted driver array of distinct gram hashes; the
+    train size alone picks the regime. x10 fits the driver bound (one
+    train fetch, numpy membership count); x100 runs one map-side pass
+    that keeps only each doc's held-out hits, so the exchange carries
+    contaminated (id, gram-hash) scalars only."""
     from flouds_vectordb_spark.operators.dedup import decontaminate
 
     docs = _docs(spark, d).select(F.col("doc_id").alias("id"), "text")

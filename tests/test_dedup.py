@@ -820,6 +820,7 @@ def test_simhash_driver_regime_equals_distributed(parquet_docs, monkeypatch):
 
 def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
                                                         monkeypatch):
+    import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import decontaminate_neardup
 
     tr_rows = [(i, f"train doc {i} about shared topic {i % 6} words")
@@ -830,15 +831,24 @@ def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
     tr_pq, te_pq = str(tmp_path / "tr.parquet"), str(tmp_path / "te.parquet")
     spark.createDataFrame(tr_rows, "id long, text string").write.parquet(tr_pq)
     spark.createDataFrame(te_rows, "id long, text string").write.parquet(te_pq)
-    tr, te = spark.read.parquet(tr_pq), spark.read.parquet(te_pq)
-    for thr in (0.3, 0.8):
-        drv = sorted(map(tuple, decontaminate_neardup(
-            tr, te, jaccard_threshold=thr).collect()))
-        monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
-        dist = sorted(map(tuple, decontaminate_neardup(
-            tr, te, jaccard_threshold=thr).collect()))
-        monkeypatch.undo()
-        assert drv == dist and drv, thr
+    tr = spark.read.parquet(tr_pq)
+    # a held-out side built in memory (unknown size) must not veto the
+    # driver regime: only the train side's size gates it
+    in_memory = spark.createDataFrame(te_rows, "id long, text string")
+    for te in (spark.read.parquet(te_pq), in_memory):
+        for thr in (0.3, 0.8):
+            calls = []
+            real = dd._driver_decon_neardup
+            monkeypatch.setattr(dd, "_driver_decon_neardup",
+                                lambda *a: calls.append(1) or real(*a))
+            drv = sorted(map(tuple, decontaminate_neardup(
+                tr, te, jaccard_threshold=thr).collect()))
+            monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
+            dist = sorted(map(tuple, decontaminate_neardup(
+                tr, te, jaccard_threshold=thr).collect()))
+            monkeypatch.undo()
+            assert calls == [1]  # the driver regime ran for drv only
+            assert drv == dist and drv, thr
 
 
 def test_decontaminate_driver_regime_equals_distributed(spark, tmp_path,
@@ -857,6 +867,79 @@ def test_decontaminate_driver_regime_equals_distributed(spark, tmp_path,
     monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
     dist = sorted(map(tuple, decontaminate(tr, te, n=5).collect()))
     assert drv == dist and drv
+
+
+_DECON_TRAIN = [(i, f"alpha beta gamma delta {i} epsilon zeta eta theta")
+                for i in range(40)]
+_DECON_HELD = [(100, "alpha beta gamma delta 7 epsilon zeta eta theta"),
+               (101, "nothing shared here at all today friends")]
+_KNIFE = "one two three four five six seven"  # 3 distinct 5-grams
+
+# (train rows, held-out rows, held-out DDL schema, min_matches)
+_DECON_CASES = {
+    "plain": (_DECON_TRAIN, _DECON_HELD, "id long, text string", 1),
+    "duplicate_train_ids": (
+        _DECON_TRAIN + [(7, "alpha beta gamma delta 7 epsilon more words"),
+                        (3, "nothing shared here at all today friends")],
+        _DECON_HELD, "id long, text string", 1),
+    "null_text_both_sides": (
+        _DECON_TRAIN + [(50, None)],
+        _DECON_HELD + [(102, None)], "id long, text string", 1),
+    "shorter_than_n": (
+        _DECON_TRAIN + [(60, "tiny secret"), (61, "tiny secret answer"),
+                        (62, "tiny")],
+        _DECON_HELD + [(103, "tiny secret")], "id long, text string", 1),
+    "empty_held_out": (_DECON_TRAIN, [], "id long, text string", 1),
+    "held_out_without_id": (
+        _DECON_TRAIN, [(t,) for _, t in _DECON_HELD], "text string", 1),
+    "string_held_out_ids": (
+        _DECON_TRAIN, [(f"q{i}", t) for i, t in _DECON_HELD],
+        "id string, text string", 1),
+    "match_count_at_min_matches": (
+        _DECON_TRAIN + [(70, f"zero {_KNIFE} eight"),
+                        (71, "one two three four five six")],
+        _DECON_HELD + [(104, _KNIFE)], "id long, text string", 3),
+    # no train doc without a shared gram is flagged, whatever the bar
+    "min_matches_zero": (_DECON_TRAIN, _DECON_HELD, "id long, text string", 0),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DECON_CASES))
+def test_decontaminate_in_memory_held_out_takes_driver_regime(
+        spark, tmp_path, monkeypatch, case):
+    """A held-out set built with spark.createDataFrame (a LogicalRDD whose
+    size Catalyst reports as unknown) must not veto the driver regime: the
+    regime follows the train side alone. The driver rows must equal the
+    forced-distributed rows on each adversarial input."""
+    from flouds_vectordb_spark.functions import pyhash
+    from flouds_vectordb_spark.operators.dedup import decontaminate
+
+    tr_rows, te_rows, te_schema, mm = _DECON_CASES[case]
+    pq = str(tmp_path / "tr.parquet")
+    spark.createDataFrame(tr_rows, "id long, text string").write.parquet(pq)
+    tr = spark.read.parquet(pq)
+    te = spark.createDataFrame(te_rows, te_schema)
+    assert regime.fits(tr, regime.DRIVER_BYTES)
+    assert not regime.fits(te, regime.DRIVER_BYTES)
+
+    fetched = []
+    real = pyhash.fetch_id_lists
+    monkeypatch.setattr(pyhash, "fetch_id_lists",
+                        lambda df: fetched.append(real(df)) or fetched[-1])
+    drv = sorted(map(tuple, decontaminate(tr, te, n=5,
+                                          min_matches=mm).collect()))
+    assert len(fetched) == 1  # one fetch, of the train side
+    assert sorted(fetched[0][0]) == sorted(i for i, _ in tr_rows)
+    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
+    dist = sorted(map(tuple, decontaminate(tr, te, n=5,
+                                           min_matches=mm).collect()))
+    assert len(fetched) == 1  # the distributed regime fetches no train ids
+    assert drv == dist
+    assert bool(drv) == (case != "empty_held_out")
+    if case == "duplicate_train_ids":
+        assert (7, 5) in drv and (3, 3) in drv  # merged distinct gram sets
+    if case == "match_count_at_min_matches":
+        assert (70, 3) in drv and not any(r[0] == 71 for r in drv)
 
 
 def test_substring_spans_driver_regime_equals_distributed(spark, tmp_path,

@@ -123,3 +123,73 @@ def test_fetch_id_lists_flat_layout(spark):
     assert offsets.tolist() == [0, 2, 2, 2, 3]
     assert valid is not None and valid.tolist() == [True, True, False, True]
     np.testing.assert_array_equal(values[offsets[0]:offsets[1]], [5, 6])
+
+
+# fetch_shingle_hashes edge cases: NULL, empty and whitespace-only text,
+# text shorter than n, mixed scripts, and a lone surrogate (which the
+# createDataFrame route hands to the JVM)
+_EDGE = [
+    (0, None),
+    (1, ""),
+    (2, " \t\n\x0b "),
+    (3, "two words"),
+    (4, "emoji 😀 中文字符 ΟΔΥΣΣΕΥΣ İstanbul STRASSE mixed"),
+    (5, "lone \ud800 surrogate inside a longer text"),
+    (6, "plain words long enough for several shingles here"),
+]
+
+
+@pytest.fixture(scope="module")
+def edge_frames(spark, tmp_path_factory):
+    """The _EDGE rows as a LogicalRDD, a LocalRelation and a parquet scan.
+    The last two are built from the rows the JVM holds after the
+    createDataFrame route."""
+    from flouds_vectordb_spark import regime
+    from flouds_vectordb_spark.functions.local import local_df
+
+    rdd = spark.createDataFrame(_EDGE, _SCHEMA)
+    pq = str(tmp_path_factory.mktemp("edge") / "edge.parquet")
+    rdd.write.parquet(pq)
+    local = local_df(spark, [tuple(r) for r in rdd.collect()], _SCHEMA)
+    assert regime.is_local_relation(local)
+    return {"logical_rdd": rdd, "local_relation": local,
+            "parquet": spark.read.parquet(pq)}
+
+
+@pytest.mark.parametrize("kind", ["logical_rdd", "local_relation", "parquet"])
+@pytest.mark.parametrize("n", [3, 5])
+def test_fetch_shingle_hashes_matches_column(edge_frames, kind, n):
+    import numpy as np
+
+    df = edge_frames[kind]
+    col = F.transform(F.array_distinct(shingles(tokenize(F.col("text")), n=n)),
+                      lambda s: hash64(s))
+    want = {r[0]: list(r[1]) for r in
+            df.select("id", col.alias("v")).collect()}
+    ids, values, offsets = P.fetch_shingle_hashes(df, "text", n, "id")
+    got = {i: values[offsets[k]:offsets[k + 1]].tolist()
+           for k, i in enumerate(ids)}
+    assert got == want
+    assert got[0] == got[1] == got[2] == [] and len(got[3]) == 1
+    held = P.fetch_shingle_hashes(df, "text", n)
+    assert held.dtype == np.int64
+    assert held.tolist() == sorted({h for v in want.values() for h in v})
+
+
+def _udf_rows_of(df, udf):
+    return {r[0]: list(r[1]) for r in
+            df.select("id", udf(F.col("text")).alias("v")).collect()}
+
+
+def test_shingle_hits_udf_keeps_only_held_out_hashes(edge_frames):
+    import numpy as np
+
+    df = edge_frames["logical_rdd"]
+    full = _udf_rows_of(df, P.shingle_hash64_udf(3))
+    keys = np.unique([v[0] for v in full.values() if v] + [7, 11])
+    got = _udf_rows_of(df, P.shingle_hits_udf(3, keys))
+    assert got == {i: [h for h in v if h in set(keys.tolist())]
+                   for i, v in full.items()}
+    assert _udf_rows_of(df, P.shingle_hits_udf(3, keys[:0])) == \
+        {i: [] for i in full}
+
