@@ -460,24 +460,9 @@ def doc_ngrams(text_col: Column) -> Column:
     return F.flatten(F.transform(padded, grams_of))
 
 
-# gram -> list[(lang, lrank)] inverted profile index, built lazily ONCE
-# per process (driver and each Python worker) from the literal PROFILES
-_PROFILE_INDEX: dict[str, list[tuple[str, int]]] | None = None
-
-
-def _profile_index() -> dict[str, list[tuple[str, int]]]:
-    global _PROFILE_INDEX
-    if _PROFILE_INDEX is None:
-        idx: dict[str, list[tuple[str, int]]] = {}
-        for lang, gram, lrank in PROFILES:
-            idx.setdefault(gram, []).append((lang, lrank))
-        _PROFILE_INDEX = idx
-    return _PROFILE_INDEX
-
-
 # --- vectorized gram extraction (r14, VERDICT ask #5) -------------------------
 #
-# classify_text_ref's per-char unicodedata.category + per-gram slicing is
+# The reference's per-char unicodedata.category + per-gram slicing is
 # ~3.1 core-s over sf0.1 (the row's measured wall). The vectorized path
 # packs each 1..3-gram into ONE int64 key — code points are < 2^21, so
 # big-endian packing (c0<<42 | c1<<21 | c2, zero-padded) is collision-free
@@ -612,46 +597,9 @@ def _lower_simple(t: str) -> str:
     return t.lower()
 
 
-def classify_text_ref(t: str | None) -> tuple[str, int]:
-    """(lang, distance) for one document — the complete Cavnar–Trenkle
-    scoring in plain Python. The REFERENCE implementation: classify_text
-    (the vectorized production path) is pinned to it by
-    test_classify_vectorized_equals_reference.
-
-    Exact-parity math with lang_id_sql: rank the doc's grams by
-    (count desc, gram asc) — Python str comparison is by code point,
-    which equals both UTF8String's byte-wise UTF-8 order and DuckDB's
-    binary collation, so ties break identically — then
-    dist(L) = sum over matched grams of min(|dr - lrank|, MAX_PENALTY)
-            + (dn - nm(L)) * MAX_PENALTY, all-integer.
-    Equivalently (used here): start every candidate language at
-    dn * MAX_PENALTY and subtract (MAX_PENALTY - pen) per matched gram —
-    identical integers, but only languages with >= 1 match are ever
-    touched, so the loop is O(top grams x langs-per-gram)."""
-    from collections import Counter
-
-    if t is None:
-        return ("und", -1)
-    c = Counter(_char_ngrams(_lower_simple(t)))
-    ranked = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:DOC_TOP]
-    dn = len(ranked)
-    idx = _profile_index()
-    base = dn * MAX_PENALTY
-    scores: dict[str, int] = {}
-    for dr, (gram, _cnt) in enumerate(ranked, start=1):
-        for lang, lrank in idx.get(gram, ()):
-            pen = abs(dr - lrank)
-            if pen > MAX_PENALTY:
-                pen = MAX_PENALTY
-            scores[lang] = scores.get(lang, base) - (MAX_PENALTY - pen)
-    if not scores:
-        return ("und", -1)
-    lang = min(scores, key=lambda L: (scores[L], L))
-    return (lang, scores[lang])
-
-
 def classify_text(t: str | None) -> tuple[str, int]:
-    """classify_text_ref through the packed-gram vectorized extraction
+    """Cavnar-Trenkle (lang, distance) for one document through the
+    packed-gram vectorized extraction
     and a fully-vectorized scoring pass: identical (lang, distance)
     integers — the packed-key order equals gram string order (ranking,
     penalties and tie-breaks unchanged; LANGUAGES is sorted, so the

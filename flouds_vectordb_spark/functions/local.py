@@ -20,9 +20,9 @@ and skip the scheduler entirely; the RDD route schedules real tasks.
 Falls back to createDataFrame for empty row sets (VALUES cannot be empty)
 and for schemas it does not know how to render.
 
-`json_df` is the same task-free literal for numeric blocks (the
-batched-search query blocks: qid, a 64-double vector, its norm, probed
-cells): the rows travel as ONE JSON string literal read by
+`json_df` is the same task-free literal for numeric blocks (the query
+blocks of batch_search.query_block: qid, a 64-double vector, its norm):
+the rows travel as ONE JSON string literal read by
 `inline(from_json(...))`, which the optimizer folds into a single constant
 array over a one-row relation. Spark's parser pays per token of SQL text — a 256 x 64 VALUES block
 took 2.2 s to parse, its JSON form under 0.1 s — while the JSON number

@@ -1,16 +1,22 @@
-"""Vector distance/similarity as pure Column expressions.
+"""Vector distance/similarity: Column expressions, SQL texts and numpy folds.
 
 These mirror the metrics the reference forwards to Milvus
 (reference: app/milvus/vector_store.py:445-517, metric_type ∈
-{COSINE, L2, IP} per app/models/search_request.py:202-220), but computed
-Spark-side with whole-stage-codegen'd higher-order functions — no UDF, no
-Python in the hot path.
+{COSINE, L2, IP} per app/models/search_request.py:202-220), computed
+Spark-side. A score against one constant query is a higher-order
+function fold (`aggregate(zip_with(...))`); Spark runs those
+interpreted (ArrayAggregate and ZipWith are CodegenFallback). Query
+blocks, where every (document, query) pair of a scan is scored, go
+through ``fold_scores``: the same folds in numpy inside one mapInArrow
+kernel (operators/batch_search.py).
 
 Determinism contract (oracle parity): every score is a float64 sequential
 left-fold over the element-wise products, exactly what DuckDB's
 ``list_sum(list_transform(...))`` computes, so both engines produce
 bit-identical doubles. Each builder has a ``*_sql`` twin that renders the
-equivalent DuckDB expression for the correctness oracle.
+equivalent DuckDB expression for the correctness oracle; ``fold_scores``
+runs the same element-wise operations in the same order (no reduction,
+no BLAS), so its doubles are the Column builders' bits too.
 
 Scale notes: for a constant query vector the query norm is precomputed
 driver-side (one scalar literal, not a per-row 64-element fold), and
@@ -30,6 +36,7 @@ from __future__ import annotations
 import math
 import re
 
+import numpy as np
 from py4j.protocol import Py4JError
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -92,6 +99,45 @@ def query_norm(q: list[float]) -> float:
     return math.sqrt(acc)
 
 
+# --- numpy folds over a block (batch_search's mapInArrow kernel) -----------
+
+def fold_norms(x: np.ndarray) -> np.ndarray:
+    """Per-row L2 norms of an (n, dim) float64 matrix, each the
+    sequential fold of `norm`."""
+    acc = np.zeros(x.shape[0])
+    with np.errstate(all="ignore"):
+        for j in range(x.shape[1]):
+            acc += x[:, j] * x[:, j]
+        return np.sqrt(acc)
+
+
+def fold_scores(metric: str, x: np.ndarray, q: np.ndarray, qn: np.ndarray,
+                dn: np.ndarray | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """(scores, keep) of every document row of x (n, dim) against every
+    query row of q (c, dim), both float64. scores[i, k] is score_expr's
+    fold for the pair, element by element from 0.0, so the doubles are
+    bit-identical. keep is False where score_expr is NULL: a COSINE
+    pair whose denominator dn * qn is zero (dn: fold_norms(x); qn: the
+    query norms)."""
+    m = metric.upper()
+    acc = np.zeros((x.shape[0], q.shape[0]))
+    term = np.empty_like(acc)
+    with np.errstate(all="ignore"):
+        for j in range(x.shape[1]):
+            if m == "L2":
+                np.subtract(x[:, j, None], q[:, j], out=term)
+                term *= term
+            else:
+                np.multiply(x[:, j, None], q[:, j], out=term)
+            acc += term
+        if m == "IP":
+            return acc, np.ones(acc.shape, dtype=bool)
+        if m == "L2":
+            return -acc, np.ones(acc.shape, dtype=bool)
+        den = dn[:, None] * qn[None, :]
+        return acc / den, den != 0
+
+
 # --- Spark SQL texts of the same folds (one F.expr per score) ---------------
 
 def _fold_expr(products: str) -> str:
@@ -116,17 +162,16 @@ def norm_expr(a: str) -> str:
     return f"sqrt({_fold_expr(f'transform({a}, _x -> CAST(_x AS DOUBLE) * CAST(_x AS DOUBLE))')})"
 
 
-def score_expr(metric: str, vec: str, q: str, qn: str, dn: str | None = None) -> str:
+def score_expr(metric: str, vec: str, q: str, qn: str) -> str:
     """Spark SQL text of a larger-is-better score of `vec` against `q`.
-    qn is the query norm; dn a precomputed document norm (COSINE), else
-    the norm folds inline. try_divide: /0 -> NULL, as cosine_score."""
+    qn is the query norm. try_divide: /0 -> NULL, as cosine_score."""
     m = metric.upper()
     if m == "IP":
         return dot_expr(vec, q)
     if m == "L2":
         return l2_expr(vec, q)
     if m == "COSINE":
-        return f"try_divide({dot_expr(vec, q)}, {dn or norm_expr(vec)} * {qn})"
+        return f"try_divide({dot_expr(vec, q)}, {norm_expr(vec)} * {qn})"
     raise ValueError(f"unsupported metric {metric!r} (expected COSINE, L2, IP)")
 
 

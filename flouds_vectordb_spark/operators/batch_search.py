@@ -10,13 +10,13 @@ dedup), where a per-query job floor of ~0.2-0.5 s is the real bottleneck.
 
 This module is the set-of-queries shape:
 
-- a (qid, vector) QUERY BLOCK is broadcast (queries are the small side —
-  thousands of rows of scalars+arrays; the corpus never moves),
-- ONE scan scores every query: the exact path is a broadcast nested-loop
-  join of block x corpus; the IVF path explodes each query into its nprobe
-  probed cells driver-side and broadcast-hash-joins on centroid_id, so the
-  scan stays partition-pruned to the UNION of probed cells and each query
-  scores only rows of its own cells,
+- a block of (qid, vector) queries is held driver-side (queries are the
+  small side; the corpus never moves),
+- ONE scan scores every query: one mapInArrow kernel (`_block_scores`)
+  closes over the query matrix and scores each Arrow batch of the scan
+  against the whole block in numpy; the IVF path prunes the scan to the
+  UNION of probed cells and the kernel scores each row only against the
+  queries that probed its cell,
 - the k-cut is ONE per-qid window over (qid, id, score) scalars — the
   shuffle carries no vectors and no payload (late materialization: payload
   joins back for the <= nq*fetch survivors only),
@@ -26,21 +26,22 @@ This module is the set-of-queries shape:
   shared by all queries (the batch-retrieval shape: one search config, many
   vectors).
 
-Scoring determinism matches functions/vector.py's oracle contract: per-pair
-sequential float64 folds, and the per-query norms (COSINE) are computed
-ONCE driver-side with the same fold and spliced into BOTH engines as the
-same literal, so Spark and DuckDB rank identical doubles. The document
-norm (COSINE) is likewise folded ONCE per document, projected below the
-block join as `_dn`: the per-pair work is the dot fold alone, and the
-score is the same try_divide(dot, _dn * _qn) as the single request's.
+Scoring determinism matches functions/vector.py's oracle contract: the
+kernel runs vector.fold_scores, the per-pair sequential float64 left-fold
+of score_expr element by element, so every score has the bits the SQL
+fold (and DuckDB) computes. The per-query norms (COSINE) are computed
+ONCE driver-side with the same fold (the literal the DuckDB twin splices
+in); the document norm is folded once per row of a batch. The kernel
+emits no pair the SQL fold scores NULL: a NULL or wrong-length vector, a
+NULL element, a COSINE zero denominator. Why not SQL: the block used to
+be a broadcast nested-loop join scored by `aggregate(zip_with(...))`,
+and Spark runs both higher-order functions interpreted; a 64-query block
+over 2,000 dim-64 rows spent ~1-2 s in that fold on one core.
 
-Fixed per-request costs stay off the driver: the query block ships as ONE
-JSON string literal (functions/local.py json_df — parsing VALUES text of
-64 x 64 doubles cost ~0.5 s per block, 256 x 64 ~2.2 s), and each pair
-score is one SQL-text expression (functions/vector.py score_expr) instead
-of a Column tree built through hundreds of py4j calls.
+Memory: the kernel scores QUERY_CHUNK queries at a time, so its working
+set is batch rows x QUERY_CHUNK doubles per array at any block size.
 
-Scale notes (100 TB): the query block is a genuine broadcast (scalars);
+Scale notes (100 TB): the query block ships inside the kernel's closure;
 candidate volume is sum_q(nprobe * cell_rows) pairs of 3 scalars; the
 per-qid window compiles to one hash-partitioned sort over those scalars.
 At 1000 executors the probed scan parallelizes over cells and the window
@@ -52,8 +53,10 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from flouds_vectordb_spark.functions import vector as V
 from flouds_vectordb_spark.functions.local import json_df
@@ -97,20 +100,99 @@ def _vec_ref(vector_col: str) -> str:
     return ref
 
 
-def _doc_side(df: DataFrame, metric: str, vector_col: str, *cols) -> DataFrame:
-    """The scanned side of a block join: `cols`, the vector and, for
-    COSINE, its norm `_dn` folded once per document (not once per pair)."""
-    if metric.upper() == "COSINE":
-        cols += (F.expr(V.norm_expr(_vec_ref(vector_col))).alias("_dn"),)
-    return df.select(*cols, F.col(vector_col))
-
-
-def _pair_score(metric: str, vector_col: str, doc_norm: str | None = None) -> Column:
+def _pair_score(metric: str, vector_col: str) -> Column:
     """Per-(row, query) score against the block's _qv/_qn columns; the same
-    larger-is-better convention and fold order as metric_score_q. doc_norm
-    names a precomputed document norm column (_doc_side), else COSINE
-    folds the norm per pair."""
-    return F.expr(V.score_expr(metric, _vec_ref(vector_col), "_qv", "_qn", doc_norm))
+    larger-is-better convention and fold order as metric_score_q. For
+    pairs that are not a cross product (the HNSW frontier); blocks score
+    through _block_scores."""
+    return F.expr(V.score_expr(metric, _vec_ref(vector_col), "_qv", "_qn"))
+
+
+# Queries one kernel pass scores against a batch: bounds the working set
+# to batch rows x QUERY_CHUNK doubles per array, whatever the block size.
+QUERY_CHUNK = 64
+
+
+def _vectors(vec: pa.ListArray, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(rows, x): the rows of an Arrow batch whose vector the SQL fold
+    scores against a dim-long query — non-NULL, exactly dim elements,
+    none NULL (zip_with pads a wrong length with NULL, and a NULL
+    product makes the fold NULL) — and their vectors as an (n, dim)
+    float64 matrix, the CAST(x AS DOUBLE) of each element."""
+    lens = vec.value_lengths().fill_null(-1).to_numpy()
+    rows = np.flatnonzero(lens == dim)
+    at = vec.offsets.to_numpy()[rows, None] + np.arange(dim)
+    vals = vec.values
+    if vals.null_count:
+        ok = ~vals.is_null().to_numpy(zero_copy_only=False)[at].any(axis=1)
+        rows, at = rows[ok], at[ok]
+    x = vals.to_numpy(zero_copy_only=False)[at]
+    return rows, np.asfortranarray(x, dtype=np.float64)
+
+
+def _block_kernel(queries: list, metric: str, cells=None):
+    """The mapInArrow function of a block scan: (_id, _v[, _cell])
+    batches in, (qid, _id, _score) batches out. Closes over the query
+    matrix and the driver-side query norms. With cells (per query, its
+    probed cell ids) a row is scored only against the queries that
+    probed its cell, as the old (qid, cell) equi-join did."""
+    m = metric.upper()
+    qids = np.array([int(q) for q, _ in queries], dtype=np.int64)
+    qm = np.array([[float(x) for x in v] for _, v in queries],
+                  dtype=np.float64).reshape(len(queries), -1)
+    qn = np.array([V.query_norm(list(v)) for _, v in queries], dtype=np.float64)
+    dim = qm.shape[1]
+    everyone = np.arange(len(queries))
+    probed: dict[int, list[int]] = {}
+    for qi, row in enumerate(() if cells is None else cells):
+        for c in row:
+            probed.setdefault(int(c), []).append(qi)
+    probers = {c: np.array(qis) for c, qis in probed.items()}
+
+    def kernel(batches):
+        for b in batches:
+            rows, x = _vectors(b.column(1), dim)
+            if cells is None:
+                groups = [(rows, x, everyone)]
+            else:
+                cell = b.column(2).fill_null(-1).to_numpy()[rows]
+                groups = [(rows[cell == c], x[cell == c], probers[int(c)])
+                          for c in np.unique(cell) if int(c) in probers]
+            for grows, gx, qsel in groups:
+                if not len(grows):
+                    continue
+                dn = V.fold_norms(gx) if m == "COSINE" else None
+                for c0 in range(0, len(qsel), QUERY_CHUNK):
+                    qi = qsel[c0:c0 + QUERY_CHUNK]
+                    score, keep = V.fold_scores(m, gx, qm[qi], qn[qi], dn)
+                    r, k = np.nonzero(keep)
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(qids[qi][k]), b.column(0).take(grows[r]),
+                         pa.array(score[r, k])],
+                        names=["qid", "_id", "_score"])
+
+    return kernel
+
+
+def _block_scores(df: DataFrame, queries: QueryBatch, metric: str,
+                  id_col: str, vector_col: str, cells=None) -> DataFrame:
+    """(qid, _id, _score) for every (row, query) pair of df the SQL fold
+    scores non-NULL, in one mapInArrow pass over df. cells: per query
+    (in batch order) its probed cell ids; df then carries `centroid_id`
+    and a row pairs only with the queries that probed its cell."""
+    queries = list(queries)
+    _check_batch(queries)
+    if metric.upper() not in ("COSINE", "L2", "IP"):
+        raise ValueError(f"unsupported metric {metric!r} (expected COSINE, L2, IP)")
+    cols = [F.col(id_col).alias("_id"), F.col(vector_col).alias("_v")]
+    if cells is not None:
+        cols.append(F.col("centroid_id").alias("_cell"))
+    src = df.select(*cols)
+    if not isinstance(src.schema["_v"].dataType, ArrayType):
+        raise ValueError(f"vector_col {vector_col!r} is not an array column")
+    schema = StructType([StructField("qid", LongType()), src.schema["_id"],
+                         StructField("_score", DoubleType())])
+    return src.mapInArrow(_block_kernel(queries, metric, cells), schema)
 
 
 def _ranked_pipeline(
@@ -207,19 +289,12 @@ def dense_search_many(
     meta_col: str | None = None,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Exact batched search: ONE corpus scan scores every query (broadcast
-    nested-loop join against the query block), one per-qid window k-cut.
+    """Exact batched search: ONE corpus scan scores every query (the
+    _block_scores kernel), one per-qid window k-cut.
     Returns (qid, id, rank, score [, chunk, meta_kv, extra...]) with rank
     1-based per qid. req.query_vector is IGNORED — the batch supplies the
     vectors; every other request knob applies to all queries."""
-    queries = list(queries)
-    _check_batch(queries)
-    qb = query_block(df.sparkSession, queries)
-    cand = (
-        _doc_side(df, req.metric, vector_col, F.col(id_col).alias("_id"))
-        .join(F.broadcast(qb))          # query block x corpus, block is tiny
-        .select("qid", "_id", _pair_score(req.metric, vector_col, "_dn").alias("_score"))
-    )
+    cand = _block_scores(df, queries, req.metric, id_col, vector_col)
     return _ranked_pipeline(cand, df, req, id_col, chunk_col, meta_col, extra_cols)
 
 
@@ -240,7 +315,7 @@ def ivf_search_many(
     """IVF-pruned batched search over a built IvfIndex (plans/ivf.py):
     per-query probe cells are computed driver-side in one vectorized numpy
     pass, the scan is pruned to the UNION of probed cells, and the
-    (qid, cell) explode joins each scanned row to exactly the queries that
+    kernel scores each scanned row against exactly the queries that
     probed its cell. scan_df overrides the raw IVF layout with an
     already-pruned-and-decoded table (the SQ8/PQ paths); it must carry
     `centroid_id`. payload_df supplies chunk/meta/extra columns when the
@@ -251,22 +326,8 @@ def ivf_search_many(
     cells = idx.probe_cells_many(qmat, req.nprobe if nprobe is None else nprobe)
     union_cells = sorted({int(c) for row in cells for c in row})
 
-    # The (qid, _qv, _qn, _cells) probe block, built driver-side as one
-    # JSON literal and exploded to one row per probed cell: no
-    # ExistingRDD stage for driver-held rows, no second join.
-    qx = json_df(
-        spark, [(q, v, V.query_norm(list(v)), crow)
-                for (q, v), crow in zip(queries, cells)],
-        "qid bigint, _qv array<double>, _qn double, _cells array<int>",
-    ).select("qid", "_qv", "_qn", F.explode("_cells").alias("_cell"))
-
     scan = scan_df if scan_df is not None else idx.scan(spark, union_cells)
-    cand = (
-        _doc_side(scan, req.metric, vector_col, F.col(id_col).alias("_id"),
-                  "centroid_id")
-        .join(F.broadcast(qx), F.col("centroid_id") == F.col("_cell"))
-        .select("qid", "_id", _pair_score(req.metric, vector_col, "_dn").alias("_score"))
-    )
+    cand = _block_scores(scan, queries, req.metric, id_col, vector_col, cells)
     if payload_df is None:
         payload_df = scan  # same pruned plan — never a second footer trip
     return _ranked_pipeline(cand, payload_df, req, id_col, chunk_col, meta_col,

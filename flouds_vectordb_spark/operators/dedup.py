@@ -472,49 +472,6 @@ def _length_filtered(cand: DataFrame, sets: DataFrame,
     return j.filter(keep).drop("_sza", "_szb")
 
 
-def _prefix_probe(sets: DataFrame, threshold: float) -> DataFrame:
-    """(id, _sz, _pref): per-doc scalar size + the AllPairs prefix of the
-    doc's shingle set under the GLOBAL canonical order (ascending
-    hash64). J >= θ forces overlap >= ceil(θ·|x|) on EACH side (J <=
-    min/max gives min >= θ·max, so o >= θ/(1+θ)(|A|+|B|) >= θ·max >=
-    θ·|x|), hence the intersection must reach into the first
-    |x| - ceil(θ·|x|) + 1 canonical elements of BOTH sides — disjoint
-    prefixes prove J < θ (Bayardo/Ma/Srikant WWW'07; same bound
-    dedup_ngram_jaccard's inverted index uses). Hash collisions can only
-    ADD apparent overlap, so they pass extra pairs, never drop true
-    ones. Prefix entries are 8-byte longs vs ~25-byte shingle strings —
-    the probe ships ~(1-θ)·|set| longs per side, far below the full
-    string arrays the verify join ships for survivors."""
-    th = float(threshold)
-    plen = (F.size("vset")
-            - F.ceil(F.lit(th) * F.size("vset")) + F.lit(1)).cast("int")
-    return sets.select("id", F.size("vset").alias("_sz"),
-                       F.slice("vset", 1, plen).alias("_pref"))
-
-
-def _prefix_filtered(cand: DataFrame, probe: DataFrame,
-                     threshold: float) -> DataFrame:
-    """Length + prefix filter over a candidate list in ONE probe join per
-    side (r12, VERDICT ask #3 — the r11 length-only filter was exact but
-    shuffle-neutral on clone corpora: perturbed copies share lengths, so
-    the ratio test passed ~every pair; the prefix test prunes at equal
-    lengths too). Exact: both tests drop only provably-failing pairs."""
-    th = float(threshold)
-    j = (cand
-         .join(probe.select(F.col("id").alias("id_a"),
-                            F.col("_sz").alias("_sza"),
-                            F.col("_pref").alias("_pra")), "id_a")
-         .join(probe.select(F.col("id").alias("id_b"),
-                            F.col("_sz").alias("_szb"),
-                            F.col("_pref").alias("_prb")), "id_b"))
-    keep = ((F.col("_sza").cast("double")
-             >= F.lit(th) * F.col("_szb").cast("double"))
-            & (F.col("_szb").cast("double")
-               >= F.lit(th) * F.col("_sza").cast("double"))
-            & F.arrays_overlap("_pra", "_prb"))
-    return j.filter(keep).drop("_sza", "_szb", "_pra", "_prb")
-
-
 def _verify_candidates(cand: DataFrame, sets: DataFrame, threshold: float,
                        small: bool) -> DataFrame:
     """Exact-Jaccard verification of a (id_a, id_b) candidate list.
@@ -785,7 +742,8 @@ def dedup_minhash_components(
                  .dropDuplicates(["id_a", "id_b"]))
     # PPJoin LENGTH filter on BOTH verify passes (r11): drops provably-
     # failing pairs on scalar sizes before the verify arrays ride the
-    # joins. The PREFIX filter (r12 ask #3, _prefix_filtered) was wired
+    # joins. A PREFIX filter (r12 ask #3, now a test reference in
+    # tests/reference_impls.py) was wired
     # here and MEASURED OUT: on the x1000 clone corpus LSH's 16-band
     # agreement already leaves almost no false candidates for a prefix
     # test to prune — θ=0.5 prefixes overlapped for ~every candidate —

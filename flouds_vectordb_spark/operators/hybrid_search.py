@@ -350,8 +350,8 @@ def hybrid_search_many(
     1-based per qid. req.query_vector/req.text_filter are IGNORED — the
     batch supplies them; every other knob applies to all queries.
 
-    Plan: ONE dense scan scores the whole block (broadcast query block,
-    as batch_search.dense_search_many) with a per-qid branch-limit
+    Plan: ONE dense scan scores the whole block (the mapInArrow kernel
+    of batch_search.dense_search_many) with a per-qid branch-limit
     window; ONE term-pruned posting scan serves every sparse branch
     (sparse_search_many); fusion is a (qid, id) full outer join of two
     <= nq*50-row scalar tables. With postings=None the posting table is
@@ -359,11 +359,7 @@ def hybrid_search_many(
     direct scorer; measured r11 — the batched direct scorer loses, see
     the inline note). Results are bit-identical to looping hybrid_search
     per query."""
-    from flouds_vectordb_spark.operators.batch_search import (
-        _doc_side,
-        _pair_score,
-        query_block,
-    )
+    from flouds_vectordb_spark.operators.batch_search import _block_scores
     from flouds_vectordb_spark.operators.sparse_search import (
         sparse_search_many,
     )
@@ -371,17 +367,13 @@ def hybrid_search_many(
     if (req.meta_filter or req.meta_required) and meta_col is None:
         raise ValueError("meta_filter/meta_required require meta_col")
     queries = list(queries)  # generators are iterated twice below
-    spark = df.sparkSession
     dense_q = [(qid, vec) for qid, vec, _ in queries]
     sparse_q = [(qid, text) for qid, _, text in queries]
 
     # dense branch, per qid
-    qb = query_block(spark, dense_q)
     slim = (
-        _doc_side(df, req.metric, vector_col, F.col(id_col).alias("id"))
-        .join(F.broadcast(qb))
-        .select("qid", "id", _pair_score(req.metric, vector_col, "_dn").alias("_ds"))
-        .filter(F.col("_ds").isNotNull())
+        _block_scores(df, dense_q, req.metric, id_col, vector_col)
+        .select("qid", F.col("_id").alias("id"), F.col("_score").alias("_ds"))
         .withColumn("_ds_r", F.round(F.col("_ds"), RANK_DECIMALS))
     )
     wd = Window.partitionBy("qid").orderBy(F.col("_ds_r").desc(), F.col("id").asc())

@@ -704,7 +704,10 @@ class CollectionWriter:
         if not os.path.exists(os.path.join(ivf_path, "_centroids.json")):
             return False
         idx = open_ivf(ivf_path)
-        assigned = tracked_persist(idx.assign(stamped))
+        # by cell, as build_ivf writes: the IVF, SQ8 and PQ appends each
+        # add one file per touched cell, not one per batch partition and cell
+        assigned = tracked_persist(
+            idx.assign(stamped).repartition(F.col("centroid_id")))
         try:
             assigned.write.mode("append").partitionBy("centroid_id") \
                 .parquet(ivf_path)

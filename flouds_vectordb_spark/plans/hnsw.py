@@ -308,7 +308,10 @@ class _BlockScorer:
     a 256-branch CASE of 64-element array folds would blow up codegen.
     Float math is identical either way: metric_score_q and
     batch_search._pair_score share the same fold order and the same
-    driver-computed literal query norm."""
+    driver-computed literal query norm. Frontier pairs stay on that SQL
+    fold, not on batch_search's mapInArrow kernel: each qid scores its
+    own frontier rows, not a block x scan cross product, and the
+    kernel's bits equal the fold's anyway (vector.fold_scores)."""
 
     def __init__(self, spark: SparkSession, queries, metric: str):
         self.spark = spark

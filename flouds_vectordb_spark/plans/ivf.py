@@ -203,8 +203,10 @@ class IvfIndex:
         retrain, no table rewrite. UPDATED keys leave their stale rows in
         place (the Milvus delete+compact contract); readers that must be
         update-safe resolve latest-wins by the rows' batch_ts
-        (CollectionWriter.search does)."""
-        self.assign(batch, vector_col) \
+        (CollectionWriter.search does). Repartitioned by cell like
+        build_ivf: one new file per touched cell, not one per input
+        partition and cell."""
+        self.assign(batch, vector_col).repartition(F.col("centroid_id")) \
             .write.mode("append").partitionBy("centroid_id").parquet(self.path)
 
 

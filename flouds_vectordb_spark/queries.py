@@ -1775,30 +1775,6 @@ def _li_clustered_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def _li_clustered_tokens_catalyst(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """The original Catalyst formulation of _li_clustered_tokens, kept
-    as the parity oracle for the driver-side clone construction."""
-    base = _li_doc_tokens(spark, sf_dir)
-    src = base.filter(F.col("doc_id").isin(3, 7))
-    reps = spark.range(10).select(F.col("id").alias("_i"))
-    i, pos = F.col("_i"), F.col("pos")
-
-    def elem(j):
-        pert = ((i * 31 + pos * 17 + j * 13) % 101 - 50).cast("double") \
-            / F.lit(5000.0)
-        return F.element_at(F.col("vector"), (j + F.lit(1)).cast("int")) + pert
-
-    injected = (
-        src.crossJoin(F.broadcast(reps))
-        .select((F.lit(9_000_000) + F.col("doc_id") * 100 + i).alias("doc_id"),
-                "pos",
-                F.transform(F.sequence(F.lit(0), F.lit(63)), elem)
-                .alias("vector"))
-    )
-    return base.unionByName(injected)
-
-
 def _late_interaction_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 fused the two collects; r13 (VERDICT ask #2) went further
     # twice: recall_pair shares ONE MaxSim definition between the exact

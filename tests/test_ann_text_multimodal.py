@@ -437,19 +437,16 @@ def test_ppjoin_length_filter_is_exact(spark):
 
 
 def test_ppjoin_prefix_filter_is_exact_and_prunes_equal_lengths(spark):
-    """r12 VERDICT ask #3: _prefix_filtered must (a) drop only pairs that
+    """r12 VERDICT ask #3: prefix_filtered (tests/reference_impls.py) must (a) drop only pairs that
     provably fail θ — surviving pairs verify to the same result set as
     unfiltered candidates, on a randomized corpus — and (b) prune
     EQUAL-LENGTH disjoint pairs the length-only test passes."""
     import itertools
     import random
 
-    from flouds_vectordb_spark.operators.dedup import (
-        _jaccard_filtered,
-        _length_filtered,
-        _prefix_filtered,
-        _prefix_probe,
-    )
+    from reference_impls import prefix_filtered, prefix_probe
+
+    from flouds_vectordb_spark.operators.dedup import _jaccard_filtered, _length_filtered
 
     rng = random.Random(7)
     vocab = [f"s{i}" for i in range(30)]
@@ -459,7 +456,7 @@ def test_ppjoin_prefix_filter_is_exact_and_prunes_equal_lengths(spark):
     cand = spark.createDataFrame(
         [(a, b) for a, b in itertools.combinations(range(1, 25), 2)],
         "id_a long, id_b long")
-    probe = _prefix_probe(sets, 0.5)
+    probe = prefix_probe(sets, 0.5)
 
     def verify(c):
         pairs = (c.join(sets.select(F.col("id").alias("id_a"),
@@ -470,14 +467,14 @@ def test_ppjoin_prefix_filter_is_exact_and_prunes_equal_lengths(spark):
                 _jaccard_filtered(pairs, 0.5).collect()}
 
     # exactness: zero false negatives vs the unfiltered verify
-    assert verify(_prefix_filtered(cand, probe, 0.5)) == verify(cand)
+    assert verify(prefix_filtered(cand, probe, 0.5)) == verify(cand)
     # strictly stronger than length-only where lengths are equal:
     eq = spark.createDataFrame(
         [(101, ["a", "b", "c", "d"]), (102, ["e", "f", "g", "h"])],
         "id long, vset array<string>")
     eq_cand = spark.createDataFrame([(101, 102)], "id_a long, id_b long")
     assert _length_filtered(eq_cand, eq, 0.5).count() == 1  # ratio passes
-    assert _prefix_filtered(eq_cand, _prefix_probe(eq, 0.5), 0.5).count() == 0
+    assert prefix_filtered(eq_cand, prefix_probe(eq, 0.5), 0.5).count() == 0
 
 
 def test_late_interaction_self_query_is_top1(spark):
@@ -1218,6 +1215,8 @@ def test_li_local_query_block_matches_expr(spark):
 def test_li_clustered_fixture_driver_side_identical(spark):
     """r13: the driver-side injected-clone fixture must be bit-identical
     to the original Catalyst crossJoin+transform formulation."""
+    from reference_impls import li_clustered_tokens_catalyst
+
     from flouds_vectordb_spark import queries as Q
 
     sf = "/root/testdata/sf0.001"
@@ -1226,7 +1225,7 @@ def test_li_clustered_fixture_driver_side_identical(spark):
                for r in Q._li_clustered_tokens(spark, sf).collect())
     b = sorted((int(r["doc_id"]), int(r["pos"]),
                 tuple(float(x) for x in r["vector"]))
-               for r in Q._li_clustered_tokens_catalyst(spark, sf).collect())
+               for r in li_clustered_tokens_catalyst(spark, sf).collect())
     assert a == b and a
 
 

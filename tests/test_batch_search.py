@@ -1,8 +1,12 @@
 """Batched multi-query search: per-qid equivalence to the single-query
 operator, IVF-pruned vs exact on a recall-safe fixture, the catalog
-search_many dispatch, and input validation."""
+search_many dispatch, input validation, and the block-scoring kernel's
+bit parity with the SQL fold and its plan shape."""
 
 from __future__ import annotations
+
+import math
+import struct
 
 import numpy as np
 import pytest
@@ -491,3 +495,146 @@ def test_catalog_many_with_zero_norm_doc_matches_single_loop(spark, tmp_path_fac
                  for r in w.search_hybrid(sreq, use_index=True).collect()]
     assert got == sorted(want)
     assert {"zero", "negzero"} & {r[2] for r in got}  # via the BM25 branch
+
+
+# ---- block-scoring kernel: bit parity with the SQL fold and plan shape ------
+
+def _score_key(s):
+    """A score's exact bits; every NaN is one key (payloads are not a score)."""
+    return "nan" if math.isnan(s) else struct.pack(">d", s)
+
+
+@pytest.fixture(scope="module")
+def odd_frames(spark):
+    """dim-4 rows the SQL fold scores NULL, NaN, ±Inf, signed zero or plainly,
+    with a text column for the hybrid path and a cell id for the IVF path
+    (one row without a cell), keyed by bigint and by string ids. Hashed on
+    id % 3 into 8 partitions, so at least 5 reach the kernel empty."""
+    rng = np.random.RandomState(29)
+    nan, inf = float("nan"), float("inf")
+    odd = [None, [0.5, 0.25, -1.0], [0.5, 0.25, -1.0, 2.0, 3.0], [1.0, None, 2.0, 3.0],
+           [nan, 1.0, 2.0, 3.0], [inf, 1.0, 2.0, 3.0], [1.0, -inf, 2.0, 3.0],
+           [inf, -inf, 0.0, 1.0], [-0.0, -0.0, -0.0, -0.0], [0.0, 0.0, 0.0, 0.0],
+           [-0.0, 1.5, -0.0, -2.5], [], [1e300, 1e300, -1e300, 5e-324]]
+    vecs = odd + [[float(x) for x in rng.standard_normal(4)] for _ in range(27)]
+    rows = [(i, v, f"spark vector {i % 3} scan", None if i == 7 else i % 4)
+            for i, v in enumerate(vecs)]
+    base = spark.createDataFrame(
+        rows, "id bigint, vector array<double>, chunk string, centroid_id int")
+    spread = base.repartition(8, F.col("id") % 3)
+    frames = {t: spread.withColumn("id", F.col("id").cast(t)).persist()
+              for t in ("bigint", "string")}
+    for f in frames.values():
+        f.count()
+    yield frames
+    for f in frames.values():
+        f.unpersist()
+
+
+def _sql_fold_scores(df, queries, metric):
+    """{(qid, id): (score bits, centroid_id)} of metric_score_q, one query at
+    a time; NULL scores dropped."""
+    from flouds_vectordb_spark.functions.vector import metric_score_q
+
+    scores = F.array(*[metric_score_q(metric, "vector", v) for _, v in queries])
+    return {(qid, r["id"]): (_score_key(s), r["centroid_id"])
+            for r in df.select("id", "centroid_id", scores.alias("s")).collect()
+            for (qid, _), s in zip(queries, r["s"]) if s is not None}
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_block_kernel_bit_equals_sql_fold(spark, odd_frames, monkeypatch, id_type,
+                                          tmp_path_factory):
+    """Every block path (exact, IVF, hybrid dense leg) scores each pair
+    with the SQL fold's exact bits and drops exactly the pairs it scores
+    NULL: NULL/short/long/empty vectors, NULL elements, and COSINE zero
+    denominators, while NaN, ±Inf and signed zeros pass through. COSINE,
+    L2 and IP; blocks of one query and of QUERY_CHUNK + 1 queries (one a
+    zero vector); an empty input frame."""
+    import flouds_vectordb_spark.operators.batch_search as bs
+    from flouds_vectordb_spark.operators.hybrid_search import (
+        HybridSearchRequest,
+        hybrid_search_many,
+    )
+
+    seen = []
+    real = bs._block_scores
+
+    class Scored(Exception):
+        """Stops the operator once its candidate frame exists."""
+
+    def spy(*a, **kw):
+        seen.append((real(*a, **kw), kw.get("cells", a[5] if len(a) > 5 else None)))
+        raise Scored
+
+    monkeypatch.setattr(bs, "_block_scores", spy)
+    df = odd_frames[id_type]
+    idx = build_ivf(df.filter(F.col("id").cast("int") >= 13),
+                    str(tmp_path_factory.mktemp("kernel_ivf") / "idx"), nlist=4)
+    rng = np.random.RandomState(31)
+    block = [(t, [float(x) for x in rng.standard_normal(4)])
+             for t in range(bs.QUERY_CHUNK + 1)]
+    block[1] = (1, [0.0, -0.0, 0.0, 0.0])  # zero query: COSINE all NULL
+    for metric in ("COSINE", "L2", "IP"):
+        want_all = _sql_fold_scores(df, block, metric)
+        for qs in (block[:1], block):
+            req = DenseSearchRequest(query_vector=qs[0][1], metric=metric, limit=5,
+                                     score_threshold=None, output_fields=())
+            hreq = HybridSearchRequest(query_vector=qs[0][1], text_filter="x",
+                                       metric=metric, limit=5, output_fields=())
+            runs = {
+                "exact": lambda f: dense_search_many(f, qs, req),
+                "ivf": lambda f: ivf_search_many(idx, spark, qs, req, scan_df=f,
+                                                 nprobe=2),
+                "hybrid": lambda f: hybrid_search_many(
+                    f, None, [(q, v, "spark scan") for q, v in qs], req=hreq),
+            }
+            for path, run in runs.items():
+                for frame in (df, df.limit(0)) if len(qs) == 1 else (df,):
+                    seen.clear()
+                    with pytest.raises(Scored):
+                        run(frame)
+                    (cand, cells), = seen
+                    rows = [(r["qid"], r["_id"], _score_key(r["_score"]))
+                            for r in cand.collect()]
+                    got = set(rows)
+                    assert len(rows) == len(got), (metric, path)
+                    want = set()
+                    if frame is df:
+                        probed = {qid: set(c) for (qid, _), c in zip(qs, cells)} \
+                            if cells is not None else None
+                        want = {(qid, i, bits)
+                                for (qid, i), (bits, cell) in want_all.items()
+                                if qid < len(qs)
+                                and (probed is None or cell in probed[qid])}
+                        assert want, (metric, path)
+                    assert got == want, (metric, path, len(qs), got ^ want)
+
+
+def test_block_operators_plan_one_arrow_kernel(spark, corpus, qbatch, tmp_path_factory):
+    """The exact, IVF and hybrid block operators score through one Python
+    map-in-Arrow node, never a nested-loop join of block x corpus (whose
+    interpreted higher-order-function fold this kernel replaced)."""
+    from flouds_vectordb_spark.operators.hybrid_search import (
+        HybridSearchRequest,
+        hybrid_search_many,
+    )
+    from flouds_vectordb_spark.operators.sparse_search import bm25_postings
+
+    root = tmp_path_factory.mktemp("plan_shape")
+    idx = build_ivf(corpus, str(root / "idx"), nlist=4, metric="COSINE")
+    # stored postings, as a collection serves them: an inline posting
+    # build plans its own 1-row doc-stats nested-loop join
+    bm25_postings(corpus).write.parquet(str(root / "postings"))
+    posts = spark.read.parquet(str(root / "postings"))
+    req = DenseSearchRequest(query_vector=qbatch[0][1], metric="COSINE", limit=5,
+                             nprobe=4, score_threshold=None)
+    hreq = HybridSearchRequest(query_vector=qbatch[0][1], text_filter="x", limit=5)
+    hq = [(q, v, "spark vector") for q, v in qbatch]
+    for name, out in (
+            ("exact", dense_search_many(corpus, qbatch, req)),
+            ("ivf", ivf_search_many(idx, spark, qbatch, req)),
+            ("hybrid", hybrid_search_many(corpus, posts, hq, hreq))):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, (name, plan)
+        assert "BroadcastNestedLoopJoin" not in plan, (name, plan)

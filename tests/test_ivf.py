@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -91,6 +93,26 @@ def test_incremental_append_matches_full_rebuild(spark, coll, tmp_path_factory):
     via_ivf = [(r["id"], r["score"])
                for r in idx.search(spark, req, nprobe=4).collect()]
     assert via_ivf == exact
+
+
+def cell_files(path: str) -> dict[str, int]:
+    """Parquet file count per centroid_id=... directory under path."""
+    return {d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+            for d in os.listdir(path) if d.startswith("centroid_id=")}
+
+
+def test_append_adds_at_most_one_file_per_touched_cell(spark, coll, tmp_path_factory):
+    """An append of a many-partition batch writes by cell, as the build
+    does: each cell it touches gains exactly one file."""
+    path = str(tmp_path_factory.mktemp("ivf_frag") / "idx")
+    idx = build_ivf(coll.filter(F.col("id") < 150), path, nlist=4, metric="COSINE")
+    before = cell_files(path)
+    assert set(before.values()) == {1}
+    idx.append(coll.filter(F.col("id") >= 150).repartition(6))
+    after = cell_files(path)
+    added = {c: n - before.get(c, 0) for c, n in after.items()}
+    assert set(added.values()) <= {0, 1} and sum(added.values()) >= 1, added
+    assert spark.read.parquet(path).count() == 200
 
 
 def test_ip_metric_assigns_and_probes_by_inner_product(spark, tmp_path_factory):

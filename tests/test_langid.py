@@ -214,11 +214,9 @@ def test_classify_vectorized_equals_reference():
     """r14: the packed-gram vectorized classify_text must return the exact
     (lang, distance) integers of the pure-Python reference on every
     training snippet, mixed scripts, and degenerate inputs."""
-    from flouds_vectordb_spark.functions.langid import (
-        _TRAIN,
-        classify_text,
-        classify_text_ref,
-    )
+    from reference_impls import classify_text_ref
+
+    from flouds_vectordb_spark.functions.langid import _TRAIN, classify_text
 
     cases = list(_TRAIN.values())
     cases += [
@@ -241,10 +239,9 @@ def test_classify_vectorized_equals_reference_on_fixture(spark):
     if not os.path.isdir(sf):
         import pytest
         pytest.skip("testdata missing")
-    from flouds_vectordb_spark.functions.langid import (
-        classify_text,
-        classify_text_ref,
-    )
+    from reference_impls import classify_text_ref
+
+    from flouds_vectordb_spark.functions.langid import classify_text
 
     texts = [r[0] for r in
              spark.read.parquet(f"{sf}/documents.parquet")
@@ -256,10 +253,9 @@ def test_classify_vectorized_equals_reference_on_fixture(spark):
 def test_classify_text_survives_lone_surrogates():
     """ADVICE r14: the vectorized gram ranker raised UnicodeEncodeError on
     lone surrogates; like the reference, they are word breaks."""
-    from flouds_vectordb_spark.functions.langid import (
-        classify_text,
-        classify_text_ref,
-    )
+    from reference_impls import classify_text_ref
+
+    from flouds_vectordb_spark.functions.langid import classify_text
 
     for t in ("the quick \ud800brown fox", "\udfff", "der\udc00 schnelle Hund",
               "😀 smile \ud83d"):

@@ -3,6 +3,8 @@ storage round-trips, and the catalog IVF_SQ8/IVF_PQ index dispatch."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -317,6 +319,40 @@ def test_catalog_post_build_inserts_searchable_and_updates_fresh(
         # modulo quantization error), not its stale origin vector
         assert by_id["mover"]["chunk"] == "v2", itype
         assert by_id["mover"]["score"] > -1.0, (itype, by_id["mover"]["score"])
+
+
+def test_insert_after_build_adds_one_file_per_touched_cell(spark, tmp_path_factory):
+    """insert_data's index maintenance writes the IVF layout and the SQ8/PQ
+    coded tables by cell: a many-partition batch adds at most one file
+    per cell to each of them."""
+    from flouds_vectordb_spark.catalog import Catalog, CollectionSpec
+    from flouds_vectordb_spark.operators.upsert import CollectionWriter
+
+    def cell_files(path):
+        return {d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+                for d in os.listdir(path) if d.startswith("centroid_id=")}
+
+    rng = np.random.RandomState(17)
+    for itype, coded in (("IVF_FLAT", None), ("IVF_SQ8", "__sq8"), ("IVF_PQ", "__pq")):
+        cat = Catalog(spark, str(tmp_path_factory.mktemp(f"whfrag_{itype}")))
+        cat.set_vector_store("tfrag")
+        cat.generate_schema(CollectionSpec("tfrag", "m", dimension=DIM, nlist=4,
+                                           metric_type="L2", index_type=itype))
+        w = CollectionWriter(cat, "tfrag", "m")
+        rows = [(f"k{i}", f"chunk {i}", [float(x) for x in rng.uniform(-5, 5, DIM)])
+                for i in range(160)]
+        schema = "id string, chunk string, vector array<float>"
+        w.insert_data(spark.createDataFrame(rows[:120], schema),
+                      batch_ts=1, force_flush=True)
+        w.build_index()
+        paths = [w.meta["path"] + "__ivf"] + ([w.meta["path"] + coded] if coded else [])
+        before = [cell_files(p) for p in paths]
+        res = w.insert_data(spark.createDataFrame(rows[120:], schema).repartition(6),
+                            batch_ts=2, force_flush=False)
+        assert res["dense_indexed"] is True, itype
+        for p, b in zip(paths, before):
+            added = {c: n - b.get(c, 0) for c, n in cell_files(p).items()}
+            assert set(added.values()) <= {0, 1} and sum(added.values()) >= 1, (p, added)
 
 
 def test_sq8_bounds_training_chunked_wide_dim(spark):
