@@ -110,7 +110,7 @@ def shingle_hash64_udf(n: int):
 
 def shingle_hits_udf(n: int, keys):
     """text -> the shingle_hash64_udf values that are in `keys` (a sorted
-    distinct int64 ndarray, e.g. a fetch_shingle_hashes set). Not cached:
+    distinct int64 ndarray, e.g. a held-out set's hashes). Not cached:
     it closes over keys, and PySpark ships a pickled command over 1 MB as
     a broadcast, so a large key set costs one broadcast per query."""
     import numpy as np
@@ -245,40 +245,33 @@ def _to_arrow_no_aqe(df: DataFrame):
         return df.toArrow()
 
 
-def fetch_id_lists(df: DataFrame):
-    """One Arrow-IPC fetch of a two-column (id, array<bigint>) frame:
-    (ids list, values int64 ndarray, offsets int64 ndarray, valid bool
-    ndarray | None). `values[offsets[i]:offsets[i+1]]` is row i's array.
-    The flat layout is zero-copy out of Arrow and feeds the vectorized
-    driver halves directly — no per-element Python int conversion."""
-    tbl = _to_arrow_no_aqe(df)
-    ids = tbl.column(0).to_pylist()
-    values, offsets, valid = _flatten_list_col(tbl.column(1))
-    return ids, values, offsets, valid
+# task width of the one hashing+fetch job every driver regime runs: the
+# pandas-UDF md5 pass is ~0.4 core-s at the 16 MB driver bound, so 8 tasks
+# keep every task >= 50 ms while full defaultParallelism width (32) pays
+# more per-task overhead than it parallelizes (guide §2.6; measured
+# 0.55 s vs 0.58 s at sf0.1, and the narrower shuffle is cheaper). The
+# spread itself remains a no-op at scale (inputs arrive in >= cores
+# splits), and spread_small_input caps at defaultParallelism for
+# low-core sessions.
+DRIVER_FETCH_SPREAD = 8
 
 
-def fetch_shingle_hashes(df: DataFrame, text_col: str, n: int,
-                         id_col: str | None = None):
-    """One Arrow fetch of df's shingle_hash64_udf(n) values. With id_col:
-    (ids, values, offsets) per row, as fetch_id_lists lays them out.
-    Without: the sorted distinct values over all rows, one int64 ndarray —
-    a held-out set's n-gram hashes."""
-    import numpy as np
+def fetch_lists(df: DataFrame, keys, values):
+    """The driver regimes' one fetch: spread df to DRIVER_FETCH_SPREAD
+    tasks, project the `keys` columns (names) plus `values` (an
+    array<bigint> Column, usually one of the UDFs above) and fetch the
+    result as Arrow IPC. The spread comes BEFORE the projection so the
+    UDF's md5 pass runs at the spread width.
 
-    h = shingle_hash64_udf(n)(F.col(text_col)).alias("_h64")
-    if id_col is not None:
-        ids, values, offsets, _ = fetch_id_lists(
-            df.select(F.col(id_col).alias("id"), h))
-        return ids, values, offsets
-    values, _, _ = _flatten_list_col(_to_arrow_no_aqe(df.select(h)).column(0))
-    return np.unique(values)
+    Returns (*key_lists, values, offsets, valid): one Python list per key
+    column, then the flat layout — `values[offsets[i]:offsets[i+1]]` is
+    row i's array as one int64 ndarray (zero-copy out of Arrow, so no
+    per-element Python int conversion), and `valid` is the bool ndarray
+    of non-NULL arrays, or None when no array is NULL."""
+    from flouds_vectordb_spark.sources.tables import spread_small_input
 
-
-def fetch_tagged_lists(df: DataFrame):
-    """fetch_id_lists for a three-column (tag, id, array<bigint>) frame:
-    returns (tags ndarray, ids list, values, offsets, valid)."""
-    tbl = _to_arrow_no_aqe(df)
-    tags = tbl.column(0).to_numpy(zero_copy_only=False)
-    ids = tbl.column(1).to_pylist()
-    values, offsets, valid = _flatten_list_col(tbl.column(2))
-    return tags, ids, values, offsets, valid
+    tbl = _to_arrow_no_aqe(
+        spread_small_input(df, target=DRIVER_FETCH_SPREAD)
+        .select(*keys, values))
+    cols = [tbl.column(i).to_pylist() for i in range(len(keys))]
+    return (*cols, *_flatten_list_col(tbl.column(len(keys))))

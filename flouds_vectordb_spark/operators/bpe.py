@@ -224,9 +224,6 @@ def bpe_train_df(df: DataFrame, n_merges: int = 32, text_col: str = "text",
 
     merges = bpe_train(df, n_merges=n_merges, text_col=text_col,
                        min_count=min_count)
-    if not merges:
-        return df.sparkSession.createDataFrame(
-            [], "rank int, lhs string, rhs string, pair_count bigint")
     return local_df(df.sparkSession, merges,
                     "rank int, lhs string, rhs string, pair_count bigint")
 

@@ -57,24 +57,14 @@ _NEARDUP_CAND_BROADCAST_ROWS = 2_000_000
 
 # DRIVER regime (r13 optimization): within regime.DRIVER_BYTES the whole
 # candidate-generation + exact-verify tail runs on COLLECTED scalars. The
-# broadcast-join small regime still schedules 9-31 Spark jobs per call
-# (every broadcast exchange, dropDuplicates and persist materialization is
-# its own job under AQE). One job collects (id, band hashes, verify-set
-# hashes) — all computed by the SAME Column expressions the distributed
-# plan uses — and bucketing/Jaccard/union-find are microseconds over
-# bounded scalars. Above the bound (or when the bucket pre-flight predicts
-# a candidate explosion) the broadcast/shuffle regimes run unchanged.
+# distributed plans schedule 9-31 Spark jobs per call at gate scale (every
+# exchange, dropDuplicates and persist materialization is its own job
+# under AQE). One job fetches (id, hash arrays) — the same hashes the
+# distributed plan computes (pyhash twins) — and bucketing/Jaccard/
+# union-find are microseconds over bounded scalars. Above the bound (or
+# when the bucket pre-flight predicts more candidate pairs than this) the
+# distributed plans run unchanged.
 _MINHASH_DRIVER_MAX_CAND_PAIRS = 20_000_000
-
-# task width for the driver regimes' one hashing+fetch job (r14): the
-# pandas-UDF md5 pass is ~0.4 core-s at the 16 MB driver bound, so 8 tasks
-# keep every task >= 50 ms while full defaultParallelism width (32) pays
-# more per-task overhead than it parallelizes (guide §2.6; measured
-# 0.55 s vs 0.58 s at sf0.1, and the narrower shuffle is cheaper). The
-# spread itself remains a no-op at scale (inputs arrive in >= cores
-# splits), and spread_small_input caps at defaultParallelism for
-# low-core sessions.
-_DRIVER_COLLECT_SPREAD = 8
 
 
 def _round6(x: float) -> float:
@@ -329,11 +319,10 @@ def _driver_minhash_rows(df: DataFrame, id_col: str, text_col: str,
     per fetch at sf0.1 plus the eliminated per-element int conversion.
     Exactness is pinned by tests/test_pyhash.py (bit-identical hashes on
     a mixed-script corpus) and the regime-equivalence tests."""
-    from flouds_vectordb_spark.functions.pyhash import fetch_shingle_hashes
+    from flouds_vectordb_spark.functions import pyhash
 
-    ids, values, offsets = fetch_shingle_hashes(
-        _spread(df, target=_DRIVER_COLLECT_SPREAD), text_col, shingle_n,
-        id_col)
+    ids, values, offsets, _ = pyhash.fetch_lists(
+        df, [id_col], pyhash.shingle_hash64_udf(shingle_n)(F.col(text_col)))
     return _minhash_rows_from_flat(ids, values, offsets, n_sigs, n_bands)
 
 
@@ -383,36 +372,19 @@ def _minhash_rows_from_flat(ids, values, offsets, n_sigs: int,
     return out
 
 
-def _driver_minhash_edges(rows: list[tuple],
-                          threshold: float) -> list[tuple] | None:
-    """LSH bucketing + exact-Jaccard verification over collected rows:
-    candidates = same (band_idx, band_hash) in >= 1 band with id_a < id_b
-    (exactly the distributed self-join's rule), verified at
-    round(|A∩B| / (|A|+|B|-|A∩B|), 6) >= threshold with the identical
-    IEEE double division and HALF_UP rounding. Returns sorted
-    (id_a, id_b, jaccard_r) tuples, or None when the exact bucket
-    pre-flight (Σ K·(K-1)/2) predicts more candidate pairs than the
-    driver should enumerate — the caller falls back to the distributed
-    regimes, which share the same quadratic but spread it over tasks.
-
-    UNIQUE-ID contract (r14, ADVICE): duplicate ids would collapse in
-    the vsets dict (the distributed plan keeps each row's own shingle
-    set and can emit one pair per row combination), so duplicate-id
-    inputs return None — the distributed plan adjudicates them. The
-    a == b skip below also drops the self-pair a positional i<j
-    enumeration would otherwise emit for two same-id rows."""
+def _bucket_candidates(entries) -> set | None:
+    """Candidate pairs from (id, bucket_key) entries: every (a, b) with
+    a < b sharing >= 1 bucket — exactly the distributed bucket
+    self-join's rule. Returns None when the exact pre-flight (Σ K·(K-1)/2
+    over bucket sizes) predicts more pairs than the driver should
+    enumerate; the caller then falls back to the distributed plan, which
+    shares the same quadratic but spreads it over tasks. Ids must be
+    unique per row (callers check)."""
     from collections import defaultdict
 
     buckets: dict = defaultdict(list)
-    vsets: dict = {}
-    sizes: dict = {}
-    for rid, bands, vset in rows:
-        if rid in vsets:  # duplicate ids: distributed semantics differ
-            return None
-        vsets[rid] = frozenset(vset)
-        sizes[rid] = len(vset)
-        for bi, bh in enumerate(bands):
-            buckets[(bi, bh)].append(rid)
+    for rid, key in entries:
+        buckets[key].append(rid)
     est = sum(len(v) * (len(v) - 1) // 2 for v in buckets.values())
     if est > _MINHASH_DRIVER_MAX_CAND_PAIRS:
         return None
@@ -424,11 +396,36 @@ def _driver_minhash_edges(rows: list[tuple],
         for i, a in enumerate(ids):
             for b in ids[i + 1:]:
                 cand.add((a, b))
+    return cand
+
+
+def _driver_minhash_edges(rows: list[tuple],
+                          threshold: float) -> list[tuple] | None:
+    """LSH bucketing + exact-Jaccard verification over collected rows:
+    candidates = same (band_idx, band_hash) in >= 1 band
+    (_bucket_candidates), verified at
+    round(|A∩B| / (|A|+|B|-|A∩B|), 6) >= threshold with the identical
+    IEEE double division and HALF_UP rounding. Returns sorted
+    (id_a, id_b, jaccard_r) tuples, or None (fall back) on a pre-flight
+    overflow.
+
+    UNIQUE-ID contract (r14, ADVICE): duplicate ids would collapse in
+    the vsets dict (the distributed plan keeps each row's own shingle
+    set and can emit one pair per row combination), so duplicate-id
+    inputs return None — the distributed plan adjudicates them."""
+    vsets = {rid: frozenset(vset) for rid, _, vset in rows}
+    if len(vsets) != len(rows):
+        return None
+    cand = _bucket_candidates(
+        (rid, (bi, bh)) for rid, bands, _ in rows
+        for bi, bh in enumerate(bands))
+    if cand is None:
+        return None
     th = float(threshold)
     out = []
     for a, b in cand:
         inter = float(len(vsets[a] & vsets[b]))
-        union = float(sizes[a] + sizes[b]) - inter
+        union = float(len(vsets[a]) + len(vsets[b])) - inter
         j = _round6(inter / union)
         if j >= th:
             out.append((a, b, j))
@@ -472,23 +469,14 @@ def _length_filtered(cand: DataFrame, sets: DataFrame,
     return j.filter(keep).drop("_sza", "_szb")
 
 
-def _verify_candidates(cand: DataFrame, sets: DataFrame, threshold: float,
-                       small: bool) -> DataFrame:
-    """Exact-Jaccard verification of a (id_a, id_b) candidate list.
-    small: plain two-sided joins (everything broadcasts at gate scale).
-    Large: persist+count the candidate list FIRST so Catalyst plans the
-    id_a probe as a static broadcast join (AQE would sink the full
-    shingle exchange before its runtime flip — r9 measured), and
-    semi-join-prune the id_b shingle side to candidate ids so only
-    dup-touching rows ride that sort-merge exchange."""
-    if small:
-        pairs = (
-            cand.join(sets.select(F.col("id").alias("id_a"),
-                                  F.col("vset").alias("sh_a")), "id_a")
-            .join(sets.select(F.col("id").alias("id_b"),
-                              F.col("vset").alias("sh_b")), "id_b")
-        )
-        return _jaccard_filtered(pairs, threshold)
+def _verify_candidates(cand: DataFrame, sets: DataFrame,
+                       threshold: float) -> DataFrame:
+    """Exact-Jaccard verification of a (id_a, id_b) candidate list:
+    persist+count the candidate list FIRST so Catalyst plans the id_a
+    probe as a static broadcast join (AQE would sink the full shingle
+    exchange before its runtime flip — r9 measured), and semi-join-prune
+    the id_b shingle side to candidate ids so only dup-touching rows ride
+    that sort-merge exchange."""
     cand = cand.transform(_persist)
     ids_b = (cand.select(F.col("id_b").alias("id")).dropDuplicates()
              .transform(_persist))
@@ -540,54 +528,34 @@ def dedup_minhash(
         edges = _driver_minhash_edges(rows, jaccard_threshold)
         if edges is not None:
             idt = dict(df.dtypes)[id_col]
-            schema = f"id_a {idt}, id_b {idt}, jaccard_r double"
-            if not edges:
-                return df.sparkSession.createDataFrame([], schema)
-            return local_df(df.sparkSession, edges, schema)
+            return local_df(df.sparkSession, edges,
+                            f"id_a {idt}, id_b {idt}, jaccard_r double")
+    # SHUFFLE REGIME. The measured fact (stage-level event-log profile,
+    # r9) driving the candidate build: pre-partition the band entries on
+    # the bucket key and persist — the cached relation's HashPartitioning
+    # satisfies BOTH self-join sides' required distribution, so the
+    # bucket shuffle materializes once instead of once per side
+    # (alias-only self-joins do NOT canonicalize to a ReusedExchange
+    # here). The verify-join shape (candidate cache materialized before
+    # planning, id_b shingle side semi-join-pruned — net 1101.7 -> 289.8
+    # shuffle MB at 500k docs) lives in _verify_candidates, shared with
+    # the cluster-output fusion.
     entries, sets = _band_entries(df, id_col, text_col, n_sigs, n_bands,
                                   shingle_n)
-    small = regime.fits(df, regime.MINHASH_BROADCAST_BYTES)
-    if small:
-        # BROADCAST REGIME (gate-scale corpora): every table here sits
-        # under the broadcast threshold, so the plain two-sided join plan
-        # shuffles ~nothing and the scale machinery below would only add
-        # persists and action barriers (~+1.5 s measured at 5k docs).
-        a = entries.select(F.col("id").alias("id_a"), "band_idx",
-                           "band_hash")
-        b_ = entries.select(F.col("id").alias("id_b"), "band_idx",
-                            "band_hash")
-        cand = (
-            a.join(b_, ["band_idx", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    else:
-        # SHUFFLE REGIME. The measured fact (stage-level event-log
-        # profile, r9) driving the candidate build: pre-partition the
-        # band entries on the bucket key and persist — the cached
-        # relation's HashPartitioning satisfies BOTH self-join sides'
-        # required distribution, so the bucket shuffle materializes once
-        # instead of once per side (alias-only self-joins do NOT
-        # canonicalize to a ReusedExchange here). The verify-join shape
-        # (candidate cache materialized before planning, id_b shingle
-        # side semi-join-pruned — net 1101.7 -> 289.8 shuffle MB at 500k
-        # docs) lives in _verify_candidates, shared with the
-        # cluster-output fusion.
-        spark = df.sparkSession
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        entries = entries.repartition(
-            n_part, "band_idx", "band_hash").transform(_persist)
-        ea, eb = entries.alias("_ea"), entries.alias("_eb")
-        cand = (
-            ea.join(eb, (F.col("_ea.band_idx") == F.col("_eb.band_idx"))
-                    & (F.col("_ea.band_hash") == F.col("_eb.band_hash")))
-            .filter(F.col("_ea.id") < F.col("_eb.id"))
-            .select(F.col("_ea.id").alias("id_a"),
-                    F.col("_eb.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    return _verify_candidates(cand, sets, jaccard_threshold, small)
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions",
+                                          "32"))
+    entries = entries.repartition(
+        n_part, "band_idx", "band_hash").transform(_persist)
+    ea, eb = entries.alias("_ea"), entries.alias("_eb")
+    cand = (
+        ea.join(eb, (F.col("_ea.band_idx") == F.col("_eb.band_idx"))
+                & (F.col("_ea.band_hash") == F.col("_eb.band_hash")))
+        .filter(F.col("_ea.id") < F.col("_eb.id"))
+        .select(F.col("_ea.id").alias("id_a"),
+                F.col("_eb.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return _verify_candidates(cand, sets, jaccard_threshold)
 
 
 def _band_side_sql(src: str, tag: str, id_expr: str, text_expr: str,
@@ -715,16 +683,14 @@ def dedup_minhash_components(
             idt = dict(df.dtypes)[id_col]
             return _driver_union_find([(a, b) for a, b, _ in edges], idt,
                                       df.sparkSession)
-    small = regime.fits(df, regime.MINHASH_BROADCAST_BYTES)
     entries, sets = _band_entries(df, id_col, text_col, n_sigs, n_bands,
                                   shingle_n)
-    if not small:
-        # one bucket exchange serves the rep aggregation, the star join
-        # and the phase-2 co-member join (the pair path's measured trick)
-        n_part = int(df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32"))
-        entries = entries.repartition(
-            n_part, "band_idx", "band_hash").transform(_persist)
+    # one bucket exchange serves the rep aggregation, the star join and
+    # the phase-2 co-member join (the pair path's measured trick)
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions",
+                                          "32"))
+    entries = entries.repartition(
+        n_part, "band_idx", "band_hash").transform(_persist)
     reps = (
         entries.groupBy("band_idx", "band_hash")
         .agg(F.min("id").alias("_rep"), F.count("*").alias("_n"))
@@ -756,7 +722,7 @@ def dedup_minhash_components(
     # Jaccard-failed edge takes.
     star_pairs = _verify_candidates(
         _length_filtered(star_cand, sets, jaccard_threshold), sets,
-        jaccard_threshold, small).transform(_persist)
+        jaccard_threshold).transform(_persist)
     unresolved = star_rows.join(
         star_pairs.select(F.col("id_a").alias("_rep"),
                           F.col("id_b").alias("id")),
@@ -776,7 +742,7 @@ def dedup_minhash_components(
     )
     p2_pairs = _verify_candidates(
         _length_filtered(p2_cand, sets, jaccard_threshold), sets,
-        jaccard_threshold, small)
+        jaccard_threshold)
     edges = (star_pairs.select("id_a", "id_b")
              .unionByName(p2_pairs.select("id_a", "id_b")))
     return dedup_components(edges)
@@ -1108,27 +1074,20 @@ def dedup_ngram_jaccard(
     enumeration; past max_candidate_pairs it raises the same error."""
     t = float(jaccard_threshold)
     if regime.fits(df, regime.DRIVER_BYTES):
+        from flouds_vectordb_spark.functions import pyhash
         from flouds_vectordb_spark.functions.local import local_df
-        from flouds_vectordb_spark.functions.pyhash import (
-            fetch_id_lists,
-            sorted_shingle_hash64_udf,
-        )
 
-        ids, values, offsets, _ = fetch_id_lists(
-            _spread(df, target=_DRIVER_COLLECT_SPREAD).select(
-                F.col(id_col).alias("id"),
-                sorted_shingle_hash64_udf(shingle_n)(F.col(text_col))
-                .alias("hset")))
+        ids, values, offsets, _ = pyhash.fetch_lists(
+            df, [id_col],
+            pyhash.sorted_shingle_hash64_udf(shingle_n)(F.col(text_col)))
         out = _driver_ngram_pairs(
             ids, values, offsets, t, max_candidate_pairs,
             enforce_guard=(max_candidate_pairs > 0
                            and not regime.fits(df, regime.SMALL_BYTES)))
         if out is not None:
             idt = dict(df.dtypes)[id_col]
-            schema = f"id_a {idt}, id_b {idt}, jaccard_r double"
-            if not out:
-                return df.sparkSession.createDataFrame([], schema)
-            return local_df(df.sparkSession, out, schema)
+            return local_df(df.sparkSession, out,
+                            f"id_a {idt}, id_b {idt}, jaccard_r double")
     base = _spread(df).select(
         F.col(id_col).alias("id"),
         _shingle_hashes(F.col(text_col), shingle_n).alias("hset"),
@@ -1270,8 +1229,6 @@ def _driver_union_find(edge_rows, id_type: str, spark) -> DataFrame:
             comp_min[r] = x
     rows = sorted((x, comp_min[find(x)]) for x in parent)
     schema = f"id {id_type}, component_id {id_type}"
-    if not rows:
-        return spark.createDataFrame([], schema)
     if len(rows) <= 10_000:
         return local_df(spark, rows, schema)
     return spark.createDataFrame(rows, schema)
@@ -1505,15 +1462,10 @@ def dedup_simhash(df: DataFrame, id_col: str = "id", text_col: str = "text",
     on the driver — the banding self-join plan costs 7 scheduled jobs at
     gate scale for work that is integer ops over |corpus| scalars."""
     if regime.fits(df, regime.DRIVER_BYTES):
-        from collections import defaultdict
-
         import numpy as np
 
+        from flouds_vectordb_spark.functions import pyhash
         from flouds_vectordb_spark.functions.local import local_df
-        from flouds_vectordb_spark.functions.pyhash import (
-            fetch_id_lists,
-            token_hash64_udf,
-        )
 
         # ONE Arrow fetch of per-token hashes (pandas-UDF md5 — guide
         # §4.2; see _driver_minhash_rows); the 60 per-bit majority votes
@@ -1521,10 +1473,8 @@ def dedup_simhash(df: DataFrame, id_col: str = "id", text_col: str = "text",
         # form — are vectorized bit arithmetic here (same integers:
         # vote = popcount per bit position over the same hash64 values,
         # bit set iff 2*votes > token count)
-        rids, all_h, offsets, valid = fetch_id_lists(
-            _spread(df, target=_DRIVER_COLLECT_SPREAD).select(
-                F.col(id_col).alias("id"),
-                token_hash64_udf()(F.col(text_col)).alias("_th")))
+        rids, all_h, offsets, valid = pyhash.fetch_lists(
+            df, [id_col], pyhash.token_hash64_udf()(F.col(text_col)))
         # NULL-text rows (NULL token-hash array) produce a NULL simhash
         # in the distributed plan, whose band_val never equi-joins — drop
         # them here instead of defaulting to fp 0 (r14, ADVICE). Rows
@@ -1550,28 +1500,16 @@ def dedup_simhash(df: DataFrame, id_col: str = "id", text_col: str = "text",
                     fps |= np.where(votes * 2 > sizes, np.int64(1) << b,
                                     np.int64(0))
             fp: dict = dict(zip(rids, fps.tolist()))
-            buckets: dict = defaultdict(list)
-            for rid, sh in fp.items():
-                for b in range(SIMHASH_BANDS):
-                    buckets[(b, (sh >> (16 * b)) & 0xFFFF)].append(rid)
-            if sum(len(v) * (len(v) - 1) // 2 for v in buckets.values()) \
-                    <= _MINHASH_DRIVER_MAX_CAND_PAIRS:
-                cand: set = set()
-                for ids in buckets.values():
-                    if len(ids) < 2:
-                        continue
-                    ids.sort()
-                    for i, a in enumerate(ids):
-                        for b2 in ids[i + 1:]:
-                            cand.add((a, b2))
+            cand = _bucket_candidates(
+                (rid, (b, (sh >> (16 * b)) & 0xFFFF))
+                for rid, sh in fp.items() for b in range(SIMHASH_BANDS))
+            if cand is not None:
                 out = sorted(
                     (a, b2, h) for a, b2 in cand
                     if (h := bin(fp[a] ^ fp[b2]).count("1")) <= max_hamming)
                 idt = dict(df.dtypes)[id_col]
-                schema = f"id_a {idt}, id_b {idt}, hamming int"
-                if not out:
-                    return df.sparkSession.createDataFrame([], schema)
-                return local_df(df.sparkSession, out, schema)
+                return local_df(df.sparkSession, out,
+                                f"id_a {idt}, id_b {idt}, hamming int")
     # two materialization boundaries: (1) token hashes, so the 60 per-bit
     # votes read one cached array instead of re-hashing 60x; (2) the
     # fingerprints, so the self-join reads them instead of recomputing
@@ -1654,7 +1592,7 @@ def decontaminate(
 
     HELD-OUT CONTRACT: the test set is an eval suite — thousands of docs,
     broadcast-sized. Its distinct n-gram hashes are fetched ONCE, first,
-    on every path (one Arrow job; pyhash.fetch_shingle_hashes) into a
+    on every path (one Arrow job; pyhash.fetch_lists) into a
     sorted int64 array, so its size never enters the regime choice: a
     test set built in memory (spark.createDataFrame, whose size Catalyst
     cannot tell) costs nothing extra. The regime is chosen by the TRAIN
@@ -1670,27 +1608,25 @@ def decontaminate(
     duplicate train ids merge their gram sets in both regimes."""
     import numpy as np
 
+    from flouds_vectordb_spark.functions import pyhash
     from flouds_vectordb_spark.functions.local import local_df
-    from flouds_vectordb_spark.functions.pyhash import (
-        fetch_shingle_hashes,
-        shingle_hits_udf,
-    )
 
     mm = max(int(min_matches), 1)  # a train doc with no shared gram never joins
-    held = fetch_shingle_hashes(_spread(test, target=_DRIVER_COLLECT_SPREAD),
-                                test_text_col or text_col, n)
+    grams = pyhash.shingle_hash64_udf(n)
+    held = np.unique(pyhash.fetch_lists(
+        test, [], grams(F.col(test_text_col or text_col)))[0])
     if not regime.fits(train, regime.DRIVER_BYTES):
         return (
             _spread(train)
             .select(F.col(id_col).alias("id"),
-                    F.explode(shingle_hits_udf(n, held)(F.col(text_col)))
-                    .alias("_gh"))
+                    F.explode(pyhash.shingle_hits_udf(n, held)(
+                        F.col(text_col))).alias("_gh"))
             .groupBy("id")
             .agg(F.count_distinct("_gh").alias("matched_ngrams"))
             .filter(F.col("matched_ngrams") >= mm)
         )
-    ids, values, offsets = fetch_shingle_hashes(
-        _spread(train, target=_DRIVER_COLLECT_SPREAD), text_col, n, id_col)
+    ids, values, offsets, _ = pyhash.fetch_lists(
+        train, [id_col], grams(F.col(text_col)))
     # group code per distinct id (first-occurrence order): duplicate ids
     # merge like the distributed groupBy; np.unique over (code, hash)
     # pairs is the count(DISTINCT)
@@ -1702,10 +1638,8 @@ def decontaminate(
                                 values[hit])), axis=1)
     counts = np.bincount(pairs[0], minlength=len(groups)).tolist()
     out = [(rid, c) for rid, c in zip(groups, counts) if c >= mm]
-    schema = f"id {dict(train.dtypes)[id_col]}, matched_ngrams bigint"
-    if not out:
-        return train.sparkSession.createDataFrame([], schema)
-    return local_df(train.sparkSession, out, schema)
+    return local_df(train.sparkSession, out,
+                    f"id {dict(train.dtypes)[id_col]}, matched_ngrams bigint")
 
 
 def decontaminate_sql(
@@ -1743,7 +1677,11 @@ GROUP BY id HAVING count(DISTINCT tr._gh) >= {int(min_matches)}
 def _driver_decon_neardup(train, test, id_col, text_col, t_id, t_text,
                           jaccard_threshold, n_sigs, n_bands, shingle_n):
     """Bipartite (train x test) LSH candidates + exact verify + per-train
-    aggregation over two collected scalar tables. None -> fall back."""
+    aggregation over two collected scalar tables. None -> fall back: on a
+    candidate pre-flight overflow, and on duplicate ids on either side
+    (the sets below are keyed by id, where the distributed plan verifies
+    every row pair and counts each verified one — same UNIQUE-ID contract
+    as _driver_minhash_edges)."""
     from collections import defaultdict
 
     from flouds_vectordb_spark.functions.local import local_df
@@ -1754,17 +1692,17 @@ def _driver_decon_neardup(train, test, id_col, text_col, t_id, t_text,
                                    shingle_n)
     tr_rows = _driver_minhash_rows(train, id_col, text_col, n_sigs, n_bands,
                                    shingle_n)
+    te_sets = {rid: frozenset(vset) for rid, _, vset in te_rows}
+    tr_sets = {rid: frozenset(vset) for rid, _, vset in tr_rows}
+    if len(te_sets) != len(te_rows) or len(tr_sets) != len(tr_rows):
+        return None
     te_buckets: dict = defaultdict(list)
-    te_sets: dict = {}
-    te_sizes: dict = {}
-    for rid, bands, vset in te_rows:
-        te_sets[rid] = frozenset(vset)
-        te_sizes[rid] = len(vset)
+    for rid, bands, _ in te_rows:
         for bi, bh in enumerate(bands):
             te_buckets[(bi, bh)].append(rid)
     # candidate pre-flight: train entries x matching test-bucket sizes
     cand: set = set()
-    for rid, bands, vset in tr_rows:
+    for rid, bands, _ in tr_rows:
         for bi, bh in enumerate(bands):
             for tid in te_buckets.get((bi, bh), ()):
                 cand.add((rid, tid))
@@ -1772,21 +1710,18 @@ def _driver_decon_neardup(train, test, id_col, text_col, t_id, t_text,
                     return None
     th = float(jaccard_threshold)
     agg: dict = {}
-    tr_sets = {rid: (frozenset(vset), len(vset)) for rid, _, vset in tr_rows}
     for a, b in cand:
-        sa, na = tr_sets[a]
-        inter = float(len(sa & te_sets[b]))
-        union = float(na + te_sizes[b]) - inter
+        sa, sb = tr_sets[a], te_sets[b]
+        inter = float(len(sa & sb))
+        union = float(len(sa) + len(sb)) - inter
         j = _round6(inter / union)
         if j >= th:
             mx, n = agg.get(a, (None, 0))
             agg[a] = (j if mx is None or j > mx else mx, n + 1)
     idt = dict(train.dtypes)[id_col]
-    schema = f"id {idt}, max_jaccard double, n_test_hits bigint"
-    rows = sorted((a, mx, n) for a, (mx, n) in agg.items())
-    if not rows:
-        return train.sparkSession.createDataFrame([], schema)
-    return local_df(train.sparkSession, rows, schema)
+    return local_df(train.sparkSession,
+                    sorted((a, mx, n) for a, (mx, n) in agg.items()),
+                    f"id {idt}, max_jaccard double, n_test_hits bigint")
 
 
 def decontaminate_neardup(
@@ -1972,42 +1907,41 @@ def exact_substring_spans(
     pos_seq = F.when(n >= kk, F.sequence(F.lit(1), n - F.lit(kk - 1))) \
         .otherwise(F.array().cast("array<int>"))
     # DRIVER regime (r13): one map-only collect of per-doc positioned
-    # window-hash ARRAYS; the global duplicate count and the per-doc
+    # window-hash ARRAYS; the global duplicate count and the per-id
     # gap-stitch are integer arithmetic on the driver. Same hashes, same
     # >= min_occurrences rule (global count, within-doc repeats included),
-    # same "new span when pos > prev + k" stitch.
+    # same "new span when pos > prev + k" stitch over every row of an id
+    # (the distributed window partitions by id, so duplicate-id rows
+    # merge their positions).
     if regime.fits(df, regime.DRIVER_BYTES):
         import numpy as np
 
+        from flouds_vectordb_spark.functions import pyhash
         from flouds_vectordb_spark.functions.local import local_df
-        from flouds_vectordb_spark.functions.pyhash import (
-            fetch_id_lists,
-            window_hash64_udf,
-        )
 
         # ONE Arrow fetch of positioned window hashes (pandas-UDF md5 —
         # see _driver_minhash_rows); the global >= min_occurrences rule
         # is one np.unique + searchsorted over the flat hash array, and
-        # the per-doc gap-stitch walks FLAGGED positions only.
-        rids, values, offsets, _ = fetch_id_lists(
-            _spread(df, target=_DRIVER_COLLECT_SPREAD).select(
-                F.col(id_col).alias("id"),
-                window_hash64_udf(kk)(F.col(text_col)).alias("_ghs")))
+        # the per-id gap-stitch walks FLAGGED positions only.
+        rids, values, offsets, _ = pyhash.fetch_lists(
+            df, [id_col], pyhash.window_hash64_udf(kk)(F.col(text_col)))
         mo = int(min_occurrences)
-        out = []
         if len(values):
             uniq, cnt = np.unique(values, return_counts=True)
             flagged = (cnt >= mo)[np.searchsorted(uniq, values)]
         else:
             flagged = np.zeros(0, dtype=bool)
         ends = offsets[1:]
+        by_id: dict = {}
         for j, rid in enumerate(rids):
             fpos = np.flatnonzero(flagged[offsets[j]:ends[j]])
-            if not len(fpos):
-                continue
+            if len(fpos):
+                by_id.setdefault(rid, []).append(fpos)
+        out = []
+        for rid, parts in by_id.items():
             prev = None
             start = None
-            for p0 in fpos.tolist():
+            for p0 in np.unique(np.concatenate(parts)).tolist():
                 pos = p0 + 1
                 if prev is None or pos > prev + kk:
                     if start is not None:
@@ -2018,11 +1952,9 @@ def exact_substring_spans(
             out.append((rid, start, prev + kk - 1, prev + kk - start))
         out.sort()
         idt = dict(df.dtypes)[id_col]
-        schema = (f"id {idt}, span_start int, span_end int, "
-                  f"span_tokens int")
-        if not out:
-            return df.sparkSession.createDataFrame([], schema)
-        return local_df(df.sparkSession, out, schema)
+        return local_df(df.sparkSession, out,
+                        f"id {idt}, span_start int, span_end int, "
+                        f"span_tokens int")
     grams = (
         d.select("id", "_toks", F.explode(pos_seq).alias("pos"))
         .select("id", "pos",

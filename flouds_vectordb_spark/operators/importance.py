@@ -169,33 +169,29 @@ def _dsir_resample_driver(raw: DataFrame, target: DataFrame, n_keep: int,
     Column plan op-for-op on the driver."""
     import numpy as np
 
-    from flouds_vectordb_spark.functions.pyhash import (
-        fetch_tagged_lists,
-        feature_bucket_udf,
-    )
+    from flouds_vectordb_spark.functions import pyhash
 
     spark = raw.sparkSession
     idt = dict(raw.dtypes)[id_col]
     # Both branches are MAP-ONLY per-doc bucket arrays (zero-token docs
     # -> [], so every raw id arrives in tag 0); the whole fetch is one
-    # job after the shared spread. r14: the tokenize/bigram/md5 pipeline
-    # runs in the shared pandas UDF (guide §4.2 — native hashlib instead
-    # of interpreted HOF lambdas) and the fetch is Arrow IPC; bucket
-    # counts are np.bincount over the same integers the groupBy would
-    # sum. NULL-text rows arrive as empty arrays — the same lw=0,
-    # still-competes-on-Gumbel semantics the distributed plan gives them.
+    # job (pyhash.fetch_lists spreads the union first). r14: the
+    # tokenize/bigram/md5 pipeline runs in the shared pandas UDF (guide
+    # §4.2 — native hashlib instead of interpreted HOF lambdas) and the
+    # fetch is Arrow IPC; bucket counts are np.bincount over the same
+    # integers the groupBy would sum. NULL-text rows arrive as empty
+    # arrays — the same lw=0, still-competes-on-Gumbel semantics the
+    # distributed plan gives them.
     both = (
-        spread_small_input(
-            raw.select(F.lit(0).alias("_t"), F.col(id_col).alias("id"),
-                       F.col(text_col).alias("_tx"))
-            .unionByName(target.select(
-                F.lit(1).alias("_t"), F.lit(None).cast(idt).alias("id"),
-                F.col(text_col).alias("_tx"))), target=8)
-        .select("_t", "id",
-                feature_bucket_udf(n_buckets, seed)(F.col("_tx"))
-                .alias("_bs"))
-    )
-    tags, rids, values, offsets, _ = fetch_tagged_lists(both)
+        raw.select(F.lit(0).alias("_t"), F.col(id_col).alias("id"),
+                   F.col(text_col).alias("_tx"))
+        .unionByName(target.select(
+            F.lit(1).alias("_t"), F.lit(None).cast(idt).alias("id"),
+            F.col(text_col).alias("_tx"))))
+    tags, rids, values, offsets, _ = pyhash.fetch_lists(
+        both, ["_t", "id"],
+        pyhash.feature_bucket_udf(n_buckets, seed)(F.col("_tx")))
+    tags = np.asarray(tags)
     sizes = np.diff(offsets)
     elem_raw = np.repeat(tags == 0, sizes)
     r_counts = np.bincount(values[elem_raw], minlength=n_buckets)
@@ -237,10 +233,8 @@ def _dsir_resample_driver(raw: DataFrame, target: DataFrame, n_keep: int,
     scored.sort(key=lambda r: (-r[2], r[0]))
     out = [(rid, _round6(lw), _round6(g))
            for rid, lw, g in scored[:n_keep]]
-    schema = f"id {idt}, log_weight_r double, gumbel_key_r double"
-    if not out:
-        return spark.createDataFrame([], schema)
-    return local_df(spark, out, schema)
+    return local_df(spark, out,
+                    f"id {idt}, log_weight_r double, gumbel_key_r double")
 
 
 def dsir_resample(raw: DataFrame, target: DataFrame, n_keep: int,

@@ -1,6 +1,6 @@
 """Size probes and bounds for every operator's regime switch.
 
-Many operators pick between a driver, broadcast or single-partition
+Many operators pick between a driver or single-partition / broadcast
 "small" regime and a distributed one from a guess at their input size.
 This is the only module that reads Catalyst statistics or plan classes
 for that guess, so every switch means the same thing.
@@ -26,20 +26,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 # driver regimes (dedup family, decontaminations, substring spans, BPE,
-# DSIR): below this the whole operator runs off ONE collect of bounded
-# scalars. The distributed plans pay 9-31 scheduled jobs at gate scale
-# (5k docs ≈ 0.6 MB), ~100% scheduling; 16 MB is the same collect bound
-# as the frontier/sample collects in dedup. Above it the working set
-# (candidate pairs, distinct words, per-doc buckets) is what scales.
+# DSIR): below this the whole operator runs off ONE fetch of bounded
+# scalars (pyhash.fetch_lists for every hashing operator). The
+# distributed plans pay 9-31 scheduled jobs at gate scale (5k docs ≈
+# 0.6 MB), ~100% scheduling; 16 MB is the same collect bound as the
+# frontier/sample collects in dedup. Above it the working set (candidate
+# pairs, distinct words, per-doc buckets) is what scales, and the
+# distributed plans run: for dedup_minhash that is the shuffle regime
+# from here up (its 16-48 MB broadcast regime was deleted; PLANS.md,
+# "Regimes per operator", has the measurement).
 DRIVER_BYTES = 16 << 20
-
-# dedup_minhash / dedup_minhash_components broadcast regime: below this
-# every MinHash intermediate sits under the broadcast threshold, and the
-# shuffle-regime machinery (pre-partitioned entry cache, materialized
-# candidate stats, semi-join prune) only adds persists and action
-# barriers (~+1.5 s at 5k docs); above it that machinery cuts the
-# operator's shuffle 4x (measured at 500k docs).
-MINHASH_BROADCAST_BYTES = 48 << 20
 
 # single-partition / broadcast "small" regimes (drop_ratio_build,
 # bm25_tf, the sparse block repartition, pack_sequences, unigram_logprob,

@@ -641,19 +641,6 @@ def test_components_driver_and_distributed_paths_agree(spark):
     assert got == {"a": "a", "b": "a", "c": "a"}
 
 
-def test_minhash_shuffle_regime_identical_to_broadcast_regime(docs, monkeypatch):
-    """dedup_minhash picks its plan by Catalyst's input-size estimate
-    (broadcast regime within regime.MINHASH_BROADCAST_BYTES, the r9
-    shuffle-regime machinery above). Both regimes must produce identical
-    pairs — pin it by forcing the shuffle regime on the tiny fixture."""
-    small = sorted(map(tuple,
-                       dedup_minhash(docs, jaccard_threshold=0.3).collect()))
-    monkeypatch.setattr(regime, "MINHASH_BROADCAST_BYTES", 0)
-    big = sorted(map(tuple,
-                     dedup_minhash(docs, jaccard_threshold=0.3).collect()))
-    assert small == big and small  # same pairs, and the fixture has some
-
-
 def _clone_corpus(spark, seed=5, n_base=40):
     """Base docs + clone cliques + borderline variants: exercises both the
     star-pass fast path (clones) and the phase-2 fallback (pairs whose
@@ -679,10 +666,12 @@ def _clone_corpus(spark, seed=5, n_base=40):
     return spark.createDataFrame(rows, "id long, text string")
 
 
-def test_minhash_components_equals_pair_mode_composition(spark, monkeypatch):
+def test_minhash_components_equals_pair_mode_composition(spark):
     """dedup_minhash(output='components') must produce EXACTLY the labels
     of dedup_components(dedup_minhash(df)) — the star+phase-2 fusion is an
-    execution strategy, not a semantics change — in both size regimes."""
+    execution strategy, not a semantics change. The in-memory corpus has
+    no known size, so this runs the shuffle regime; the driver regime is
+    pinned by test_minhash_driver_regime_equals_distributed."""
     from flouds_vectordb_spark.operators.dedup import (
         dedup_components,
         dedup_minhash,
@@ -697,16 +686,6 @@ def test_minhash_components_equals_pair_mode_composition(spark, monkeypatch):
             map(tuple, dedup_minhash(corpus, jaccard_threshold=thr,
                                      output="components").collect()))
         assert got == want and want, thr
-    # forced shuffle regime must agree too
-    monkeypatch.setattr(regime, "MINHASH_BROADCAST_BYTES", 0)
-    got_big = sorted(
-        map(tuple, dedup_minhash(corpus, jaccard_threshold=0.5,
-                                 output="components").collect()))
-    monkeypatch.undo()
-    want = sorted(
-        map(tuple, dedup_minhash(corpus, jaccard_threshold=0.5,
-                                 output="components").collect()))
-    assert got_big == want
 
     import pytest
     with pytest.raises(ValueError, match="output"):
@@ -733,9 +712,9 @@ def parquet_docs(spark, tmp_path_factory):
 
 
 def test_minhash_driver_regime_equals_distributed(parquet_docs, monkeypatch):
-    """The r13 driver regime (one collect + driver bucketing/verify) must
-    be row-identical to the broadcast-join small regime AND the shuffle
-    regime on pairs and on component labels, at multiple thresholds."""
+    """The r13 driver regime (one fetch + driver bucketing/verify) must be
+    row-identical to the shuffle regime (forced by DRIVER_BYTES = -1) on
+    pairs and on component labels, at multiple thresholds."""
     assert regime.fits(parquet_docs, regime.DRIVER_BYTES)  # engages it
     for thr in (0.3, 0.5, 0.8):
         drv_pairs = sorted(map(tuple, dedup_minhash(
@@ -823,29 +802,40 @@ def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
     import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import decontaminate_neardup
 
+    def parquet(rows, name):
+        path = str(tmp_path / name)
+        spark.createDataFrame(rows, "id long, text string").write.parquet(path)
+        return spark.read.parquet(path)
+
     tr_rows = [(i, f"train doc {i} about shared topic {i % 6} words")
                for i in range(50)]
     te_rows = [(100 + k, f"train doc {k * 6} about shared topic 0 words")
                for k in range(4)]
     te_rows.append((999, "nothing matching at all here"))
-    tr_pq, te_pq = str(tmp_path / "tr.parquet"), str(tmp_path / "te.parquet")
-    spark.createDataFrame(tr_rows, "id long, text string").write.parquet(tr_pq)
-    spark.createDataFrame(te_rows, "id long, text string").write.parquet(te_pq)
-    tr = spark.read.parquet(tr_pq)
+    tr = parquet(tr_rows, "tr.parquet")
+    # duplicate ids on both sides: every verified row pair counts
+    base = "one two three four five six seven eight nine ten eleven twelve"
+    edit = base.replace("twelve", "dozen")
+    dup_tr = parquet([(1, base), (1, edit), (2, "other words entirely")],
+                     "dup_tr.parquet")
+    dup_te = parquet([(10, base), (10, edit), (11, "unrelated held out")],
+                     "dup_te.parquet")
     # a held-out side built in memory (unknown size) must not veto the
     # driver regime: only the train side's size gates it
     in_memory = spark.createDataFrame(te_rows, "id long, text string")
-    for te in (spark.read.parquet(te_pq), in_memory):
-        for thr in (0.3, 0.8):
+    for train, te, thrs in ((tr, parquet(te_rows, "te.parquet"), (0.3, 0.8)),
+                            (tr, in_memory, (0.3, 0.8)),
+                            (dup_tr, dup_te, (0.6,))):
+        for thr in thrs:
             calls = []
             real = dd._driver_decon_neardup
             monkeypatch.setattr(dd, "_driver_decon_neardup",
                                 lambda *a: calls.append(1) or real(*a))
             drv = sorted(map(tuple, decontaminate_neardup(
-                tr, te, jaccard_threshold=thr).collect()))
+                train, te, jaccard_threshold=thr).collect()))
             monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
             dist = sorted(map(tuple, decontaminate_neardup(
-                tr, te, jaccard_threshold=thr).collect()))
+                train, te, jaccard_threshold=thr).collect()))
             monkeypatch.undo()
             assert calls == [1]  # the driver regime ran for drv only
             assert drv == dist and drv, thr
@@ -923,17 +913,19 @@ def test_decontaminate_in_memory_held_out_takes_driver_regime(
     assert not regime.fits(te, regime.DRIVER_BYTES)
 
     fetched = []
-    real = pyhash.fetch_id_lists
-    monkeypatch.setattr(pyhash, "fetch_id_lists",
-                        lambda df: fetched.append(real(df)) or fetched[-1])
+    real = pyhash.fetch_lists
+    monkeypatch.setattr(pyhash, "fetch_lists",
+                        lambda *a: fetched.append(real(*a)) or fetched[-1])
     drv = sorted(map(tuple, decontaminate(tr, te, n=5,
                                           min_matches=mm).collect()))
-    assert len(fetched) == 1  # one fetch, of the train side
-    assert sorted(fetched[0][0]) == sorted(i for i, _ in tr_rows)
+    # two fetches: the held-out hashes (no key column), then the train ids
+    assert [len(f) for f in fetched] == [3, 4]
+    assert sorted(fetched[1][0]) == sorted(i for i, _ in tr_rows)
     monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
     dist = sorted(map(tuple, decontaminate(tr, te, n=5,
                                            min_matches=mm).collect()))
-    assert len(fetched) == 1  # the distributed regime fetches no train ids
+    # the distributed regime fetches the held-out side only
+    assert [len(f) for f in fetched] == [3, 4, 3]
     assert drv == dist
     assert bool(drv) == (case != "empty_held_out")
     if case == "duplicate_train_ids":
@@ -951,13 +943,72 @@ def test_substring_spans_driver_regime_equals_distributed(spark, tmp_path,
                                        f"own body {i} words here") +
              f" tail {i}") for i in range(30)]
     rows.append((99, boiler + " " + boiler))  # within-doc repeat
-    pq = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(rows, "id long, text string").write.parquet(pq)
-    df = spark.read.parquet(pq)
-    drv = sorted(map(tuple, exact_substring_spans(df, k=20).collect()))
-    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
-    dist = sorted(map(tuple, exact_substring_spans(df, k=20).collect()))
-    assert drv == dist and drv
+    # duplicate ids: the rows of one id stitch as one position list
+    dup_rows = [(1, "a b c d e f g"), (1, "x a b c d y"), (2, "a b c d e z")]
+    for i, (data, k) in enumerate(((rows, 20), (dup_rows, 3))):
+        pq = str(tmp_path / f"docs{i}.parquet")
+        spark.createDataFrame(data, "id long, text string").write.parquet(pq)
+        df = spark.read.parquet(pq)
+        drv = sorted(map(tuple, exact_substring_spans(df, k=k).collect()))
+        monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
+        dist = sorted(map(tuple, exact_substring_spans(df, k=k).collect()))
+        monkeypatch.undo()
+        assert drv == dist and drv, k
+
+
+def test_driver_regimes_fetch_once_per_side(spark, parquet_docs,
+                                           monkeypatch):
+    """Every hashing driver regime fetches through pyhash.fetch_lists,
+    once per input side, and no module that fetches through it sets a
+    spread width of its own: the width is pyhash.DRIVER_FETCH_SPREAD."""
+    import ast
+    import inspect
+
+    import flouds_vectordb_spark.operators.dedup as dd
+    import flouds_vectordb_spark.operators.importance as imp
+    from flouds_vectordb_spark.functions import pyhash
+    from flouds_vectordb_spark.operators.dedup import (
+        decontaminate,
+        decontaminate_neardup,
+        exact_substring_spans,
+    )
+    from flouds_vectordb_spark.operators.importance import dsir_resample
+
+    held = parquet_docs.filter(F.col("id") < 8)
+    assert regime.fits(parquet_docs, regime.DRIVER_BYTES)
+    assert regime.fits(held, regime.DRIVER_BYTES)
+    calls = []
+    real = pyhash.fetch_lists
+    monkeypatch.setattr(pyhash, "fetch_lists",
+                        lambda *a: calls.append(1) or real(*a))
+    ops = {
+        "dedup_minhash": (lambda: dedup_minhash(parquet_docs), 1),
+        "components": (lambda: dedup_minhash(parquet_docs,
+                                             output="components"), 1),
+        "dedup_ngram_jaccard": (lambda: dedup_ngram_jaccard(parquet_docs), 1),
+        "dedup_simhash": (lambda: dedup_simhash(parquet_docs), 1),
+        "exact_substring_spans": (
+            lambda: exact_substring_spans(parquet_docs, k=3), 1),
+        "dsir_resample": (
+            lambda: dsir_resample(parquet_docs, held, n_keep=5,
+                                  n_buckets=64), 1),
+        "decontaminate": (lambda: decontaminate(parquet_docs, held, n=3), 2),
+        "decontaminate_neardup": (
+            lambda: decontaminate_neardup(parquet_docs, held), 2),
+    }
+    for name, (run, want) in ops.items():
+        calls.clear()
+        assert run().collect(), name
+        assert len(calls) == want, name
+
+    for mod in (dd, imp, pyhash):
+        spreads = [
+            node for node in ast.walk(ast.parse(inspect.getsource(mod)))
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) in ("_spread",
+                                                   "spread_small_input")
+            and any(kw.arg == "target" for kw in node.keywords)]
+        assert len(spreads) == (mod is pyhash), mod.__name__
 
 
 def test_remove_substrings_driver_regime_equals_distributed(spark, tmp_path,

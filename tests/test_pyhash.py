@@ -115,17 +115,27 @@ def test_fetch_id_lists_flat_layout(spark):
     import numpy as np
 
     df = spark.createDataFrame(
-        [(1, [5, 6]), (2, []), (3, None), (4, [7])],
-        "id bigint, v array<bigint>")
-    ids, values, offsets, valid = P.fetch_id_lists(df.orderBy("id"))
-    assert ids == [1, 2, 3, 4]
-    assert values.tolist() == [5, 6, 7]
-    assert offsets.tolist() == [0, 2, 2, 2, 3]
-    assert valid is not None and valid.tolist() == [True, True, False, True]
-    np.testing.assert_array_equal(values[offsets[0]:offsets[1]], [5, 6])
+        [(1, "a", [5, 6]), (2, "b", []), (3, "c", None), (4, "d", [7])],
+        "id bigint, tag string, v array<bigint>")
+    # the fetch spreads its input, so rows arrive in any order
+    ids, tags, values, offsets, valid = P.fetch_lists(
+        df, ["id", "tag"], F.col("v"))
+    assert dict(zip(ids, tags)) == {1: "a", 2: "b", 3: "c", 4: "d"}
+    assert offsets[0] == 0 and offsets[-1] == len(values) == 3
+    rows = {i: values[offsets[k]:offsets[k + 1]].tolist()
+            for k, i in enumerate(ids)}
+    assert rows == {1: [5, 6], 2: [], 3: [], 4: [7]}
+    assert valid is not None
+    assert dict(zip(ids, valid.tolist())) == {1: True, 2: True, 3: False,
+                                              4: True}
+    assert values.dtype == np.int64
+    # no key columns: the flat layout alone, valid None without NULLs
+    values, offsets, valid = P.fetch_lists(df.filter("v IS NOT NULL"), [],
+                                           F.col("v"))
+    assert sorted(values.tolist()) == [5, 6, 7] and valid is None
 
 
-# fetch_shingle_hashes edge cases: NULL, empty and whitespace-only text,
+# shingle-hash fetch edge cases: NULL, empty and whitespace-only text,
 # text shorter than n, mixed scripts, and a lone surrogate (which the
 # createDataFrame route hands to the JVM)
 _EDGE = [
@@ -166,12 +176,13 @@ def test_fetch_shingle_hashes_matches_column(edge_frames, kind, n):
                       lambda s: hash64(s))
     want = {r[0]: list(r[1]) for r in
             df.select("id", col.alias("v")).collect()}
-    ids, values, offsets = P.fetch_shingle_hashes(df, "text", n, "id")
+    udf = P.shingle_hash64_udf(n)(F.col("text"))
+    ids, values, offsets, _ = P.fetch_lists(df, ["id"], udf)
     got = {i: values[offsets[k]:offsets[k + 1]].tolist()
            for k, i in enumerate(ids)}
     assert got == want
     assert got[0] == got[1] == got[2] == [] and len(got[3]) == 1
-    held = P.fetch_shingle_hashes(df, "text", n)
+    held = np.unique(P.fetch_lists(df, [], udf)[0])
     assert held.dtype == np.int64
     assert held.tolist() == sorted({h for v in want.values() for h in v})
 

@@ -81,14 +81,19 @@ def test_drop_ratio_build_prunes_smallest(spark):
     assert all(w <= kept_min + 1e-12 for w in lowest)
 
 
-def test_drop_ratio_regimes_identical(spark, monkeypatch):
+def test_drop_ratio_regimes_identical(spark, monkeypatch, tmp_path):
     """r11: the drop_ratio prune has two regimes — a lazy
     single-partition window below the input-size bound and the
     distributed range-partition rank above it. Same (weight, term, id)
-    order, same floor cut: rows must match EXACTLY."""
+    order, same floor cut: rows must match EXACTLY. The input is a
+    parquet scan: a createDataFrame frame has no known size and would
+    take the distributed regime on both halves."""
     from flouds_vectordb_spark import regime
 
-    df = spark.createDataFrame(DOCS, "id long, chunk string")
+    pq = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(DOCS, "id long, chunk string").write.parquet(pq)
+    df = spark.read.parquet(pq)
+    assert regime.fits(df, regime.SMALL_BYTES)
     small = {tuple(r) for r in bm25_postings(df, drop_ratio_build=0.25).collect()}
     monkeypatch.setattr(regime, "SMALL_BYTES", 0)  # force distributed
     large = {tuple(r) for r in
