@@ -306,10 +306,12 @@ def _band_entries(df: DataFrame, id_col: str, text_col: str, n_sigs: int,
 
 def _driver_minhash_rows(df: DataFrame, id_col: str, text_col: str,
                          n_sigs: int, n_bands: int,
-                         shingle_n: int) -> list[tuple]:
+                         shingle_n: int) -> tuple[list, dict]:
     """ONE map-only Arrow fetch of (id, [shingle hash64s]), then
-    signatures, band keys and verify sets on the driver: [(id, bands,
-    vset)] for every doc with >= 1 shingle.
+    signatures, band keys and verify sets on the driver, keyed by ROW
+    with the id as a label: ([(id, bands)], {id: [vset of each row]})
+    over the rows with >= 1 shingle (zero-shingle rows never band — see
+    _band_entries).
 
     r14 (guide §4.2/§4.3): the tokenize/shingle/md5 pipeline runs as a
     pandas UDF (native hashlib md5 per batch) instead of interpreted JVM
@@ -317,33 +319,26 @@ def _driver_minhash_rows(df: DataFrame, id_col: str, text_col: str,
     pickling, and the hash arrays land as ONE flat int64 ndarray that the
     vectorized signature half consumes directly — measured 0.84 -> 0.58 s
     per fetch at sf0.1 plus the eliminated per-element int conversion.
-    Exactness is pinned by tests/test_pyhash.py (bit-identical hashes on
-    a mixed-script corpus) and the regime-equivalence tests."""
-    from flouds_vectordb_spark.functions import pyhash
-
-    ids, values, offsets, _ = pyhash.fetch_lists(
-        df, [id_col], pyhash.shingle_hash64_udf(shingle_n)(F.col(text_col)))
-    return _minhash_rows_from_flat(ids, values, offsets, n_sigs, n_bands)
-
-
-def _minhash_rows_from_flat(ids, values, offsets, n_sigs: int,
-                            n_bands: int) -> list[tuple]:
-    """(id, bands, vset) from the flat (values, offsets) hash layout —
-    the numpy half shared by every minhash-family driver regime. Docs
-    with zero shingles are dropped (they never band — see _band_entries).
     Exact: the permutation-min folds are int64 arithmetic with products
     < 2^56 (no overflow), numpy's % matches both engines' positive-
     operand mod, and the band keys hash the same decimal rendering of
-    the sig values through the same md5 (py_hash64)."""
+    the sig values through the same md5 (py_hash64); tests/test_pyhash.py
+    pins the hashes and the regime-equivalence tests the rest."""
+    from collections import defaultdict
+
     import numpy as np
 
+    from flouds_vectordb_spark.functions import pyhash
     from flouds_vectordb_spark.functions.hashing import py_hash64
 
-    sizes = np.diff(offsets)
-    nz = sizes > 0
+    ids, values, offsets, _ = pyhash.fetch_lists(
+        df, [id_col], pyhash.shingle_hash64_udf(shingle_n)(F.col(text_col)))
+    nz = np.diff(offsets) > 0
     n_docs = int(nz.sum())
+    banded: list = []
+    sets: dict = defaultdict(list)
     if n_docs == 0:
-        return []
+        return banded, sets
     starts = offsets[:-1][nz]
     h32 = values & 0xFFFFFFFF
     sig_mat = np.empty((n_docs, n_sigs), dtype=np.int64)
@@ -353,96 +348,98 @@ def _minhash_rows_from_flat(ids, values, offsets, n_sigs: int,
             (h32 * a + b) % MINHASH_PRIME, starts)
     rows_per_band = n_sigs // n_bands
     sig_list = sig_mat.tolist()  # one bulk int64 -> int conversion
-    out = []
     k = 0
-    ends = offsets[1:]
     for j, rid in enumerate(ids):
         if not nz[j]:
             continue
         srow = sig_list[k]
-        bands = [
+        banded.append((rid, [
             py_hash64("|".join(str(srow[b * rows_per_band + r])
                                for r in range(rows_per_band)),
                       seed=1000 + b)
             for b in range(n_bands)
-        ]
-        vset = np.unique(values[offsets[j]:ends[j]]).tolist()
-        out.append((rid, bands, vset))
+        ]))
+        sets[rid].append(frozenset(values[offsets[j]:offsets[j + 1]].tolist()))
         k += 1
-    return out
+    return banded, sets
 
 
 def _bucket_candidates(entries) -> set | None:
-    """Candidate pairs from (id, bucket_key) entries: every (a, b) with
-    a < b sharing >= 1 bucket — exactly the distributed bucket
-    self-join's rule. Returns None when the exact pre-flight (Σ K·(K-1)/2
-    over bucket sizes) predicts more pairs than the driver should
-    enumerate; the caller then falls back to the distributed plan, which
-    shares the same quadratic but spreads it over tasks. Ids must be
-    unique per row (callers check)."""
+    """Candidate pairs from (label, bucket_key) entries: every (a, b)
+    with a < b sharing >= 1 bucket — exactly the distributed bucket
+    self-join's rule. Labels are de-duplicated within each bucket, so
+    no (a, a) pair is emitted: with the id as label, the rows of one id
+    never pair with each other. Returns None when
+    the exact pre-flight (Σ K·(K-1)/2 over bucket sizes) predicts more
+    pairs than the driver should enumerate; the caller then falls back
+    to the distributed plan, which shares the same quadratic but spreads
+    it over tasks."""
     from collections import defaultdict
 
-    buckets: dict = defaultdict(list)
-    for rid, key in entries:
-        buckets[key].append(rid)
+    buckets: dict = defaultdict(set)
+    for label, key in entries:
+        buckets[key].add(label)
     est = sum(len(v) * (len(v) - 1) // 2 for v in buckets.values())
     if est > _MINHASH_DRIVER_MAX_CAND_PAIRS:
         return None
     cand: set = set()
-    for ids in buckets.values():
-        if len(ids) < 2:
+    for labels in buckets.values():
+        if len(labels) < 2:
             continue
-        ids.sort()
-        for i, a in enumerate(ids):
-            for b in ids[i + 1:]:
+        labels = sorted(labels)
+        for i, a in enumerate(labels):
+            for b in labels[i + 1:]:
                 cand.add((a, b))
     return cand
 
 
-def _driver_minhash_edges(rows: list[tuple],
-                          threshold: float) -> list[tuple] | None:
-    """LSH bucketing + exact-Jaccard verification over collected rows:
-    candidates = same (band_idx, band_hash) in >= 1 band
-    (_bucket_candidates), verified at
+def _verified_pairs(cand, sets_a: dict, sets_b: dict,
+                    threshold: float) -> list[tuple]:
+    """(a, b, jaccard_r) for every row of a x every row of b, over each
+    candidate id pair (a, b), that passes
     round(|A∩B| / (|A|+|B|-|A∩B|), 6) >= threshold with the identical
-    IEEE double division and HALF_UP rounding. Returns sorted
-    (id_a, id_b, jaccard_r) tuples, or None (fall back) on a pre-flight
-    overflow.
-
-    UNIQUE-ID contract (r14, ADVICE): duplicate ids would collapse in
-    the vsets dict (the distributed plan keeps each row's own shingle
-    set and can emit one pair per row combination), so duplicate-id
-    inputs return None — the distributed plan adjudicates them."""
-    vsets = {rid: frozenset(vset) for rid, _, vset in rows}
-    if len(vsets) != len(rows):
-        return None
-    cand = _bucket_candidates(
-        (rid, (bi, bh)) for rid, bands, _ in rows
-        for bi, bh in enumerate(bands))
-    if cand is None:
-        return None
+    IEEE double division and HALF_UP rounding — the distributed verify
+    join's one output row per passing row pair. Sets are never empty
+    (zero-shingle rows do not band)."""
     th = float(threshold)
     out = []
     for a, b in cand:
-        inter = float(len(vsets[a] & vsets[b]))
-        union = float(len(vsets[a]) + len(vsets[b])) - inter
-        j = _round6(inter / union)
-        if j >= th:
-            out.append((a, b, j))
-    out.sort()
+        for sa in sets_a[a]:
+            for sb in sets_b[b]:
+                inter = float(len(sa & sb))
+                j = _round6(inter / (float(len(sa) + len(sb)) - inter))
+                if j >= th:
+                    out.append((a, b, j))
     return out
 
 
-def _jaccard_filtered(pairs: DataFrame, threshold: float) -> DataFrame:
-    """(id_a, id_b, jaccard_r) >= threshold from candidate rows carrying
-    sh_a/sh_b shingle arrays — the exact-verify tail every LSH path
-    shares."""
+def _driver_minhash_edges(banded: list, sets: dict,
+                          threshold: float) -> list[tuple] | None:
+    """LSH bucketing + exact-Jaccard verification over _driver_minhash_rows'
+    output: candidates = ids with a row in the same (band_idx, band_hash)
+    in >= 1 band (_bucket_candidates), verified row pair by row pair
+    (_verified_pairs). Returns sorted (id_a, id_b, jaccard_r) tuples, or
+    None (fall back) on a pre-flight overflow."""
+    cand = _bucket_candidates(
+        (rid, (bi, bh)) for rid, bands in banded
+        for bi, bh in enumerate(bands))
+    if cand is None:
+        return None
+    return sorted(_verified_pairs(cand, sets, sets, threshold))
+
+
+def _jaccard_filtered(pairs: DataFrame, threshold: float,
+                      *keep: str) -> DataFrame:
+    """(id_a, id_b, *keep, jaccard_r) >= threshold from candidate rows
+    carrying sh_a/sh_b set arrays — the exact-verify tail every Jaccard
+    operator shares. Two empty sets verify at 0/0: try_divide's NULL
+    drops the row, as the SQL twins' x/0 NULL does."""
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
     union = (F.size(F.col("sh_a")) + F.size(F.col("sh_b"))).cast("double") - inter
     return (
-        pairs.withColumn("jaccard_r", F.round(inter / union, 6))
+        pairs.withColumn("jaccard_r", F.round(F.try_divide(inter, union), 6))
         .filter(F.col("jaccard_r") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "jaccard_r")
+        .select("id_a", "id_b", *keep, "jaccard_r")
     )
 
 
@@ -523,9 +520,9 @@ def dedup_minhash(
     if regime.fits(df, regime.DRIVER_BYTES):
         from flouds_vectordb_spark.functions.local import local_df
 
-        rows = _driver_minhash_rows(df, id_col, text_col, n_sigs, n_bands,
-                                    shingle_n)
-        edges = _driver_minhash_edges(rows, jaccard_threshold)
+        edges = _driver_minhash_edges(*_driver_minhash_rows(
+            df, id_col, text_col, n_sigs, n_bands, shingle_n),
+            jaccard_threshold)
         if edges is not None:
             idt = dict(df.dtypes)[id_col]
             return local_df(df.sparkSession, edges,
@@ -676,9 +673,9 @@ def dedup_minhash_components(
     fusion's labels equal pair-mode labels by the case analysis above,
     and the driver path computes pair mode literally)."""
     if regime.fits(df, regime.DRIVER_BYTES):
-        rows = _driver_minhash_rows(df, id_col, text_col, n_sigs, n_bands,
-                                    shingle_n)
-        edges = _driver_minhash_edges(rows, jaccard_threshold)
+        edges = _driver_minhash_edges(*_driver_minhash_rows(
+            df, id_col, text_col, n_sigs, n_bands, shingle_n),
+            jaccard_threshold)
         if edges is not None:
             idt = dict(df.dtypes)[id_col]
             return _driver_union_find([(a, b) for a, b, _ in edges], idt,
@@ -828,13 +825,7 @@ def dedup_minhash_incremental(
                                   F.col("vset").alias("sh_a")), "id_a")
         .join(sets_b, "id_b")
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        pairs.withColumn("jaccard_r", F.round(inter / union, 6))
-        .filter(F.col("jaccard_r") >= F.lit(float(jaccard_threshold)))
-        .select("id_a", "id_b", "b_is_old", "jaccard_r")
-    )
+    return _jaccard_filtered(pairs, jaccard_threshold, "b_is_old")
 
 
 def dedup_minhash_incremental_sql(
@@ -934,7 +925,7 @@ def _driver_ngram_pairs(ids, values, offsets, t: float,
                         max_candidate_pairs: int,
                         enforce_guard: bool) -> list[tuple] | None:
     """Exact n-gram Jaccard pairs over the flat (id, hset) hash layout,
-    fully vectorized: emit every within-hash-group doc pair once per
+    fully vectorized: emit every within-hash-group row pair once per
     shared hash, so the pair's MULTIPLICITY (np.unique counts) IS the
     exact intersection size — no per-pair set ops.
 
@@ -944,26 +935,30 @@ def _driver_ngram_pairs(ids, values, offsets, t: float,
     the same double arithmetic, same 1e-9 slack. (The r13 any-shared-hash
     superset could, on a rounding knife edge — true J < t but
     round6(J) >= t — emit a pair the inverted-index plan never sees.)
+    ROWS are the working set and the id is their label: a candidate is a
+    distinct id pair (id_a < id_b) with such a collision between some
+    row of each, and every row of id_a x every row of id_b is verified;
+    a 0/0 row pair (two empty sets) drops, as the plan's NULL does.
 
     enforce_guard mirrors the distributed pre-flight exactly (same
     prefix-frequency estimate, same error) — the caller passes
     max_candidate_pairs > 0 AND not regime.fits(df, regime.SMALL_BYTES),
     so small corpora never raise here either. Returns None (fall back to
     the distributed plan) when total shared-hash pairs exceed the driver
-    bound, or when ids are not unique (the distributed plan keeps per-row
-    sets and its id_a < id_b filter drops same-id row pairs; see
-    _driver_minhash_edges)."""
+    bound."""
     import numpy as np
 
     n_docs = len(ids)
     if n_docs < 2:
         return []
-    if len(set(ids)) != n_docs:
-        return None
     sizes = np.diff(offsets)
     nnz = int(sizes.sum())
     if nnz == 0:
         return []
+    # id codes in id order, so a code pair ca < cb is id_a < id_b
+    uniq = sorted(set(ids))
+    code_of = {r: c for c, r in enumerate(uniq)}
+    codes = np.fromiter(map(code_of.__getitem__, ids), np.int64, n_docs)
     hashes = values
     doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), sizes)
     starts = offsets[:-1]
@@ -990,14 +985,16 @@ def _driver_ngram_pairs(ids, values, offsets, t: float,
     if int((grp_sizes * (grp_sizes - 1) // 2).sum()) \
             > _MINHASH_DRIVER_MAX_CAND_PAIRS:
         return None
-    # intersection sizes from ALL collision pairs (multiplicity trick)
+    # row-pair intersection sizes from ALL collision pairs (multiplicity
+    # trick)
     a_el, b_el = _within_group_pairs(hs, nnz)
     ia, ib = di[a_el], di[b_el]
     lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
     keys, inter = np.unique(lo * n_docs + hi, return_counts=True)
-    # candidate keys from PREFIX collisions passing the distributed
-    # plan's size-ratio + positional filters (a pair survives if ANY of
-    # its prefix collisions passes — the dropDuplicates semantics)
+    # candidate id pairs from PREFIX collisions passing the distributed
+    # plan's id_a < id_b, size-ratio and positional filters (a pair
+    # survives if ANY of its prefix collisions passes — the
+    # dropDuplicates semantics)
     pe = np.flatnonzero(pf)
     pa_el, pb_el = _within_group_pairs(hs[pe], len(pe))
     pia, pib = di[pe][pa_el], di[pe][pb_el]
@@ -1007,27 +1004,36 @@ def _driver_ngram_pairs(ids, values, offsets, t: float,
             >= t * np.maximum(na, nb).astype(np.float64))
     reach = 1 + np.minimum(na - ppa - 1, nb - ppb - 1)
     alpha = (t / (1.0 + t)) * (na + nb).astype(np.float64)
-    keep &= reach.astype(np.float64) >= alpha - 1e-9
-    cand_keys = np.unique(
-        np.minimum(pia, pib)[keep] * n_docs + np.maximum(pia, pib)[keep])
-    is_cand = np.isin(keys, cand_keys, assume_unique=True)
-    j = inter.astype(np.float64) \
-        / ((sizes[keys // n_docs] + sizes[keys % n_docs]).astype(np.float64)
-           - inter.astype(np.float64))
-    # conservative vector prefilter; exact scalar IEEE + HALF_UP on the
-    # handful of survivors (same ops as the Column plan)
-    m = is_cand & (j >= (t - 1e-6))
-    ja, jb = keys[m] // n_docs, keys[m] % n_docs
+    keep &= (reach.astype(np.float64) >= alpha - 1e-9) \
+        & (codes[pia] != codes[pib])
+    ca, cb = codes[pia][keep], codes[pib][keep]
+    cand = np.unique(np.minimum(ca, cb) * n_docs + np.maximum(ca, cb))
+    # every row of id_a x every row of id_b: rows grouped by code
+    ca, cb = cand // n_docs, cand % n_docs
+    by_code = np.argsort(codes, kind="stable")
+    cnt = np.bincount(codes, minlength=len(uniq))
+    first = np.cumsum(cnt) - cnt
+    reps = cnt[ca] * cnt[cb]
+    ci = np.repeat(np.arange(len(cand)), reps)
+    k = np.arange(int(reps.sum())) - np.repeat(np.cumsum(reps) - reps, reps)
+    ra = by_code[first[ca][ci] + k // cnt[cb][ci]]
+    rb = by_code[first[cb][ci] + k % cnt[cb][ci]]
+    # a row pair's intersection is its collision multiplicity, else 0
+    rk = np.minimum(ra, rb) * n_docs + np.maximum(ra, rb)
+    at = np.minimum(np.searchsorted(keys, rk), len(keys) - 1)
+    it = np.where(keys[at] == rk, inter[at], 0)
+    un = (sizes[ra] + sizes[rb] - it).astype(np.float64)
+    j = np.divide(it, un, out=np.full(len(un), np.nan), where=un > 0)
+    # conservative vector prefilter (0/0 = NaN fails it); exact scalar
+    # IEEE + HALF_UP on the handful of survivors (same ops as the Column
+    # plan)
+    m = j >= (t - 1e-6)
     out = []
-    for a_i, b_i, it in zip(ja.tolist(), jb.tolist(), inter[m].tolist()):
-        fa = float(it)
-        un = float(int(sizes[a_i]) + int(sizes[b_i])) - fa
-        jj = _round6(fa / un)
+    for a_i, b_i, x in zip(ra[m].tolist(), rb[m].tolist(), it[m].tolist()):
+        fa = float(x)
+        jj = _round6(fa / (float(int(sizes[a_i]) + int(sizes[b_i])) - fa))
         if jj >= t:
-            ida, idb = ids[a_i], ids[b_i]
-            if idb < ida:
-                ida, idb = idb, ida
-            out.append((ida, idb, jj))
+            out.append((ids[a_i], ids[b_i], jj))
     out.sort()
     return out
 
@@ -1141,16 +1147,10 @@ def dedup_ngram_jaccard(
         .dropDuplicates(["id_a", "id_b"])
     )
     pairs = (
-        cand.join(base.select(F.col("id").alias("id_a"), F.col("hset").alias("hs_a")), "id_a")
-        .join(base.select(F.col("id").alias("id_b"), F.col("hset").alias("hs_b")), "id_b")
+        cand.join(base.select(F.col("id").alias("id_a"), F.col("hset").alias("sh_a")), "id_a")
+        .join(base.select(F.col("id").alias("id_b"), F.col("hset").alias("sh_b")), "id_b")
     )
-    inter = F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
-    union = (F.size("hs_a") + F.size("hs_b")).cast("double") - inter
-    return (
-        pairs.withColumn("jaccard_r", F.round(inter / union, 6))
-        .filter(F.col("jaccard_r") >= F.lit(t))
-        .select("id_a", "id_b", "jaccard_r")
-    )
+    return _jaccard_filtered(pairs, t)
 
 
 def dedup_ngram_jaccard_sql(
@@ -1455,7 +1455,9 @@ def simhash_sql(tokens_expr: str) -> str:
 def dedup_simhash(df: DataFrame, id_col: str = "id", text_col: str = "text",
                   max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs (id_a < id_b, hamming) via 16-bit band buckets +
-    bit_count(xor) verification.
+    bit_count(xor) verification: one row per distinct (id_a, simhash_a,
+    id_b, simhash_b) sharing >= 1 band, so an id with several rows pairs
+    once per distinct fingerprint combination.
 
     DRIVER regime (r13): below the collect bound, one job collects
     (id, simhash) and the 4-band bucketing + bit_count(xor) verify run
@@ -1485,31 +1487,30 @@ def dedup_simhash(df: DataFrame, id_col: str = "id", text_col: str = "text",
             all_h = all_h[keep]
             offsets = np.concatenate(
                 ([0], np.cumsum(np.diff(offsets)[valid])))
-        # duplicate ids collapse in the fp dict (the distributed plan
-        # keeps each row's own fingerprint) — fall back (ADVICE)
-        if len(set(rids)) == len(rids):
-            sizes = np.diff(offsets)
-            starts = offsets[:-1]
-            fps = np.zeros(len(rids), dtype=np.int64)
-            if len(all_h):
-                for b in range(_SIMHASH_NBITS):
-                    votes = np.zeros(len(rids), dtype=np.int64)
-                    nz = sizes > 0
-                    votes[nz] = np.add.reduceat(
-                        (all_h >> b) & 1, starts[nz])
-                    fps |= np.where(votes * 2 > sizes, np.int64(1) << b,
-                                    np.int64(0))
-            fp: dict = dict(zip(rids, fps.tolist()))
-            cand = _bucket_candidates(
-                (rid, (b, (sh >> (16 * b)) & 0xFFFF))
-                for rid, sh in fp.items() for b in range(SIMHASH_BANDS))
-            if cand is not None:
-                out = sorted(
-                    (a, b2, h) for a, b2 in cand
-                    if (h := bin(fp[a] ^ fp[b2]).count("1")) <= max_hamming)
-                idt = dict(df.dtypes)[id_col]
-                return local_df(df.sparkSession, out,
-                                f"id_a {idt}, id_b {idt}, hamming int")
+        sizes = np.diff(offsets)
+        starts = offsets[:-1]
+        fps = np.zeros(len(rids), dtype=np.int64)
+        if len(all_h):
+            for b in range(_SIMHASH_NBITS):
+                votes = np.zeros(len(rids), dtype=np.int64)
+                nz = sizes > 0
+                votes[nz] = np.add.reduceat((all_h >> b) & 1, starts[nz])
+                fps |= np.where(votes * 2 > sizes, np.int64(1) << b,
+                                np.int64(0))
+        # each row's (id, fingerprint) is its bucket label: one output row
+        # per distinct (id_a, h_a, id_b, h_b) sharing a band, as the
+        # distributed plan and the SQL twin emit; rows of one id never pair
+        cand = _bucket_candidates(
+            ((rid, sh), (b, (sh >> (16 * b)) & 0xFFFF))
+            for rid, sh in zip(rids, fps.tolist())
+            for b in range(SIMHASH_BANDS))
+        if cand is not None:
+            out = sorted(
+                (a, b2, h) for (a, ha), (b2, hb) in cand
+                if a != b2 and (h := bin(ha ^ hb).count("1")) <= max_hamming)
+            idt = dict(df.dtypes)[id_col]
+            return local_df(df.sparkSession, out,
+                            f"id_a {idt}, id_b {idt}, hamming int")
     # two materialization boundaries: (1) token hashes, so the 60 per-bit
     # votes read one cached array instead of re-hashing 60x; (2) the
     # fingerprints, so the self-join reads them instead of recomputing
@@ -1538,7 +1539,7 @@ def dedup_simhash(df: DataFrame, id_col: str = "id", text_col: str = "text",
         a.join(b_, ["band_idx", "band_val"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "h_a", "h_b")
-        .dropDuplicates(["id_a", "id_b"])
+        .distinct()
     )
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return (
@@ -1677,47 +1678,38 @@ GROUP BY id HAVING count(DISTINCT tr._gh) >= {int(min_matches)}
 def _driver_decon_neardup(train, test, id_col, text_col, t_id, t_text,
                           jaccard_threshold, n_sigs, n_bands, shingle_n):
     """Bipartite (train x test) LSH candidates + exact verify + per-train
-    aggregation over two collected scalar tables. None -> fall back: on a
-    candidate pre-flight overflow, and on duplicate ids on either side
-    (the sets below are keyed by id, where the distributed plan verifies
-    every row pair and counts each verified one — same UNIQUE-ID contract
-    as _driver_minhash_edges)."""
+    aggregation over two collected scalar tables, keyed by row: every
+    row of a candidate (train id, test id) pair is verified against
+    every row of the other and each passing row pair counts, as in the
+    distributed plan. None -> fall back on a candidate pre-flight
+    overflow."""
     from collections import defaultdict
 
     from flouds_vectordb_spark.functions.local import local_df
 
     # one Arrow fetch per side: the held-out side is broadcast-sized by
     # contract, so only the train side's size gated this regime
-    te_rows = _driver_minhash_rows(test, t_id, t_text, n_sigs, n_bands,
-                                   shingle_n)
-    tr_rows = _driver_minhash_rows(train, id_col, text_col, n_sigs, n_bands,
-                                   shingle_n)
-    te_sets = {rid: frozenset(vset) for rid, _, vset in te_rows}
-    tr_sets = {rid: frozenset(vset) for rid, _, vset in tr_rows}
-    if len(te_sets) != len(te_rows) or len(tr_sets) != len(tr_rows):
-        return None
-    te_buckets: dict = defaultdict(list)
-    for rid, bands, _ in te_rows:
+    te_banded, te_sets = _driver_minhash_rows(test, t_id, t_text, n_sigs,
+                                              n_bands, shingle_n)
+    tr_banded, tr_sets = _driver_minhash_rows(train, id_col, text_col,
+                                              n_sigs, n_bands, shingle_n)
+    te_buckets: dict = defaultdict(set)
+    for rid, bands in te_banded:
         for bi, bh in enumerate(bands):
-            te_buckets[(bi, bh)].append(rid)
+            te_buckets[(bi, bh)].add(rid)
     # candidate pre-flight: train entries x matching test-bucket sizes
     cand: set = set()
-    for rid, bands, _ in tr_rows:
+    for rid, bands in tr_banded:
         for bi, bh in enumerate(bands):
             for tid in te_buckets.get((bi, bh), ()):
                 cand.add((rid, tid))
                 if len(cand) > _MINHASH_DRIVER_MAX_CAND_PAIRS:
                     return None
-    th = float(jaccard_threshold)
     agg: dict = {}
-    for a, b in cand:
-        sa, sb = tr_sets[a], te_sets[b]
-        inter = float(len(sa & sb))
-        union = float(len(sa) + len(sb)) - inter
-        j = _round6(inter / union)
-        if j >= th:
-            mx, n = agg.get(a, (None, 0))
-            agg[a] = (j if mx is None or j > mx else mx, n + 1)
+    for a, _, j in _verified_pairs(cand, tr_sets, te_sets,
+                                   jaccard_threshold):
+        mx, n = agg.get(a, (j, 0))
+        agg[a] = (max(mx, j), n + 1)
     idt = dict(train.dtypes)[id_col]
     return local_df(train.sparkSession,
                     sorted((a, mx, n) for a, (mx, n) in agg.items()),
@@ -1811,8 +1803,8 @@ def decontaminate_neardup(
         _jaccard_filtered(pairs, jaccard_threshold)
         .groupBy(F.col("id_a").alias("id"))
         .agg(F.max("jaccard_r").alias("max_jaccard"),
-             # pairs are (id_a, id_b)-unique post-dropDuplicates, so a
-             # plain combinable count IS the distinct test-hit count
+             # one row per verified (train row, test row) pair: the
+             # distinct test-hit count when ids are unique per row
              F.count("*").alias("n_test_hits"))
     )
 

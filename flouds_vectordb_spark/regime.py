@@ -27,7 +27,9 @@ from pyspark.sql import DataFrame
 
 # driver regimes (dedup family, decontaminations, substring spans, BPE,
 # DSIR): below this the whole operator runs off ONE fetch of bounded
-# scalars (pyhash.fetch_lists for every hashing operator). The
+# scalars (pyhash.fetch_lists for every hashing operator), keyed by row
+# with the id as a label, so duplicate ids stay in this regime; the
+# dedup family leaves it only on its candidate-pair pre-flight. The
 # distributed plans pay 9-31 scheduled jobs at gate scale (5k docs ≈
 # 0.6 MB), ~100% scheduling; 16 MB is the same collect bound as the
 # frontier/sample collects in dedup. Above it the working set (candidate

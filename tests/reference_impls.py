@@ -116,6 +116,44 @@ def prefix_filtered(cand: DataFrame, probe: DataFrame,
     return j.filter(keep).drop("_sza", "_szb", "_pra", "_prb")
 
 
+def ngram_pairs_ref(ids: list, sets: list[list[int]],
+                    t: float) -> list[tuple]:
+    """Plain-loop dedup_ngram_jaccard over rows (id, sorted distinct
+    hash list), written from the distributed plan: a candidate is an id
+    pair a < b with a prefix collision between some row of each passing
+    the size-ratio and positional filters; then every row of a x every
+    row of b is verified (0/0 drops) and each passing row pair is one
+    output row."""
+    import math
+
+    from flouds_vectordb_spark.operators.dedup import _round6
+
+    rows = list(zip(ids, sets))
+    cand = set()
+    for a, sa in rows:
+        for b, sb in rows:
+            if not a < b:
+                continue
+            na, nb = len(sa), len(sb)
+            for p, h in enumerate(sa[:na - math.ceil(t * na) + 1]):
+                for q, g in enumerate(sb[:nb - math.ceil(t * nb) + 1]):
+                    if (h == g and float(min(na, nb)) >= t * float(max(na, nb))
+                            and float(1 + min(na - p - 1, nb - q - 1))
+                            >= (t / (1.0 + t)) * float(na + nb) - 1e-9):
+                        cand.add((a, b))
+    out = []
+    for a, b in cand:
+        for x, sa in rows:
+            for y, sb in rows:
+                if (x, y) != (a, b):
+                    continue
+                inter = float(len(set(sa) & set(sb)))
+                union = float(len(sa) + len(sb)) - inter
+                if union and _round6(inter / union) >= t:
+                    out.append((a, b, _round6(inter / union)))
+    return sorted(out)
+
+
 # --- queries: the Catalyst late-interaction clone fixture ------------------
 
 def li_clustered_tokens_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:

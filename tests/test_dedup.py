@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from flouds_vectordb_spark import regime
+from flouds_vectordb_spark import lifecycle, regime
 from flouds_vectordb_spark.operators.ann import dedup_embedding_cosine
 from flouds_vectordb_spark.operators.dedup import (
     dedup_exact,
@@ -166,6 +166,28 @@ def test_ngram_jaccard_prefix_filter_has_no_false_negatives(spark, threshold):
     got = {(r["id_a"], r["id_b"]): r["jaccard_r"]
            for r in dedup_ngram_jaccard(df, jaccard_threshold=threshold).collect()}
     assert got == expected
+
+
+@pytest.mark.parametrize("t", [0.0, 0.25, 1 / 3, 0.5, 0.8, 1.0])
+def test_ngram_driver_pairs_match_loop_reference(t):
+    """The vectorized driver regime equals the plain-loop reference on
+    random rows with duplicate ids, empty rows and exact rational
+    thresholds (no Spark: both sides run on the same hash lists)."""
+    import numpy as np
+    from reference_impls import ngram_pairs_ref
+
+    from flouds_vectordb_spark.operators.dedup import _driver_ngram_pairs
+
+    rng = np.random.default_rng(11)
+    for _ in range(200):
+        n = int(rng.integers(1, 9))
+        ids = rng.integers(0, 5, size=n).tolist()
+        sets = [sorted(set(rng.integers(0, 10, size=int(rng.integers(0, 7)))
+                           .tolist())) for _ in range(n)]
+        offsets = np.cumsum([0] + [len(x) for x in sets]).astype(np.int64)
+        values = np.array([h for x in sets for h in x], dtype=np.int64)
+        got = _driver_ngram_pairs(ids, values, offsets, t, 0, False)
+        assert got == ngram_pairs_ref(ids, sets, t), (ids, sets)
 
 
 def test_ngram_jaccard_preflight_guard_aborts_on_quadratic_corpus(
@@ -711,26 +733,72 @@ def parquet_docs(spark, tmp_path_factory):
     return spark.read.parquet(pq)
 
 
-def test_minhash_driver_regime_equals_distributed(parquet_docs, monkeypatch):
+_BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
+_NEAR = _BASE.replace("today", "tonight")
+_FAR = _BASE.replace("quick brown", "slow red").replace("river", "lake")
+# duplicate-id input: every row of an id is verified against every row
+# of another id and never against a row of its own id. Ids 11 and 12
+# each hold an empty row, so that candidate id pair has a 0/0 row pair.
+_DUP_ID_ROWS = [
+    (1, _BASE), (1, _NEAR), (1, _FAR), (2, _BASE), (2, _FAR), (3, _NEAR),
+    (4, "other words entirely here"),
+    (11, _BASE), (11, ""), (12, _BASE), (12, ""),
+    (13, "alpha beta gamma delta"), (13, _BASE + " extra")]
+
+
+@pytest.fixture()
+def dup_id_docs(spark, tmp_path):
+    """The duplicate-id input as a parquet frame (driver-regime sized)."""
+    pq = str(tmp_path / "dup.parquet")
+    spark.createDataFrame(_DUP_ID_ROWS, "id long, text string").write.parquet(pq)
+    return spark.read.parquet(pq)
+
+
+def _twin_rows(sql_fn, *frames, **kw):
+    """Sorted rows of a DuckDB twin run over the parquet files behind
+    each frame."""
+    import duckdb
+
+    srcs = ["read_parquet([" + ", ".join(
+        f"'{f.removeprefix('file://')}'" for f in df.inputFiles()) + "])"
+        for df in frames]
+    return sorted(map(tuple, duckdb.connect().execute(
+        sql_fn(*srcs, **kw)).fetchall()))
+
+
+def _regime_rows(call, monkeypatch):
+    """(driver rows, forced-distributed rows) of call(). The driver regime
+    must serve its call with no persist: every distributed plan it
+    replaces persists, so an unchanged persist_epoch proves no fallback."""
+    epoch = lifecycle.persist_epoch()
+    drv = sorted(map(tuple, call().collect()))
+    assert lifecycle.persist_epoch() == epoch  # the driver regime served it
+    with monkeypatch.context() as m:
+        m.setattr(regime, "DRIVER_BYTES", -1)
+        dist = sorted(map(tuple, call().collect()))
+    return drv, dist
+
+
+def test_minhash_driver_regime_equals_distributed(parquet_docs, dup_id_docs,
+                                                  monkeypatch):
     """The r13 driver regime (one fetch + driver bucketing/verify) must be
-    row-identical to the shuffle regime (forced by DRIVER_BYTES = -1) on
-    pairs and on component labels, at multiple thresholds."""
-    assert regime.fits(parquet_docs, regime.DRIVER_BYTES)  # engages it
-    for thr in (0.3, 0.5, 0.8):
-        drv_pairs = sorted(map(tuple, dedup_minhash(
-            parquet_docs, jaccard_threshold=thr).collect()))
-        drv_lbls = sorted(map(tuple, dedup_minhash(
-            parquet_docs, jaccard_threshold=thr,
-            output="components").collect()))
-        monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
-        dist_pairs = sorted(map(tuple, dedup_minhash(
-            parquet_docs, jaccard_threshold=thr).collect()))
-        dist_lbls = sorted(map(tuple, dedup_minhash(
-            parquet_docs, jaccard_threshold=thr,
-            output="components").collect()))
-        monkeypatch.undo()
-        assert drv_pairs == dist_pairs and drv_pairs, thr
-        assert drv_lbls == dist_lbls and drv_lbls, thr
+    row-identical to the shuffle regime (forced by DRIVER_BYTES = -1) and
+    to the SQL twin on pairs and on component labels, at multiple
+    thresholds, duplicate ids included."""
+    from flouds_vectordb_spark.operators.dedup import (
+        dedup_minhash_components_sql,
+        dedup_minhash_sql,
+    )
+
+    for docs in (parquet_docs, dup_id_docs):
+        assert regime.fits(docs, regime.DRIVER_BYTES)  # engages it
+        for thr in (0.3, 0.5, 0.8):
+            for out, twin in (("pairs", dedup_minhash_sql),
+                              ("components", dedup_minhash_components_sql)):
+                drv, dist = _regime_rows(lambda: dedup_minhash(
+                    docs, jaccard_threshold=thr, output=out), monkeypatch)
+                want = _twin_rows(twin, docs, jaccard_threshold=thr)
+                assert drv == dist == want and drv, (thr, out)
 
 
 def test_joined_input_takes_the_driver_regime(spark, parquet_docs, tmp_path,
@@ -775,32 +843,40 @@ def test_minhash_driver_preflight_falls_back(parquet_docs, monkeypatch):
     assert got == want and got
 
 
-def test_ngram_driver_regime_equals_distributed(parquet_docs, monkeypatch):
-    for thr in (0.3, 0.5, 0.8):
-        drv = sorted(map(tuple, dedup_ngram_jaccard(
-            parquet_docs, jaccard_threshold=thr).collect()))
-        monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
-        dist = sorted(map(tuple, dedup_ngram_jaccard(
-            parquet_docs, jaccard_threshold=thr).collect()))
-        monkeypatch.undo()
-        assert drv == dist and drv, thr
+def test_ngram_driver_regime_equals_distributed(parquet_docs, dup_id_docs,
+                                                monkeypatch):
+    from flouds_vectordb_spark.operators.dedup import dedup_ngram_jaccard_sql
+
+    for docs in (parquet_docs, dup_id_docs):
+        for thr in (0.3, 0.5, 0.8):
+            drv, dist = _regime_rows(lambda: dedup_ngram_jaccard(
+                docs, jaccard_threshold=thr), monkeypatch)
+            want = _twin_rows(dedup_ngram_jaccard_sql, docs,
+                              jaccard_threshold=thr)
+            assert drv == dist == want and drv, thr
 
 
-def test_simhash_driver_regime_equals_distributed(parquet_docs, monkeypatch):
-    from flouds_vectordb_spark.operators.dedup import dedup_simhash
+def test_simhash_driver_regime_equals_distributed(parquet_docs, dup_id_docs,
+                                                  monkeypatch):
+    """One row per distinct (id_a, h_a, id_b, h_b) sharing a band, in
+    both regimes and the twin; three distributed runs agree (keeping one
+    arbitrary fingerprint pair per id pair made them differ)."""
+    from flouds_vectordb_spark.operators.dedup import dedup_simhash_sql
 
-    drv = sorted(map(tuple, dedup_simhash(parquet_docs,
-                                          max_hamming=6).collect()))
-    monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
-    dist = sorted(map(tuple, dedup_simhash(parquet_docs,
-                                           max_hamming=6).collect()))
-    assert drv == dist and drv
+    for docs in (parquet_docs, dup_id_docs):
+        runs = [_regime_rows(lambda: dedup_simhash(docs, max_hamming=6),
+                             monkeypatch) for _ in range(3)]
+        want = _twin_rows(dedup_simhash_sql, docs, max_hamming=6)
+        assert all(run == (want, want) for run in runs) and want
 
 
 def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
                                                         monkeypatch):
     import flouds_vectordb_spark.operators.dedup as dd
-    from flouds_vectordb_spark.operators.dedup import decontaminate_neardup
+    from flouds_vectordb_spark.operators.dedup import (
+        decontaminate_neardup,
+        decontaminate_neardup_sql,
+    )
 
     def parquet(rows, name):
         path = str(tmp_path / name)
@@ -821,7 +897,8 @@ def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
     dup_te = parquet([(10, base), (10, edit), (11, "unrelated held out")],
                      "dup_te.parquet")
     # a held-out side built in memory (unknown size) must not veto the
-    # driver regime: only the train side's size gates it
+    # driver regime: only the train side's size gates it (no files, so
+    # no twin run)
     in_memory = spark.createDataFrame(te_rows, "id long, text string")
     for train, te, thrs in ((tr, parquet(te_rows, "te.parquet"), (0.3, 0.8)),
                             (tr, in_memory, (0.3, 0.8)),
@@ -831,14 +908,14 @@ def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
             real = dd._driver_decon_neardup
             monkeypatch.setattr(dd, "_driver_decon_neardup",
                                 lambda *a: calls.append(1) or real(*a))
-            drv = sorted(map(tuple, decontaminate_neardup(
-                train, te, jaccard_threshold=thr).collect()))
-            monkeypatch.setattr(regime, "DRIVER_BYTES", -1)
-            dist = sorted(map(tuple, decontaminate_neardup(
-                train, te, jaccard_threshold=thr).collect()))
+            drv, dist = _regime_rows(lambda: decontaminate_neardup(
+                train, te, jaccard_threshold=thr), monkeypatch)
             monkeypatch.undo()
             assert calls == [1]  # the driver regime ran for drv only
             assert drv == dist and drv, thr
+            if te.inputFiles():
+                assert drv == _twin_rows(decontaminate_neardup_sql, train,
+                                         te, jaccard_threshold=thr), thr
 
 
 def test_decontaminate_driver_regime_equals_distributed(spark, tmp_path,
