@@ -245,11 +245,16 @@ def _to_arrow_no_aqe(df: DataFrame):
         return df.toArrow()
 
 
-# task width of the one hashing+fetch job every driver regime runs: the
-# pandas-UDF md5 pass is ~0.4 core-s at the 16 MB driver bound, so 8 tasks
-# keep every task >= 50 ms while full defaultParallelism width (32) pays
-# more per-task overhead than it parallelizes (guide §2.6; measured
-# 0.55 s vs 0.58 s at sf0.1, and the narrower shuffle is cheaper). The
+# task width of the one hashing+fetch job every driver regime runs. The
+# md5 shingle pass costs ~0.29 core-s per MB of text: 0.48-0.51 core-s
+# for the 5,000-doc (1.72 MB) perfbench curate corpus, 3-grams, one
+# core, three runs — ~4.8 core-s at the 16 MB driver bound. 8 tasks
+# therefore give each task ~60 ms at curate scale (tasks stay >= 50 ms
+# from ~1.4 MB up) and ~0.6 s at the bound, while full
+# defaultParallelism width (32) pays more per-task overhead than it
+# parallelizes at gate scale (guide §2.6; measured 0.55 s vs 0.58 s at
+# sf0.1, and the narrower shuffle is cheaper). Near the bound a wider
+# spread may win on a many-core box; that needs an interleaved A/B. The
 # spread itself remains a no-op at scale (inputs arrive in >= cores
 # splits), and spread_small_input caps at defaultParallelism for
 # low-core sessions.

@@ -551,7 +551,7 @@ def late_interaction_topk(
 def _li_scored(maxsim: DataFrame) -> DataFrame:
     """(qid, doc_id, _s): the qpos-sorted float fold of the (qid, doc_id,
     _qpos, _ms) MaxSim table — the aggregate half of _li_fold_topk, split
-    out (r14) so the recall harness can compute it ONCE and feed both the
+    out (r14) so recall_df can compute it ONCE and feed both the
     exact and the candidate-restricted rankings (restricting whole
     (qid, doc_id) groups commutes with the per-group fold, so the doubles
     are bit-identical either way)."""
@@ -560,27 +560,21 @@ def _li_scored(maxsim: DataFrame) -> DataFrame:
                     F.lit(0.0), lambda acc, e: acc + e["_ms"]).alias("_s"))
 
 
-def _li_rank(scored: DataFrame, k: int) -> DataFrame:
-    """Per-qid rank window + k-cut over a (qid, doc_id, _s) table — the
-    ranking half of _li_fold_topk."""
+def _li_fold_topk(maxsim: DataFrame, k: int) -> DataFrame:
+    """Shared tail of every late-interaction variant: the qpos-sorted
+    float fold of the (qid, doc_id, _qpos, _ms) MaxSim table + the
+    per-qid rank window. One implementation so the exact operator and
+    the pruned re-rank rank IDENTICAL doubles with identical
+    tie-breaks (recall_df ranks the same _li_scored fold)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.col("_s").desc(),
                                           F.col("doc_id").asc())
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _li_scored(maxsim).withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= int(k))
         .select("qid", "doc_id", "rank", F.round("_s", 6).alias("score_r"))
     )
-
-
-def _li_fold_topk(maxsim: DataFrame, k: int) -> DataFrame:
-    """Shared tail of every late-interaction variant: the qpos-sorted
-    float fold of the (qid, doc_id, _qpos, _ms) MaxSim table + the
-    per-qid rank window. One implementation so the exact operator, the
-    pruned re-rank and the recall grading harness rank IDENTICAL
-    doubles with identical tie-breaks."""
-    return _li_rank(_li_scored(maxsim), k)
 
 
 def late_interaction_topk_pruned(
@@ -644,8 +638,7 @@ def late_interaction_topk_pruned(
     # NET-NEGATIVE for exactly that reason (the collect disqualified the
     # plan from _memoized, costing a full rebuild+execute per bench
     # pass: 0.84 -> 1.4-2 s). Callers that already hold collected query
-    # rows pass query_rows= and get the driver-built block (recall_pair,
-    # topk_ivf, topk_hnsw do).
+    # rows pass query_rows= and get the driver-built block.
     if dim is None:
         first = query_tokens.select(vector_col).first()
         if first is None or first[0] is None:  # r11 ADVICE: loud
@@ -766,105 +759,6 @@ def _li_rerank_candidates(doc_tokens: DataFrame, qt, cand: DataFrame,
     return _li_fold_topk(maxsim, k)
 
 
-def late_interaction_recall_pair(
-    doc_tokens: DataFrame,
-    query_tokens: DataFrame,
-    k: int = 10,
-    bits: int = 20,
-    radius: int = 2,
-    dim: int | None = None,
-    id_col: str = "doc_id",
-    pos_col: str = "pos",
-    vector_col: str = "vector",
-    qid_col: str = "qid",
-    sig_table: DataFrame | None = None,
-    seed: int = 7,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Grading harness for the pruned-recall gates (r13 VERDICT ask #2):
-    the exact AND the SRP-pruned top-k lists from ONE MaxSim
-    computation, returned unioned with a `_src` tag ('exact'/'pruned').
-    `candidates` substitutes any other stage-2 fetcher's (qid, doc_id)
-    pairs for the SRP stage — the IVF/HNSW recall gates grade through
-    the same shared MaxSim.
-
-    Equivalence (why this grades the real operators): the exact operator
-    folds the full MaxSim table M = (qid, doc_id, _qpos, max-cosine);
-    the pruned operator's re-rank folds the MaxSim of its candidate docs
-    only — which is exactly M restricted to the candidate (qid, doc_id)
-    pairs (same hoisted-norm cosine expressions, same qpos-sorted fold,
-    same window, via the shared _li_fold_topk / _li_srp_candidates
-    stages). So computing M ONCE and folding it twice is bit-identical
-    to running both operators, with the expensive crossJoin arithmetic
-    executed once instead of once per side. Pinned by
-    test_li_recall_pair_matches_operators.
-
-    Two regimes (regime.fits(doc_tokens, regime.SMALL_BYTES)):
-    - small: ONE action collects the tagged union of M's scalars and the
-      candidate pairs; the qpos-sorted fold, HALF_UP rounding, ranking
-      and k-cut run driver-side with the same float discipline
-      (sequential IEEE-double adds in qpos order == the engine fold;
-      java.math.BigDecimal(double) HALF_UP == Python
-      Decimal(float) quantize ROUND_HALF_UP). M is bounded by
-      n_docs x n_query_tokens SCALAR rows — tiny wherever the leaf check
-      passes. Measured: the distributed shape's wall at gate scale was
-      ~90% per-stage Catalyst/AQE floor (15 jobs for 4320 M rows).
-    - large: M is tracked_persist-ed (call inside persist_scope) and the
-      folds/windows run distributed, exactly the operators' shape.
-    Regime equivalence pinned by test_li_recall_pair_regimes_identical."""
-    from flouds_vectordb_spark.lifecycle import tracked_persist
-
-    # same driver-side query block as the pruned operator (tiny by the
-    # serving contract; one collect replaces ~0.8 s of signature-tree
-    # py4j + parse + analysis per call)
-    qrows = query_tokens.select(qid_col, pos_col, vector_col).collect()
-    if dim is None:
-        first = next((r[2] for r in qrows if r[2] is not None), None)
-        if first is None:
-            raise ValueError(
-                "query_tokens is empty (or its vectors are null); pass dim "
-                "explicitly to late_interaction_recall_pair")
-        dim = len(first)
-    planes = srp_planes(dim, bits, seed)
-    qt = _li_local_query_block(doc_tokens.sparkSession, query_tokens, qrows,
-                               planes, qid_col, pos_col, vector_col)
-    if qt is None:
-        qt = F.broadcast(query_tokens.select(
-            F.col(qid_col).alias("qid"), F.col(pos_col).alias("_qpos"),
-            F.col(vector_col).alias("_qv"),
-            V.norm(F.col(vector_col)).alias("_qn"),
-            srp_signature_expr(quote_ident(vector_col),
-                               planes).alias("_qsig")))
-    dt = doc_tokens.select(F.col(id_col).alias("doc_id"),
-                           F.col(vector_col).alias("_dv"),
-                           V.norm(F.col(vector_col)).alias("_dn"))
-    cs = F.try_divide(V.dot_score(F.col("_dv"), F.col("_qv")),
-                      F.col("_dn") * F.col("_qn"))
-    maxsim = (
-        dt.crossJoin(qt.drop("_qsig"))
-        .select("qid", "doc_id", "_qpos", cs.alias("_cs"))
-        .groupBy("qid", "doc_id", "_qpos").agg(F.max("_cs").alias("_ms")))
-    small = regime.fits(doc_tokens, regime.SMALL_BYTES)
-    # candidates= overrides the SRP stage: any stage-2 fetcher's (qid,
-    # doc_id) pairs (IVF probe, HNSW beam) grade through the same shared
-    # MaxSim — the r13 fusion that halves every recall gate
-    cand = candidates if candidates is not None else _li_srp_candidates(
-        doc_tokens, qt, planes, radius, id_col, vector_col, sig_table,
-        small=small)
-    if small:
-        return _li_recall_pair_small(maxsim, cand, k)
-    # fold ONCE, restrict after (r14): the candidate join drops whole
-    # (qid, doc_id) groups, which commutes with the per-group fold — so
-    # both rankings read one shared scored aggregate instead of
-    # re-executing the MaxSim subtree per side (same doubles, pinned by
-    # test_li_recall_pair_matches_operators)
-    scored = tracked_persist(_li_scored(maxsim))
-    exact = _li_rank(scored, k).withColumn("_src", F.lit("exact"))
-    pruned = _li_rank(scored.join(F.broadcast(cand), ["qid", "doc_id"]),
-                      k).withColumn("_src", F.lit("pruned"))
-    return exact.unionByName(pruned)
-
-
 def late_interaction_recall_df(
     doc_tokens: DataFrame,
     query_tokens: DataFrame,
@@ -889,17 +783,29 @@ def late_interaction_recall_df(
     every bench pass; this shape pays it once per session).
 
     Semantics identical to grading late_interaction_topk against the
-    pruned/fetched operator: both top-k lists fold from one MaxSim
-    definition M (the pruned side is M restricted to the candidate
-    pairs — recall_pair's equivalence argument), then
-    recall = sum_q |exact_q ∩ fetched_q| / sum_q |exact_q|. r14: the
+    pruned/fetched operator, then
+    recall = sum_q |exact_q ∩ fetched_q| / sum_q |exact_q|.
+
+    Equivalence (why this grades the real operators): the exact operator
+    folds the full MaxSim table M = (qid, doc_id, _qpos, max-cosine);
+    the pruned operator's re-rank folds the MaxSim of its candidate docs
+    only — which is exactly M restricted to the candidate (qid, doc_id)
+    pairs (same hoisted-norm cosine expressions, same qpos-sorted fold
+    via the shared _li_scored / _li_srp_candidates stages, same
+    (score desc, doc_id asc) ranking). So computing M ONCE and ranking
+    it twice grades exactly what the two operators return, with the
+    expensive crossJoin arithmetic executed once instead of once per
+    side. Pinned by test_li_recall_df_matches_operators and
+    test_li_recall_df_candidate_override_matches_ivf. r14: the
     candidate restriction joins ABOVE one shared scored fold (dropping
     whole (qid, doc_id) groups commutes with the per-group fold — same
     doubles), so the MaxSim crossJoin subtree appears ONCE in the plan
     and its aggregate exchange is shared by both rankings instead of
     re-executing per side (the r13 shape scheduled 17 jobs per pass on
     the SRP gate; the single-subtree shape runs the crossJoin once).
-    `candidates` as in late_interaction_recall_pair."""
+    `candidates` substitutes any other stage-2 fetcher's (qid, doc_id)
+    pairs for the SRP stage — the IVF/HNSW recall gates grade through
+    the same shared MaxSim."""
     if dim is None:
         raise ValueError(
             "late_interaction_recall_df requires dim (zero-action "
@@ -952,63 +858,6 @@ def late_interaction_recall_df(
                 F.count(F.when(F.col("_he"), F.lit(1))))
             >= F.lit(float(min_recall)),
             F.lit(False)).alias("recall_ge_095"))
-
-
-def _li_recall_pair_small(maxsim: DataFrame, cand: DataFrame,
-                          k: int) -> DataFrame:
-    """Small-corpus regime of late_interaction_recall_pair: one unioned
-    collect of scalars, driver-side fold/rank (see its docstring)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from flouds_vectordb_spark.functions.local import local_df
-
-    rows = (
-        maxsim.select("qid", "doc_id", "_qpos", "_ms",
-                      F.lit("m").alias("_t"))
-        .unionByName(cand.select(
-            "qid", "doc_id", F.lit(None).cast("bigint").alias("_qpos"),
-            F.lit(None).cast("double").alias("_ms"),
-            F.lit("c").alias("_t")))
-    ).collect()
-    by_pair: dict[tuple, list] = {}
-    cand_pairs: set = set()
-    for r in rows:
-        key = (int(r["qid"]), int(r["doc_id"]))
-        if r["_t"] == "c":
-            cand_pairs.add(key)
-        else:
-            by_pair.setdefault(key, []).append((r["_qpos"], r["_ms"]))
-    scores: dict[tuple, float | None] = {}
-    for key, contribs in by_pair.items():
-        s: float | None = 0.0
-        for _, ms in sorted(contribs):  # qpos-sorted sequential fold
-            s = None if (s is None or ms is None) else s + ms
-        scores[key] = s
-
-    def _round6(x: float) -> float:
-        # java.math.BigDecimal(double).setScale(6, HALF_UP) twin: Decimal
-        # of a float is its exact binary expansion, as BigDecimal's is
-        return float(Decimal(x).quantize(Decimal("0.000001"),
-                                         rounding=ROUND_HALF_UP))
-
-    out = []
-    for tag, keep in (("exact", None), ("pruned", cand_pairs)):
-        per_qid: dict[int, list] = {}
-        for (qid, doc_id), s in scores.items():
-            if keep is not None and (qid, doc_id) not in keep:
-                continue
-            per_qid.setdefault(qid, []).append((doc_id, s))
-        for qid, lst in per_qid.items():
-            # score DESC NULLS LAST, doc_id ASC — the window's order
-            lst.sort(key=lambda p: (p[1] is None,
-                                    -p[1] if p[1] is not None else 0.0,
-                                    p[0]))
-            for rank, (doc_id, s) in enumerate(lst[:int(k)], start=1):
-                out.append((qid, doc_id, rank,
-                            None if s is None else _round6(s), tag))
-    return local_df(maxsim.sparkSession, out,
-                    "qid bigint, doc_id bigint, rank int, "
-                    "score_r double, _src string")
 
 
 def build_token_sig_index(doc_tokens: DataFrame, path: str,
@@ -1223,7 +1072,7 @@ def li_ivf_candidates(spark, ivf_path: str, qrows, nprobe: int = 8
                       ) -> DataFrame:
     """The IVF probe's (qid, doc_id) candidate pairs from collected
     query-token rows — stage 2 alone, shared by late_interaction_topk_ivf
-    and the recall grading harness (candidates= on recall_pair)."""
+    and the recall grading harness (candidates= on recall_df)."""
     import numpy as np
 
     from flouds_vectordb_spark.functions.local import local_df

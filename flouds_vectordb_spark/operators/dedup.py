@@ -581,12 +581,16 @@ def _band_side_sql(src: str, tag: str, id_expr: str, text_expr: str,
         f"SELECT id, {extra}{b} AS band_idx, band{b} AS band_hash "
         f"FROM _banded{sfx}" for b in range(n_bands))
     # _vs: the hash64 verify set — the twin of _band_entries' vset (r12);
-    # Jaccard is computed over these, not the shingle strings
+    # Jaccard is computed over these, not the shingle strings. Zero-
+    # shingle rows are left out as the engine leaves them out: a
+    # duplicate id's empty row would otherwise verify at J = 0 against
+    # the other id's rows whenever the threshold is <= 0
     vset = (f"list_sort(list_distinct(list_transform(shingles, "
             f"s -> {hash64_sql('s')})))")
     return f"""
 _sh{sfx} AS (SELECT {id_expr} AS id, {sh} AS shingles FROM {src}),
-_vs{sfx} AS (SELECT id, {vset} AS vset FROM _sh{sfx}),
+_vs{sfx} AS (SELECT id, {vset} AS vset FROM _sh{sfx}
+            WHERE len(shingles) > 0),
 _hashed{sfx} AS (SELECT id, shingles, {h32} AS _h32 FROM _sh{sfx}),
 _sigs{sfx} AS (SELECT id, shingles{sig_sel} FROM _hashed{sfx}),
 _banded{sfx} AS (SELECT *{band_sel} FROM _sigs{sfx}),

@@ -343,7 +343,6 @@ def hybrid_search_many(
     chunk_col: str | None = None,
     meta_col: str | None = None,
     sparse_chunk_col: str = "chunk",
-    sparse_prune: bool | None = None,
 ) -> DataFrame:
     """Batched RRF hybrid: queries is a (qid, vector, text) sequence;
     returns (qid, id, rank, rrf_score [, chunk, meta_kv]) with rank
@@ -397,8 +396,7 @@ def hybrid_search_many(
 
         postings = bm25_postings(df, id_col=id_col, chunk_col=sparse_chunk_col)
     sparse = (
-        sparse_search_many(postings, sparse_q, req.sparse_request(),
-                           prune=sparse_prune)
+        sparse_search_many(postings, sparse_q, req.sparse_request())
         .select("qid", "id", F.col("rank").alias("sparse_rank_"))
     )
 

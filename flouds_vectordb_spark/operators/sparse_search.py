@@ -528,21 +528,6 @@ def sparse_search(
 _ISIN_TERM_CAP = 512
 
 # --- max-score (WAND-family) floor pruning for heavy batched blocks (r10) ----
-# Auto-engage the floor prune only when the posting table is a BARE FILE
-# SCAN with at least this many on-disk bytes. Two failed designs inform
-# the shape of this gate: (a) Catalyst's size estimate of a COMPUTED
-# posting plan is join-inflated garbage (measured "50 GB" for a 5k-doc
-# build), so a bare estimate threshold engages on every tiny gate query;
-# (b) probing the estimate at all costs an optimizer run through py4j —
-# measured +0.4 s per gate query, a real bench regression. The logical
-# (unanalyzed, unoptimized) plan's shape is free to read: a scan is <= 4
-# lines. Computed plans (catalog derive-at-read, in-memory builds) opt
-# in explicitly — the catalog passes prune=True from its free sum_dl
-# counter.
-_WAND_MIN_INPUT_BYTES = 64 << 20
-# catalog hint (upsert.search_sparse_many): engage when the index's token
-# counter says the posting table is past this many rows
-_WAND_MIN_POSTINGS_HINT = 20_000_000
 # docs sampled (arbitrary membership — the floor from ANY k docs is
 # valid, so the sample affects prune strength only, never results)
 _WAND_FLOOR_SAMPLE = 8192
@@ -617,46 +602,6 @@ def _rank_cut_many(scored: DataFrame, req: SparseSearchRequest) -> DataFrame:
                 (F.col("_pre") - F.lit(req.offset)).alias("rank"),
                 F.round(F.col("_score"), dec).alias("score"))
     )
-
-
-# logical-plan node classes a "bare file scan" may consist of: the scan
-# leaf (UnresolvedDataSource on Spark 4's lazy reader path, LogicalRelation
-# once resolved) under at most a few trivial wrappers
-_SCAN_LEAVES = {"UnresolvedDataSource", "LogicalRelation"}
-_SCAN_WRAPPERS = {"Project", "Filter", "SubqueryAlias"}
-
-
-def _honest_scan_bytes(df: DataFrame) -> int | None:
-    """On-disk input bytes when df is a bare file scan (local paths),
-    else None. Walks LOGICAL (pre-analysis) plan node class names only —
-    ~0.6 ms per probe — never the optimizer or the plan's toString: the
-    optimizer probe cost ~0.4 s per gate query, and toString on a wide
-    computed plan is a 100 KB py4j string transfer."""
-    import os
-    import re
-
-    try:
-        p = df._jdf.queryExecution().logical()
-        for _ in range(4):
-            name = p.getClass().getSimpleName()
-            if name in _SCAN_LEAVES:
-                break
-            if name in _SCAN_WRAPPERS and p.children().size() == 1:
-                p = p.children().head()
-                continue
-            return None
-        else:
-            return None
-        from urllib.parse import unquote
-
-        total = 0
-        for f in df.inputFiles():
-            # inputFiles() returns percent-encoded URIs — decode before
-            # hitting the filesystem ("my corpus" arrives as my%20corpus)
-            total += os.path.getsize(unquote(re.sub("^file:/+", "/", f)))
-        return total
-    except Exception:
-        return None
 
 
 def _pivot_per_doc(pruned: DataFrame, terms: list) -> DataFrame:
@@ -766,9 +711,10 @@ def sparse_search_many(
     (dynamic) prune. Duplicate (id, term) posting rows — an I1-invariant
     violation — degrade to a deterministic summed score in both plans.
 
-    prune: None (default) auto-engages the max-score floor prune on
-    honestly-heavy posting scans (see _WAND_* constants); True/False
-    force it. The floor is EXACT (_wand_floor_filter): a sampled fetch-th
+    prune: None (default) engages the max-score floor prune when the
+    posting plan's leaf bytes exceed regime.SMALL_BYTES (the one size
+    probe, which also gates the fold plan's qid repartition); True/False
+    force it. The floor is EXACT (_floor_filter): a sampled fetch-th
     best score lower-bounds the true one, and filtering _score_r >= θ
     before the rank window drops only rows that provably cannot place."""
     terms, qtf_rows = _query_term_matrix(queries)
@@ -783,11 +729,8 @@ def sparse_search_many(
     pruned = postings
     if len(terms) <= _ISIN_TERM_CAP:
         pruned = postings.filter(F.col("term").isin(terms))
-    if prune is not None:
-        engage = bool(prune)
-    else:
-        fb = _honest_scan_bytes(postings)
-        engage = fb is not None and fb >= _WAND_MIN_INPUT_BYTES
+    small = regime.fits(postings, regime.SMALL_BYTES)
+    engage = not small if prune is None else bool(prune)
     use_pivot = (len(terms) <= _PIVOT_TERM_CAP
                  and len(qtf_rows) <= _PIVOT_QID_CAP
                  and (engage or len(qtf_rows) >= _PIVOT_MIN_QIDS))
@@ -805,7 +748,7 @@ def sparse_search_many(
                     for t, c in zip(terms, row) if c > 0],
             "qid bigint, term string, _qtf int")
         contrib = _contrib_rows(pruned, qt)
-        if regime.fits(postings, regime.SMALL_BYTES):
+        if small:
             # gate-scale: hash(qid) satisfies both the score agg's
             # (qid, id) clustering (subset rule) and the rank window's
             # partitionBy(qid) — one exchange serves both stages. Gated:

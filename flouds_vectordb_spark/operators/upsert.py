@@ -1166,34 +1166,6 @@ class CollectionWriter:
             raise ValueError("no sparse index built; call build_sparse_index()")
         return hybrid_search(self.read_latest(), postings, req, **hybrid_kwargs)
 
-    def _wand_hint(self, use_index: bool) -> bool | None:
-        """prune hint for batched sparse search: the index meta counters
-        are free to read, and sum_dl bounds the posting row count — the
-        RELIABLE heavy-block signal the derive-at-read view's inflated
-        Catalyst estimate can't give (sparse_search._WAND_* rationale).
-        sum_dl is an UPPER bound (total token occurrences >= distinct
-        (doc, term) rows), so repetitive corpora may engage early — the
-        cost of a wrong engage is one pivot-cache persist plus a bounded
-        sample job, cheap relative to the heavy blocks the hint exists
-        for. None = let the operator's honest-scan auto-gate decide."""
-        import json
-        import os
-
-        from flouds_vectordb_spark.operators.sparse_search import (
-            _WAND_MIN_POSTINGS_HINT,
-        )
-
-        if not use_index:
-            return None
-        try:
-            with open(self._sparse_paths()["meta"]) as f:
-                counters = json.load(f)
-        except OSError:
-            return None
-        if int(counters.get("sum_dl", 0)) >= _WAND_MIN_POSTINGS_HINT:
-            return True
-        return None
-
     def search_sparse_many(self, queries, req, use_index: bool = True):
         """Batched BM25 (sparse_search.sparse_search_many): queries is a
         (qid, query_text) sequence; one term-pruned posting scan serves the
@@ -1210,8 +1182,7 @@ class CollectionWriter:
             raise ValueError("no sparse index built; call build_sparse_index()")
         if postings is None:
             postings = bm25_postings(self.read_latest())
-        return sparse_search_many(postings, queries, req,
-                                  prune=self._wand_hint(use_index))
+        return sparse_search_many(postings, queries, req)
 
     def search_hybrid_many(self, queries, req, use_index: bool = True,
                            **hybrid_kwargs):
@@ -1226,6 +1197,5 @@ class CollectionWriter:
         postings = self._stored_postings() if use_index else None
         if use_index and postings is None:
             raise ValueError("no sparse index built; call build_sparse_index()")
-        hybrid_kwargs.setdefault("sparse_prune", self._wand_hint(use_index))
         return hybrid_search_many(self.read_latest(), postings, queries, req,
                                   **hybrid_kwargs)

@@ -385,10 +385,14 @@ class HnswIndex:
         possible)."""
         return int(self.meta.get("appends", 1)) > 0
 
-    # below this corpus size a beam round runs as ONE job (tiny frontier
-    # broadcast into a whole-graph hash join — the full scan is cheaper than
-    # a second job's scheduling overhead); above it, two id-pruned scans per
-    # round (the 100 TB shape: each scan reads only matching row groups)
+    # below this corpus size a beam round runs as ONE fused action (tiny
+    # frontier broadcast into a whole-graph hash join, candidates scored in
+    # the same plan); above it, two id-pruned scans per round (the 100 TB
+    # shape: each scan reads only matching row groups). The fused round
+    # schedules as many Spark jobs as the two scans (its candidate
+    # broadcast and score shuffle are jobs of their own): it saves wall —
+    # one driver round trip and one plan build per round — not jobs
+    # (PLANS.md, "Regimes per operator", has the measurement)
     SMALL_CORPUS_ROWS = 1_000_000
 
     def beam_search(self, spark: SparkSession, query_vector: list[float],
@@ -556,14 +560,18 @@ class HnswIndex:
 
     def _expand_score_many(self, spark: SparkSession, frontiers: dict,
                            scorer: _BlockScorer) -> list[tuple]:
-        """ONE fused job per batched-beam round for small corpora: the
+        """ONE fused action per batched-beam round for small corpora: the
         (qid, frontier) block broadcasts into the frontier-pruned edge
         scan, the reachable (qid, dst) candidates broadcast into the node
         table, and every candidate scores against its query in the same
-        action. Candidates a query already scored rescore to the identical
-        value (the driver merge is idempotent), so results match the
-        two-job path exactly; the extra compute is bounded by frontier x
-        Mmax rows. Above SMALL_CORPUS_ROWS the two id-pruned scans win
+        action. The candidate broadcast and the score aggregation still
+        run as jobs of their own, so a fused round schedules as many jobs
+        as the two-scan round; what it saves is the driver round trip
+        (collect the adjacency, build the pair block, plan again).
+        Candidates a query already scored rescore to the identical value
+        (the driver merge is idempotent), so results match the two-scan
+        path exactly; the extra compute is bounded by frontier x Mmax
+        rows. Above SMALL_CORPUS_ROWS the two id-pruned scans win
         back their row-group skipping and this path is not used.
         (r8 note: a 2-hop lookahead variant was measured here and LOST —
         the second hop cannot prune its edge scan, so each round paid a
@@ -802,9 +810,9 @@ class HnswIndex:
                 break
             if int(self.meta.get("n", 0)) <= self.SMALL_CORPUS_ROWS:
                 # ONE fused action per round (see _expand_score_many) —
-                # halves the batched beam's driver-job count where the
-                # full-table hash join is cheaper than a second job's
-                # scheduling overhead
+                # the same job count as the two-scan round, one driver
+                # round trip fewer, where the full-table hash join is
+                # cheaper than that round trip
                 for q, fr in frontiers.items():
                     expanded[q].update(fr)
                 for q, i, sc in self._expand_score_many(spark, frontiers,

@@ -1777,8 +1777,8 @@ def _li_clustered_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _late_interaction_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 fused the two collects; r13 (VERDICT ask #2) went further
-    # twice: recall_pair shares ONE MaxSim definition between the exact
-    # and pruned sides, and the gate now returns the fully-LAZY
+    # twice: ONE MaxSim definition is shared between the exact and
+    # pruned sides, and the gate now returns the fully-LAZY
     # late_interaction_recall_df held in the module cache — a repeat
     # call (the bench timed pass) is a pure re-collect, no plan rebuild
     # (the cacheability lesson from pruned_topk).

@@ -43,7 +43,8 @@ DRIVER_BYTES = 16 << 20
 # bm25_tf, the sparse block repartition, pack_sequences, unigram_logprob,
 # perplexity_buckets, late-interaction paths, ngram pre-flight): 64 MB of
 # source text is a few M posting rows — comfortably one task's sort, and
-# a whole vocabulary in one broadcast row.
+# a whole vocabulary in one broadcast row. The sparse block's max-score
+# floor prune engages above it (the same probe as its repartition).
 SMALL_BYTES = 64 << 20
 
 

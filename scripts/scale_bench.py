@@ -7,9 +7,9 @@ with the Spark event log enabled; prints ONE JSON line:
    "build_sec": S|null, "query_sec": S,
    "shuffle_write_mb": MB, "shuffle_read_mb": MB, "tasks": N}
 
-query_sec covers the operator's action only; shuffle bytes are summed
-from the event log's TaskEnd metrics for tasks launched after the
-measured action started, so input counting / warm-up traffic is
+query_sec covers the operator's action only; shuffle bytes and tasks
+are the event-log totals (perfbench.eventlog) of the jobs run under the
+job group the timed window sets, so input counting / warm-up traffic is
 excluded. Fresh JVM per point keeps measurements independent (no JIT /
 cache carry-over between scales).
 
@@ -32,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from perfbench.eventlog import group_totals, merge
 
 
 def _session(app: str, ev_dir: str) -> SparkSession:
@@ -591,55 +593,14 @@ OPS = {
 }
 
 
-def _sum_shuffle(event_dir: str, t0_ms: int):
-    sw = sr = ntasks = 0
-    stages: dict[int, dict] = {}
-    names: dict[int, str] = {}
-    paths = []
-    for root, _dirs, files in os.walk(event_dir):
-        paths += [os.path.join(root, f) for f in files
-                  if not f.startswith(".") and "appstatus" not in f]
-    for path in paths:
-        with open(path, encoding="utf-8") as f:
-            for line in f:
-                if '"SparkListenerStageCompleted"' in line:
-                    try:
-                        si = json.loads(line).get("Stage Info") or {}
-                        names[int(si.get("Stage ID", -1))] = si.get(
-                            "Stage Name", "?")
-                    except json.JSONDecodeError:
-                        pass
-                    continue
-                if '"SparkListenerTaskEnd"' not in line:
-                    continue
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                info = ev.get("Task Info") or {}
-                if int(info.get("Launch Time", 0)) < t0_ms:
-                    continue
-                m = ev.get("Task Metrics") or {}
-                swm = m.get("Shuffle Write Metrics") or {}
-                srm = m.get("Shuffle Read Metrics") or {}
-                tsw = int(swm.get("Shuffle Bytes Written", 0))
-                tsr = (int(srm.get("Remote Bytes Read", 0))
-                       + int(srm.get("Local Bytes Read", 0)))
-                sw += tsw
-                sr += tsr
-                ntasks += 1
-                sid = int(ev.get("Stage ID", -1))
-                st = stages.setdefault(sid, {"w": 0, "r": 0, "n": 0})
-                st["w"] += tsw
-                st["r"] += tsr
-                st["n"] += 1
-    if os.environ.get("SCALE_BENCH_STAGES"):
-        top = sorted(stages.items(), key=lambda kv: -kv[1]["w"] - kv[1]["r"])
-        for sid, st in top[:8]:
-            print(f"  stage {sid}: write={st['w']/1e6:.1f}MB "
-                  f"read={st['r']/1e6:.1f}MB tasks={st['n']} "
-                  f"{names.get(sid, '?')[:90]}", file=sys.stderr)
-    return sw, sr, ntasks
+# job group of the timed window: the event log's totals for it (and any
+# group nested under it) are the JSON's shuffle and task counts
+WINDOW_GROUP = "scale_bench"
+
+
+def _open_window(spark: SparkSession) -> None:
+    """Put every job from here to the session's end in WINDOW_GROUP."""
+    spark.sparkContext.setJobGroup(WINDOW_GROUP, WINDOW_GROUP)
 
 
 def main() -> None:
@@ -659,16 +620,16 @@ def main() -> None:
             path = os.path.join(data_dir, "hnsw_index")
             if op == "hnsw_build":
                 shutil.rmtree(path, ignore_errors=True)
+                _open_window(spark)
             t0 = time.time()
-            t0_ms = int(t0 * 1000)
             idx = get_or_build_hnsw(embs, path, m=16, metric="COSINE",
                                     cell_target=256)
             build_sec = round(time.time() - t0, 3)
             first = embs.orderBy("id").limit(1).collect()[0]["vector"]
             q = [float(x) + 0.005 for x in first]
-            t1 = time.time()
             if op == "hnsw_search":
-                t0_ms = int(t1 * 1000)
+                _open_window(spark)
+            t1 = time.time()
             out = idx.search(spark, DenseSearchRequest(
                 query_vector=q, metric="COSINE", limit=10), ef=64)
             rows_out = len(out.collect())
@@ -679,8 +640,8 @@ def main() -> None:
             # time construction + action together: some operators (DSIR,
             # drop-ratio builds) run bounded collect jobs while building
             # the plan — that work belongs to the operator
+            _open_window(spark)
             t0 = time.time()
-            t0_ms = int(t0 * 1000)
             made = fn(spark, data_dir)
             if isinstance(made, tuple):  # (build, query) split ops
                 build_fn, query_fn = made
@@ -699,8 +660,8 @@ def main() -> None:
                 # pruned metadata read taken before the timed window.
                 df = made
                 rows_out = df.count()
+                _open_window(spark)
                 t0 = time.time()
-                t0_ms = int(t0 * 1000)
                 df.write.mode("overwrite").format("noop").save()
                 query_sec = round(time.time() - t0, 3)
             else:
@@ -710,15 +671,15 @@ def main() -> None:
     finally:
         spark.stop()
     time.sleep(1.0)
-    sw, sr, ntasks = _sum_shuffle(ev_dir, t0_ms)
+    tot = merge(group_totals(ev_dir), WINDOW_GROUP)
     shutil.rmtree(ev_dir, ignore_errors=True)
     print(json.dumps({
         "op": op, "data_dir": data_dir, "rows_in": rows_in,
         "rows_out": rows_out, "build_sec": build_sec,
         "query_sec": query_sec,
-        "shuffle_write_mb": round(sw / 1e6, 2),
-        "shuffle_read_mb": round(sr / 1e6, 2),
-        "tasks": ntasks,
+        "shuffle_write_mb": round(tot["shuffle_write_mb"], 2),
+        "shuffle_read_mb": round(tot["shuffle_read_mb"], 2),
+        "tasks": int(tot["tasks"]),
     }))
 
 

@@ -268,14 +268,35 @@ def test_srp_signature_batch_matches_expr(spark):
         assert a == r["b"], (r["id"], r["a"], r["b"])
 
 
-def test_li_recall_pair_matches_operators(spark, monkeypatch):
-    """The recall grading harness must produce EXACTLY the union of the
-    two operators' outputs (its restriction-of-M equivalence argument),
-    in both regimes."""
-    from flouds_vectordb_spark import regime
-    from flouds_vectordb_spark.lifecycle import persist_scope
+def _li_graded_recall(exact_df, fetched_df) -> float:
+    """sum_q |exact_q ∩ fetched_q| / sum_q |exact_q| over two top-k
+    operator outputs, graded driver-side."""
+    exact, fetched = {}, {}
+    for r in exact_df.collect():
+        exact.setdefault(r["qid"], set()).add(r["doc_id"])
+    for r in fetched_df.collect():
+        fetched.setdefault(r["qid"], set()).add(r["doc_id"])
+    hits = sum(len(exact[q] & fetched.get(q, set())) for q in exact)
+    return hits / sum(len(v) for v in exact.values())
+
+
+def _assert_recall_knife_edge(recall_df, recall: float, nq: int):
+    """recall_df at min_recall == the graded recall reads True, and at
+    the next double above it reads False."""
+    import math
+
+    assert 0.0 < recall, "a zero recall proves nothing"
+    for thr, want in ((recall, True), (math.nextafter(recall, 2.0), False)):
+        got = [tuple(r) for r in recall_df(thr).collect()]
+        assert got == [(nq, want)], (recall, thr)
+
+
+def test_li_recall_df_matches_operators(spark):
+    """recall_df over the SRP candidate stage grades exactly what the two
+    operators return (the restriction-of-M equivalence): it flips at the
+    recall graded from late_interaction_topk vs topk_pruned."""
     from flouds_vectordb_spark.operators.ann import (
-        late_interaction_recall_pair,
+        late_interaction_recall_df,
         late_interaction_topk,
         late_interaction_topk_pruned,
     )
@@ -288,21 +309,13 @@ def test_li_recall_pair_matches_operators(spark, monkeypatch):
         "doc_id long, pos long, vector array<double>")
     queries = docs.filter(F.col("doc_id").isin(4, 6)).withColumnRenamed(
         "doc_id", "qid")
-    want = sorted(
-        [tuple(r) + ("exact",) for r in
-         late_interaction_topk(docs, queries, k=5).collect()]
-        + [tuple(r) + ("pruned",) for r in
-           late_interaction_topk_pruned(docs, queries, k=5,
-                                        dim=8).collect()])
-    for forced_small in (False, True):
-        monkeypatch.setattr(regime, "fits",
-                            lambda _df, _bound: forced_small)
-        with persist_scope():
-            got = sorted(
-                tuple(r) for r in late_interaction_recall_pair(
-                    docs, queries, k=5, dim=8).collect())
-        monkeypatch.undo()
-        assert got == want and got, forced_small
+    recall = _li_graded_recall(
+        late_interaction_topk(docs, queries, k=5),
+        late_interaction_topk_pruned(docs, queries, k=5, dim=8))
+    _assert_recall_knife_edge(
+        lambda thr: late_interaction_recall_df(docs, queries, k=5, dim=8,
+                                               min_recall=thr),
+        recall, 2)
 
 
 def test_li_ivf_index_fresh_tracks_source_mtime(tmp_path):
@@ -1271,14 +1284,13 @@ def test_trigram_logprob_interpolation(spark):
         trigram_logprob(df, smoothing=0)
 
 
-def test_li_recall_pair_candidate_override_matches_ivf(spark, tmp_path):
-    """r13: recall_pair(candidates=ivf_pairs) must reproduce EXACTLY the
-    exact operator plus the IVF-fetched operator — the shared-MaxSim
-    restriction argument holds for any external candidate set."""
-    from flouds_vectordb_spark.lifecycle import persist_scope
+def test_li_recall_df_candidate_override_matches_ivf(spark, tmp_path):
+    """recall_df(candidates=ivf_pairs) grades exactly the exact operator
+    against the IVF-fetched operator: the shared-MaxSim restriction
+    argument holds for any external candidate set."""
     from flouds_vectordb_spark.operators.ann import (
         build_li_ivf_index,
-        late_interaction_recall_pair,
+        late_interaction_recall_df,
         late_interaction_topk,
         late_interaction_topk_ivf,
         li_ivf_candidates,
@@ -1293,18 +1305,17 @@ def test_li_recall_pair_candidate_override_matches_ivf(spark, tmp_path):
         "doc_id", "qid")
     path = str(tmp_path / "ivf_tok")
     build_li_ivf_index(docs, path, nlist=4)
-    want = sorted(
-        [tuple(r) + ("exact",) for r in
-         late_interaction_topk(docs, queries, k=5).collect()]
-        + [tuple(r) + ("pruned",) for r in
-           late_interaction_topk_ivf(spark, path, docs, queries, k=5,
-                                     nprobe=2).collect()])
+    recall = _li_graded_recall(
+        late_interaction_topk(docs, queries, k=5),
+        late_interaction_topk_ivf(spark, path, docs, queries, k=5,
+                                  nprobe=2))
     qrows = queries.select("qid", "pos", "vector").collect()
     cand = li_ivf_candidates(spark, path, qrows, nprobe=2)
-    with persist_scope():
-        got = sorted(tuple(r) for r in late_interaction_recall_pair(
-            docs, queries, k=5, dim=8, candidates=cand).collect())
-    assert got == want and got
+    _assert_recall_knife_edge(
+        lambda thr: late_interaction_recall_df(docs, queries, k=5, dim=8,
+                                               candidates=cand,
+                                               min_recall=thr),
+        recall, 2)
 
 
 def test_li_recall_df_matches_operator_grading(spark, tmp_path):
@@ -1333,19 +1344,13 @@ def test_li_recall_df_matches_operator_grading(spark, tmp_path):
                                      candidates=cand,
                                      min_recall=0.95).collect()
     assert len(got) == 1
-    exact = {}
-    for r in late_interaction_topk(docs, queries, k=5).collect():
-        exact.setdefault(r["qid"], set()).add(r["doc_id"])
     qt = F.broadcast(queries.select(
         F.col("qid"), F.col("pos").alias("_qpos"),
         F.col("vector").alias("_qv"), V.norm(F.col("vector")).alias("_qn")))
-    fetched = {}
-    for r in _li_rerank_candidates(docs, qt, cand, 5, "doc_id",
-                                   "vector").collect():
-        fetched.setdefault(r["qid"], set()).add(r["doc_id"])
-    hits = sum(len(exact[q] & fetched.get(q, set())) for q in exact)
-    total = sum(len(v) for v in exact.values())
-    want = (len(exact), hits / total >= 0.95)
+    recall = _li_graded_recall(
+        late_interaction_topk(docs, queries, k=5),
+        _li_rerank_candidates(docs, qt, cand, 5, "doc_id", "vector"))
+    want = (2, recall >= 0.95)
     assert (got[0]["n_queries"], got[0]["recall_ge_095"]) == want
     # the half-coverage candidate set must actually be sub-threshold,
     # or this test proves nothing

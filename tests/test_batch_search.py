@@ -240,6 +240,65 @@ def test_sparse_search_many_wand_prune_identical(spark, corpus, monkeypatch):
     posts.unpersist()
 
 
+def test_floor_prune_engages_above_small_bytes(spark, corpus, tmp_path,
+                                               monkeypatch):
+    """prune=None engages the floor prune exactly when the posting plan's
+    leaf bytes exceed regime.SMALL_BYTES — on a bare parquet posting
+    scan, the catalog's derived posting view and the catalog's hybrid
+    block alike — and an engaged prune keeps the rows."""
+    import flouds_vectordb_spark.operators.sparse_search as ss
+    from flouds_vectordb_spark import regime
+    from flouds_vectordb_spark.catalog import Catalog, CollectionSpec
+    from flouds_vectordb_spark.operators.hybrid_search import HybridSearchRequest
+    from flouds_vectordb_spark.operators.sparse_search import (
+        SparseSearchRequest,
+        bm25_postings,
+        sparse_search_many,
+    )
+    from flouds_vectordb_spark.operators.upsert import CollectionWriter
+
+    pq = str(tmp_path / "posts.parquet")
+    bm25_postings(corpus.filter(F.col("chunk") != "")).write.parquet(pq)
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.set_vector_store("t0")
+    cat.generate_schema(CollectionSpec("t0", "m4", dimension=4, nlist=2))
+    w = CollectionWriter(cat, "t0", "m4")
+    w.insert_data(spark.createDataFrame(
+        [("a", "spark merge join", [1.0, 0.0, 0.0, 0.0]),
+         ("b", "spark spark scan", [0.0, 1.0, 0.0, 0.0]),
+         ("c", "hash join probe build", [0.7, 0.7, 0.0, 0.0])],
+        "id string, chunk string, vector array<float>"),
+        batch_ts=1, force_flush=True)
+    w.build_sparse_index()
+    sreq = SparseSearchRequest(query_text="", limit=2)
+    hreq = HybridSearchRequest(query_vector=[1.0, 0.0, 0.0, 0.0],
+                               text_filter="x", limit=2)
+    cases = [
+        (spark.read.parquet(pq), lambda: sparse_search_many(
+            spark.read.parquet(pq), [(0, "spark vector"), (1, "scan 7")],
+            sreq)),
+        (w._stored_postings(), lambda: w.search_sparse_many(
+            [(0, "spark join"), (1, "probe")], sreq)),
+        (w._stored_postings(), lambda: w.search_hybrid_many(
+            [(0, [1.0, 0.0, 0.0, 0.0], "spark join"),
+             (1, [0.0, 1.0, 0.0, 0.0], "probe hash")], hreq)),
+    ]
+    calls = []
+    real = ss._floor_filter
+    monkeypatch.setattr(ss, "_floor_filter",
+                        lambda *a: calls.append(1) or real(*a))
+    for postings, search in cases:
+        n = regime.input_bytes(postings)
+        assert n, "the probe must see the posting files"
+        rows = {}
+        for bound, engaged in ((n, False), (n - 1, True)):
+            monkeypatch.setattr(regime, "SMALL_BYTES", bound)
+            calls.clear()
+            rows[engaged] = sorted(map(tuple, search().collect()))
+            assert len(calls) == int(engaged), (bound, n)
+        assert rows[True] == rows[False] and rows[False]
+
+
 def test_sparse_search_many_validation(spark, corpus):
     from flouds_vectordb_spark.operators.sparse_search import (
         SparseSearchRequest,

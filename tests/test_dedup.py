@@ -754,6 +754,21 @@ def dup_id_docs(spark, tmp_path):
     return spark.read.parquet(pq)
 
 
+# zero-shingle rows under duplicate ids: at a threshold <= 0 an empty
+# row verifies at J = 0 against every row of the other candidate id
+# unless every regime and twin leaves it out of the verify sets
+_EMPTY_ROW_IDS = [(1, _BASE), (1, ""), (2, _BASE), (2, ""),
+                  (3, "alpha beta gamma delta"), (3, _BASE + " extra")]
+
+
+@pytest.fixture
+def empty_row_docs(spark, tmp_path):
+    pq = str(tmp_path / "empty_rows.parquet")
+    spark.createDataFrame(_EMPTY_ROW_IDS, "id long, text string") \
+        .write.parquet(pq)
+    return spark.read.parquet(pq)
+
+
 def _twin_rows(sql_fn, *frames, **kw):
     """Sorted rows of a DuckDB twin run over the parquet files behind
     each frame."""
@@ -780,25 +795,35 @@ def _regime_rows(call, monkeypatch):
 
 
 def test_minhash_driver_regime_equals_distributed(parquet_docs, dup_id_docs,
+                                                  empty_row_docs,
                                                   monkeypatch):
     """The r13 driver regime (one fetch + driver bucketing/verify) must be
     row-identical to the shuffle regime (forced by DRIVER_BYTES = -1) and
     to the SQL twin on pairs and on component labels, at multiple
-    thresholds, duplicate ids included."""
+    thresholds, duplicate ids included, and at thresholds <= 0 on
+    duplicate ids with empty rows (the incremental twin too)."""
     from flouds_vectordb_spark.operators.dedup import (
         dedup_minhash_components_sql,
+        dedup_minhash_incremental,
+        dedup_minhash_incremental_sql,
         dedup_minhash_sql,
     )
 
-    for docs in (parquet_docs, dup_id_docs):
+    for docs, thrs in ((parquet_docs, (0.3, 0.5, 0.8)),
+                       (dup_id_docs, (0.3, 0.5, 0.8)),
+                       (empty_row_docs, (0.0, -0.1))):
         assert regime.fits(docs, regime.DRIVER_BYTES)  # engages it
-        for thr in (0.3, 0.5, 0.8):
+        for thr in thrs:
             for out, twin in (("pairs", dedup_minhash_sql),
                               ("components", dedup_minhash_components_sql)):
                 drv, dist = _regime_rows(lambda: dedup_minhash(
                     docs, jaccard_threshold=thr, output=out), monkeypatch)
                 want = _twin_rows(twin, docs, jaccard_threshold=thr)
                 assert drv == dist == want and drv, (thr, out)
+    got = sorted(map(tuple, dedup_minhash_incremental(
+        empty_row_docs, dup_id_docs, jaccard_threshold=0.0).collect()))
+    assert got == _twin_rows(dedup_minhash_incremental_sql, empty_row_docs,
+                             dup_id_docs, jaccard_threshold=0.0) and got
 
 
 def test_joined_input_takes_the_driver_regime(spark, parquet_docs, tmp_path,
@@ -871,6 +896,7 @@ def test_simhash_driver_regime_equals_distributed(parquet_docs, dup_id_docs,
 
 
 def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
+                                                        empty_row_docs,
                                                         monkeypatch):
     import flouds_vectordb_spark.operators.dedup as dd
     from flouds_vectordb_spark.operators.dedup import (
@@ -902,7 +928,11 @@ def test_decon_neardup_driver_regime_equals_distributed(spark, tmp_path,
     in_memory = spark.createDataFrame(te_rows, "id long, text string")
     for train, te, thrs in ((tr, parquet(te_rows, "te.parquet"), (0.3, 0.8)),
                             (tr, in_memory, (0.3, 0.8)),
-                            (dup_tr, dup_te, (0.6,))):
+                            (dup_tr, dup_te, (0.6,)),
+                            (empty_row_docs,
+                             parquet([(7, _BASE), (7, ""),
+                                      (8, "alpha beta gamma delta")],
+                                     "empty_te.parquet"), (0.0,))):
         for thr in thrs:
             calls = []
             real = dd._driver_decon_neardup
