@@ -39,7 +39,7 @@ import time
 import warnings
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -198,6 +198,15 @@ def resolve_data_dir(path: str) -> str:
     except OSError:
         return path
     return os.path.join(path, gen) if gen else path
+
+
+def latest_wins(df: DataFrame, id_col: str = "id") -> DataFrame:
+    """Each id's newest version (largest batch_ts): append-upserts leave
+    several versions of an id in the data and index tables until a
+    flush/compaction rewrites them."""
+    w = Window.partitionBy(id_col).orderBy(F.col("batch_ts").desc())
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn"))
 
 
 class Catalog:

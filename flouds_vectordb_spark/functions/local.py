@@ -20,15 +20,20 @@ and skip the scheduler entirely; the RDD route schedules real tasks.
 Falls back to createDataFrame for empty row sets (VALUES cannot be empty)
 and for schemas it does not know how to render.
 
-`json_df` is the same task-free literal for numeric blocks (the query
-blocks of batch_search.query_block: qid, a 64-double vector, its norm):
-the rows travel as ONE JSON string literal read by
-`inline(from_json(...))`, which the optimizer folds into a single constant
-array over a one-row relation. Spark's parser pays per token of SQL text — a 256 x 64 VALUES block
-took 2.2 s to parse, its JSON form under 0.1 s — while the JSON number
-parser reads Python's shortest repr back to the same bits, NaN, +-Infinity,
--0.0 and subnormals included (tests/test_local_df.py). Empty blocks fall
-back to createDataFrame as above.
+`json_df` is a driver-side literal for numeric blocks (the query blocks
+of batch_search.query_block: qid, a 64-double vector, its norm), chosen
+for parse cost, not for a missing task stage: the rows travel as ONE
+JSON string literal read by `inline(from_json(...))`, which the
+optimizer folds into a single constant array over a one-row relation.
+Spark's parser pays per token of SQL text — a 256 x 64 VALUES block took
+2.2 s to parse, its JSON form under 0.1 s — while the JSON number parser
+reads Python's shortest repr back to the same bits, NaN, +-Infinity,
+-0.0 and subnormals included (tests/test_local_df.py). It is NOT a
+LocalRelation: the optimized plan is a Generate over that one-row
+relation, so `regime.is_local_relation` reads False and reading it back
+runs one job (a 200-row and a 5,000-row block each ran 1 job on
+collect; the same rows through `local_df` ran 0). Empty blocks fall back
+to createDataFrame as above.
 """
 
 from __future__ import annotations
@@ -119,8 +124,9 @@ def _jsonable(v, typ: str):
 
 def json_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """A numeric literal table (integer, double and array columns) sent as
-    one JSON string literal; same contract as local_df (see module
-    docstring for why not VALUES text)."""
+    one JSON string literal; the same exact round-trips as local_df, but
+    a Generate plan whose read-back runs one job (see module docstring
+    for why not VALUES text)."""
     rows = list(rows)
     cols = _parse_schema(schema)
     if not rows:

@@ -145,56 +145,28 @@ def _dim_assert_filter(vec_sql: str, dim: int) -> Column:
         f"CAST(size({vec_sql}) AS STRING))) END")
 
 
-def query_srp_signature(vec, planes: list[list[float]]) -> int:
-    """Driver-side twin of srp_signature_expr for ONE query vector — the
-    same sequential float64 left fold per plane (0.0 + x0*w0 + x1*w1 ...,
-    the V.query_norm discipline), same >= 0 bit rule, same NaN-sets-bit
-    ordering (Spark places NaN above every double). Bit-identical by the
-    IEEE-associativity-free construction; pinned by
-    test_li_local_query_block_matches_expr. Caller guarantees
-    len(vec) == plane dim and no NULL elements (the local-block fast
-    path falls back to the expression form otherwise)."""
-    import math
-
-    sig = 0
-    for i, p in enumerate(planes):
-        acc = 0.0
-        for x, w in zip(vec, p):
-            acc += float(x) * float(w)
-        if acc >= 0.0 or math.isnan(acc):
-            sig |= 1 << i
-    return sig
-
-
 def _li_local_query_block(spark, query_tokens: DataFrame, qrows,
-                          planes: "list[list[float]] | None",
                           qid_col: str, pos_col: str, vector_col: str):
-    """The broadcast query block (qid, _qpos, _qv, _qn[, _qsig]) built as
-    ONE driver-side LocalRelation from already-collected query rows (r13):
-    the expression form costs ~0.8 s of py4j + parse + analysis PER CALL
-    for the 20x64-literal signature tree alone, all to decorate a bag
-    that is tiny by the serving contract. Norms via V.query_norm and
-    signatures via query_srp_signature — both bit-identical twins of the
-    JVM folds. Returns None when any row is irregular (NULL/ragged/
-    NULL-element vector) — caller falls back to the expression form,
-    which owns those semantics."""
+    """The broadcast query block (qid, _qpos, _qv, _qn) built as ONE
+    driver-side LocalRelation from already-collected query rows (r13):
+    the expression form costs py4j + parse + analysis PER CALL, all to
+    decorate a bag that is tiny by the serving contract. Norms via
+    V.query_norm, the bit-identical twin of the JVM fold. Returns None
+    when any row is irregular (NULL or NULL-element vector) — caller
+    falls back to the expression form, which owns those semantics."""
     from flouds_vectordb_spark.functions.local import local_df
 
-    dim = len(planes[0]) if planes else None
     rows = []
     for r in qrows:
         v = r[2]
-        if v is None or any(x is None for x in v) or (
-                dim is not None and len(v) != dim):
+        if v is None or any(x is None for x in v):
             return None
-        rows.append((r[0], r[1], v, V.query_norm(v))
-                    + ((query_srp_signature(v, planes),) if planes else ()))
+        rows.append((r[0], r[1], v, V.query_norm(v)))
     sch = {f.name: f.dataType.simpleString()
            for f in query_tokens.select(qid_col, pos_col,
                                         vector_col).schema.fields}
     schema = (f"qid {sch[qid_col]}, _qpos {sch[pos_col]}, "
-              f"_qv {sch[vector_col]}, _qn double"
-              + (", _qsig bigint" if planes else ""))
+              f"_qv {sch[vector_col]}, _qn double")
     return F.broadcast(local_df(spark, rows, schema))
 
 
@@ -591,7 +563,6 @@ def late_interaction_topk_pruned(
     sig_table: DataFrame | None = None,
     seed: int = 7,
     norm_col: str | None = None,
-    query_rows=None,
 ) -> DataFrame:
     """(qid, doc_id, rank, score_r): the SERVING-SCALE late-interaction
     path the exact operator's docstring promises (r11, VERDICT ask #2) —
@@ -637,8 +608,7 @@ def late_interaction_topk_pruned(
     # collected the query bag here to build a LocalRelation block was
     # NET-NEGATIVE for exactly that reason (the collect disqualified the
     # plan from _memoized, costing a full rebuild+execute per bench
-    # pass: 0.84 -> 1.4-2 s). Callers that already hold collected query
-    # rows pass query_rows= and get the driver-built block.
+    # pass: 0.84 -> 1.4-2 s).
     if dim is None:
         first = query_tokens.select(vector_col).first()
         if first is None or first[0] is None:  # r11 ADVICE: loud
@@ -647,22 +617,14 @@ def late_interaction_topk_pruned(
                 "explicitly to late_interaction_topk_pruned")
         dim = len(first[0])
     planes = srp_planes(dim, bits, seed)
-    qt = None
-    if norm_col is None and query_rows is not None:
-        qt = _li_local_query_block(
-            doc_tokens.sparkSession, query_tokens, query_rows, planes,
-            qid_col, pos_col, vector_col)
-    if qt is None:
-        # zero-action default; also owns irregular-vector semantics and
-        # the precomputed-norm column
-        n_expr = (F.col(norm_col) if norm_col is not None
-                  else V.norm(F.col(vector_col)))
-        qt = F.broadcast(query_tokens.select(
-            F.col(qid_col).alias("qid"), F.col(pos_col).alias("_qpos"),
-            F.col(vector_col).alias("_qv"),
-            n_expr.alias("_qn"),
-            srp_signature_expr(quote_ident(vector_col),
-                               planes).alias("_qsig")))
+    n_expr = (F.col(norm_col) if norm_col is not None
+              else V.norm(F.col(vector_col)))
+    qt = F.broadcast(query_tokens.select(
+        F.col(qid_col).alias("qid"), F.col(pos_col).alias("_qpos"),
+        F.col(vector_col).alias("_qv"),
+        n_expr.alias("_qn"),
+        srp_signature_expr(quote_ident(vector_col),
+                           planes).alias("_qsig")))
     small = regime.fits(doc_tokens, regime.SMALL_BYTES)
     cand = _li_srp_candidates(doc_tokens, qt, planes, radius, id_col,
                               vector_col, sig_table, small=small)
@@ -1057,7 +1019,7 @@ def late_interaction_topk_ivf(
         return spark.createDataFrame(
             [], "qid long, doc_id long, rank int, score_r double")
     cand = li_ivf_candidates(spark, ivf_path, qrows, nprobe)
-    qt = _li_local_query_block(spark, query_tokens, qrows, None,
+    qt = _li_local_query_block(spark, query_tokens, qrows,
                                qid_col, pos_col, vector_col)
     if qt is None:
         qt = F.broadcast(query_tokens.select(
@@ -1159,7 +1121,7 @@ def late_interaction_topk_hnsw(
         return spark.createDataFrame(
             [], "qid long, doc_id long, rank int, score_r double")
     cand = li_hnsw_candidates(spark, hnsw_path, qrows, ef)
-    qt = _li_local_query_block(spark, query_tokens, qrows, None,
+    qt = _li_local_query_block(spark, query_tokens, qrows,
                                qid_col, pos_col, vector_col)
     if qt is None:
         qt = F.broadcast(query_tokens.select(

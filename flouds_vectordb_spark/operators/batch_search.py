@@ -20,11 +20,11 @@ This module is the set-of-queries shape:
 - the k-cut is ONE per-qid window over (qid, id, score) scalars — the
   shuffle carries no vectors and no payload (late materialization: payload
   joins back for the <= nq*fetch survivors only),
-- the full single-query post-filter pipeline (score_threshold, empty-chunk
-  drop, text filter, meta_required, meta_filter, projection — the
-  vector_store.py:519-582 chain) applies unchanged; the request TEMPLATE is
-  shared by all queries (the batch-retrieval shape: one search config, many
-  vectors).
+- after the k-cut the block runs dense_search's own tail (ranked_tail:
+  payload join, score_threshold, empty-chunk drop, text filter,
+  meta_required, meta_filter, rank, projection — the vector_store.py:
+  519-582 chain) partitioned by qid; the request TEMPLATE is shared by all
+  queries (the batch-retrieval shape: one search config, many vectors).
 
 Scoring determinism matches functions/vector.py's oracle contract: the
 kernel runs vector.fold_scores, the per-pair sequential float64 left-fold
@@ -60,12 +60,16 @@ from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, Stru
 
 from flouds_vectordb_spark.functions import vector as V
 from flouds_vectordb_spark.functions.local import json_df
-from flouds_vectordb_spark.functions.text import text_filter_predicate, text_filter_sql
 from flouds_vectordb_spark.operators.dense_search import (
     RANK_DECIMALS,
     DenseSearchRequest,
-    meta_filter_predicate,
-    meta_kv_column,
+    bounded_scores,
+    dense_tail_sql,
+    payload_select_sql,
+    post_filter_sql,
+    ranked_tail,
+    score_where_sql,
+    threshold_sql,
 )
 
 QueryBatch = Sequence[tuple[int, Sequence[float]]]
@@ -204,24 +208,11 @@ def _ranked_pipeline(
     meta_col: str | None,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Shared tail of every search_many variant. cand: (qid, _id, _score)
-    candidate pairs (scalars only). Mirrors dense_search's phases with
-    every window PARTITIONED BY qid."""
-    if req.effective_text_filter is not None and chunk_col is None:
-        raise ValueError("text_filter requires chunk_col")
-    if (req.meta_filter or req.meta_required) and meta_col is None:
-        raise ValueError("meta_filter/meta_required require meta_col")
-
-    slim = (
-        cand.filter(F.col("_score").isNotNull())
-        .withColumn("_score_r", F.round(F.col("_score"), RANK_DECIMALS))
-    )
-    lo, hi = req.score_bounds()
-    if lo is not None:
-        slim = slim.filter(F.col("_score") > F.lit(lo))
-    if hi is not None:
-        slim = slim.filter(F.col("_score") <= F.lit(hi))
-
+    """The block path after scoring, for every search_many variant. cand:
+    (qid, _id, _score) candidate pairs (scalars only). The k-cut is one
+    per-qid window; everything after it is dense_search's own tail
+    (ranked_tail) with the qid as the partition key."""
+    slim = bounded_scores(cand, req)
     fetch = req.fetch + req.offset
     w = Window.partitionBy("qid").orderBy(F.col("_score_r").desc(), F.col("_id").asc())
     topk = (
@@ -229,54 +220,8 @@ def _ranked_pipeline(
         .filter((F.col("_pre") > req.offset) & (F.col("_pre") <= fetch))
         .drop("_pre")
     )
-
-    # late materialization: payload joins back for the <= nq*fetch survivors
-    meta_out = meta_col is not None and "meta" in req.effective_output_fields
-    need_meta = bool(req.meta_filter or req.meta_required) or meta_out
-    payload = [c for c in (chunk_col, meta_col if need_meta else None, *extra_cols) if c]
-    if payload:
-        if payload_df is None:
-            raise ValueError("payload columns requested but no payload_df given")
-        keep = list(dict.fromkeys([id_col, *payload]))
-        out = (
-            payload_df.select(*keep)
-            .join(F.broadcast(topk), F.col(id_col) == F.col("_id"), "inner")
-            .drop("_id")
-        )
-    else:
-        out = topk.withColumnRenamed("_id", id_col)
-
-    # post-filter chain — identical predicates to dense_search phase 3
-    if req.score_threshold is not None:
-        milvus_score = -F.col("_score") if req.metric.upper() == "L2" else F.col("_score")
-        out = out.filter(
-            F.round(milvus_score, req.threshold_decimals)
-            >= F.lit(float(req.score_threshold)))
-    if chunk_col is not None:
-        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
-    if req.effective_text_filter is not None:
-        out = out.filter(text_filter_predicate(
-            F.col(chunk_col), req.effective_text_filter,
-            req.minimum_words_match, req.include_stop_words))
-    if req.meta_required:
-        out = out.filter(F.size(F.col(meta_col)) > 0)
-    if req.meta_filter:
-        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
-
-    wf = Window.partitionBy("qid").orderBy(F.col("_score_r").desc(), F.col(id_col).asc())
-    out = (out.withColumn("rank", F.row_number().over(wf))
-           .filter(F.col("rank") <= req.effective_limit))
-
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    cols = [F.col("qid"), F.col(id_col), F.col("rank"),
-            F.round(F.col("_score"), dec).alias("score")]
-    if chunk_col and "chunk" in req.effective_output_fields:
-        cols.append(F.col(chunk_col))
-    if meta_out:
-        cols.append(meta_kv_column(meta_col))
-    cols += [F.col(c) for c in extra_cols]
-    return out.select(*cols)
+    return ranked_tail(topk, payload_df, req, ("qid",), id_col, chunk_col,
+                       meta_col, extra_cols)
 
 
 def dense_search_many(
@@ -382,46 +327,15 @@ def dense_search_many_sql(
     if req.effective_text_filter is not None and chunk_expr is None:
         raise ValueError("text_filter requires chunk_expr")
     score = _pair_score_sql(req.metric, vector_expr, dim)
-
-    where = ["_score IS NOT NULL"]
-    lo, hi = req.score_bounds()
-    if lo is not None:
-        where.append(f"_score > ({lo!r}::DOUBLE)")
-    if hi is not None:
-        where.append(f"_score <= ({hi!r}::DOUBLE)")
-    fetch = req.fetch + req.offset
-
-    post = ["TRUE"]
-    if req.score_threshold is not None:
-        ms = "(-_score)" if req.metric.upper() == "L2" else "_score"
-        post.append(
-            f"round({ms}, {req.threshold_decimals}) >= ({float(req.score_threshold)!r}::DOUBLE)")
-    if chunk_expr is not None:
-        post.append("(chunk IS NOT NULL AND chunk <> '')")
-    if req.effective_text_filter is not None:
-        post.append(text_filter_sql("chunk", req.effective_text_filter,
-                                    req.minimum_words_match, req.include_stop_words))
-    if req.meta_required:
-        post.append("_meta_n > 0")
-    meta_sel = ""
-    for i, (k, v) in enumerate((req.meta_filter or {}).items()):
-        e = (meta_exprs or {})[k]
-        meta_sel += f", {e} AS _meta_{i}"
-        vv = v.lower().replace("'", "''")
-        post.append(f"(_meta_{i} IS NOT NULL AND instr(lower(_meta_{i}), '{vv}') > 0)")
-
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    with_chunk = chunk_expr is not None and "chunk" in req.effective_output_fields
-    with_meta = meta_kv_expr is not None and "meta" in req.effective_output_fields
-    chunk_sel = f", {chunk_expr} AS chunk" if chunk_expr else ""
-    meta_sel_out = f", {meta_kv_expr} AS meta_kv" if with_meta else ""
-    chunk_out = ", chunk" if with_chunk else ""
-    meta_out = ", meta_kv" if with_meta else ""
+    threshold = (threshold_sql(req, "_score")
+                 if req.score_threshold is not None else None)
+    post, meta_sel = post_filter_sql(req, threshold, chunk_expr, meta_exprs,
+                                     req.effective_text_filter)
+    chunk_sel, meta_kv_sel, outs = payload_select_sql(req, chunk_expr, meta_kv_expr)
     return f"""
 WITH scored AS (
   SELECT q.qid AS qid, {id_expr} AS id, {score} AS _score
-         {chunk_sel}{meta_sel_out}{meta_sel},
+         {chunk_sel}{meta_kv_sel}{meta_sel},
          {meta_size_expr if meta_size_expr is not None else '0'} AS _meta_n
   FROM {table_sql} AS _t CROSS JOIN {queries_values_sql(queries)} AS q
 ),
@@ -430,16 +344,7 @@ topk AS (
     SELECT *, round(_score, {RANK_DECIMALS}) AS _score_r,
            row_number() OVER (PARTITION BY qid
                               ORDER BY round(_score, {RANK_DECIMALS}) DESC, id ASC) AS _pre
-    FROM scored WHERE {' AND '.join(where)}
-  ) WHERE _pre > {req.offset} AND _pre <= {fetch}
+    FROM scored WHERE {score_where_sql(req)}
+  ) WHERE _pre > {req.offset} AND _pre <= {req.fetch + req.offset}
 ),
-filtered AS (
-  SELECT * FROM topk WHERE {' AND '.join(post)}
-)
-SELECT qid, id, rank, score{chunk_out}{meta_out} FROM (
-  SELECT qid, id,
-         row_number() OVER (PARTITION BY qid ORDER BY _score_r DESC, id ASC) AS rank,
-         round(_score, {dec}) AS score{chunk_out}{meta_out}
-  FROM filtered
-) WHERE rank <= {req.effective_limit}
-"""
+""" + dense_tail_sql(req, ("qid",), post, outs)

@@ -162,7 +162,9 @@ class DenseSearchRequest:
         return self.round_decimal if self.round_decimal > 0 else -1
 
     @property
-    def threshold_decimals(self) -> int:
+    def score_decimals(self) -> int:
+        """Decimals of the reported score, and of the threshold compare:
+        round_decimal, or RANK_DECIMALS when unset."""
         rd = self.effective_round_decimal
         return rd if rd > 0 else RANK_DECIMALS
 
@@ -202,6 +204,119 @@ def meta_filter_predicate(meta: Column, meta_filter: dict[str, str]) -> Column:
     return pred
 
 
+def payload_columns(req, chunk_col: str | None, meta_col: str | None,
+                    extra_cols: tuple[str, ...] = ()) -> list[str]:
+    """What a request's tail joins back for its survivors (late
+    materialization): chunk, meta when a filter or the projection reads
+    it, and the extra columns."""
+    need_meta = (bool(req.meta_filter or req.meta_required)
+                 or "meta" in req.effective_output_fields)
+    return [c for c in (chunk_col, meta_col if need_meta else None, *extra_cols) if c]
+
+
+def join_payload(survivors: DataFrame, key: str, payload_df: DataFrame,
+                 id_col: str, payload: list[str]) -> DataFrame:
+    """payload_df's id and payload columns for the survivors, joined on
+    survivors' `key` (dropped after): the survivors are <= fetch rows per
+    query, so they broadcast and the corpus text never enters the k-cut."""
+    keep = list(dict.fromkeys([id_col, *payload]))
+    return (payload_df.select(*keep)
+            .join(F.broadcast(survivors), F.col(id_col) == F.col(key), "inner")
+            .drop(key))
+
+
+def threshold_predicate(req, score_col: str) -> Column:
+    """score_threshold against the score Milvus reports, rounded to
+    round_decimal (vector_store.py:521-529, :766-770): similarity for
+    COSINE/IP, (squared) distance = -score in our convention for L2."""
+    ms = -F.col(score_col) if req.metric.upper() == "L2" else F.col(score_col)
+    return F.round(ms, req.score_decimals) >= F.lit(float(req.score_threshold))
+
+
+def post_filter(out: DataFrame, req, threshold: Column | None,
+                chunk_col: str | None, meta_col: str | None,
+                text_filter: str | None = None) -> DataFrame:
+    """The reference's post-filter chain in its order (vector_store.py:
+    519-582): score threshold -> empty-chunk drop -> text filter ->
+    meta_required -> meta_filter."""
+    if threshold is not None:
+        out = out.filter(threshold)
+    if chunk_col is not None:
+        # reference drops hits with empty/null chunk before text/meta filters
+        # (vector_store.py: `if not chunk_content: continue`)
+        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
+    if text_filter is not None:
+        out = out.filter(text_filter_predicate(
+            F.col(chunk_col), text_filter,
+            req.minimum_words_match, req.include_stop_words))
+    if req.meta_required:
+        out = out.filter(F.size(F.col(meta_col)) > 0)
+    if req.meta_filter:
+        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
+    return out
+
+
+def rank_project(out: DataFrame, req, keys: tuple[str, ...], id_col: str,
+                 rank_by: str, score: str, name: str, limit: int,
+                 chunk_col: str | None, meta_col: str | None,
+                 extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Final 1-based rank per `keys` group (ties by id) over the <= fetch
+    survivors, trimmed to limit, then the Q12 projection: output_fields
+    picks the payload, the row shape mirrors EmbeddedMeta = content +
+    meta (embedded_meta.py:9-20). keys=() is one group: the
+    un-partitioned window, bounded because it stays behind the k-cut."""
+    w = Window.partitionBy(*keys).orderBy(F.col(rank_by).desc(), F.col(id_col).asc())
+    out = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= limit)
+    cols = [*keys, id_col, "rank",
+            F.round(F.col(score), req.score_decimals).alias(name)]
+    if chunk_col and "chunk" in req.effective_output_fields:
+        cols.append(chunk_col)
+    if meta_col is not None and "meta" in req.effective_output_fields:
+        cols.append(meta_kv_column(meta_col))
+    return out.select(*cols, *extra_cols)
+
+
+def bounded_scores(slim: DataFrame, req: DenseSearchRequest) -> DataFrame:
+    """slim's non-NULL `_score` rows with the rank key `_score_r` and the
+    range-search bounds (lo < score <= hi) applied — the input of either
+    k-cut."""
+    slim = (slim.filter(F.col("_score").isNotNull())
+            .withColumn("_score_r", F.round(F.col("_score"), RANK_DECIMALS)))
+    lo, hi = req.score_bounds()
+    if lo is not None:
+        slim = slim.filter(F.col("_score") > F.lit(lo))
+    if hi is not None:
+        slim = slim.filter(F.col("_score") <= F.lit(hi))
+    return slim
+
+
+def ranked_tail(topk: DataFrame, payload_df: DataFrame | None,
+                req: DenseSearchRequest, keys: tuple[str, ...], id_col: str,
+                chunk_col: str | None, meta_col: str | None,
+                extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Everything after the k-cut, shared by the single request (keys=())
+    and the batched block (keys=("qid",)): topk is (*keys, _id, _score,
+    _score_r); payload joins back from payload_df for the survivors, then
+    the post-filter chain, the final rank and the projection."""
+    if req.effective_text_filter is not None and chunk_col is None:
+        raise ValueError("text_filter requires chunk_col")
+    if (req.meta_filter or req.meta_required) and meta_col is None:
+        raise ValueError("meta_filter/meta_required require meta_col")
+    payload = payload_columns(req, chunk_col, meta_col, extra_cols)
+    if payload:
+        if payload_df is None:
+            raise ValueError("payload columns requested but no payload_df given")
+        out = join_payload(topk, "_id", payload_df, id_col, payload)
+    else:
+        out = topk.withColumnRenamed("_id", id_col)
+    threshold = (threshold_predicate(req, "_score")
+                 if req.score_threshold is not None else None)
+    out = post_filter(out, req, threshold, chunk_col, meta_col,
+                      req.effective_text_filter)
+    return rank_project(out, req, keys, id_col, "_score_r", "_score", "score",
+                        req.effective_limit, chunk_col, meta_col, extra_cols)
+
+
 def dense_search(
     df: DataFrame,
     req: DenseSearchRequest,
@@ -224,25 +339,10 @@ def dense_search(
       meta filters when it excludes 'meta' — projection there silently
       disables/empties results; here projection only affects output shape.
     """
-    if req.effective_text_filter is not None and chunk_col is None:
-        raise ValueError("text_filter requires chunk_col")
-    if (req.meta_filter or req.meta_required) and meta_col is None:
-        raise ValueError("meta_filter/meta_required require meta_col")
-
-    # ---- phase 1: score + k-cut over (id, score) only ----
+    # score + k-cut over (id, score) only; the tail does the rest
     score = V.metric_score_q(req.metric, vector_col, req.query_vector)
-    slim = (
-        df.select(F.col(id_col).alias("_id"), score.alias("_score"))
-        .filter(F.col("_score").isNotNull())
-        .withColumn("_score_r", F.round(F.col("_score"), RANK_DECIMALS))
-    )
-
-    lo, hi = req.score_bounds()
-    if lo is not None:
-        slim = slim.filter(F.col("_score") > F.lit(lo))
-    if hi is not None:
-        slim = slim.filter(F.col("_score") <= F.lit(hi))
-
+    slim = bounded_scores(
+        df.select(F.col(id_col).alias("_id"), score.alias("_score")), req)
     fetch = req.fetch + req.offset
     topk = slim.orderBy(F.col("_score_r").desc(), F.col("_id").asc()).limit(fetch)
     if req.offset:
@@ -252,61 +352,92 @@ def dense_search(
             .filter(F.col("_pre_rank") > req.offset)
             .drop("_pre_rank")
         )
+    return ranked_tail(topk, df, req, (), id_col, chunk_col, meta_col, extra_cols)
 
-    # ---- phase 2: late materialization — payload only for survivors ----
-    meta_out = meta_col is not None and "meta" in req.effective_output_fields
-    need_meta = bool(req.meta_filter or req.meta_required) or meta_out
-    payload = [c for c in (chunk_col, meta_col if need_meta else None, *extra_cols) if c]
-    if payload:
-        keep = list(dict.fromkeys([id_col, *payload]))
-        out = (
-            df.select(*keep)
-            .join(F.broadcast(topk), F.col(id_col) == F.col("_id"), "inner")
-            .drop("_id")
-        )
-    else:
-        out = topk.withColumnRenamed("_id", id_col)
 
-    # ---- phase 3: post-filter pipeline (vector_store.py:519-582) ----
-    if req.score_threshold is not None:
-        # the reference compares the RAW Milvus score (rounded by Milvus to
-        # round_decimal) against the threshold: similarity for COSINE/IP,
-        # (squared) distance for L2 — i.e. -score in our convention
-        milvus_score = -F.col("_score") if req.metric.upper() == "L2" else F.col("_score")
-        rounded = F.round(milvus_score, req.threshold_decimals)
-        out = out.filter(rounded >= F.lit(float(req.score_threshold)))
-    if chunk_col is not None:
-        # reference drops hits with empty/null chunk before text/meta filters
-        # (vector_store.py: `if not chunk_content: continue`)
-        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
-    if req.effective_text_filter is not None:
-        out = out.filter(
-            text_filter_predicate(
-                F.col(chunk_col), req.effective_text_filter,
-                req.minimum_words_match, req.include_stop_words
-            )
-        )
+# --- DuckDB oracle twins: the shared SQL builders ----------------------------
+
+def score_where_sql(req: DenseSearchRequest) -> str:
+    """The k-cut's WHERE: non-NULL score inside the range-search bounds."""
+    where = ["_score IS NOT NULL"]
+    lo, hi = req.score_bounds()
+    if lo is not None:
+        where.append(f"_score > ({lo!r}::DOUBLE)")
+    if hi is not None:
+        where.append(f"_score <= ({hi!r}::DOUBLE)")
+    return " AND ".join(where)
+
+
+def threshold_sql(req, score: str) -> str:
+    """SQL twin of threshold_predicate."""
+    ms = f"(-{score})" if req.metric.upper() == "L2" else score
+    return (f"round({ms}, {req.score_decimals}) >= "
+            f"({float(req.score_threshold)!r}::DOUBLE)")
+
+
+def post_filter_sql(req, threshold: str | None, chunk_expr: str | None,
+                    meta_exprs: dict[str, str] | None,
+                    text_filter: str | None = None) -> tuple[str, str]:
+    """SQL twin of post_filter: (WHERE predicate over the hydrated rows,
+    the `, expr AS _meta_i` select list its meta_filter keys read)."""
+    post = ["TRUE"]
+    if threshold is not None:
+        post.append(threshold)
+    if chunk_expr is not None:
+        post.append("(chunk IS NOT NULL AND chunk <> '')")
+    if text_filter is not None:
+        post.append(text_filter_sql("chunk", text_filter,
+                                    req.minimum_words_match, req.include_stop_words))
     if req.meta_required:
-        out = out.filter(F.size(F.col(meta_col)) > 0)
-    if req.meta_filter:
-        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
+        post.append("_meta_n > 0")
+    meta_sel = ""
+    for i, (k, v) in enumerate((req.meta_filter or {}).items()):
+        e = (meta_exprs or {})[k]
+        meta_sel += f", {e} AS _meta_{i}"
+        vv = v.lower().replace("'", "''")
+        post.append(f"(_meta_{i} IS NOT NULL AND instr(lower(_meta_{i}), '{vv}') > 0)")
+    return " AND ".join(post), meta_sel
 
-    # trim back to the original limit, assign final rank (<=fetch rows here,
-    # so the un-partitioned window is bounded — it must stay behind the limit)
-    w = Window.orderBy(F.col("_score_r").desc(), F.col(id_col).asc())
-    out = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= req.effective_limit)
 
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    cols = [F.col(id_col), F.col("rank"), F.round(F.col("_score"), dec).alias("score")]
-    # Q12 projection: output_fields picks the payload columns; the result
-    # row shape mirrors EmbeddedMeta = content + meta (embedded_meta.py:9-20)
-    if chunk_col and "chunk" in req.effective_output_fields:
-        cols.append(F.col(chunk_col))
-    if meta_out:
-        cols.append(meta_kv_column(meta_col))
-    cols += [F.col(c) for c in extra_cols]
-    return out.select(*cols)
+def payload_select_sql(req, chunk_expr: str | None,
+                       meta_kv_expr: str | None) -> tuple[str, str, str]:
+    """(chunk select, meta_kv select, output column list) of the Q12
+    projection: chunk is selected whenever given (the filters read it),
+    output only when requested; meta_kv only when requested."""
+    with_chunk = chunk_expr is not None and "chunk" in req.effective_output_fields
+    with_meta = meta_kv_expr is not None and "meta" in req.effective_output_fields
+    chunk_sel = f", {chunk_expr} AS chunk" if chunk_expr else ""
+    meta_kv_sel = f", {meta_kv_expr} AS meta_kv" if with_meta else ""
+    outs = (", chunk" if with_chunk else "") + (", meta_kv" if with_meta else "")
+    return chunk_sel, meta_kv_sel, outs
+
+
+def ranked_select_sql(keys: tuple[str, ...], source: str, rank_by: str,
+                      score: str, name: str, dec: int, outs: str,
+                      limit: int) -> str:
+    """SQL twin of rank_project: rank 1-based per `keys` group, ties by
+    id, trimmed to limit."""
+    lead = "".join(f"{k}, " for k in keys)
+    if keys:
+        over = f"{lead}id,\n         row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY"
+    else:
+        over = "id, row_number() OVER (ORDER BY"
+    return f"""SELECT {lead}id, rank, {name}{outs} FROM (
+  SELECT {over} {rank_by} DESC, id ASC) AS rank,
+         round({score}, {dec}) AS {name}{outs}
+  FROM {source}
+) WHERE rank <= {limit}
+"""
+
+
+def dense_tail_sql(req: DenseSearchRequest, keys: tuple[str, ...],
+                   post: str, outs: str) -> str:
+    """The `filtered` CTE and final select shared by both dense twins."""
+    return f"""filtered AS (
+  SELECT * FROM topk WHERE {post}
+)
+""" + ranked_select_sql(keys, "filtered", "_score_r", "_score", "score",
+                        req.score_decimals, outs, req.effective_limit)
 
 
 def dense_search_sql(
@@ -328,65 +459,23 @@ def dense_search_sql(
     if req.effective_text_filter is not None and chunk_expr is None:
         raise ValueError("text_filter requires chunk_expr")
     score = V.metric_sql_q(req.metric, vector_expr, req.query_vector)
-
-    where = ["_score IS NOT NULL"]
-    lo, hi = req.score_bounds()
-    if lo is not None:
-        where.append(f"_score > ({lo!r}::DOUBLE)")
-    if hi is not None:
-        where.append(f"_score <= ({hi!r}::DOUBLE)")
-    fetch = req.fetch + req.offset
-
-    post = ["TRUE"]
-    if req.score_threshold is not None:
-        ms = "(-_score)" if req.metric.upper() == "L2" else "_score"
-        post.append(
-            f"round({ms}, {req.threshold_decimals}) >= ({float(req.score_threshold)!r}::DOUBLE)"
-        )
-    if chunk_expr is not None:
-        post.append("(chunk IS NOT NULL AND chunk <> '')")
-    if req.effective_text_filter is not None:
-        post.append(
-            text_filter_sql("chunk", req.effective_text_filter,
-                            req.minimum_words_match, req.include_stop_words)
-        )
-    if req.meta_required:
-        post.append("_meta_n > 0")
-    meta_sel = ""
-    for i, (k, v) in enumerate((req.meta_filter or {}).items()):
-        e = (meta_exprs or {})[k]
-        meta_sel += f", {e} AS _meta_{i}"
-        vv = v.lower().replace("'", "''")
-        post.append(f"(_meta_{i} IS NOT NULL AND instr(lower(_meta_{i}), '{vv}') > 0)")
-
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    with_chunk = chunk_expr is not None and "chunk" in req.effective_output_fields
-    with_meta = meta_kv_expr is not None and "meta" in req.effective_output_fields
-    chunk_sel = f", {chunk_expr} AS chunk" if chunk_expr else ""
-    meta_sel_out = f", {meta_kv_expr} AS meta_kv" if with_meta else ""
+    threshold = (threshold_sql(req, "_score")
+                 if req.score_threshold is not None else None)
+    post, meta_sel = post_filter_sql(req, threshold, chunk_expr, meta_exprs,
+                                     req.effective_text_filter)
+    chunk_sel, meta_kv_sel, outs = payload_select_sql(req, chunk_expr, meta_kv_expr)
     extra_sel = "".join(f", {e} AS {name}" for name, e in (extra_exprs or {}).items())
-    chunk_out = ", chunk" if with_chunk else ""
-    meta_out = ", meta_kv" if with_meta else ""
-    extra_out = "".join(f", {name}" for name in (extra_exprs or {}))
+    outs += "".join(f", {name}" for name in (extra_exprs or {}))
     return f"""
 WITH scored AS (
   SELECT {id_expr} AS id, {score} AS _score
-         {chunk_sel}{meta_sel_out}{extra_sel}{meta_sel},
+         {chunk_sel}{meta_kv_sel}{extra_sel}{meta_sel},
          {meta_size_expr if meta_size_expr is not None else '0'} AS _meta_n
   FROM {table_sql}
 ),
 topk AS (
   SELECT *, round(_score, {RANK_DECIMALS}) AS _score_r FROM scored
-  WHERE {' AND '.join(where)}
-  ORDER BY _score_r DESC, id ASC LIMIT {fetch - req.offset} OFFSET {req.offset}
+  WHERE {score_where_sql(req)}
+  ORDER BY _score_r DESC, id ASC LIMIT {req.fetch} OFFSET {req.offset}
 ),
-filtered AS (
-  SELECT * FROM topk WHERE {' AND '.join(post)}
-)
-SELECT id, rank, score{chunk_out}{meta_out}{extra_out} FROM (
-  SELECT id, row_number() OVER (ORDER BY _score_r DESC, id ASC) AS rank,
-         round(_score, {dec}) AS score{chunk_out}{meta_out}{extra_out}
-  FROM filtered
-) WHERE rank <= {req.effective_limit}
-"""
+""" + dense_tail_sql(req, (), post, outs)

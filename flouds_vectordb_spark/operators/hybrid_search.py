@@ -16,10 +16,12 @@ Reference behavior reproduced (citations into /root/reference):
   (SURVEY.md §4.3.6) required for cross-engine hash parity.
 
 Scale notes: each branch is an independent bounded top-k (<=50 rows); the
-fusion is a full outer join of two <=50-row DataFrames — broadcastable,
+fusion is one hash aggregation over the union of two <=50-row tables —
 trivially cheap. Payload (chunk/meta) joins back late, only for the fused
 survivors, so hybrid costs ~2 corpus scans (one per branch) regardless of
-payload width.
+payload width. A single request and a batched block differ only in their
+branch top-k plans; everything after the branches is one tail
+(_fuse_rank), partitioned by qid for a block.
 """
 
 from __future__ import annotations
@@ -30,7 +32,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flouds_vectordb_spark.functions import vector as V
-from flouds_vectordb_spark.operators.dense_search import DenseSearchRequest
+from flouds_vectordb_spark.operators.dense_search import (
+    DenseSearchRequest,
+    join_payload,
+    payload_columns,
+    payload_select_sql,
+    post_filter,
+    post_filter_sql,
+    rank_project,
+    ranked_select_sql,
+    threshold_predicate,
+    threshold_sql,
+)
 from flouds_vectordb_spark.operators.sparse_search import (
     SparseSearchRequest,
     sparse_scores_sql,
@@ -94,7 +107,9 @@ class HybridSearchRequest:
         return self.round_decimal if self.round_decimal > 0 else -1
 
     @property
-    def threshold_decimals(self) -> int:
+    def score_decimals(self) -> int:
+        """Decimals of the reported score, and of the threshold compare:
+        round_decimal, or RANK_DECIMALS when unset."""
         rd = self.effective_round_decimal
         return rd if rd > 0 else RANK_DECIMALS
 
@@ -134,6 +149,76 @@ def _dense_branch(df: DataFrame, req: HybridSearchRequest, id_col: str,
     )
 
 
+def _fuse_rank(
+    dense: DataFrame,
+    sparse: DataFrame,
+    df: DataFrame,
+    req: HybridSearchRequest,
+    keys: tuple[str, ...],
+    id_col: str,
+    out_id: str,
+    chunk_col: str | None,
+    meta_col: str | None,
+) -> DataFrame:
+    """The fuse-and-rank tail shared by the single request (keys=()) and
+    the batched block (keys=("qid",)). dense: (*keys, id, dense_rank_,
+    dense_score); sparse: (*keys, id, sparse_rank_). Returns (*keys,
+    out_id, rank, rrf_score [, chunk, meta_kv]).
+
+    Fusion is union+groupBy, not a full-outer join (r11): the two branch
+    tables are bounded (<= 50 rows per query each) but a full-outer join
+    can't broadcast, so it planned a two-sided sort-merge — two exchanges
+    + sorts. The union form is ONE hash aggregation; max() over the
+    one-non-null-per-key columns reproduces the outer join's row merge
+    exactly (each key appears at most once per branch). A block
+    repartitions by qid ALONE before the merge agg (r12): hash(qid)
+    satisfies both the groupBy(qid, id) clustering requirement (subset
+    rule) and the final rank window's partitionBy(qid), so the agg and
+    the window share ONE exchange instead of (qid,id)-agg + qid-window.
+    Scale-safe unconditionally: both branch tables are already
+    rank-limited to <= nq*branch_limit rows, so qid-only partitions stay
+    bounded at any corpus size."""
+    fused = (
+        dense.withColumn("sparse_rank_", F.lit(None).cast("int"))
+        .unionByName(
+            sparse.withColumn("dense_rank_", F.lit(None).cast("int"))
+            .withColumn("dense_score", F.lit(None).cast("double")))
+    )
+    if keys:
+        fused = fused.repartition(*keys)
+    fused = (
+        fused.groupBy(*keys, "id")
+        .agg(F.max("dense_rank_").alias("dense_rank_"),
+             F.max("dense_score").alias("dense_score"),
+             F.max("sparse_rank_").alias("sparse_rank_"))
+    )
+    kf = float(RRF_K)
+    rrf = (
+        F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("dense_rank_").cast("double")), F.lit(0.0))
+        + F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("sparse_rank_").cast("double")), F.lit(0.0))
+    )
+    fused = fused.withColumn("_rrf", rrf).withColumn("_rrf_r", F.round(F.col("_rrf"), RANK_DECIMALS))
+
+    # late materialization for the fused survivors (<= 100 rows per query)
+    payload = payload_columns(req, chunk_col, meta_col)
+    if payload:
+        out = join_payload(fused.withColumnRenamed("id", "_fid"), "_fid",
+                           df, id_col, payload)
+        name = id_col
+    else:
+        out, name = fused, "id"
+    if name != out_id:
+        out = out.withColumnRenamed(name, out_id)
+
+    # score_threshold on the ORIGINAL dense score; sparse-only hits bypass
+    # (vector_store.py:766-770)
+    threshold = (F.col("dense_rank_").isNull() | threshold_predicate(req, "dense_score")
+                 if req.score_threshold is not None else None)
+    out = post_filter(out, req, threshold, chunk_col, meta_col)
+    return rank_project(out, req, keys, out_id, "_rrf_r", "_rrf", "rrf_score",
+                        req.limit, chunk_col, meta_col)
+
+
 def hybrid_search(
     df: DataFrame,
     postings: DataFrame | None,
@@ -147,7 +232,9 @@ def hybrid_search(
     """Returns (id, rank, rrf_score [, chunk, meta_kv]) fused across both
     branches. With postings=None the sparse branch scores directly off the
     collection (sparse_search_direct) — bit-identical results, no posting
-    build.
+    build. Each branch is a bounded JVM top-k (orderBy().limit()); the
+    fusion, payload join, post-filters and rank are _fuse_rank, shared
+    with hybrid_search_many.
 
     Projection contract (mirrors the reference: requested output_fields
     that the collection doesn't materialize are silently omitted, like
@@ -158,7 +245,6 @@ def hybrid_search(
     a column the other doesn't have shows up as a column-set mismatch."""
     if (req.meta_filter or req.meta_required) and meta_col is None:
         raise ValueError("meta_filter/meta_required require meta_col")
-
     dense = _dense_branch(df, req, id_col, vector_col)
     if postings is None:
         sbranch = sparse_search_direct(df, req.sparse_request(),
@@ -166,71 +252,46 @@ def hybrid_search(
     else:
         sbranch = sparse_search(postings, req.sparse_request())
     sparse = sbranch.select(F.col("id"), F.col("rank").alias("sparse_rank_"))
+    return _fuse_rank(dense, sparse, df, req, (), id_col, id_col, chunk_col, meta_col)
 
-    # union+groupBy fusion, not a full-outer join — see hybrid_search_many
-    fused = (
-        dense.withColumn("sparse_rank_", F.lit(None).cast("int"))
-        .unionByName(
-            sparse.withColumn("dense_rank_", F.lit(None).cast("int"))
-            .withColumn("dense_score", F.lit(None).cast("double")))
-        .groupBy("id")
-        .agg(F.max("dense_rank_").alias("dense_rank_"),
-             F.max("dense_score").alias("dense_score"),
-             F.max("sparse_rank_").alias("sparse_rank_"))
+
+def _fuse_tail_sql(
+    req: HybridSearchRequest,
+    keys: tuple[str, ...],
+    table_sql: str,
+    id_expr: str,
+    chunk_expr: str | None,
+    meta_exprs: dict[str, str] | None,
+    meta_size_expr: str | None,
+    meta_kv_expr: str | None,
+) -> str:
+    """SQL twin of _fuse_rank after the fusion: the `_hydrated` payload
+    join onto the `_fused` CTE, the `_filtered` post-filters and the
+    final rank, shared by both hybrid twins."""
+    threshold = (f"(dense_rank_ IS NULL OR {threshold_sql(req, 'dense_score')})"
+                 if req.score_threshold is not None else None)
+    post, meta_join_sel = post_filter_sql(req, threshold, chunk_expr, meta_exprs)
+    chunk_sel, meta_kv_sel, outs = payload_select_sql(req, chunk_expr, meta_kv_expr)
+    with_meta = bool(meta_kv_sel)
+    need_payload = bool(chunk_expr or meta_join_sel or req.meta_required or with_meta)
+    payload_join = (
+        f"JOIN (SELECT {id_expr} AS _pid {chunk_sel}{meta_kv_sel}{meta_join_sel}, "
+        f"{meta_size_expr if meta_size_expr is not None else '0'} AS _meta_n "
+        f"FROM {table_sql}) p ON f.id = p._pid"
+        if need_payload
+        else ""
     )
-    kf = float(RRF_K)
-    rrf = (
-        F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("dense_rank_").cast("double")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("sparse_rank_").cast("double")), F.lit(0.0))
-    )
-    fused = fused.withColumn("_rrf", rrf).withColumn("_rrf_r", F.round(F.col("_rrf"), RANK_DECIMALS))
-
-    # late materialization for the fused survivors (<=100 rows)
-    meta_out = meta_col is not None and "meta" in req.effective_output_fields
-    need_meta = bool(req.meta_filter or req.meta_required) or meta_out
-    payload = [c for c in (chunk_col, meta_col if need_meta else None) if c]
-    if payload:
-        keep = list(dict.fromkeys([id_col, *payload]))
-        out = (
-            df.select(*[F.col(c) for c in keep])
-            .join(F.broadcast(fused.withColumnRenamed("id", "_fid")),
-                  F.col(id_col) == F.col("_fid"), "inner")
-            .drop("_fid")
-        )
-    else:
-        out = fused.withColumnRenamed("id", id_col)
-
-    # score_threshold on the ORIGINAL dense score; sparse-only hits bypass.
-    # Compared in Milvus score space: similarity, or (squared) distance
-    # = -dense_score for L2 (vector_store.py:766-770)
-    if req.score_threshold is not None:
-        ms = (-F.col("dense_score") if req.metric.upper() == "L2"
-              else F.col("dense_score"))
-        ds = F.round(ms, req.threshold_decimals)
-        out = out.filter(
-            F.col("dense_rank_").isNull() | (ds >= F.lit(float(req.score_threshold)))
-        )
-    if chunk_col is not None:
-        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
-    if req.meta_required:
-        out = out.filter(F.size(F.col(meta_col)) > 0)
-    if req.meta_filter:
-        from flouds_vectordb_spark.operators.dense_search import meta_filter_predicate
-
-        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
-
-    w = Window.orderBy(F.col("_rrf_r").desc(), F.col(id_col).asc())
-    out = out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= req.limit)
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    cols = [F.col(id_col), F.col("rank"), F.round(F.col("_rrf"), dec).alias("rrf_score")]
-    if chunk_col and "chunk" in req.effective_output_fields:
-        cols.append(F.col(chunk_col))
-    if meta_out:
-        from flouds_vectordb_spark.operators.dense_search import meta_kv_column
-
-        cols.append(meta_kv_column(meta_col))
-    return out.select(*cols)
+    return f"""_hydrated AS (
+  SELECT f.*, round(f._rrf, {RANK_DECIMALS}) AS _rrf_r{', p.chunk' if chunk_expr else ''}{', p.meta_kv' if with_meta else ''}
+         {"".join(f', p._meta_{i}' for i in range(len(req.meta_filter or {})))}
+         {', p._meta_n' if need_payload else ', 0 AS _meta_n'}
+  FROM _fused f {payload_join}
+),
+_filtered AS (
+  SELECT * FROM _hydrated WHERE {post}
+)
+""" + ranked_select_sql(keys, "_filtered", "_rrf_r", "_rrf", "rrf_score",
+                        req.score_decimals, outs, req.limit)
 
 
 def hybrid_search_sql(
@@ -247,41 +308,6 @@ def hybrid_search_sql(
     """DuckDB oracle twin of hybrid_search."""
     score = V.metric_sql_q(req.metric, vector_expr, req.query_vector)
     sparse_scores = sparse_scores_sql(req.sparse_request(), postings_sql)
-
-    post = ["TRUE"]
-    if req.score_threshold is not None:
-        ms = "(-dense_score)" if req.metric.upper() == "L2" else "dense_score"
-        post.append(
-            f"(dense_rank_ IS NULL OR round({ms}, {req.threshold_decimals})"
-            f" >= ({float(req.score_threshold)!r}::DOUBLE))"
-        )
-    if chunk_expr is not None:
-        post.append("(chunk IS NOT NULL AND chunk <> '')")
-    if req.meta_required:
-        post.append("_meta_n > 0")
-    meta_join_sel = ""
-    for i, (k, v) in enumerate((req.meta_filter or {}).items()):
-        e = (meta_exprs or {})[k]
-        meta_join_sel += f", {e} AS _meta_{i}"
-        vv = v.lower().replace("'", "''")
-        post.append(f"(_meta_{i} IS NOT NULL AND instr(lower(_meta_{i}), '{vv}') > 0)")
-
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    with_chunk = chunk_expr is not None and "chunk" in req.effective_output_fields
-    with_meta = meta_kv_expr is not None and "meta" in req.effective_output_fields
-    chunk_sel = f", {chunk_expr} AS chunk" if chunk_expr else ""
-    meta_kv_sel = f", {meta_kv_expr} AS meta_kv" if with_meta else ""
-    chunk_out = ", chunk" if with_chunk else ""
-    meta_out = ", meta_kv" if with_meta else ""
-    need_payload = bool(chunk_expr or meta_join_sel or req.meta_required or with_meta)
-    payload_join = (
-        f"JOIN (SELECT {id_expr} AS _pid {chunk_sel}{meta_kv_sel}{meta_join_sel}, "
-        f"{meta_size_expr if meta_size_expr is not None else '0'} AS _meta_n "
-        f"FROM {table_sql}) p ON f.id = p._pid"
-        if need_payload
-        else ""
-    )
     return f"""
 WITH _dense_scored AS (
   SELECT {id_expr} AS id, {score} AS _ds FROM {table_sql}
@@ -314,21 +340,8 @@ _fused AS (
          + coalesce(1.0 / ({RRF_K}.0 + s.sparse_rank_::DOUBLE), 0.0) AS _rrf
   FROM _dense d FULL OUTER JOIN _sparse s ON d.id = s.id
 ),
-_hydrated AS (
-  SELECT f.*, round(f._rrf, {RANK_DECIMALS}) AS _rrf_r{', p.chunk' if chunk_expr else ''}{', p.meta_kv' if with_meta else ''}
-         {"".join(f', p._meta_{i}' for i in range(len(req.meta_filter or {})))}
-         {', p._meta_n' if need_payload else ', 0 AS _meta_n'}
-  FROM _fused f {payload_join}
-),
-_filtered AS (
-  SELECT * FROM _hydrated WHERE {' AND '.join(post)}
-)
-SELECT id, rank, rrf_score{chunk_out}{meta_out} FROM (
-  SELECT id, row_number() OVER (ORDER BY _rrf_r DESC, id ASC) AS rank,
-         round(_rrf, {dec}) AS rrf_score{chunk_out}{meta_out}
-  FROM _filtered
-) WHERE rank <= {req.limit}
-"""
+""" + _fuse_tail_sql(req, (), table_sql, id_expr, chunk_expr, meta_exprs,
+                     meta_size_expr, meta_kv_expr)
 
 
 # --- batched multi-query hybrid search (r6) ----------------------------------
@@ -352,8 +365,9 @@ def hybrid_search_many(
     Plan: ONE dense scan scores the whole block (the mapInArrow kernel
     of batch_search.dense_search_many) with a per-qid branch-limit
     window; ONE term-pruned posting scan serves every sparse branch
-    (sparse_search_many); fusion is a (qid, id) full outer join of two
-    <= nq*50-row scalar tables. With postings=None the posting table is
+    (sparse_search_many); the fusion of the two <= nq*50-row scalar
+    tables, payload join, post-filters and rank are _fuse_rank, shared
+    with hybrid_search (keys=("qid",)). With postings=None the posting table is
     built from df once for the WHOLE block (bit-identical weights to the
     direct scorer; measured r11 — the batched direct scorer loses, see
     the inline note). Results are bit-identical to looping hybrid_search
@@ -400,82 +414,8 @@ def hybrid_search_many(
         .select("qid", "id", F.col("rank").alias("sparse_rank_"))
     )
 
-    # union+groupBy fusion, not a full-outer join (r11): the two branch
-    # tables are bounded (<= nq*50 rows each) but a full-outer join can't
-    # broadcast, so it planned a two-sided sort-merge — two exchanges +
-    # sorts. The union form is ONE hash aggregation; max() over the
-    # one-non-null-per-key columns reproduces the outer join's row merge
-    # exactly (each (qid, id) appears at most once per branch).
-    # repartition by qid ALONE before the merge agg (r12): hash(qid)
-    # satisfies both the groupBy(qid, id) clustering requirement (subset
-    # rule) and the final rank window's partitionBy(qid), so the agg and
-    # the window share ONE exchange instead of (qid,id)-agg + qid-window.
-    # Scale-safe unconditionally: both branch tables are already
-    # rank-limited to <= nq*branch_limit rows, so qid-only partitions
-    # stay bounded at any corpus size.
-    fused = (
-        dense.withColumn("sparse_rank_", F.lit(None).cast("int"))
-        .unionByName(
-            sparse.withColumn("dense_rank_", F.lit(None).cast("int"))
-            .withColumn("dense_score", F.lit(None).cast("double")))
-        .repartition("qid")
-        .groupBy("qid", "id")
-        .agg(F.max("dense_rank_").alias("dense_rank_"),
-             F.max("dense_score").alias("dense_score"),
-             F.max("sparse_rank_").alias("sparse_rank_"))
-    )
-    kf = float(RRF_K)
-    rrf = (
-        F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("dense_rank_").cast("double")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(kf) + F.col("sparse_rank_").cast("double")), F.lit(0.0))
-    )
-    fused = fused.withColumn("_rrf", rrf).withColumn(
-        "_rrf_r", F.round(F.col("_rrf"), RANK_DECIMALS))
-
-    meta_out = meta_col is not None and "meta" in req.effective_output_fields
-    need_meta = bool(req.meta_filter or req.meta_required) or meta_out
-    payload = [c for c in (chunk_col, meta_col if need_meta else None) if c]
-    if payload:
-        keep = list(dict.fromkeys([id_col, *payload]))
-        out = (
-            df.select(*[F.col(c) for c in keep])
-            .join(F.broadcast(fused.withColumnRenamed("id", "_fid")),
-                  F.col(id_col) == F.col("_fid"), "inner")
-            .drop("_fid")
-            .withColumnRenamed(id_col, "id")
-        )
-    else:
-        out = fused
-
-    if req.score_threshold is not None:
-        ms = (-F.col("dense_score") if req.metric.upper() == "L2"
-              else F.col("dense_score"))
-        ds = F.round(ms, req.threshold_decimals)
-        out = out.filter(
-            F.col("dense_rank_").isNull() | (ds >= F.lit(float(req.score_threshold))))
-    if chunk_col is not None:
-        out = out.filter(F.col(chunk_col).isNotNull() & (F.col(chunk_col) != ""))
-    if req.meta_required:
-        out = out.filter(F.size(F.col(meta_col)) > 0)
-    if req.meta_filter:
-        from flouds_vectordb_spark.operators.dense_search import meta_filter_predicate
-
-        out = out.filter(meta_filter_predicate(F.col(meta_col), req.meta_filter))
-
-    wf = Window.partitionBy("qid").orderBy(F.col("_rrf_r").desc(), F.col("id").asc())
-    out = (out.withColumn("rank", F.row_number().over(wf))
-           .filter(F.col("rank") <= req.limit))
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    cols = [F.col("qid"), F.col("id"), F.col("rank"),
-            F.round(F.col("_rrf"), dec).alias("rrf_score")]
-    if chunk_col and "chunk" in req.effective_output_fields:
-        cols.append(F.col(chunk_col))
-    if meta_out:
-        from flouds_vectordb_spark.operators.dense_search import meta_kv_column
-
-        cols.append(meta_kv_column(meta_col))
-    return out.select(*cols)
+    return _fuse_rank(dense, sparse, df, req, ("qid",), id_col, "id",
+                      chunk_col, meta_col)
 
 
 def hybrid_search_many_sql(
@@ -510,39 +450,6 @@ def hybrid_search_many_sql(
     # returns 1-based ranks — exactly the branch table the fuse needs
     sparse_branch = sparse_search_many_sql(sreq, sparse_q, postings_sql)
 
-    post = ["TRUE"]
-    if req.score_threshold is not None:
-        ms = "(-dense_score)" if req.metric.upper() == "L2" else "dense_score"
-        post.append(
-            f"(dense_rank_ IS NULL OR round({ms}, {req.threshold_decimals})"
-            f" >= ({float(req.score_threshold)!r}::DOUBLE))")
-    if chunk_expr is not None:
-        post.append("(chunk IS NOT NULL AND chunk <> '')")
-    if req.meta_required:
-        post.append("_meta_n > 0")
-    meta_join_sel = ""
-    for i, (k, v) in enumerate((req.meta_filter or {}).items()):
-        e = (meta_exprs or {})[k]
-        meta_join_sel += f", {e} AS _meta_{i}"
-        vv = v.lower().replace("'", "''")
-        post.append(f"(_meta_{i} IS NOT NULL AND instr(lower(_meta_{i}), '{vv}') > 0)")
-
-    rd = req.effective_round_decimal
-    dec = rd if rd > 0 else RANK_DECIMALS
-    with_chunk = chunk_expr is not None and "chunk" in req.effective_output_fields
-    with_meta = meta_kv_expr is not None and "meta" in req.effective_output_fields
-    chunk_sel = f", {chunk_expr} AS chunk" if chunk_expr else ""
-    meta_kv_sel = f", {meta_kv_expr} AS meta_kv" if with_meta else ""
-    chunk_out = ", chunk" if with_chunk else ""
-    meta_out = ", meta_kv" if with_meta else ""
-    need_payload = bool(chunk_expr or meta_join_sel or req.meta_required or with_meta)
-    payload_join = (
-        f"JOIN (SELECT {id_expr} AS _pid {chunk_sel}{meta_kv_sel}{meta_join_sel}, "
-        f"{meta_size_expr if meta_size_expr is not None else '0'} AS _meta_n "
-        f"FROM {table_sql}) p ON f.id = p._pid"
-        if need_payload
-        else ""
-    )
     fetch = req.branch_limit + req.offset
     return f"""
 WITH _dense_scored AS (
@@ -569,19 +476,5 @@ _fused AS (
          + coalesce(1.0 / ({RRF_K}.0 + s.sparse_rank_::DOUBLE), 0.0) AS _rrf
   FROM _dense d FULL OUTER JOIN _sparse s ON d.qid = s.qid AND d.id = s.id
 ),
-_hydrated AS (
-  SELECT f.*, round(f._rrf, {RANK_DECIMALS}) AS _rrf_r{', p.chunk' if chunk_expr else ''}{', p.meta_kv' if with_meta else ''}
-         {"".join(f', p._meta_{i}' for i in range(len(req.meta_filter or {})))}
-         {', p._meta_n' if need_payload else ', 0 AS _meta_n'}
-  FROM _fused f {payload_join}
-),
-_filtered AS (
-  SELECT * FROM _hydrated WHERE {' AND '.join(post)}
-)
-SELECT qid, id, rank, rrf_score{chunk_out}{meta_out} FROM (
-  SELECT qid, id,
-         row_number() OVER (PARTITION BY qid ORDER BY _rrf_r DESC, id ASC) AS rank,
-         round(_rrf, {dec}) AS rrf_score{chunk_out}{meta_out}
-  FROM _filtered
-) WHERE rank <= {req.limit}
-"""
+""" + _fuse_tail_sql(req, ("qid",), table_sql, id_expr, chunk_expr, meta_exprs,
+                     meta_size_expr, meta_kv_expr)

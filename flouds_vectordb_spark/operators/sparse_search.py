@@ -502,13 +502,8 @@ def sparse_search(
         return postings.sparkSession.createDataFrame(
             [], f"id {id_t}, rank int, score double")
 
-    matched = postings.filter(F.col("term").isin([t for t, _ in qterms]))
-    # one sum per query term (<=1 posting each per doc) -> deterministic
-    aggs = [
-        F.sum(F.when(F.col("term") == t, F.col("weight"))).alias(f"_w{i}")
-        for i, (t, _) in enumerate(qterms)
-    ]
-    per_doc = matched.groupBy("id").agg(*aggs)
+    terms = [t for t, _ in qterms]
+    per_doc = _pivot_per_doc(postings.filter(F.col("term").isin(terms)), terms)
     score = F.lit(0.0)
     for i, (_, c) in enumerate(qterms):
         score = score + F.coalesce(F.col(f"_w{i}"), F.lit(0.0)) * F.lit(float(c))
@@ -605,7 +600,8 @@ def _rank_cut_many(scored: DataFrame, req: SparseSearchRequest) -> DataFrame:
 
 
 def _pivot_per_doc(pruned: DataFrame, terms: list) -> DataFrame:
-    """(id, _w0.._wN): each doc's weight per sorted union term — the
+    """(id, _w0.._wN): each doc's weight per term (one sum per term over
+    <=1 posting each per doc, so deterministic). For a block this is the
     query-INDEPENDENT half of batched scoring, one codegen sum pivot over
     the term-pruned posting scan (weights don't depend on qid, so no
     (posting x query) join ever happens on this plan)."""

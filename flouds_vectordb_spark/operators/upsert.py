@@ -457,9 +457,8 @@ class CollectionWriter:
 
     def read_latest(self) -> DataFrame:
         """Latest-wins view over the appended segments."""
-        df = self.catalog.read_collection(self.tenant, self.model)
-        w = Window.partitionBy("id").orderBy(F.col("batch_ts").desc())
-        return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+        return catalog_mod.latest_wins(
+            self.catalog.read_collection(self.tenant, self.model))
 
     @_locked
     def flush(self) -> None:
@@ -747,8 +746,6 @@ class CollectionWriter:
         scoring scan reads only id+codes) and run the unchanged
         dense_search request pipeline over it — approximate scores, the
         Milvus quantized-search contract."""
-        from pyspark.sql import functions as F
-
         from flouds_vectordb_spark.operators.dense_search import dense_search
         from flouds_vectordb_spark.plans.ivf import open_ivf
 
@@ -764,22 +761,8 @@ class CollectionWriter:
             # exact request pipeline re-scores it
             from flouds_vectordb_spark.plans.hnsw import open_hnsw
 
-            gidx = open_hnsw(self.meta["path"] + "__hnsw")
-            want = req.limit + req.offset + (
-                req.increase_limit_for_text_search if req.text_filter else 0)
-            ids = gidx.beam_search(self.catalog.spark, req.query_vector,
-                                   ef=max(64, want))
-            id_col = dense_kwargs.get("id_col", "id")
-            shortlist = (
-                gidx.nodes(self.catalog.spark)
-                .filter(F.col(id_col).isin(ids)).drop("_cell")
-            )
-            w = Window.partitionBy(id_col).orderBy(F.col("batch_ts").desc())
-            fresh = (
-                shortlist.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn")
-            )
-            return dense_search(fresh, req, **dense_kwargs)
+            return open_hnsw(self.meta["path"] + "__hnsw").search(
+                self.catalog.spark, req, **dense_kwargs)
 
         idx = open_ivf(self.meta["path"] + "__ivf")
         spark = self.catalog.spark
@@ -869,13 +852,9 @@ class CollectionWriter:
             # per qid over the latest-wins payload
             from flouds_vectordb_spark.plans.hnsw import open_hnsw
 
-            gidx = open_hnsw(self.meta["path"] + "__hnsw")
-            want = req.limit + req.offset + (
-                req.increase_limit_for_text_search if req.text_filter else 0)
-            return gidx.search_many(self.catalog.spark, queries, req,
-                                    ef=max(64, want),
-                                    payload_df=self.read_latest(),
-                                    **dense_kwargs)
+            return open_hnsw(self.meta["path"] + "__hnsw").search_many(
+                self.catalog.spark, queries, req,
+                payload_df=self.read_latest(), **dense_kwargs)
         idx = open_ivf(self.meta["path"] + "__ivf")
         spark = self.catalog.spark
         vector_col = dense_kwargs.get("vector_col", "vector")

@@ -71,6 +71,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flouds_vectordb_spark.catalog import latest_wins
 from flouds_vectordb_spark.functions.local import local_df
 from flouds_vectordb_spark.lifecycle import tracked_persist
 from flouds_vectordb_spark.functions.vector import metric_score, metric_score_q
@@ -960,9 +961,7 @@ class HnswIndex:
         shortlist = self._ids_pruned(self.nodes(spark), self.id_col,
                                      union_ids).drop("_cell")
         if "batch_ts" in shortlist.columns:
-            wv = Window.partitionBy(self.id_col).orderBy(F.col("batch_ts").desc())
-            shortlist = (shortlist.withColumn("_rn", F.row_number().over(wv))
-                         .filter(F.col("_rn") == 1).drop("_rn"))
+            shortlist = latest_wins(shortlist, self.id_col)
         if req.metric.upper() == self.metric:
             # coalesce(1): LocalTableScan executes with min(rows, cores)
             # partitions — at ef x |block| rows the shortlist block fanned
@@ -1004,9 +1003,7 @@ class HnswIndex:
         if "batch_ts" in shortlist.columns:
             # append-upserts may leave several versions of an id in `nodes`
             # until compaction; the exact re-rank must see only the latest
-            wv = Window.partitionBy(self.id_col).orderBy(F.col("batch_ts").desc())
-            shortlist = (shortlist.withColumn("_rn", F.row_number().over(wv))
-                         .filter(F.col("_rn") == 1).drop("_rn"))
+            shortlist = latest_wins(shortlist, self.id_col)
         dense_kwargs.setdefault("id_col", self.id_col)
         dense_kwargs.setdefault("vector_col", self.vector_col)
         return dense_search(shortlist, req, **dense_kwargs)
@@ -1249,9 +1246,7 @@ def compact_hnsw(index: HnswIndex, spark: SparkSession) -> None:
                             *(["batch_ts"] if "batch_ts" in nodes.columns
                               else []))
     if "batch_ts" in nodes_iv.columns:
-        wv = Window.partitionBy("id").orderBy(F.col("batch_ts").desc())
-        nodes_iv = (nodes_iv.withColumn("_rn", F.row_number().over(wv))
-                    .filter(F.col("_rn") == 1).drop("_rn", "batch_ts"))
+        nodes_iv = latest_wins(nodes_iv).drop("batch_ts")
     (
         _heuristic_cap(
             spark.read.parquet(edges_path)

@@ -12,6 +12,9 @@ children's sizes (the collection docs ⋈ embeddings plan estimates 626 GB
 for ~20 MB of files; r10 measured '76 PB' on the exploded tf plan), so a
 root guard picks the distributed regime for any joined input however
 small. A projection does not shrink the leaf sum, so it errs large.
+Each distinct input counts once: a leaf that `sameResult`s an earlier
+one (a self-join, or bm25_postings' second read of its documents) adds
+nothing, so a plan that reads one file twice is not twice as large.
 
 Every probe answers "large" for a streaming frame, for a frame without a
 JVM plan (Spark Connect) and on any error: the distributed regimes are
@@ -49,15 +52,19 @@ SMALL_BYTES = 64 << 20
 
 
 def input_bytes(df: DataFrame) -> int | None:
-    """Sum of the optimized plan's leaf sizes, or None (= large) for a
-    streaming frame, a frame without _jdf (Spark Connect) or on any
+    """Sum of the optimized plan's distinct leaf sizes, or None (= large)
+    for a streaming frame, a frame without _jdf (Spark Connect) or on any
     error."""
     try:
         if df.isStreaming:
             return None
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        return sum(int(leaves.apply(i).stats().sizeInBytes())
-                   for i in range(leaves.size()))
+        distinct = []
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if not any(leaf.sameResult(d) for d in distinct):
+                distinct.append(leaf)
+        return sum(int(d.stats().sizeInBytes()) for d in distinct)
     except Exception:
         return None
 

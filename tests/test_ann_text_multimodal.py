@@ -1186,42 +1186,31 @@ def test_li_hnsw_stage2_recall_and_decode(spark, tmp_path):
 
 
 def test_li_local_query_block_matches_expr(spark):
-    """r13: the driver-built query block (norms + SRP signatures as a
-    LocalRelation) must be bit-identical to the expression form, and
-    must decline (return None) on irregular vectors."""
-    from flouds_vectordb_spark.operators.ann import (
-        _li_local_query_block,
-        quote_ident,
-        srp_planes,
-        srp_signature_expr,
-    )
+    """r13: the driver-built query block (norms as a LocalRelation) must
+    be bit-identical to the expression form, and must decline (return
+    None) on a NULL vector."""
+    from flouds_vectordb_spark.operators.ann import _li_local_query_block
     import flouds_vectordb_spark.functions.vector as V
 
     rng = np.random.RandomState(51)
     rows = [(q, t, [float(x) for x in rng.standard_normal(16)])
             for q in range(3) for t in range(4)]
     qdf = spark.createDataFrame(rows, "qid long, pos long, vector array<double>")
-    planes = srp_planes(16, 20, 7)
     qrows = qdf.select("qid", "pos", "vector").collect()
-    blk = _li_local_query_block(spark, qdf, qrows, planes,
-                                "qid", "pos", "vector")
+    blk = _li_local_query_block(spark, qdf, qrows, "qid", "pos", "vector")
     assert blk is not None
-    got = {(r["qid"], r["_qpos"]): (r["_qn"], r["_qsig"])
-           for r in blk.collect()}
+    got = {(r["qid"], r["_qpos"]): r["_qn"] for r in blk.collect()}
     want_rows = qdf.select(
         "qid", F.col("pos").alias("_qpos"),
-        V.norm(F.col("vector")).alias("_qn"),
-        srp_signature_expr(quote_ident("vector"), planes).alias("_qsig")
-    ).collect()
-    want = {(r["qid"], r["_qpos"]): (r["_qn"], r["_qsig"])
-            for r in want_rows}
+        V.norm(F.col("vector")).alias("_qn")).collect()
+    want = {(r["qid"], r["_qpos"]): r["_qn"] for r in want_rows}
     assert got == want  # exact float equality: same bits or bust
 
     bad = qdf.withColumn(
         "vector", F.when(F.col("qid") == 1, F.lit(None)).otherwise(
             F.col("vector")))
     assert _li_local_query_block(
-        spark, bad, bad.select("qid", "pos", "vector").collect(), planes,
+        spark, bad, bad.select("qid", "pos", "vector").collect(),
         "qid", "pos", "vector") is None
 
 

@@ -81,26 +81,43 @@ def test_many_metrics_match_single(spark, corpus, qbatch, metric):
     assert batched == sorted(singles)
 
 
+_POSTFILTER_BASE = dict(metric="COSINE", limit=10, offset=3, score_threshold=None,
+                        text_filter="vector scan", minimum_words_match=2,
+                        meta_filter={"lang": "en"}, output_fields=("chunk", "meta"))
+# (request overrides, extra_cols): every knob of the shared tail
+_POSTFILTER_CASES = {
+    "text_meta_offset": ({}, ()),
+    "cosine_threshold": (dict(score_threshold=0.1, text_filter=None), ()),
+    "l2_threshold": (dict(metric="L2", score_threshold=0.5, text_filter=None), ()),
+    "cosine_range": (dict(radius=-0.2, range_filter=0.6, text_filter=None), ()),
+    "l2_range": (dict(metric="L2", radius=20.0, range_filter=5.0,
+                      text_filter=None), ()),
+    "meta_required": (dict(meta_required=True, meta_filter={},
+                           text_filter=None), ()),
+    "round_extra": (dict(round_decimal=3, text_filter=None), ("vector",)),
+}
+
+
 def test_many_postfilters_match_single(spark, corpus, qbatch):
-    """The shared post-filter chain (text + meta + offset + projection)
-    applies per qid exactly as the single-query pipeline does."""
-    kw = dict(metric="COSINE", limit=10, offset=3, score_threshold=None,
-              text_filter="vector scan", minimum_words_match=2,
-              meta_filter={"lang": "en"}, output_fields=("chunk", "meta"))
-    req = DenseSearchRequest(query_vector=qbatch[0][1], **kw)
-    batched = dense_search_many(corpus, qbatch, req, chunk_col="chunk",
-                                meta_col="meta")
-    assert batched.columns == ["qid", "id", "rank", "score", "chunk", "meta_kv"]
-    got = sorted((int(r["qid"]), r["id"], int(r["rank"]), r["chunk"], r["meta_kv"])
-                 for r in batched.collect())
-    singles = []
-    for qid, v in qbatch:
-        r1 = DenseSearchRequest(query_vector=list(v), **kw)
-        for row in dense_search(corpus, r1, chunk_col="chunk",
-                                meta_col="meta").collect():
-            singles.append((qid, row["id"], int(row["rank"]), row["chunk"],
-                            row["meta_kv"]))
-    assert got == sorted(singles)
+    """The shared tail (threshold, range bounds, text + meta filters,
+    offset, rounding, projection) applies per qid exactly as the
+    single-query pipeline does."""
+    for case, (over, extra) in _POSTFILTER_CASES.items():
+        kw = {**_POSTFILTER_BASE, **over}
+        req = DenseSearchRequest(query_vector=qbatch[0][1], **kw)
+        batched = dense_search_many(corpus, qbatch, req, chunk_col="chunk",
+                                    meta_col="meta", extra_cols=extra)
+        cols = ["id", "rank", "score", "chunk", "meta_kv", *extra]
+        assert batched.columns == ["qid", *cols], case
+        got = sorted((int(r["qid"]), *(r[c] for c in cols))
+                     for r in batched.collect())
+        singles = []
+        for qid, v in qbatch:
+            r1 = DenseSearchRequest(query_vector=list(v), **kw)
+            for row in dense_search(corpus, r1, chunk_col="chunk", meta_col="meta",
+                                    extra_cols=extra).collect():
+                singles.append((qid, *(row[c] for c in cols)))
+        assert got and got == sorted(singles), case
 
 
 def test_ivf_many_matches_exact_on_clustered(spark, qbatch, tmp_path_factory):
@@ -350,6 +367,17 @@ def test_sparse_search_many_huge_union_vocabulary(spark):
 
 # ---- batched hybrid RRF (hybrid_search_many) ---------------------------------
 
+# request overrides of the shared fuse-and-rank tail; output_fields=()
+# collapses to the full payload, as in the reference
+_HYBRID_CASES = {
+    "meta_filter": dict(meta_filter={"lang": "en"}, output_fields=("chunk", "meta")),
+    "offset": dict(offset=2),
+    "l2_threshold": dict(metric="L2", score_threshold=0.5),
+    "meta_required": dict(meta_required=True),
+    "no_output_fields": dict(output_fields=()),
+}
+
+
 def test_hybrid_search_many_matches_single_loop(spark, corpus):
     from flouds_vectordb_spark.operators.hybrid_search import (
         HybridSearchRequest,
@@ -362,24 +390,26 @@ def test_hybrid_search_many_matches_single_loop(spark, corpus):
     queries = [(i, [float(x) for x in rng.standard_normal(DIM)],
                 ["spark vector", "scan 7", "vector vector scan"][i])
                for i in range(3)]
-    req = HybridSearchRequest(query_vector=queries[0][1], text_filter="x",
-                              limit=10, meta_filter={"lang": "en"},
-                              output_fields=("chunk", "meta"))
     posts = bm25_postings(corpus)
-    got = {}
-    res = hybrid_search_many(corpus, posts, queries, req,
-                             chunk_col="chunk", meta_col="meta")
-    for r in res.collect():
-        got.setdefault(r["qid"], []).append(
-            (r["rank"], r["id"], r["rrf_score"], r["chunk"], r["meta_kv"]))
-    for qid, vec, text in queries:
-        sreq = HybridSearchRequest(query_vector=vec, text_filter=text,
-                                   limit=10, meta_filter={"lang": "en"},
-                                   output_fields=("chunk", "meta"))
-        single = [(r["rank"], r["id"], r["rrf_score"], r["chunk"], r["meta_kv"])
-                  for r in hybrid_search(corpus, posts, sreq,
-                                         chunk_col="chunk", meta_col="meta").collect()]
-        assert sorted(got.get(qid, [])) == single, qid
+    cols = ["rank", "id", "rrf_score", "chunk", "meta_kv"]
+    for case, kw in _HYBRID_CASES.items():
+        req = HybridSearchRequest(query_vector=queries[0][1], text_filter="x",
+                                  limit=10, **kw)
+        res = hybrid_search_many(corpus, posts, queries, req,
+                                 chunk_col="chunk", meta_col="meta")
+        assert res.columns == ["qid", "id", "rank", "rrf_score", "chunk",
+                               "meta_kv"], case
+        got = {}
+        for r in res.collect():
+            got.setdefault(r["qid"], []).append(tuple(r[c] for c in cols))
+        assert got, case
+        for qid, vec, text in queries:
+            sreq = HybridSearchRequest(query_vector=vec, text_filter=text,
+                                       limit=10, **kw)
+            single = [tuple(r[c] for c in cols)
+                      for r in hybrid_search(corpus, posts, sreq, chunk_col="chunk",
+                                             meta_col="meta").collect()]
+            assert sorted(got.get(qid, [])) == single, (case, qid)
 
 
 def test_catalog_sparse_and_hybrid_many_dispatch(spark, tmp_path_factory):

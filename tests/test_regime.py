@@ -7,6 +7,7 @@ import os
 import flouds_vectordb_spark
 from flouds_vectordb_spark import regime
 from flouds_vectordb_spark.functions.local import local_df
+from flouds_vectordb_spark.operators.sparse_search import bm25_postings
 
 
 def _parquet(spark, tmp_path, name, rows):
@@ -25,6 +26,13 @@ def test_leaf_sum_of_a_join_is_the_sum_of_its_sides(spark, tmp_path):
     assert regime.input_bytes(a.join(b, "id")) == na + nb
     # a projection keeps the scan's file bytes
     assert regime.input_bytes(a.select("id")) == na
+    # each distinct input counts once: a self-join and the posting
+    # build (which reads its documents twice) are as large as a
+    assert regime.input_bytes(
+        a.alias("l").join(a.alias("r"), "id")) == na
+    assert regime.input_bytes(bm25_postings(a, chunk_col="text")) == na
+    assert regime.input_bytes(
+        bm25_postings(a, chunk_col="text").join(b, "id")) == na + nb
 
 
 def test_streaming_frame_reads_as_large(spark):
