@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flouds_vectordb_spark import regime
@@ -267,6 +267,25 @@ def _explode_tf_docs(docs: DataFrame) -> DataFrame:
     )
 
 
+def bm25_weight(n: Column, sum_dl: Column, df: Column, tf: Column,
+                dl: Column, k1: float = K1_DEFAULT,
+                b: float = B_DEFAULT) -> Column:
+    """BM25 weight idf(df) * tf_norm(tf, dl) as one fixed-order double
+    expression, every input cast to double: n documents, sum_dl the
+    summed document lengths (avgdl = sum_dl / n). The posting view, the
+    broadcast-stats form and the direct scorer all build it here, so
+    their weights are bit-identical."""
+    n = n.cast("double")
+    dfc = df.cast("double")
+    idf = F.log(F.lit(1.0) + (n - dfc + F.lit(0.5)) / (dfc + F.lit(0.5)))
+    avgdl = sum_dl.cast("double") / n
+    tfd = tf.cast("double")
+    tf_norm = (tfd * F.lit(k1 + 1.0)) / (
+        tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl.cast("double") / avgdl)
+    )
+    return idf * tf_norm
+
+
 def bm25_doc_stats(df: DataFrame, id_col: str = "id",
                    chunk_col: str = "chunk") -> tuple[int, int]:
     """(n_docs, sum_dl) for a batch — includes empty documents, which the
@@ -300,23 +319,15 @@ def bm25_weights_stats_df(tf: DataFrame, term_stats: DataFrame | None,
     """bm25_weights with (n_docs, sum_dl) riding in as a broadcast 1-row
     DataFrame instead of Python scalars. Bit-identical weights: the
     long->double casts produce the same IEEE doubles as float(n_docs) /
-    float(sum_dl) literals, and the expression tree is otherwise the
-    same fixed-order math. term_stats=None means tf already carries its
+    float(sum_dl) literals, and both build bm25_weight. term_stats=None means tf already carries its
     `df` column (the window form in bm25_postings); stats_df=None means
     tf already carries _bm25_n/_bm25_s (the single-scan window form)."""
     post = tf if term_stats is None else tf.join(term_stats, "term")
     if stats_df is not None:
         post = post.join(F.broadcast(stats_df))
-    n = F.col("_bm25_n").cast("double")
-    dfc = F.col("df").cast("double")
-    idf = F.log(F.lit(1.0) + (n - dfc + F.lit(0.5)) / (dfc + F.lit(0.5)))
-    avgdl = F.col("_bm25_s").cast("double") / n
-    tfd = F.col("tf").cast("double")
-    tf_norm = (tfd * F.lit(k1 + 1.0)) / (
-        tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / avgdl)
-    )
-    return post.select("id", "term", "tf", "dl", "df",
-                       (idf * tf_norm).alias("weight"))
+    weight = bm25_weight(F.col("_bm25_n"), F.col("_bm25_s"), F.col("df"),
+                         F.col("tf"), F.col("dl"), k1, b)
+    return post.select("id", "term", "tf", "dl", "df", weight.alias("weight"))
 
 
 def bm25_doc_rows(df: DataFrame, id_col: str = "id",
@@ -347,15 +358,10 @@ def bm25_weights(tf: DataFrame, term_stats: DataFrame, n_docs: int, sum_dl: int,
     """Derive the posting weights from CURRENT global stats — the query-time
     (or view-time) step that makes the immutable tf rows a BM25 index.
     Bit-identical to bm25_postings when given the same corpus stats."""
-    post = tf.join(term_stats, "term")
-    n, dfc = F.lit(float(n_docs)), F.col("df").cast("double")
-    idf = F.log(F.lit(1.0) + (n - dfc + F.lit(0.5)) / (dfc + F.lit(0.5)))
-    avgdl = F.lit(float(sum_dl)) / F.lit(float(n_docs))
-    tfd = F.col("tf").cast("double")
-    tf_norm = (tfd * F.lit(k1 + 1.0)) / (
-        tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / avgdl)
-    )
-    return post.select("id", "term", "tf", "dl", "df", (idf * tf_norm).alias("weight"))
+    weight = bm25_weight(F.lit(float(n_docs)), F.lit(float(sum_dl)),
+                         F.col("df"), F.col("tf"), F.col("dl"), k1, b)
+    return tf.join(term_stats, "term").select(
+        "id", "term", "tf", "dl", "df", weight.alias("weight"))
 
 
 def bm25_postings_sql(
@@ -438,20 +444,13 @@ def sparse_scores_direct(
     stats = per_doc.agg(*stats_aggs)
 
     joined = per_doc.join(F.broadcast(stats))
-    n = F.col("n_docs").cast("double")
-    avgdl = F.col("sum_dl").cast("double") / n
-    k1, b = req.k1, req.b
     score = F.lit(0.0)
     for i, (_, c) in enumerate(qterms):
-        dfc = F.col(f"_df{i}").cast("double")
-        idf = F.log(F.lit(1.0) + (n - dfc + F.lit(0.5)) / (dfc + F.lit(0.5)))
-        tfd = F.col(f"_tf{i}").cast("double")
-        tf_norm = (tfd * F.lit(k1 + 1.0)) / (
-            tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("_dl").cast("double") / avgdl)
-        )
+        w = bm25_weight(F.col("n_docs"), F.col("sum_dl"), F.col(f"_df{i}"),
+                        F.col(f"_tf{i}"), F.col("_dl"), req.k1, req.b)
         # same shape as the posting path: coalesce(w_i, 0) * count — here
         # w_i is 0.0 (not NULL) when tf=0, summing identically
-        score = score + (idf * tf_norm) * F.lit(float(c))
+        score = score + w * F.lit(float(c))
     matched = sum((F.col(f"_tf{i}") for i in range(len(qterms))), F.lit(0))
     return joined.filter(matched > 0).select("id", score.alias("_score"))
 

@@ -997,7 +997,7 @@ class CollectionWriter:
         tf_read = spark.read.parquet(paths["tf"])
         (
             keyed.join(tf_read.select("id", "dl").distinct(), "id", "left")
-            .withColumn("dl", F.coalesce("dl", F.lit(0)))
+            .select("id", F.coalesce("dl", F.lit(0)).alias("dl"), "batch_ts")
             .write.mode("overwrite").parquet(paths["docs"])
         )
         bm25_term_stats(tf_read.select("id", "term", "tf")) \

@@ -24,11 +24,13 @@ single-layer graph + good entry points), executed as:
   O(local diameter).
 - QUERY: driver-coordinated best-first beam search (width ef): each round
   expands every not-yet-expanded beam member, scores the newly reachable
-  ids, and keeps the best ef. Per round the cluster does exactly two
-  id-pruned scans — edges by ``src IN (frontier)`` and nodes by
-  ``id IN (new candidates)`` — both written range-partitioned and sorted so
-  the IN-list pushdown skips row groups; the driver holds only (id, score)
-  pairs (never vectors), bounded by ef + ef*Mmax.
+  ids, and keeps the best ef. At scale a round is two id-pruned scans —
+  edges by ``src IN (frontier)`` and nodes by ``id IN (new candidates)``
+  — both written range-partitioned and sorted so the IN-list pushdown
+  skips row groups; the driver holds only (id, score) pairs (never
+  vectors), bounded by ef + ef*Mmax. Smaller graphs run the same loop
+  with a fused one-action round or a numpy round over the collected
+  graph, and a graph whose seed scan probes every cell runs no round.
 - APPEND: O(batch) — new rows are assigned to their 2 nearest EXISTING
   cells, edged against the EXISTING nodes of those cells (one pruned scan
   per batch), and appended to nodes+edges with reverse edges, the standard
@@ -73,8 +75,14 @@ from pyspark.sql import functions as F
 
 from flouds_vectordb_spark.catalog import latest_wins
 from flouds_vectordb_spark.functions.local import local_df
-from flouds_vectordb_spark.lifecycle import tracked_persist
-from flouds_vectordb_spark.functions.vector import metric_score, metric_score_q
+from flouds_vectordb_spark.lifecycle import tracked_persist, veto_plan_cache
+from flouds_vectordb_spark.functions.vector import (
+    fold_norms,
+    fold_scores,
+    metric_score,
+    metric_score_q,
+    query_norm,
+)
 from flouds_vectordb_spark.operators.dense_search import DenseSearchRequest, dense_search
 from flouds_vectordb_spark.plans.ivf import SAMPLE_CAP, _kmeans, _normalize_rows, _pairwise_d2
 
@@ -344,6 +352,36 @@ class _BlockScorer:
             "_s", _pair_score(self.metric, vector_col))
 
 
+def _union_ids(frontiers: dict) -> list:
+    """The sorted union of a round's per-query frontiers."""
+    return sorted({i for fr in frontiers.values() for i in fr},
+                  key=lambda v: (str(type(v)), v))
+
+
+def _adjacency(rows) -> dict:
+    """src -> [dst] from collected (src, dst) edge rows. Duplicate edges
+    (an append can write one twice) drop here, driver-side: a .distinct()
+    cost a full shuffle stage per beam round, and the collected volume is
+    bounded by |frontier| x Mmax scalar pairs (r7)."""
+    adj: dict = {}
+    seen: set = set()
+    for src, dst in rows:
+        if (src, dst) not in seen:
+            seen.add((src, dst))
+            adj.setdefault(src, []).append(dst)
+    return adj
+
+
+def _new_candidates(frontiers: dict, adj: dict, scored: dict) -> dict:
+    """qid -> every neighbor of the query's frontier that it has not
+    scored yet, each once."""
+    out = {}
+    for q, fr in frontiers.items():
+        reached = dict.fromkeys(d for s in fr for d in adj.get(s, ()))
+        out[q] = [d for d in reached if d not in scored[q]]
+    return out
+
+
 class HnswIndex:
     """A built navigable-graph index: nodes + edges tables on disk, entry
     medoid ids and build params as driver metadata."""
@@ -386,14 +424,26 @@ class HnswIndex:
         possible)."""
         return int(self.meta.get("appends", 1)) > 0
 
-    # below this corpus size a beam round runs as ONE fused action (tiny
-    # frontier broadcast into a whole-graph hash join, candidates scored in
-    # the same plan); above it, two id-pruned scans per round (the 100 TB
-    # shape: each scan reads only matching row groups). The fused round
-    # schedules as many Spark jobs as the two scans (its candidate
-    # broadcast and score shuffle are jobs of their own): it saves wall —
-    # one driver round trip and one plan build per round — not jobs
-    # (PLANS.md, "Regimes per operator", has the measurement)
+    # ---- batched best-first beam --------------------------------------------
+    # ONE round loop (beam_search_many_scored) serves every index: seeding,
+    # the forced round-1 expansion of entry points, the per-query top-ef
+    # exit, the max-rounds warning and the result are written once. The
+    # regimes differ in the expand step only (_beam_steps):
+    # - driver: numpy over the graph collected once per index object
+    #   (_driver_graph: at most DRIVER_BEAM_MAX_ROWS rows, never appended);
+    #   zero Spark jobs per round;
+    # - fused: at most SMALL_CORPUS_ROWS rows, ONE action per round
+    #   (_expand_score_many: frontier broadcast into the whole-graph join,
+    #   candidates scored in the same plan);
+    # - two-scan: everything larger, an id-pruned edge scan plus an
+    #   id-pruned node scan per round (the 100 TB shape: each scan reads
+    #   only matching row groups).
+    # The fused round schedules as many Spark jobs as the two scans (its
+    # candidate broadcast and score shuffle are jobs of their own): it
+    # saves wall, one driver round trip and one plan build per round, not
+    # jobs. A seed scan that probes every cell has scored every node, so
+    # on such a covered graph no regime runs a round (PLANS.md, "HNSW
+    # fused round, kept", has both measurements).
     SMALL_CORPUS_ROWS = 1_000_000
 
     def beam_search(self, spark: SparkSession, query_vector: list[float],
@@ -406,14 +456,6 @@ class HnswIndex:
         return self.beam_search_many(
             spark, [(0, [float(x) for x in query_vector])],
             ef=ef, max_rounds=max_rounds)[0]
-
-    # ---- batched multi-query beam (r6) --------------------------------------
-    # The single-query beam costs 1-2 driver jobs PER ROUND PER QUERY; a
-    # retrieval pipeline issues queries in blocks, so the batched beam runs
-    # the WHOLE block's expansion in 2 jobs per round (one adjacency scan
-    # for the union frontier, one (qid, id) pair-scoring scan), amortizing
-    # the job floor across the block exactly as batch_search.py does for
-    # the IVF paths. Driver state: (qid -> {id: score}) scalars.
 
     # above this many distinct ids, skip the isin() pushdown literal (the
     # broadcast join already restricts rows; a 100k-element IN list costs
@@ -463,72 +505,82 @@ class HnswIndex:
             key = _pairwise_d2(q, cents)
         return np.argsort(key, axis=1, kind="stable")[:, :nprobe].astype("int64")
 
-    def _seed_rows(self, spark: SparkSession, queries: list,
-                   scorer: _BlockScorer) -> tuple[list, dict]:
+    def _layout_cells(self, spark: SparkSession) -> int:
+        """How many build cells the seed scan can probe: 0 when the layout
+        predates the _cell column or carries no centroids."""
+        if "_cell" not in self.nodes(spark).columns:
+            return 0
+        return len(self.meta.get("centroids") or ())
+
+    def _seed_rows(self, spark: SparkSession, queries: list, score,
+                   score_cells) -> tuple[list, dict]:
         """(rows, forced): rows are (qid, id, score) seeds — every
-        latest-version node of each query's probed cells, ONE cell-pruned
-        scan; forced maps qid -> entry-point ids that MUST be expanded in
+        latest-version node of each query's probed cells (score_cells) —
+        and forced maps qid -> entry-point ids that MUST be expanded in
         round 1 even when stronger local seeds push them out of the
         top-ef (an entry point that is scored but never expanded
         contributes nothing — classic multi-entry HNSW expands every
-        entry). Falls back to the all-medoids pair scoring when the
-        layout predates the _cell column or carries no centroids."""
-        nodes = self.nodes(spark)
-        qids = [int(q) for q, _ in queries]
-        if "_cell" not in nodes.columns or not self.meta.get("centroids"):
-            rows = self._score_pairs_many(
-                spark, [(q, e) for q in qids
-                        for e in self.meta["entry_ids"]], scorer)
-            return rows, {q: set(self.meta["entry_ids"]) for q in qids}
-        qmat = np.array([[float(x) for x in v] for _, v in queries],
-                        dtype=np.float64)
+        entry). Falls back to scoring every medoid (score) when the
+        layout has no cells."""
+        qids = [q for q, _ in queries]
+        entry = self.meta.get("entry_ids", [])
+        if not self._layout_cells(spark):
+            return score({q: entry for q in qids}), {q: set(entry) for q in qids}
+        qmat = np.array([v for _, v in queries], dtype=np.float64)
         cells = self._probe_cells_many(qmat, self.SEED_PROBE_CELLS)
+        medoids = entry if len(entry) <= self.MEDOID_SEED_MAX_CELLS else []
+        rows = score_cells(qids, cells, medoids)
+        forced = {q: set(medoids) for q in qids}
+        # a query whose probed cells are all empty (possible after heavy
+        # deletes/compaction of a cell) must still enter the graph: score
+        # the global medoids for just those queries
+        missing = sorted(set(qids) - {q for q, _, _ in rows})
+        if missing:
+            rows += score({q: entry for q in missing})
+            for q in missing:
+                forced[q] = set(entry)
+        return rows, forced
+
+    def _seed_scan(self, spark: SparkSession, qids: list, cells: np.ndarray,
+                   medoids: list, scorer: _BlockScorer) -> list[tuple]:
+        """(qid, id, score) for every node of each query's probed cells,
+        and every medoid for every query: ONE cell-pruned scan."""
+        nodes = self.nodes(spark)
         union_cells = sorted({int(c) for row in cells for c in row})
         qcells = local_df(
             spark, [(q, int(c)) for q, row in zip(qids, cells) for c in row],
             "qid bigint, _pc bigint")
         has_ts = "batch_ts" in nodes.columns
         ts_cols = ["batch_ts"] if has_ts else []
-        entry = self.meta.get("entry_ids", [])
-        with_medoids = 0 < len(entry) <= self.MEDOID_SEED_MAX_CELLS
         scan_filter = F.col("_cell").isin(union_cells)
-        if with_medoids:
-            scan_filter = scan_filter | F.col(self.id_col).isin(entry)
+        if medoids:
+            scan_filter = scan_filter | F.col(self.id_col).isin(medoids)
         proj = nodes.filter(scan_filter).select(
             F.col(self.id_col).alias("_i"), self.vector_col,
             F.col("_cell").cast("bigint").alias("_pc"), *ts_cols)
         pairs = proj.join(F.broadcast(qcells), "_pc")
-        if with_medoids:
+        if medoids:
             qdf = local_df(spark, [(q,) for q in qids], "qid bigint")
-            med = proj.filter(F.col("_i").isin(entry)).crossJoin(
+            med = proj.filter(F.col("_i").isin(medoids)).crossJoin(
                 F.broadcast(qdf))
             pairs = pairs.select("qid", "_i", self.vector_col, *ts_cols) \
                 .unionByName(med.select("qid", "_i", self.vector_col,
                                         *ts_cols))
         scored = scorer.score(pairs, self.vector_col).select(
             "qid", "_i", "_s", *ts_cols)
-        rows = self._collect_score_block(scored, has_ts)
-        forced = ({q: set(entry) for q in qids} if with_medoids
-                  else {q: set() for q in qids})
-        # a query whose probed cells are all empty (possible after heavy
-        # deletes/compaction of a cell) must still enter the graph: score
-        # the global medoids for just those queries
-        missing = set(qids) - {q for q, _, _ in rows}
-        if missing:
-            rows += self._score_pairs_many(
-                spark, [(q, e) for q in sorted(missing)
-                        for e in self.meta["entry_ids"]], scorer)
-            for q in missing:
-                forced[q] = set(self.meta["entry_ids"])
-        return rows, forced
+        return self._collect_score_block(scored, has_ts)
 
-    def _score_pairs_many(self, spark: SparkSession, pairs: list,
+    def _score_pairs_many(self, spark: SparkSession, cands: dict,
                           scorer: _BlockScorer) -> list[tuple]:
-        """(qid, id, score) for explicit (qid, id) pairs — ONE job;
+        """(qid, id, score) for the (qid, id) pairs of cands (qid -> ids)
+        — ONE job;
         scores are JVM-side exact pair scores (literal CASE for small
         blocks, broadcast query-block join for large ones) with
         latest-version-per-id resolution (append-upserts may leave stale
         rows in `nodes` until compaction)."""
+        pairs = [(q, i) for q, ids in cands.items() for i in ids]
+        if not pairs:
+            return []
         ids = sorted({i for _, i in pairs}, key=lambda v: (str(type(v)), v))
         id_t = dict(self.nodes(spark).dtypes)[self.id_col]
         pdf = local_df(
@@ -561,9 +613,9 @@ class HnswIndex:
 
     def _expand_score_many(self, spark: SparkSession, frontiers: dict,
                            scorer: _BlockScorer) -> list[tuple]:
-        """ONE fused action per batched-beam round for small corpora: the
-        (qid, frontier) block broadcasts into the frontier-pruned edge
-        scan, the reachable (qid, dst) candidates broadcast into the node
+        """The fused expand step, ONE action per round: the (qid,
+        frontier) block broadcasts into the frontier-pruned edge scan,
+        the reachable (qid, dst) candidates broadcast into the node
         table, and every candidate scores against its query in the same
         action. The candidate broadcast and the score aggregation still
         run as jobs of their own, so a fused round schedules as many jobs
@@ -582,9 +634,7 @@ class HnswIndex:
         fdf = local_df(
             spark, [(int(q), m) for q, fr in frontiers.items() for m in fr],
             f"qid bigint, _src {id_t}")
-        union_fr = sorted({m for fr in frontiers.values() for m in fr},
-                          key=lambda v: (str(type(v)), v))
-        e = self._ids_pruned(self.edges(spark), "src", union_fr)
+        e = self._ids_pruned(self.edges(spark), "src", _union_ids(frontiers))
         cand = (e.join(F.broadcast(fdf), F.col("src") == F.col("_src"))
                 .select("qid", F.col("dst").alias("_i")))
         nodes = self.nodes(spark)
@@ -597,22 +647,31 @@ class HnswIndex:
         ).select("qid", "_i", "_s", *(["batch_ts"] if has_ts else []))
         return self._collect_score_block(scored, has_ts)
 
-    # DRIVER beam (r13 optimization): at or below this corpus size the
-    # graph is collected ONCE per index object (its in-RAM form — the
+    def _frontier_edges(self, spark: SparkSession, frontiers: dict) -> dict:
+        """The two-scan round's first scan: the union frontier's
+        adjacency, id-pruned (a broadcast join above ISIN_PUSHDOWN_CAP)."""
+        union_fr = _union_ids(frontiers)
+        e = self.edges(spark)
+        if len(union_fr) <= self.ISIN_PUSHDOWN_CAP:
+            e = e.filter(F.col("src").isin(union_fr))
+        else:
+            id_t = dict(e.dtypes)["src"]
+            fdf = local_df(spark, [(i,) for i in union_fr], f"src {id_t}")
+            e = e.join(F.broadcast(fdf), "src")
+        return _adjacency(e.select("src", "dst").collect())
+
+    # the driver expand step's bound (r13): at or below this corpus size
+    # the graph is collected ONCE per index object (its in-RAM form — the
     # same class of artifact as the cached nodes/edges reader handles,
-    # invalidated by append/compact) and every beam round runs as numpy
-    # over the collected scalars instead of a scheduled Spark job. The
-    # recall gate's 16-query beam paid ~25 driver jobs per call at gate
-    # scale — all scheduling. Scores are bit-identical: the sequential
-    # float64 fold is replicated by per-dimension vectorized
-    # accumulation (each numpy elementwise op is the same IEEE add/mul
-    # the Column fold performs, in the same order), query norms come
-    # from the same query_norm fold, and try_divide's /0 -> NULL becomes
-    # an excluded candidate. Control flow (seeding, forced expansion,
-    # per-query exit, tie-breaks) is the identical algorithm; a parity
-    # test pins driver == Spark beams. Above the bound — or for layouts
-    # the driver cannot resolve (versioned nodes without batch_ts,
-    # ragged vectors) — the Spark beam runs unchanged.
+    # invalidated by append/compact) and every round runs as numpy over
+    # the collected scalars instead of a scheduled Spark job. The recall
+    # gate's 16-query beam paid ~25 driver jobs per call at gate scale —
+    # all scheduling. Scores are bit-identical: vector.fold_scores is the
+    # sequential float64 fold of the Column scorer (batch_search's kernel
+    # runs it too) and try_divide's /0 -> NULL becomes an excluded
+    # candidate. Above the bound — or for layouts the driver cannot
+    # resolve (appended nodes, ragged vectors, NULL elements) — a Spark
+    # expand step runs.
     DRIVER_BEAM_MAX_ROWS = 200_000
 
     def _driver_graph(self, spark: SparkSession):
@@ -630,120 +689,92 @@ class HnswIndex:
             # the Spark beam (at the stale row's score) while a
             # latest-version-only driver graph would miss it — and
             # replicating per-version cells/scores here is not worth the
-            # rare small-appended-index case. The Spark beam (whose
-            # per-round version dedup owns these layouts) runs unchanged.
+            # rare small-appended-index case.
             return None
         nodes = self.nodes(spark)
-        has_cell = "_cell" in nodes.columns
-        cols = [F.col(self.id_col).alias("_i"),
-                F.col(self.vector_col).alias("_v")]
-        if has_cell:
-            cols.append(F.col("_cell").cast("bigint").alias("_c"))
-        vec: dict = {}
-        cell_of: dict = {}
-        for r in nodes.select(*cols).collect():
-            i = r["_i"]
-            vec[i] = r["_v"]
-            if has_cell:
-                cell_of[i] = int(r["_c"]) if r["_c"] is not None else None
-        ids = sorted(vec, key=lambda v: (str(type(v)), v))
-        dims = {len(vec[i]) for i in ids}
-        if len(dims) != 1:
+        cell = F.col("_cell") if "_cell" in nodes.columns else F.lit(None)
+        rows = nodes.select(F.col(self.id_col).alias("_i"),
+                            F.col(self.vector_col).alias("_v"),
+                            cell.cast("bigint").alias("_c")).collect()
+        # ragged vectors, or a NULL element (the Spark fold scores it
+        # NULL and drops the node, numpy would score NaN): Spark serves
+        if (len({len(r["_v"]) for r in rows}) != 1
+                or any(None in r["_v"] for r in rows)):
             return None
-        dim = dims.pop()
-        vmat = np.array([[float(x) for x in vec[i]] for i in ids],
-                        dtype=np.float64)
-        # exact sequential fold per row: norm and squared-norm columns
-        acc = np.zeros(len(ids), dtype=np.float64)
-        for j in range(dim):
-            acc = acc + vmat[:, j] * vmat[:, j]
-        vnorm = np.sqrt(acc)
-        adj: dict = {}
-        seen: set = set()
-        for r in self.edges(spark).select("src", "dst").collect():
-            p = (r["src"], r["dst"])
-            if p in seen:
-                continue
-            seen.add(p)
-            adj.setdefault(p[0], []).append(p[1])
         cells: dict = {}
-        for i in ids:
-            c = cell_of.get(i)
-            if c is not None:
-                cells.setdefault(c, []).append(i)
+        for r in rows:
+            if r["_c"] is not None:
+                cells.setdefault(r["_c"], []).append(r["_i"])
+        vmat = np.array([r["_v"] for r in rows], dtype=np.float64)
         self._graph_ram = {
-            "idx": {i: k for k, i in enumerate(ids)}, "vmat": vmat,
-            "vnorm": vnorm, "adj": adj, "cells": cells, "dim": dim,
-            "has_cell": has_cell,
+            "idx": {r["_i"]: k for k, r in enumerate(rows)}, "vmat": vmat,
+            "vnorm": fold_norms(vmat), "cells": cells, "dim": vmat.shape[1],
+            "adj": _adjacency(self.edges(spark).select("src", "dst").collect()),
         }
         return self._graph_ram
 
-    def _np_score(self, g: dict, cand_ids: list, qv: list, qn: float):
-        """(id, score) for candidates vs one query — the numpy twin of
-        _BlockScorer.score + _collect_score_block: same fold order, same
-        /0 -> dropped rule. Unknown ids (dangling edges) drop exactly as
-        the node join would drop them."""
+    def _driver_scorer(self, g: dict, queries: list):
+        """score(cands) -> (qid, id, score) rows over the collected graph,
+        each score vector.fold_scores' bits of the JVM pair score. A
+        NULL score (COSINE zero denominator) and an id with no node
+        (dangling edge) drop, as the node join and _collect_score_block
+        drop them."""
         idx = g["idx"]
-        known = [i for i in cand_ids if i in idx]
-        if not known:
-            return []
-        rows = [idx[i] for i in known]
-        sub = g["vmat"][rows]
-        q = np.asarray(qv, dtype=np.float64)
-        m = self.metric
-        if m == "L2":
-            acc = np.zeros(len(rows), dtype=np.float64)
-            for j in range(g["dim"]):
-                d = sub[:, j] - q[j]
-                acc = acc + d * d
-            s = -acc
-            return list(zip(known, s.tolist()))
-        acc = np.zeros(len(rows), dtype=np.float64)
-        for j in range(g["dim"]):
-            acc = acc + sub[:, j] * q[j]
-        if m == "IP":
-            return list(zip(known, acc.tolist()))
-        den = g["vnorm"][rows] * qn
-        out = []
-        for i, dot, dn in zip(known, acc.tolist(), den.tolist()):
-            if dn != 0.0:
-                out.append((i, dot / dn))
-        return out
+        qv = {q: (np.array([v], dtype=np.float64),
+                  np.array([query_norm(v)])) for q, v in queries}
 
-    def _driver_seed_rows(self, g: dict, queries: list) -> tuple[list, dict]:
-        """Driver twin of _seed_rows over the collected graph."""
-        from flouds_vectordb_spark.functions.vector import query_norm
+        def score(cands: dict) -> list[tuple]:
+            out = []
+            for q, ids in cands.items():
+                ids = [i for i in ids if i in idx]
+                rows = [idx[i] for i in ids]
+                s, keep = fold_scores(self.metric, g["vmat"][rows], *qv[q],
+                                      g["vnorm"][rows])
+                out += [(q, i, v) for i, v, k in
+                        zip(ids, s[:, 0].tolist(), keep[:, 0].tolist()) if k]
+            return out
 
-        qids = [int(q) for q, _ in queries]
-        qn = {int(q): query_norm(v) for q, v in queries}
-        qv = {int(q): v for q, v in queries}
-        entry = self.meta.get("entry_ids", [])
-        if not g["has_cell"] or not self.meta.get("centroids"):
-            rows = [(q, i, s) for q in qids
-                    for i, s in self._np_score(g, entry, qv[q], qn[q])]
-            return rows, {q: set(entry) for q in qids}
-        qmat = np.array([[float(x) for x in v] for _, v in queries],
-                        dtype=np.float64)
-        cells = self._probe_cells_many(qmat, self.SEED_PROBE_CELLS)
-        with_medoids = 0 < len(entry) <= self.MEDOID_SEED_MAX_CELLS
-        rows: list = []
-        for q, crow in zip(qids, cells):
-            seed_ids: set = set()
-            for c in crow:
-                seed_ids.update(g["cells"].get(int(c), ()))
-            if with_medoids:
-                seed_ids.update(i for i in entry if i in g["idx"])
-            ordered = sorted(seed_ids, key=lambda v: (str(type(v)), v))
-            rows.extend((q, i, s) for i, s in
-                        self._np_score(g, ordered, qv[q], qn[q]))
-        forced = ({q: set(entry) for q in qids} if with_medoids
-                  else {q: set() for q in qids})
-        missing = set(qids) - {q for q, _, _ in rows}
-        for q in sorted(missing):
-            rows.extend((q, i, s) for i, s in
-                        self._np_score(g, entry, qv[q], qn[q]))
-            forced[q] = set(entry)
-        return rows, forced
+        return score
+
+    def _beam_steps(self, spark: SparkSession, queries: list):
+        """(score, score_cells, expand) of the regime that serves this
+        beam. score(cands) scores explicit candidates (qid -> ids);
+        score_cells(qids, cells, medoids) scores each query's probed
+        cells plus the medoids; expand(frontiers, scored) returns the
+        (qid, id, score) rows one round adds."""
+        g = self._driver_graph(spark)
+        if g is not None and all(len(v) == g["dim"] for _, v in queries):
+            # a zero-job beam lets a caller embed its RESULTS in a lazy
+            # plan, and caching that plan would skip the search on
+            # re-collect (result caching): queries._memoized never caches
+            # a build that ran a driver beam
+            veto_plan_cache()
+            score = self._driver_scorer(g, queries)
+
+            def score_cells(qids, cells, medoids):
+                return score({q: {*medoids, *(i for c in row for i in
+                                              g["cells"].get(int(c), ()))}
+                              for q, row in zip(qids, cells)})
+
+            def expand(frontiers, scored):
+                return score(_new_candidates(frontiers, g["adj"], scored))
+
+            return score, score_cells, expand
+        scorer = _BlockScorer(spark, queries, self.metric)
+
+        def score(cands):
+            return self._score_pairs_many(spark, cands, scorer)
+
+        def score_cells(qids, cells, medoids):
+            return self._seed_scan(spark, qids, cells, medoids, scorer)
+
+        def expand(frontiers, scored):
+            if int(self.meta.get("n", 0)) <= self.SMALL_CORPUS_ROWS:
+                return self._expand_score_many(spark, frontiers, scorer)
+            adj = self._frontier_edges(spark, frontiers)
+            return score(_new_candidates(frontiers, adj, scored))
+
+        return score, score_cells, expand
 
     def beam_search_many(self, spark: SparkSession, queries,
                          ef: int = DEFAULT_EF,
@@ -779,15 +810,13 @@ class HnswIndex:
                     max_rounds=max_rounds))
             return out
         queries = [(int(q), [float(x) for x in v]) for q, v in queries]
-        g = self._driver_graph(spark)
-        if g is not None and all(len(v) == g["dim"] for _, v in queries):
-            return self._driver_beam_many_scored(g, queries, ef, max_rounds)
-        scorer = _BlockScorer(spark, queries, self.metric)
         ef = max(1, int(ef))
-        qids = [int(q) for q, _ in queries]
+        qids = [q for q, _ in queries]
+        score, score_cells, expand = self._beam_steps(spark, queries)
         scored = {q: {} for q in qids}
         expanded = {q: set() for q in qids}
-        seed_rows, forced = self._seed_rows(spark, queries, scorer)
+        seed_rows, forced = self._seed_rows(spark, queries, score,
+                                            score_cells)
         for q, i, s in seed_rows:
             scored[q][i] = s
 
@@ -795,7 +824,11 @@ class HnswIndex:
             d = scored[q]
             return sorted(d, key=lambda i: (-d[i], i))[:ef]
 
-        active = list(qids)
+        # a seed scan that probes every cell has scored every node (build
+        # and append give each node row a _cell that indexes
+        # meta["centroids"]), so no round can add a candidate
+        covered = 0 < self._layout_cells(spark) <= self.SEED_PROBE_CELLS
+        active = [] if covered else list(qids)
         for _ in range(max_rounds):
             frontiers = {}
             for q in active:
@@ -806,118 +839,12 @@ class HnswIndex:
                             key=lambda v: (str(type(v)), v))
                 if fr:
                     frontiers[q] = fr
-            active = list(frontiers)
-            if not active:
-                break
-            if int(self.meta.get("n", 0)) <= self.SMALL_CORPUS_ROWS:
-                # ONE fused action per round (see _expand_score_many) —
-                # the same job count as the two-scan round, one driver
-                # round trip fewer, where the full-table hash join is
-                # cheaper than that round trip
-                for q, fr in frontiers.items():
                     expanded[q].update(fr)
-                for q, i, sc in self._expand_score_many(spark, frontiers,
-                                                        scorer):
-                    scored[q][i] = sc
-                continue
-            union_fr = sorted({i for fr in frontiers.values() for i in fr},
-                              key=lambda v: (str(type(v)), v))
-            e = self.edges(spark)
-            if len(union_fr) <= self.ISIN_PUSHDOWN_CAP:
-                e = e.filter(F.col("src").isin(union_fr))
-            else:
-                id_t = dict(e.dtypes)["src"]
-                fdf = local_df(spark, [(i,) for i in union_fr],
-                               f"src {id_t}")
-                e = e.join(F.broadcast(fdf), "src")
-            # dedupe DRIVER-side: a .distinct() here costs a full shuffle
-            # stage per beam round, and the collected volume is already
-            # bounded by |frontier| x Mmax scalar pairs (r7 — removing it
-            # cut one exchange per round off every batched beam)
-            adj_rows = e.select("src", "dst").collect()
-            adj: dict = {}
-            seen_pairs: set = set()
-            for r in adj_rows:
-                p = (r["src"], r["dst"])
-                if p not in seen_pairs:
-                    seen_pairs.add(p)
-                    adj.setdefault(r["src"], []).append(r["dst"])
-            pairs = []
-            for q, fr in frontiers.items():
-                expanded[q].update(fr)
-                known = scored[q]
-                seen = set()
-                for s in fr:
-                    for d in adj.get(s, ()):
-                        if d not in known and d not in seen:
-                            seen.add(d)
-                            pairs.append((q, d))
-            if pairs:
-                for q, i, s in self._score_pairs_many(spark, pairs, scorer):
-                    scored[q][i] = s
-        else:
-            warnings.warn(
-                f"hnsw batched beam hit the {max_rounds}-round backstop "
-                "before every query converged; results may be "
-                "under-explored", stacklevel=2)
-        return {q: [(i, scored[q][i]) for i in beam(q)] for q in qids}
-
-    def _driver_beam_many_scored(self, g: dict, queries: list, ef: int,
-                                 max_rounds: int) -> dict:
-        """The batched best-first beam over the collected graph — the
-        SAME control flow as the Spark loop below (seeding, forced
-        round-1 expansion, per-query top-ef exit, tie-breaks), with each
-        round's expand+score as numpy instead of a scheduled job.
-
-        Plan-cache veto: a zero-job beam means a caller can embed these
-        RESULTS in a lazy plan; caching such a plan would skip the search
-        on re-collect (result caching, not plan caching) — so any build
-        that ran a driver beam is marked ineligible and every bench pass
-        re-runs the live search."""
-        from flouds_vectordb_spark.functions.vector import query_norm
-        from flouds_vectordb_spark.lifecycle import veto_plan_cache
-
-        veto_plan_cache()
-
-        ef = max(1, int(ef))
-        qids = [int(q) for q, _ in queries]
-        qn = {int(q): query_norm(v) for q, v in queries}
-        qv = {int(q): v for q, v in queries}
-        scored = {q: {} for q in qids}
-        expanded = {q: set() for q in qids}
-        seed_rows, forced = self._driver_seed_rows(g, queries)
-        for q, i, s in seed_rows:
-            scored[q][i] = s
-
-        def beam(q) -> list:
-            d = scored[q]
-            return sorted(d, key=lambda i: (-d[i], i))[:ef]
-
-        adj = g["adj"]
-        active = list(qids)
-        for _ in range(max_rounds):
-            frontiers = {}
-            for q in active:
-                fr = sorted(forced.pop(q, set()) & set(scored[q]) |
-                            {i for i in beam(q) if i not in expanded[q]},
-                            key=lambda v: (str(type(v)), v))
-                if fr:
-                    frontiers[q] = fr
             active = list(frontiers)
             if not active:
                 break
-            for q, fr in frontiers.items():
-                expanded[q].update(fr)
-                known = scored[q]
-                seen: set = set()
-                cand = []
-                for s in fr:
-                    for d in adj.get(s, ()):
-                        if d not in known and d not in seen:
-                            seen.add(d)
-                            cand.append(d)
-                for i, sc in self._np_score(g, cand, qv[q], qn[q]):
-                    known[i] = sc
+            for q, i, s in expand(frontiers, scored):
+                scored[q][i] = s
         else:
             warnings.warn(
                 f"hnsw batched beam hit the {max_rounds}-round backstop "

@@ -384,14 +384,26 @@ def test_late_interaction_ivf_recalls_exact_on_clusters(spark, tmp_path):
                                      k=5).count() == 0
 
 
-def test_prepared_plan_cache_never_caches_eager_builders(spark):
+def test_prepared_plan_cache_never_caches_eager_builders(spark, tmp_path):
     """The registry's plan cache must cache ONLY pure lazy builders: an
-    entry that runs jobs at build time (here: a collect) or registers a
-    persist must rebuild every call — caching it would cache results."""
+    entry that runs jobs at build time (here: a collect), registers a
+    persist or runs an HNSW driver beam must rebuild every call —
+    caching it would cache results. Once the graph is collected the
+    driver beam runs no Spark job, so only its plan-cache veto keeps
+    that builder out of the cache."""
     from flouds_vectordb_spark import queries as Q
     from flouds_vectordb_spark.lifecycle import tracked_persist
+    from flouds_vectordb_spark.plans.hnsw import build_hnsw
 
-    calls = {"pure": 0, "job": 0, "persist": 0}
+    rng = np.random.RandomState(5)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.uniform(-1, 1, 4)]) for i in range(40)],
+        "id bigint, vector array<double>")
+    idx = build_hnsw(vecs, str(tmp_path / "hnsw"), m=4, cell_target=16)
+    q = [0.1, 0.2, 0.3, 0.4]
+    idx.beam_search_many_scored(spark, [(0, q)], ef=4)  # collects the graph
+    assert idx._graph_ram not in (None, False)
+    calls = {"pure": 0, "job": 0, "persist": 0, "beam": 0}
 
     def pure(sp, sf):
         calls["pure"] += 1
@@ -406,12 +418,20 @@ def test_prepared_plan_cache_never_caches_eager_builders(spark):
         calls["persist"] += 1
         return tracked_persist(sp.range(3))
 
-    wp, wj, wper = (Q._memoized("t_pure", pure),
-                    Q._memoized("t_job", with_job),
-                    Q._memoized("t_persist", with_persist))
+    def with_beam(sp, sf):
+        calls["beam"] += 1
+        ids = [i for i, _ in idx.beam_search_many_scored(
+            sp, [(0, q)], ef=4)[0]]
+        return sp.range(40).filter(F.col("id").isin(ids))
+
+    wp, wj, wper, wb = (Q._memoized("t_pure", pure),
+                        Q._memoized("t_job", with_job),
+                        Q._memoized("t_persist", with_persist),
+                        Q._memoized("t_beam", with_beam))
     for _ in range(3):
         wp(spark, "/tmp/x"); wj(spark, "/tmp/x"); wper(spark, "/tmp/x")
-    assert calls == {"pure": 1, "job": 3, "persist": 3}
+        wb(spark, "/tmp/x")
+    assert calls == {"pure": 1, "job": 3, "persist": 3, "beam": 3}
     for k in list(Q._PLAN_CACHE):
         if k[2].startswith("t_"):
             del Q._PLAN_CACHE[k]

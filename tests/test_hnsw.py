@@ -110,16 +110,6 @@ def test_metric_variants_exact_on_cluster(spark, tmp_path_factory, metric):
     assert got == exact
 
 
-def test_big_corpus_two_scan_round_path_matches(spark, built, monkeypatch):
-    """Force the 100 TB round shape (two id-pruned scans, no broadcast of
-    the whole-graph join) and require identical beam results."""
-    df, q, idx = built
-    small = idx.beam_search(spark, q, ef=32)
-    monkeypatch.setattr(HnswIndex, "SMALL_CORPUS_ROWS", -1)
-    big = open_hnsw(idx.path).beam_search(spark, q, ef=32)
-    assert small == big
-
-
 def test_append_is_o_batch_and_searchable(spark, built, tmp_path_factory):
     df, q, idx0 = built
     # copy the index so the module-scoped fixture stays pristine
@@ -561,33 +551,73 @@ def test_two_level_build_deterministic_and_searchable(spark, tmp_path_factory):
     assert sorted(got) == list(range(1000, 1010))  # the planted cluster ids
 
 
-def test_batched_big_corpus_two_scan_rounds_match(spark, built, monkeypatch):
-    """The batched beam's 100 TB shape (two id-pruned scans per round)
-    must be result-identical to the small-corpus fused single-job round."""
-    df, q, idx = built
+@pytest.fixture(scope="module")
+def covered(spark, tmp_path_factory):
+    """The `built` corpus at the default cell_target: one cell, so every
+    query's seed scan probes every cell (a covered graph)."""
+    df, q = _clustered_df(spark)
+    path = str(tmp_path_factory.mktemp("hnsw_cov") / "idx")
+    idx = build_hnsw(df, path, m=8, metric="COSINE")
+    assert 0 < idx.meta["ncells"] <= HnswIndex.SEED_PROBE_CELLS
+    return df, q, idx
+
+
+def _cells_index_centroids(spark, idx):
+    """Every node row carries a non-NULL _cell that indexes the
+    centroids: what makes a seed scan over every cell score every node."""
+    bad = idx.nodes(spark).filter(
+        F.col("_cell").isNull() | (F.col("_cell") < 0)
+        | (F.col("_cell") >= len(idx.meta["centroids"])))
+    assert bad.count() == 0
+
+
+def _no_round(*_a, **_k):
+    raise AssertionError("a covered graph ran a beam round")
+
+
+def _three_steps(spark, path, queries, ef, monkeypatch):
+    """The scored beams of the driver, fused and two-scan expand steps,
+    each on a freshly opened index; on a covered graph no expand step
+    may run."""
+    out = []
+    with monkeypatch.context() as mp:
+        idx = open_hnsw(path)
+        if 0 < idx.meta["ncells"] <= HnswIndex.SEED_PROBE_CELLS:
+            mp.setattr(HnswIndex, "_expand_score_many", _no_round)
+            mp.setattr(HnswIndex, "_frontier_edges", _no_round)
+        out.append(idx.beam_search_many_scored(spark, queries, ef=ef))
+        out.append(idx._graph_ram)
+        mp.setattr(HnswIndex, "DRIVER_BEAM_MAX_ROWS", -1)
+        out.append(open_hnsw(path).beam_search_many_scored(spark, queries,
+                                                           ef=ef))
+        mp.setattr(HnswIndex, "SMALL_CORPUS_ROWS", -1)
+        out.append(open_hnsw(path).beam_search_many_scored(spark, queries,
+                                                           ef=ef))
+    return out
+
+
+def test_driver_beam_matches_spark_beam_paths(spark, built, covered,
+                                              monkeypatch):
+    """One beam loop, three expand steps: the driver step (numpy over
+    the collected graph), the fused one-action round and the two-scan
+    round must produce IDENTICAL scored beams — ids, exact float scores,
+    order. Three query sets (one query at ef 32, a 5-query block at
+    ef 16, three mixed queries at ef 16) run on the ~5-cell `built`
+    index and on the covered default-cell_target index, where the seed
+    scan scores every node and no round runs."""
     rng = np.random.RandomState(61)
-    queries = [(i, [float(x) for x in np.array(q) + rng.uniform(-0.03, 0.03, DIM)])
-               for i in range(5)]
-    small = idx.beam_search_many(spark, queries, ef=16)
-    monkeypatch.setattr(HnswIndex, "SMALL_CORPUS_ROWS", -1)
-    big = open_hnsw(idx.path).beam_search_many(spark, queries, ef=16)
-    assert small == big
-
-
-def test_driver_beam_matches_spark_beam_paths(spark, built, monkeypatch):
-    """r13: the collected-graph driver beam (new default at gate scale)
-    must produce the IDENTICAL scored beams — ids, exact float scores,
-    order — as both Spark round shapes (fused one-job and two-scan)."""
-    df, q, idx = built
-    queries = [(0, q), (1, [x * 1.01 for x in q]), (2, [-x for x in q])]
-    drv = idx.beam_search_many_scored(spark, queries, ef=16)
-    assert getattr(idx, "_graph_ram", None) not in (None, False)
-    monkeypatch.setattr(HnswIndex, "DRIVER_BEAM_MAX_ROWS", -1)
-    fused = open_hnsw(idx.path).beam_search_many_scored(spark, queries, ef=16)
-    monkeypatch.setattr(HnswIndex, "SMALL_CORPUS_ROWS", -1)
-    twoscan = open_hnsw(idx.path).beam_search_many_scored(spark, queries,
-                                                          ef=16)
-    assert drv == fused == twoscan
+    for df, q, idx in (built, covered):
+        _cells_index_centroids(spark, idx)
+        block = [(i, [float(x) for x in
+                      np.array(q) + rng.uniform(-0.03, 0.03, DIM)])
+                 for i in range(5)]
+        mixed = [(0, q), (1, [x * 1.01 for x in q]), (2, [-x for x in q])]
+        for queries, ef in (([(0, q)], 32), (block, 16), (mixed, 16)):
+            drv, graph, fused, twoscan = _three_steps(
+                spark, idx.path, queries, ef, monkeypatch)
+            assert graph not in (None, False)
+            assert drv == fused == twoscan, (idx.meta["ncells"], ef)
+            assert all(len(b) == ef for b in drv.values())
 
 
 def test_driver_beam_ineligible_after_append(spark, tmp_path_factory,
@@ -596,20 +626,32 @@ def test_driver_beam_ineligible_after_append(spark, tmp_path_factory,
     take the driver beam — the Spark seed scan buckets every node row by
     its own _cell and dedups latest-by-ts after the cell filter, which a
     latest-version-only driver graph cannot replicate. The Spark paths
-    must still agree with each other on the appended index."""
+    must still agree with each other on the appended index, including
+    the covered one (default cell_target), where no round runs. A node
+    vector with a NULL element declines the driver beam too: the Spark
+    fold scores it NULL and drops the node, where numpy would score NaN."""
     df, q = _clustered_df(spark, seed=23)
-    path = str(tmp_path_factory.mktemp("hnsw_app") / "idx")
-    idx = build_hnsw(df, path, m=8, metric="COSINE", cell_target=64)
     rng = np.random.RandomState(3)
     extra = spark.createDataFrame(
         [(int(5000 + i), [float(x) for x in rng.uniform(-1, 1, DIM)])
          for i in range(12)], "id bigint, vector array<double>")
-    idx.append(extra)
-    assert idx._versions_possible
+    holed = df.withColumn("vector", F.when(
+        F.col("id") == 1000,
+        F.transform("vector", lambda x, i: F.when(i > 0, x)))
+        .otherwise(F.col("vector")))
     queries = [(0, q), (1, [-x for x in q])]
-    drv_attempt = idx.beam_search_many_scored(spark, queries, ef=16)
-    assert getattr(idx, "_graph_ram", None) is False  # driver declined
-    monkeypatch.setattr(HnswIndex, "SMALL_CORPUS_ROWS", -1)
-    twoscan = open_hnsw(idx.path).beam_search_many_scored(spark, queries,
-                                                          ef=16)
-    assert drv_attempt == twoscan
+    for corpus, cell_target, grow in ((df, 64, True), (df, 1024, True),
+                                      (holed, 64, False)):
+        path = str(tmp_path_factory.mktemp("hnsw_app") / "idx")
+        idx = build_hnsw(corpus, path, m=8, metric="COSINE",
+                         cell_target=cell_target)
+        if grow:
+            idx.append(extra)
+        assert idx._versions_possible == grow
+        _cells_index_centroids(spark, idx)
+        drv_attempt, graph, fused, twoscan = _three_steps(
+            spark, path, queries, 16, monkeypatch)
+        assert graph is False  # driver declined
+        assert drv_attempt == fused == twoscan, cell_target
+        if not grow:  # the node with a NULL element is never scored
+            assert 1000 not in [i for i, _ in fused[0]]

@@ -493,6 +493,24 @@ def test_sparse_tf_files_have_disjoint_term_ranges(spark, tmp_path_factory):
     for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
         assert hi <= lo, f"overlapping term ranges: {hi} > {lo}"
 
+    # the doc registry's build and append part files share one schema,
+    # (id, dl, batch_ts): Spark infers the registry schema from whichever
+    # part file lists first, so mixed layouts made the posting view's
+    # plan differ from run to run. Names and types only: Spark reads
+    # every parquet column as nullable, and the append's batch_ts is a
+    # non-NULL literal
+    w.insert_data(
+        spark.createDataFrame([("k0", "w001 w002", [1.0, 0.0]),
+                               ("k999", "w003", [0.0, 1.0])],
+                              "id string, chunk string, vector array<float>"),
+        batch_ts=2, force_flush=True)
+    docs = glob.glob(w._sparse_paths()["docs"] + "/*.parquet")
+    assert len(docs) > 1
+    schemas = {tuple((c.name, str(c.type)) for c in pq.read_schema(f))
+               for f in docs}
+    assert schemas == {(("id", "string"), ("dl", "int32"),
+                        ("batch_ts", "int32"))}, schemas
+
 
 def test_postings_partition_count_scales_with_corpus(spark, tmp_path,
                                                      monkeypatch):
