@@ -596,28 +596,49 @@ def _three_steps(spark, path, queries, ef, monkeypatch):
     return out
 
 
+def _assert_three_steps_agree(spark, idx, queries, ef, monkeypatch):
+    _cells_index_centroids(spark, idx)
+    drv, graph, fused, twoscan = _three_steps(
+        spark, idx.path, queries, ef, monkeypatch)
+    assert graph not in (None, False)
+    assert drv == fused == twoscan, (idx.meta["ncells"], ef)
+    assert all(len(b) == ef for b in drv.values())
+
+
+def test_big_corpus_two_scan_round_path_matches(spark, built, covered,
+                                                monkeypatch):
+    """Force the 100 TB round shape (two id-pruned scans, no broadcast of
+    the whole-graph join): one query at ef 32 scores identically under
+    the driver, fused and two-scan expand steps, on the ~5-cell `built`
+    index and on the covered index, where no round runs."""
+    for df, q, idx in (built, covered):
+        _assert_three_steps_agree(spark, idx, [(0, q)], 32, monkeypatch)
+
+
+def test_batched_big_corpus_two_scan_rounds_match(spark, built, covered,
+                                                  monkeypatch):
+    """The batched beam's 100 TB shape (two id-pruned scans per round)
+    must be result-identical to the fused single-job round and the driver
+    step: a 5-query block at ef 16, on both indexes."""
+    rng = np.random.RandomState(61)
+    for df, q, idx in (built, covered):
+        block = [(i, [float(x) for x in
+                      np.array(q) + rng.uniform(-0.03, 0.03, DIM)])
+                 for i in range(5)]
+        _assert_three_steps_agree(spark, idx, block, 16, monkeypatch)
+
+
 def test_driver_beam_matches_spark_beam_paths(spark, built, covered,
                                               monkeypatch):
     """One beam loop, three expand steps: the driver step (numpy over
     the collected graph), the fused one-action round and the two-scan
     round must produce IDENTICAL scored beams — ids, exact float scores,
-    order. Three query sets (one query at ef 32, a 5-query block at
-    ef 16, three mixed queries at ef 16) run on the ~5-cell `built`
+    order — for three mixed queries at ef 16, on the ~5-cell `built`
     index and on the covered default-cell_target index, where the seed
     scan scores every node and no round runs."""
-    rng = np.random.RandomState(61)
     for df, q, idx in (built, covered):
-        _cells_index_centroids(spark, idx)
-        block = [(i, [float(x) for x in
-                      np.array(q) + rng.uniform(-0.03, 0.03, DIM)])
-                 for i in range(5)]
         mixed = [(0, q), (1, [x * 1.01 for x in q]), (2, [-x for x in q])]
-        for queries, ef in (([(0, q)], 32), (block, 16), (mixed, 16)):
-            drv, graph, fused, twoscan = _three_steps(
-                spark, idx.path, queries, ef, monkeypatch)
-            assert graph not in (None, False)
-            assert drv == fused == twoscan, (idx.meta["ncells"], ef)
-            assert all(len(b) == ef for b in drv.values())
+        _assert_three_steps_agree(spark, idx, mixed, 16, monkeypatch)
 
 
 def test_driver_beam_ineligible_after_append(spark, tmp_path_factory,
