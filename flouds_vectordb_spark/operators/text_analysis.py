@@ -13,8 +13,10 @@ rounded to 6 decimals for cross-engine hashability.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flouds_vectordb_spark import regime
@@ -980,7 +982,205 @@ FROM _c
 """
 
 
-# --- unigram LM cross-entropy (r8): the CCNet-style perplexity proxy ------------
+# --- n-gram LM cross-entropy: the CCNet-style perplexity proxy -----------------
+# CCNet (Wenzek et al., LREC'20) scores documents under a KenLM 5-gram; the
+# model-artifact-free members here are Jelinek-Mercer interpolations of
+# order 1 (r8), 2 (r8) and 3 (r13), all one scorer: _ngram_logprob.
+
+_BOS = "<s>"
+
+
+def _add_k(smoothing: int) -> int:
+    a = int(smoothing)
+    if a < 1:
+        raise ValueError("smoothing must be >= 1")
+    return a
+
+
+def _event_fields(n: int) -> list[str]:
+    """Field names of an order-n event, oldest history first: h{n-1}..h1, w."""
+    return [f"h{j}" for j in range(n - 1, 0, -1)] + ["w"]
+
+
+def _ngram_events(toks: Column, n: int) -> Column:
+    """One BOS-padded order-n event per token: (<s>, .., <s>, w1),
+    (<s>, .., w1, w2), ... Field j is a SLICE of one padded array, zipped
+    with the others — never element_at(toks, i) inside a lambda, whose
+    body re-evaluates toks (the whole tokenize regexp) per token
+    (importance._features has the same pattern and its measurement).
+    toks must be a column reference, so it is computed once per row."""
+    padded = F.concat(F.array_repeat(F.lit(_BOS), n - 1), toks)
+    return F.arrays_zip(*[F.slice(padded, j + 1, F.size(toks)).alias(f)
+                          for j, f in enumerate(_event_fields(n))])
+
+
+def _ngram_logprob(df: DataFrame, model_df: DataFrame | None,
+                   weights: tuple[float, ...], id_col: str, text_col: str,
+                   smoothing: int, keep_empty: bool) -> DataFrame:
+    """(id, n_tokens, bits_per_token_r) under the Jelinek-Mercer n-gram LM
+    of order n = len(weights): p(w|h) = weights[0] * p_n + ... +
+    weights[n-2] * p_2 + weights[n-1] * p_uni, added left to right, with
+    p_k = c(h_{k-1}..h1, w) / c(h_{k-1}..h1) (0 for an unseen history) and
+    the add-k unigram floor p_uni(w) = (c(w) + a) / (N + a·(V+1)), so every
+    event probability is positive (OOV = a / (N + a·(V+1))). Every token is
+    one event (BOS-padded histories), so bits/token compares across
+    document lengths.
+
+    model_df: optional corpus to score AGAINST (a held-out or reference
+    corpus); defaults to df itself (self-scoring).
+
+    Plan (text never shuffles; one action, the caller's):
+    - per-doc (id, event) counts come FIRST. When self-scoring they are
+      persisted and the model derives from them (sum of integer per-doc
+      counts == direct occurrence counts), so the corpus is tokenized
+      and explode-shuffled ONCE; a reference corpus's order-n counts are
+      persisted instead;
+    - the model is one count table per order k >= 2, each (h, w) row
+      carrying its history count c(h) by a window over h — an unseen
+      (h, w) makes p_k 0 whether or not h was seen, so no history table
+      is joined — plus the broadcast vocabulary table (w, c(w),
+      N + a·(V+1)). The denominator is a window over the whole
+      vocabulary: no driver collect of totals, no mid-plan barrier. The
+      scored corpus's words join the vocabulary with count 0, so an OOV
+      event finds its denominator too. Exact integer counts converted to
+      double (< 2^53) give the same denominator as integer arithmetic;
+    - per-doc fold over the EVENT-SORTED contribution list (array_sort of
+      (h.., w, contrib) structs), the deterministic-order trick every
+      scored gate uses, so the result is bit-stable across partitionings
+      and engines; the DuckDB twin is _ngram_logprob_sql. The fold
+      shuffles by id, so the rejoin below reuses that partitioning;
+    - keep_empty=False skips the zero-token rejoin (the left join back to
+      the full id list) for callers that drop those rows anyway
+      (perplexity_buckets: zero-token docs have undefined entropy).
+      Otherwise a NULL or empty text gives n_tokens 0 and NULL bits.
+    At 100 TB the higher-order model joins are plain shuffle joins on
+    their keys; the event table is n strings per token."""
+    n = len(weights)
+    a = _add_k(smoothing)
+    fields = _event_fields(n)
+
+    def toks(frame: DataFrame, *keep: Column) -> DataFrame:
+        return spread_small_input(frame).select(
+            *keep, tokenize(F.col(text_col)).alias("_toks"))
+
+    events = F.explode(_ngram_events(F.col("_toks"), n)).alias("_e")
+    per_doc = (toks(df, F.col(id_col).alias("id"))
+               .select("id", F.size("_toks").alias("_n"), events)
+               .select("id", "_n", "_e.*")
+               .groupBy("id", "_n", *fields).count())
+    if model_df is None:
+        per_doc = src = words = _tracked_persist(per_doc)
+    else:
+        src = _tracked_persist(
+            toks(model_df).select(events).select("_e.*")
+            .groupBy(*fields).count())
+        words = src.select("w", "count").unionByName(
+            per_doc.select("w", F.lit(0).cast("bigint").alias("count")))
+
+    def counts(frame: DataFrame, key: list[str], name: str) -> DataFrame:
+        return frame.groupBy(*key).agg(F.sum("count").alias(name))
+
+    scored, probs = per_doc, []
+    for k in range(n, 1, -1):
+        key = fields[n - k:]
+        model = counts(src, key, f"_c{k}").withColumn(
+            f"_h{k}", F.sum(f"_c{k}").over(Window.partitionBy(*key[:-1])))
+        scored = scored.join(model, key, "left")
+        probs.append(F.coalesce(F.col(f"_c{k}").cast("double")
+                                / F.col(f"_h{k}").cast("double"), F.lit(0.0)))
+    # N sums the model counts; V counts the words the model has seen
+    vocab = Window.partitionBy()
+    uni = counts(words, ["w"], "_c1").withColumn(
+        "_denom",
+        F.sum("_c1").over(vocab).cast("double")
+        + F.lit(float(a)) * (F.count(F.when(F.col("_c1") > 0, 1)).over(vocab)
+                             + F.lit(1)).cast("double"))
+    probs.append((F.col("_c1").cast("double") + a) / F.col("_denom"))
+    mix = functools.reduce(
+        lambda x, y: x + y, [F.lit(wt) * p for wt, p in zip(weights, probs)])
+    per_ev = scored.join(F.broadcast(uni), "w", "left").select(
+        "id", "_n", *fields,
+        (F.col("count").cast("double") * F.log2(mix)).alias("_contrib"))
+    folded = per_ev.repartition("id").groupBy("id", "_n").agg(
+        F.aggregate(F.array_sort(F.collect_list(F.struct(*fields, "_contrib"))),
+                    F.lit(0.0), lambda acc, e: acc + e["_contrib"]).alias("_lp"))
+    bits = F.round(-F.col("_lp") / F.col("_n"), 4).alias("bits_per_token_r")
+    if not keep_empty:
+        return folded.select("id", F.col("_n").alias("n_tokens"), bits)
+    ids = df.select(F.col(id_col).alias("id"))
+    return ids.join(folded, "id", "left").select(
+        "id", F.coalesce(F.col("_n"), F.lit(0)).alias("n_tokens"), bits)
+
+
+def _ngram_logprob_sql(table_sql: str, model_sql: str | None,
+                       weights: tuple[float, ...], id_expr: str,
+                       text_expr: str, smoothing: int) -> str:
+    """DuckDB oracle twin of _ngram_logprob: same counts, same
+    interpolation expression tree, same event-sorted left fold. DuckDB's
+    list_reduce starts at the first element where Spark's aggregate starts
+    at literal 0.0 — bitwise identical because every contribution is
+    strictly negative (p(w|h) < 1), so 0.0 + c == c."""
+    n = len(weights)
+    a = _add_k(smoothing)
+    fields = _event_fields(n)
+    src = model_sql if model_sql is not None else table_sql
+    tok = tokenize_sql(text_expr)
+    pad = f"list_concat({[_BOS] * (n - 1)!r}::VARCHAR[], {tok})"
+    ev = (f"list_transform(generate_series(1, len({tok})), i -> struct_pack("
+          + ", ".join(f"{f} := {pad}[i + {j}]" for j, f in enumerate(fields))
+          + "))")
+    cols = ", ".join(fields)
+    unpack = ", ".join(f"_e.{f} AS {f}" for f in fields)
+    tables, joins, probs, model_cols = [], [], [], []
+    for k in range(n, 0, -1):
+        key = ", ".join(fields[n - k:])
+        tables.append(f"_m{k} AS (SELECT {key}, count(*) AS _c{k} "
+                      f"FROM _src_ev GROUP BY {key})")
+        joins.append(f"LEFT JOIN _m{k} USING ({key})")
+        model_cols.append(f"_c{k}")
+        if k > 1:
+            hist = ", ".join(fields[n - k:-1])
+            tables.append(f"_mh{k} AS (SELECT {hist}, count(*) AS _h{k} "
+                          f"FROM _src_ev GROUP BY {hist})")
+            joins.append(f"LEFT JOIN _mh{k} USING ({hist})")
+            model_cols.append(f"_h{k}")
+            probs.append(f"coalesce(_c{k}::DOUBLE / _h{k}::DOUBLE, 0.0)")
+    probs.append(f"((coalesce(_c1, 0)::DOUBLE + {a}) / _denom)")
+    mix = " + ".join(f"{wt!r} * {p}" for wt, p in zip(weights, probs))
+    model = ",\n".join(tables)
+    return f"""
+WITH _src_ev AS (
+  SELECT {unpack} FROM (SELECT unnest({ev}) AS _e FROM {src})
+),
+{model},
+_stats AS (
+  SELECT coalesce(sum(_c1), 0)::DOUBLE + {a}.0 * (count(*) + 1) AS _denom
+  FROM _m1
+),
+_docs AS (
+  SELECT {id_expr} AS id, len({tok}) AS _n, {ev} AS _evs FROM {table_sql}
+),
+_per_ev AS (
+  SELECT id, _n, {cols}, count(*)::DOUBLE * log2({mix}) AS _contrib
+  FROM (
+    SELECT id, _n, {unpack} FROM (
+      SELECT id, _n, unnest(_evs) AS _e FROM _docs
+    )
+  )
+  {' '.join(joins)}, _stats
+  GROUP BY id, _n, {cols}, {', '.join(model_cols)}, _denom
+),
+_folded AS (
+  SELECT id, _n,
+         list_reduce(list(_contrib ORDER BY {cols}), (x, y) -> x + y) AS _lp
+  FROM _per_ev GROUP BY id, _n
+)
+SELECT d.id,
+       coalesce(_folded._n, 0) AS n_tokens,
+       round(-_lp / _folded._n, 4) AS bits_per_token_r
+FROM _docs d LEFT JOIN _folded ON d.id = _folded.id
+"""
+
 
 def unigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
                     id_col: str = "id", text_col: str = "text",
@@ -992,32 +1192,11 @@ def unigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
     triage stage that needs no model artifact because the corpus IS the
     model). Lower bits/token = more predictable text (boilerplate,
     repetition); very high = noise/garbage — both tails get filtered.
-
-    model_df: optional (term, cnt) counts to score AGAINST (a held-out or
-    reference corpus); defaults to df itself (self-scoring). Unseen terms
-    take the smoothed OOV probability, so scoring never degenerates.
-
-    Plan (reshaped for r9 VERDICT ask #5 — text_ppl_buckets' gate wall
-    was dominated by barriers and redundant scans, not arithmetic):
-    - the (id, term) count agg is computed FIRST; when self-scoring
-      (model_df None) the model derives from it by a tiny second agg
-      (sum of integer per-doc counts == direct occurrence counts), so
-      the corpus is tokenized and explode-shuffled ONCE, not twice;
-    - the model is PERSISTED and consumed twice inside the caller's
-      action — as the broadcast term join and as a 1-row denominator
-      aggregate (N + a·(V+1)) riding in on a broadcast cross join. No
-      driver action: the old shape collected the two totals as
-      literals, a mid-plan barrier. The denominator arithmetic (exact
-      integer counts converted to double, < 2^53) matches the old
-      literal bit-for-bit;
-    - keep_empty=False skips the zero-token rejoin (the left join back
-      to the full id list) for callers that drop those rows anyway
-      (perplexity_buckets: zero-token docs have undefined entropy).
-    Scoring is scalars only — the text never shuffles — and a per-doc
-    fold over the TERM-SORTED contribution list, the same
-    deterministic-order trick every scored gate uses, so the result is
-    bit-stable across partitionings and engines.
     p(t) = (cnt + a) / (N + a·(V+1)); OOV = a / (N + a·(V+1)).
+
+    model_df: optional corpus to score AGAINST; defaults to df itself.
+    Large inputs run _ngram_logprob with weights (1.0,), whose docstring
+    has the plan; keep_empty=False drops zero-token docs.
 
     Small-corpus regime (r12, regime.fits on SMALL_BYTES, the leaf-bytes
     switch): when every scan under the plan fits in
@@ -1028,56 +1207,18 @@ def unigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
     finish), adding cnt·log2(p) per distinct term in ascending term
     order. That is arithmetic-identical to the large regime's
     term-sorted collect_list fold (same contributions, same order, same
-    0.0 start — contributions are strictly negative so 0.0 + c == c),
-    but with ZERO persists, ZERO mid-plan actions, and the only shuffle
-    the tiny term-count agg feeding the broadcast. Gate-scale wall
-    dropped ~2.2 s -> ~0.6 s; at 100 TB the leaf check fails and the
-    distributed shape runs unchanged."""
-    a = int(smoothing)
-    if a < 1:
-        raise ValueError("smoothing must be >= 1")
+    0.0 start — contributions are strictly negative so 0.0 + c == c;
+    the large regime's 1.0 * p == p), but with ZERO persists, ZERO
+    mid-plan actions, and the only shuffle the tiny term-count agg
+    feeding the broadcast. Gate-scale wall dropped ~2.2 s -> ~0.6 s; at
+    100 TB the leaf check fails and the distributed shape runs."""
+    a = _add_k(smoothing)
     if regime.fits(df, regime.SMALL_BYTES) and (
             model_df is None or regime.fits(model_df, regime.SMALL_BYTES)):
         return _unigram_logprob_small(df, model_df, id_col, text_col, a,
                                       keep_empty)
-    toks = tokenize(F.col(text_col))
-    d = spread_small_input(df).select(F.col(id_col).alias("id"), toks.alias("_toks"))
-    per_term_counts = (
-        d.select("id", F.size("_toks").alias("_n"), F.explode("_toks").alias("term"))
-        .groupBy("id", "_n", "term").count()
-    )
-    if model_df is None:
-        per_term_counts = _tracked_persist(per_term_counts)
-        model = per_term_counts.groupBy("term").agg(
-            F.sum("count").alias("_cnt"))
-    else:
-        model = (spread_small_input(model_df)
-                 .select(F.explode(tokenize(F.col(text_col))).alias("term"))
-                 .groupBy("term").count().withColumnRenamed("count", "_cnt"))
-    model = _tracked_persist(model)
-    stats = model.agg(
-        (F.coalesce(F.sum("_cnt"), F.lit(0)).cast("double")
-         + F.lit(float(a)) * (F.count("*") + F.lit(1)).cast("double"))
-        .alias("_denom"))
-    per_term = (
-        per_term_counts
-        .join(F.broadcast(model), "term", "left")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "id", "_n", "term",
-            (F.col("count").cast("double")
-             * F.log2((F.coalesce(F.col("_cnt"), F.lit(0)).cast("double") + a)
-                      / F.col("_denom"))).alias("_contrib"))
-    )
-    folded = per_term.groupBy("id", "_n").agg(
-        F.aggregate(F.array_sort(F.collect_list(F.struct("term", "_contrib"))),
-                    F.lit(0.0), lambda acc, e: acc + e["_contrib"]).alias("_lp"))
-    bits = F.round(-F.col("_lp") / F.col("_n"), 4).alias("bits_per_token_r")
-    if not keep_empty:
-        return folded.select("id", F.col("_n").alias("n_tokens"), bits)
-    scored = d.select("id").join(folded, "id", "left")
-    return scored.select(
-        "id", F.coalesce(F.col("_n"), F.lit(0)).alias("n_tokens"), bits)
+    return _ngram_logprob(df, model_df, (1.0,), id_col, text_col, a,
+                          keep_empty)
 
 
 def _unigram_logprob_small(df: DataFrame, model_df: DataFrame | None,
@@ -1156,79 +1297,15 @@ def _unigram_logprob_small(df: DataFrame, model_df: DataFrame | None,
 def unigram_logprob_sql(table_sql: str, model_sql: str | None = None,
                         id_expr: str = "id", text_expr: str = "text",
                         smoothing: int = 1) -> str:
-    """DuckDB oracle twin of unigram_logprob: same counts, same smoothed
-    probabilities, same term-sorted left fold (DuckDB list_reduce over a
-    term-ordered list starts at the first element where Spark's aggregate
-    starts at literal 0.0 — bitwise identical because every contribution
-    is strictly negative, so 0.0 + c == c)."""
-    a = int(smoothing)
-    src = model_sql if model_sql is not None else table_sql
-    tok = tokenize_sql(text_expr)
-    return f"""
-WITH _model AS (
-  SELECT term, count(*) AS _cnt FROM (
-    SELECT unnest({tok}) AS term FROM {src}
-  ) GROUP BY term
-),
-_stats AS (
-  SELECT coalesce(sum(_cnt), 0)::DOUBLE + {a}.0 * (count(*) + 1) AS _denom
-  FROM _model
-),
-_docs AS (
-  SELECT {id_expr} AS id, {tok} AS _toks FROM {table_sql}
-),
-_per_term AS (
-  SELECT id, _n, term,
-         count(*)::DOUBLE * log2((coalesce(_cnt, 0)::DOUBLE + {a}) / _denom)
-           AS _contrib
-  FROM (
-    SELECT id, len(_toks) AS _n, unnest(_toks) AS term FROM _docs
-  ) LEFT JOIN _model USING (term), _stats
-  GROUP BY id, _n, term, _cnt, _denom
-),
-_folded AS (
-  SELECT id, _n,
-         list_reduce(list(_contrib ORDER BY term), (x, y) -> x + y) AS _lp
-  FROM _per_term GROUP BY id, _n
-)
-SELECT d.id,
-       coalesce(_n, 0) AS n_tokens,
-       round(-_lp / _n, 4) AS bits_per_token_r
-FROM _docs d LEFT JOIN _folded ON d.id = _folded.id
-"""
+    """DuckDB oracle twin of unigram_logprob (both regimes)."""
+    return _ngram_logprob_sql(table_sql, model_sql, (1.0,), id_expr,
+                              text_expr, smoothing)
 
 
-# --- interpolated bigram LM (r8): one order up from the unigram proxy ------------
-
-_BOS = "<s>"
-
-
-def _bigram_events(text_col: str):
-    """(history, word) pairs for every token: position 1 gets the BOS
-    history, position i>1 gets token i-1 — so n tokens yield n events."""
-    toks = tokenize(F.col(text_col))
-    # the empty-doc branch matters: ANSI element_at errors out-of-range,
-    # and CASE WHEN is the guaranteed-lazy guard (same shape in the twin)
-    return F.when(
-        F.size(toks) > 0,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks)),
-            lambda i: F.struct(
-                F.when(i == 1, F.lit(_BOS))
-                .otherwise(F.element_at(toks, i - 1)).alias("h"),
-                F.element_at(toks, i).alias("w")))
-    ).otherwise(F.array().cast("array<struct<h:string,w:string>>"))
-
-
-def _bigram_events_sql(text_expr: str) -> str:
-    tok = tokenize_sql(text_expr)
-    return (
-        f"CASE WHEN len({tok}) > 0 THEN "
-        f"list_transform(generate_series(1, len({tok})), "
-        f"i -> struct_pack(h := CASE WHEN i = 1 THEN '{_BOS}' "
-        f"ELSE {tok}[i - 1] END, w := {tok}[i])) "
-        f"ELSE [] END"
-    )
+def _bigram_weights(lam: float) -> tuple[float, float]:
+    if not (0.0 < lam < 1.0):
+        raise ValueError("lam must be in (0, 1)")
+    return (lam, 1.0 - lam)
 
 
 def bigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
@@ -1241,156 +1318,24 @@ def bigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
     (1-lam) * p_uni(w), where p_uni is the add-k-smoothed unigram and the
     ML term is 0 for unseen histories; the first token of every document
     scores against the BOS history, so n tokens yield n scored events and
-    bits/token is comparable across document lengths.
-
-    Plan shape mirrors unigram_logprob: the model is two count aggs
-    (bigram events, unigram terms) + two scalar literals; scoring joins
-    per-doc (h, w) counts to the model — scalars only, text never
-    shuffles — and folds contributions in sorted (h, w) order, so results
-    are bit-stable across partitionings and engines. At 100 TB the bigram
-    model is too wide to broadcast: the (h, w) join is a plain shuffle
-    join on the event key, map-side combined on both sides."""
-    a = int(smoothing)
-    if a < 1:
-        raise ValueError("smoothing must be >= 1")
-    if not (0.0 < lam < 1.0):
-        raise ValueError("lam must be in (0, 1)")
-    src = model_df if model_df is not None else df
-    events = _bigram_events(text_col)
-    # persist: the event explode (the widest projection here) otherwise
-    # re-evaluates for each of the three model aggs + the totals collect
-    src_ev = _tracked_persist(
-        spread_small_input(src)
-        .select(F.explode(_bigram_events(text_col)).alias("_e"))
-        .select(F.col("_e.h").alias("h"), F.col("_e.w").alias("w")))
-    bi = src_ev.groupBy("h", "w").count().withColumnRenamed("count", "_cb")
-    hist = src_ev.groupBy("h").count().withColumnRenamed("count", "_ch")
-    uni = src_ev.groupBy("w").count().withColumnRenamed("count", "_cu")
-    n_total, vocab = 0, 0
-    for r in uni.agg(F.sum("_cu"), F.count("*")).collect():
-        n_total, vocab = int(r[0] or 0), int(r[1])
-    denom = float(n_total + a * (vocab + 1))
-    d = spread_small_input(df).select(F.col(id_col).alias("id"),
-                                      events.alias("_evs"),
-                                      F.size(tokenize(F.col(text_col))).alias("_n"))
-    p_uni = (F.coalesce(F.col("_cu"), F.lit(0)).cast("double") + a) / F.lit(denom)
-    p_ml = F.coalesce(
-        F.col("_cb").cast("double") / F.col("_ch").cast("double"), F.lit(0.0))
-    per_ev = (
-        d.filter(F.col("_n") > 0)
-        .select("id", "_n", F.explode("_evs").alias("_e"))
-        .select("id", "_n", F.col("_e.h").alias("h"), F.col("_e.w").alias("w"))
-        .groupBy("id", "_n", "h", "w").count()
-        .join(bi, ["h", "w"], "left").join(hist, "h", "left")
-        .join(uni, "w", "left")
-        .select("id", "_n", "h", "w",
-                (F.col("count").cast("double")
-                 * F.log2(F.lit(lam) * p_ml + F.lit(1.0 - lam) * p_uni))
-                .alias("_contrib"))
-    )
-    folded = per_ev.groupBy("id", "_n").agg(
-        F.aggregate(F.array_sort(F.collect_list(F.struct("h", "w", "_contrib"))),
-                    F.lit(0.0), lambda acc, e: acc + e["_contrib"]).alias("_lp"))
-    return d.select("id").join(folded, "id", "left").select(
-        "id",
-        F.coalesce(F.col("_n"), F.lit(0)).alias("n_tokens"),
-        F.round(-F.col("_lp") / F.col("_n"), 4).alias("bits_per_token_r"),
-    )
+    bits/token is comparable across document lengths. The plan is
+    _ngram_logprob's with weights (lam, 1-lam)."""
+    return _ngram_logprob(df, model_df, _bigram_weights(lam), id_col,
+                          text_col, smoothing, True)
 
 
 def bigram_logprob_sql(table_sql: str, model_sql: str | None = None,
                        lam: float = 0.9, id_expr: str = "id",
                        text_expr: str = "text", smoothing: int = 1) -> str:
-    """DuckDB oracle twin: same counts, same interpolation expression tree,
-    same (h, w)-sorted left fold (contributions strictly negative because
-    p(w|h) < 1, so DuckDB's first-element fold start == Spark's 0.0)."""
-    a = int(smoothing)
-    if a < 1:
-        raise ValueError("smoothing must be >= 1")
-    if not (0.0 < lam < 1.0):
-        raise ValueError("lam must be in (0, 1)")
-    src = model_sql if model_sql is not None else table_sql
-    ev = _bigram_events_sql(text_expr)
-    tok_n = f"len({tokenize_sql(text_expr)})"
-    return f"""
-WITH _src_ev AS (
-  SELECT _e.h AS h, _e.w AS w FROM (
-    SELECT unnest({ev}) AS _e FROM {src} WHERE {tok_n} > 0
-  )
-),
-_bi AS (SELECT h, w, count(*) AS _cb FROM _src_ev GROUP BY h, w),
-_hist AS (SELECT h, count(*) AS _ch FROM _src_ev GROUP BY h),
-_uni AS (SELECT w, count(*) AS _cu FROM _src_ev GROUP BY w),
-_stats AS (
-  SELECT coalesce(sum(_cu), 0)::DOUBLE + {a}.0 * (count(*) + 1) AS _denom
-  FROM _uni
-),
-_docs AS (
-  SELECT {id_expr} AS id, {tok_n} AS _n, {ev} AS _evs FROM {table_sql}
-),
-_per_ev AS (
-  SELECT id, _n, h, w,
-         count(*)::DOUBLE * log2(
-             {lam!r} * coalesce(_cb::DOUBLE / _ch::DOUBLE, 0.0)
-             + {1.0 - lam!r} * ((coalesce(_cu, 0)::DOUBLE + {a}) / _denom))
-           AS _contrib
-  FROM (
-    SELECT id, _n, _e.h AS h, _e.w AS w FROM (
-      SELECT id, _n, unnest(_evs) AS _e FROM _docs WHERE _n > 0
-    )
-  )
-  LEFT JOIN _bi USING (h, w) LEFT JOIN _hist USING (h)
-  LEFT JOIN _uni USING (w), _stats
-  GROUP BY id, _n, h, w, _cb, _ch, _cu, _denom
-),
-_folded AS (
-  SELECT id, _n,
-         list_reduce(list(_contrib ORDER BY h, w), (x, y) -> x + y) AS _lp
-  FROM _per_ev GROUP BY id, _n
-)
-SELECT d.id,
-       coalesce(d._n, 0) AS n_tokens,
-       round(-_lp / d._n, 4) AS bits_per_token_r
-FROM _docs d LEFT JOIN _folded ON d.id = _folded.id
-"""
+    """DuckDB oracle twin of bigram_logprob."""
+    return _ngram_logprob_sql(table_sql, model_sql, _bigram_weights(lam),
+                              id_expr, text_expr, smoothing)
 
 
-# --- interpolated trigram LM (r13): completes the CCNet LM-filter family --------
-# CCNet's published rule scores documents under a KenLM 5-gram
-# (Wenzek et al., LREC'20); the deterministic, model-artifact-free
-# member of that family here is Jelinek-Mercer interpolation one more
-# order up from bigram_logprob: unigram (r8) -> bigram (r8) -> trigram.
-
-
-def _trigram_events(text_col: str):
-    """(h2, h1, w) for every token: BOS-padded histories, so n tokens
-    yield n events (pos 1: (<s>,<s>,w1); pos 2: (<s>,w1,w2); ...)."""
-    toks = tokenize(F.col(text_col))
-    return F.when(
-        F.size(toks) > 0,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks)),
-            lambda i: F.struct(
-                F.when(i <= 2, F.lit(_BOS))
-                .otherwise(F.element_at(toks, i - 2)).alias("h2"),
-                F.when(i == 1, F.lit(_BOS))
-                .otherwise(F.element_at(toks, i - 1)).alias("h1"),
-                F.element_at(toks, i).alias("w")))
-    ).otherwise(
-        F.array().cast("array<struct<h2:string,h1:string,w:string>>"))
-
-
-def _trigram_events_sql(text_expr: str) -> str:
-    tok = tokenize_sql(text_expr)
-    return (
-        f"CASE WHEN len({tok}) > 0 THEN "
-        f"list_transform(generate_series(1, len({tok})), "
-        f"i -> struct_pack(h2 := CASE WHEN i <= 2 THEN '{_BOS}' "
-        f"ELSE {tok}[i - 2] END, "
-        f"h1 := CASE WHEN i = 1 THEN '{_BOS}' ELSE {tok}[i - 1] END, "
-        f"w := {tok}[i])) "
-        f"ELSE [] END"
-    )
+def _trigram_weights(lam3: float, lam2: float) -> tuple[float, float, float]:
+    if not (0.0 < lam3 and 0.0 < lam2 and lam3 + lam2 < 1.0):
+        raise ValueError("need lam3 > 0, lam2 > 0, lam3 + lam2 < 1")
+    return (lam3, lam2, 1.0 - lam3 - lam2)
 
 
 def trigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
@@ -1404,140 +1349,20 @@ def trigram_logprob(df: DataFrame, model_df: DataFrame | None = None,
     keeping every event probability positive and ML terms 0 for unseen
     histories. One event per token (BOS-padded histories), so bits/token
     compares across lengths — the CCNet head/middle/tail split one model
-    order short of their KenLM 5-gram, with the same sorted-fold
-    determinism as the unigram/bigram members.
-
-    Plan shape: ALL five model tables (tri, h2h1, bigram, h1, unigram
-    counts) derive from ONE persisted exploded event projection — each a
-    map-side-combined count agg — plus one scalar totals collect.
-    Scoring joins per-doc distinct (h2,h1,w) counts to the five tables
-    (scalars only; text never shuffles) and folds contributions in
-    sorted (h2,h1,w) order: bit-stable across partitionings and engines.
-    At 100 TB the model joins are plain shuffle joins on their keys; the
-    event table is 3 strings/token — the honest trigram working set."""
-    a = int(smoothing)
-    if a < 1:
-        raise ValueError("smoothing must be >= 1")
-    if not (0.0 < lam3 and 0.0 < lam2 and lam3 + lam2 < 1.0):
-        raise ValueError("need lam3 > 0, lam2 > 0, lam3 + lam2 < 1")
-    lam1 = 1.0 - lam3 - lam2
-    src = model_df if model_df is not None else df
-    src_ev = _tracked_persist(
-        spread_small_input(src)
-        .select(F.explode(_trigram_events(text_col)).alias("_e"))
-        .select(F.col("_e.h2").alias("h2"), F.col("_e.h1").alias("h1"),
-                F.col("_e.w").alias("w")))
-    tri = src_ev.groupBy("h2", "h1", "w").count() \
-        .withColumnRenamed("count", "_ct")
-    h12 = src_ev.groupBy("h2", "h1").count().withColumnRenamed("count", "_c12")
-    bg = src_ev.groupBy("h1", "w").count().withColumnRenamed("count", "_cbg")
-    h1c = src_ev.groupBy("h1").count().withColumnRenamed("count", "_c1")
-    uni = src_ev.groupBy("w").count().withColumnRenamed("count", "_cu")
-    n_total, vocab = 0, 0
-    for r in uni.agg(F.sum("_cu"), F.count("*")).collect():
-        n_total, vocab = int(r[0] or 0), int(r[1])
-    denom = float(n_total + a * (vocab + 1))
-    d = spread_small_input(df).select(
-        F.col(id_col).alias("id"), _trigram_events(text_col).alias("_evs"),
-        F.size(tokenize(F.col(text_col))).alias("_n"))
-    p_uni = (F.coalesce(F.col("_cu"), F.lit(0)).cast("double") + a) \
-        / F.lit(denom)
-    p3 = F.coalesce(
-        F.col("_ct").cast("double") / F.col("_c12").cast("double"),
-        F.lit(0.0))
-    p2 = F.coalesce(
-        F.col("_cbg").cast("double") / F.col("_c1").cast("double"),
-        F.lit(0.0))
-    per_ev = (
-        d.filter(F.col("_n") > 0)
-        .select("id", "_n", F.explode("_evs").alias("_e"))
-        .select("id", "_n", F.col("_e.h2").alias("h2"),
-                F.col("_e.h1").alias("h1"), F.col("_e.w").alias("w"))
-        .groupBy("id", "_n", "h2", "h1", "w").count()
-        .join(tri, ["h2", "h1", "w"], "left")
-        .join(h12, ["h2", "h1"], "left")
-        .join(bg, ["h1", "w"], "left")
-        .join(h1c, "h1", "left")
-        .join(uni, "w", "left")
-        .select("id", "_n", "h2", "h1", "w",
-                (F.col("count").cast("double")
-                 * F.log2(F.lit(lam3) * p3 + F.lit(lam2) * p2
-                          + F.lit(lam1) * p_uni)).alias("_contrib"))
-    )
-    folded = per_ev.groupBy("id", "_n").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("h2", "h1", "w",
-                                                 "_contrib"))),
-            F.lit(0.0), lambda acc, e: acc + e["_contrib"]).alias("_lp"))
-    return d.select("id").join(folded, "id", "left").select(
-        "id",
-        F.coalesce(F.col("_n"), F.lit(0)).alias("n_tokens"),
-        F.round(-F.col("_lp") / F.col("_n"), 4).alias("bits_per_token_r"),
-    )
+    order short of their KenLM 5-gram. The plan is _ngram_logprob's with
+    weights (lam3, lam2, 1-lam3-lam2)."""
+    return _ngram_logprob(df, model_df, _trigram_weights(lam3, lam2),
+                          id_col, text_col, smoothing, True)
 
 
 def trigram_logprob_sql(table_sql: str, model_sql: str | None = None,
                         lam3: float = 0.7, lam2: float = 0.2,
                         id_expr: str = "id", text_expr: str = "text",
                         smoothing: int = 1) -> str:
-    """DuckDB oracle twin: same counts, same interpolation tree, same
-    (h2, h1, w)-sorted left fold (contributions strictly negative, so
-    DuckDB's first-element fold start == Spark's 0.0 start)."""
-    a = int(smoothing)
-    if a < 1:
-        raise ValueError("smoothing must be >= 1")
-    if not (0.0 < lam3 and 0.0 < lam2 and lam3 + lam2 < 1.0):
-        raise ValueError("need lam3 > 0, lam2 > 0, lam3 + lam2 < 1")
-    lam1 = 1.0 - lam3 - lam2
-    src = model_sql if model_sql is not None else table_sql
-    ev = _trigram_events_sql(text_expr)
-    tok_n = f"len({tokenize_sql(text_expr)})"
-    return f"""
-WITH _src_ev AS (
-  SELECT _e.h2 AS h2, _e.h1 AS h1, _e.w AS w FROM (
-    SELECT unnest({ev}) AS _e FROM {src} WHERE {tok_n} > 0
-  )
-),
-_tri AS (SELECT h2, h1, w, count(*) AS _ct FROM _src_ev GROUP BY h2, h1, w),
-_h12 AS (SELECT h2, h1, count(*) AS _c12 FROM _src_ev GROUP BY h2, h1),
-_bg AS (SELECT h1, w, count(*) AS _cbg FROM _src_ev GROUP BY h1, w),
-_h1c AS (SELECT h1, count(*) AS _c1 FROM _src_ev GROUP BY h1),
-_uni AS (SELECT w, count(*) AS _cu FROM _src_ev GROUP BY w),
-_stats AS (
-  SELECT coalesce(sum(_cu), 0)::DOUBLE + {a}.0 * (count(*) + 1) AS _denom
-  FROM _uni
-),
-_docs AS (
-  SELECT {id_expr} AS id, {tok_n} AS _n, {ev} AS _evs FROM {table_sql}
-),
-_per_ev AS (
-  SELECT id, _n, h2, h1, w,
-         count(*)::DOUBLE * log2(
-             {lam3!r} * coalesce(_ct::DOUBLE / _c12::DOUBLE, 0.0)
-             + {lam2!r} * coalesce(_cbg::DOUBLE / _c1::DOUBLE, 0.0)
-             + {lam1!r} * ((coalesce(_cu, 0)::DOUBLE + {a}) / _denom))
-           AS _contrib
-  FROM (
-    SELECT id, _n, _e.h2 AS h2, _e.h1 AS h1, _e.w AS w FROM (
-      SELECT id, _n, unnest(_evs) AS _e FROM _docs WHERE _n > 0
-    )
-  )
-  LEFT JOIN _tri USING (h2, h1, w) LEFT JOIN _h12 USING (h2, h1)
-  LEFT JOIN _bg USING (h1, w) LEFT JOIN _h1c USING (h1)
-  LEFT JOIN _uni USING (w), _stats
-  GROUP BY id, _n, h2, h1, w, _ct, _c12, _cbg, _c1, _cu, _denom
-),
-_folded AS (
-  SELECT id, _n,
-         list_reduce(list(_contrib ORDER BY h2, h1, w), (x, y) -> x + y)
-           AS _lp
-  FROM _per_ev GROUP BY id, _n
-)
-SELECT d.id,
-       coalesce(d._n, 0) AS n_tokens,
-       round(-_lp / d._n, 4) AS bits_per_token_r
-FROM _docs d LEFT JOIN _folded ON d.id = _folded.id
-"""
+    """DuckDB oracle twin of trigram_logprob."""
+    return _ngram_logprob_sql(table_sql, model_sql,
+                              _trigram_weights(lam3, lam2), id_expr,
+                              text_expr, smoothing)
 
 
 # --- perplexity bucketing (r8): the CCNet head/middle/tail corpus split ----------
@@ -1575,57 +1400,31 @@ def perplexity_buckets(df: DataFrame, model_df: DataFrame | None = None,
     an intra-bucket row_number — window partitions hold only ties within
     1/16th of a bit of one stratum. Scoring itself (unigram_logprob)
     shuffles scalars only."""
-    from pyspark.sql import Window
-
     from flouds_vectordb_spark.functions.local import local_df
 
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     spark = df.sparkSession
+    # keep_empty=False: zero-token docs are excluded by contract (their
+    # cross-entropy is undefined), so the scorer skips the left join back
+    # to the full id list
+    scored = unigram_logprob(df, model_df, id_col=id_col, text_col=text_col,
+                             smoothing=smoothing, keep_empty=False)
     # small-corpus regime (r12): the scorer is the lazy broadcast-map
     # plan and the rank is ONE window per stratum over scalar rows —
     # no persist, no mid-plan collect, one action total. The band rule
     # is the oracle's single-window formulation verbatim, so the
     # two-phase quantized rank below is (and always was) an execution
     # strategy only.
-    if regime.fits(df, regime.SMALL_BYTES) and (
-            model_df is None or regime.fits(model_df, regime.SMALL_BYTES)):
-        scored = unigram_logprob(df, model_df, id_col=id_col,
-                                 text_col=text_col, smoothing=smoothing,
-                                 keep_empty=False)
-        out_cols = ["id", "n_tokens", "bits_per_token_r"]
-        if stratum_col is not None:
-            strata = df.select(F.col(id_col).alias("id"),
-                               F.col(stratum_col).alias(stratum_col))
-            scored = scored.join(strata, "id").withColumn(
-                "_sk", F.coalesce(F.col(stratum_col).cast("string"),
-                                  F.lit("\x00")))
-            out_cols.insert(1, stratum_col)
-        else:
-            scored = scored.withColumn("_sk", F.lit(""))
-        w = Window.partitionBy("_sk").orderBy(
-            F.col("bits_per_token_r").asc(), F.col("id").asc())
-        wn = Window.partitionBy("_sk")
-        return (
-            scored
-            .withColumn("_rk", F.row_number().over(w))
-            .withColumn("_n", F.count("*").over(wn))
-            .select(
-                *out_cols,
-                F.least(F.expr(f"(_rk - 1) * {n_buckets} div _n"),
-                        F.lit(n_buckets - 1).cast("bigint"))
-                .cast("int").alias("ppl_bucket")))
-    # persist: the full unigram_logprob lineage (model agg + per-term join
-    # + fold) otherwise re-executes for BOTH the counts collect below and
-    # the final rank join
-    # keep_empty=False: zero-token docs are excluded by contract (their
-    # cross-entropy is undefined), so the scorer can skip the left-join
-    # back to the full id list entirely
-    scored = (unigram_logprob(df, model_df, id_col=id_col, text_col=text_col,
-                              smoothing=smoothing, keep_empty=False)
-              .withColumn("_qb", F.floor(F.col("bits_per_token_r")
-                                         * F.lit(_PPL_QUANT)).cast("bigint")))
-    scored = _tracked_persist(scored)
+    small = regime.fits(df, regime.SMALL_BYTES) and (
+        model_df is None or regime.fits(model_df, regime.SMALL_BYTES))
+    if not small:
+        # persist: the full unigram_logprob lineage (model agg + per-term
+        # join + fold) otherwise re-executes for BOTH the counts collect
+        # below and the final rank join
+        scored = _tracked_persist(scored.withColumn(
+            "_qb", F.floor(F.col("bits_per_token_r")
+                           * F.lit(_PPL_QUANT)).cast("bigint")))
     out_cols = ["id", "n_tokens", "bits_per_token_r"]
     if stratum_col is not None:
         # join the stratum back (the scorer returns scalars only); the
@@ -1639,40 +1438,44 @@ def perplexity_buckets(df: DataFrame, model_df: DataFrame | None = None,
         out_cols.insert(1, stratum_col)
     else:
         scored = scored.withColumn("_sk", F.lit(""))
-    counts = sorted(
-        (str(r["_sk"]), int(r["_qb"]), int(r["_c"]))
-        for r in scored.groupBy("_sk", "_qb")
-        .agg(F.count("*").alias("_c")).collect())
-    if not counts:
-        schema = "id " + dict(df.dtypes)[id_col]
-        if stratum_col is not None:
-            schema += f", {stratum_col} " + dict(df.dtypes)[stratum_col]
-        return spark.createDataFrame(
-            [], schema + ", n_tokens int, bits_per_token_r double, "
-            "ppl_bucket int")
-    per_sk: dict = {}
-    for sk, qb, c in counts:
-        per_sk.setdefault(sk, []).append((qb, c))
-    bases = []
-    for sk, lst in per_sk.items():
-        cum = 0
-        total = sum(c for _, c in lst)
-        for qb, c in lst:  # already qb-sorted within sk by the sort above
-            bases.append((sk, qb, cum, total))
-            cum += c
-    base = F.broadcast(local_df(
-        spark, bases, "_sk string, _qb bigint, _base bigint, _n bigint"))
-    w = Window.partitionBy("_sk", "_qb").orderBy(
-        F.col("bits_per_token_r").asc(), F.col("id").asc())
-    return (
-        scored.join(base, ["_sk", "_qb"])
-        .withColumn("_rk", F.col("_base") + F.row_number().over(w))
-        .select(
-            *out_cols,
-            F.least(F.expr(f"(_rk - 1) * {n_buckets} div _n"),
-                    F.lit(n_buckets - 1).cast("bigint"))
-            .cast("int").alias("ppl_bucket"))
-    )
+    if small:
+        w = Window.partitionBy("_sk").orderBy(
+            F.col("bits_per_token_r").asc(), F.col("id").asc())
+        ranked = (scored.withColumn("_rk", F.row_number().over(w))
+                  .withColumn("_n", F.count("*").over(Window.partitionBy("_sk"))))
+    else:
+        counts = sorted(
+            (str(r["_sk"]), int(r["_qb"]), int(r["_c"]))
+            for r in scored.groupBy("_sk", "_qb")
+            .agg(F.count("*").alias("_c")).collect())
+        if not counts:
+            schema = "id " + dict(df.dtypes)[id_col]
+            if stratum_col is not None:
+                schema += f", {stratum_col} " + dict(df.dtypes)[stratum_col]
+            return spark.createDataFrame(
+                [], schema + ", n_tokens int, bits_per_token_r double, "
+                "ppl_bucket int")
+        per_sk: dict = {}
+        for sk, qb, c in counts:
+            per_sk.setdefault(sk, []).append((qb, c))
+        bases = []
+        for sk, lst in per_sk.items():
+            cum = 0
+            total = sum(c for _, c in lst)
+            for qb, c in lst:  # already qb-sorted within sk by the sort above
+                bases.append((sk, qb, cum, total))
+                cum += c
+        base = F.broadcast(local_df(
+            spark, bases, "_sk string, _qb bigint, _base bigint, _n bigint"))
+        w = Window.partitionBy("_sk", "_qb").orderBy(
+            F.col("bits_per_token_r").asc(), F.col("id").asc())
+        ranked = scored.join(base, ["_sk", "_qb"]).withColumn(
+            "_rk", F.col("_base") + F.row_number().over(w))
+    return ranked.select(
+        *out_cols,
+        F.least(F.expr(f"(_rk - 1) * {n_buckets} div _n"),
+                F.lit(n_buckets - 1).cast("bigint"))
+        .cast("int").alias("ppl_bucket"))
 
 
 def perplexity_buckets_sql(table_sql: str, model_sql: str | None = None,

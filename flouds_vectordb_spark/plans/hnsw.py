@@ -64,6 +64,7 @@ same envelope FAISS/SPANN coarse quantizers accept.
 
 from __future__ import annotations
 
+import heapq
 import json
 import os
 import warnings
@@ -822,7 +823,7 @@ class HnswIndex:
 
         def beam(q) -> list:
             d = scored[q]
-            return sorted(d, key=lambda i: (-d[i], i))[:ef]
+            return heapq.nsmallest(ef, d, key=lambda i: (-d[i], i))
 
         # a seed scan that probes every cell has scored every node (build
         # and append give each node row a _cell that indexes

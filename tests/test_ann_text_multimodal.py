@@ -1029,7 +1029,7 @@ def test_bigram_logprob_interpolation(spark):
 
     # model corpus: "a b" always; doc 1 follows the pattern, doc 2 breaks it
     model = spark.createDataFrame([(10, "a b a b a b")], "id bigint, text string")
-    df = spark.createDataFrame([(1, "a b"), (2, "b a"), (3, "")],
+    df = spark.createDataFrame([(1, "a b"), (2, "b a"), (3, ""), (4, None)],
                                "id bigint, text string")
     got = {r["id"]: r.asDict()
            for r in bigram_logprob(df, model_df=model, lam=0.5).collect()}
@@ -1046,8 +1046,22 @@ def test_bigram_logprob_interpolation(spark):
     exp2 = -(math.log2(p_s_b) + math.log2(p_b_a)) / 2
     assert abs(got[2]["bits_per_token_r"] - round(exp2, 4)) < 1e-9
     assert got[3]["n_tokens"] == 0 and got[3]["bits_per_token_r"] is None
+    # NULL text: no tokens, NULL bits (the r12 rule)
+    assert got[4] == {"id": 4, "n_tokens": 0, "bits_per_token_r": None}
     # pattern-following text scores fewer bits than pattern-breaking
     assert got[1]["bits_per_token_r"] < got[2]["bits_per_token_r"]
+
+    # self-scoring: events (<s>,a) (a,b) (<s>,b) (b,a); histories <s>:2
+    # a:1 b:1; unigrams a:2 b:2, N=4 V=2 denom=7
+    own = {r["id"]: r.asDict() for r in bigram_logprob(df, lam=0.5).collect()}
+    pu = 3 / 7
+    exp_own = -(math.log2(0.5 * 0.5 + 0.5 * pu)
+                + math.log2(0.5 * 1.0 + 0.5 * pu)) / 2
+    for i in (1, 2):  # (<s>,x) = 1/2 and (x,y) = 1/1 in both docs
+        assert own[i]["n_tokens"] == 2
+        assert abs(own[i]["bits_per_token_r"] - round(exp_own, 4)) < 1e-9
+    assert own[3] == {"id": 3, "n_tokens": 0, "bits_per_token_r": None}
+    assert own[4] == {"id": 4, "n_tokens": 0, "bits_per_token_r": None}
 
     with _pytest.raises(ValueError, match="lam"):
         bigram_logprob(df, lam=1.0)
@@ -1253,7 +1267,8 @@ def test_li_clustered_fixture_driver_side_identical(spark):
 
 def test_trigram_logprob_interpolation(spark):
     """r13: hand-computed JM trigram interpolation on a tiny model
-    corpus; BOS padding, unseen-history zero-ML, empty-doc NULL."""
+    corpus and self-scoring; BOS padding, unseen-history zero-ML,
+    empty-doc and NULL-text NULL."""
     import math
 
     import pytest as _pytest
@@ -1261,7 +1276,7 @@ def test_trigram_logprob_interpolation(spark):
     from flouds_vectordb_spark.operators.text_analysis import trigram_logprob
 
     model = spark.createDataFrame([(10, "a b a b")], "id bigint, text string")
-    df = spark.createDataFrame([(1, "a b"), (2, "b b"), (3, "")],
+    df = spark.createDataFrame([(1, "a b"), (2, "b b"), (3, ""), (4, None)],
                                "id bigint, text string")
     got = {r["id"]: r.asDict()
            for r in trigram_logprob(df, model_df=model, lam3=0.5,
@@ -1285,7 +1300,24 @@ def test_trigram_logprob_interpolation(spark):
     exp2 = -(math.log2(q1) + math.log2(q2)) / 2
     assert abs(got[2]["bits_per_token_r"] - round(exp2, 4)) < 1e-9
     assert got[3]["n_tokens"] == 0 and got[3]["bits_per_token_r"] is None
+    assert got[4] == {"id": 4, "n_tokens": 0, "bits_per_token_r": None}
     assert got[1]["bits_per_token_r"] < got[2]["bits_per_token_r"]
+
+    # self-scoring: events (<s>,<s>,a) (<s>,a,b) (<s>,<s>,b) (<s>,b,b);
+    # h12 (<s>,<s>):2, others 1; bg each 1 with h1 <s>:2 a:1 b:1;
+    # uni a:1 b:3, N=4 V=2 denom=7
+    own = {r["id"]: r.asDict()
+           for r in trigram_logprob(df, lam3=0.5, lam2=0.25).collect()}
+    pa, pb = 2 / 7, 4 / 7
+    own1 = -(math.log2(l3 * 0.5 + l2 * 0.5 + l1 * pa)
+             + math.log2(l3 * 1.0 + l2 * 1.0 + l1 * pb)) / 2
+    own2 = -(math.log2(l3 * 0.5 + l2 * 0.5 + l1 * pb)
+             + math.log2(l3 * 1.0 + l2 * 1.0 + l1 * pb)) / 2
+    assert abs(own[1]["bits_per_token_r"] - round(own1, 4)) < 1e-9
+    assert abs(own[2]["bits_per_token_r"] - round(own2, 4)) < 1e-9
+    assert own[1]["n_tokens"] == own[2]["n_tokens"] == 2
+    assert own[3] == {"id": 3, "n_tokens": 0, "bits_per_token_r": None}
+    assert own[4] == {"id": 4, "n_tokens": 0, "bits_per_token_r": None}
 
     with _pytest.raises(ValueError, match="lam"):
         trigram_logprob(df, lam3=0.8, lam2=0.2)

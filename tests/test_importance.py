@@ -93,15 +93,15 @@ def test_persist_scope_releases_importance_and_lm_intermediates(spark):
         dsir_log_ratios(raw, target, n_buckets=512, seed=7).collect()
         bigram_logprob(raw).collect()
         perplexity_buckets(raw).collect()
-        # per_doc (resample) + bigram src_ev + ppl scored. The rc/tc count
-        # tables are no longer persisted at all (r9 VERDICT ask #1: one
-        # tagged-union collect reads each exactly once).
+        # per_doc (resample) + bigram per-doc counts + ppl scored. The
+        # rc/tc count tables are no longer persisted at all (r9 VERDICT
+        # ask #1: one tagged-union collect reads each exactly once).
         assert len(tracked) >= 3
         # only the frames the returned plans still read may remain warm:
-        # per_doc (dsir), src_ev (bigram), and ppl's scored +
-        # per_term_counts + model (unigram_logprob r10 keeps the count agg
-        # and the derived model cached — both are consumed lazily by the
-        # returned plan, so the operator cannot release them itself)
+        # per_doc (dsir), the bigram per-doc counts, and ppl's scored +
+        # the unigram per-doc counts (the n-gram scorer's self-scoring
+        # model derives from them — consumed lazily by the returned plan,
+        # so the operator cannot release them itself)
         warm = [df for df in tracked
                 if df.storageLevel.useMemory or df.storageLevel.useDisk]
         assert len(warm) <= 5
